@@ -16,6 +16,7 @@ readers get partition pruning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_table(
@@ -36,11 +37,19 @@ def write_table(
 
 
 def read_table(
-    spark: SparkSession, path: str, fmt: str = "parquet", merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    merge_schema: bool = False,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Catalog-free table read; ``merge_schema=True`` unions the schemas of
-    all part files (the read side of S6 schema evolution)."""
+    all part files (the read side of S6 schema evolution). A known
+    ``schema`` skips inference: without one, every parquet read launches a
+    Spark job to read file footers."""
     reader = spark.read.format(fmt)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.load(path)

@@ -18,13 +18,16 @@ from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
+def null_count_cols(columns: list[str]) -> list[F.Column]:
+    """``{c}_nulls`` = count of NULLs in ``c``, one aggregate per column (ref
+    `01:173` does this with a list comprehension of count(when(isNull)))."""
+    return [F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_nulls") for c in columns]
+
+
 def null_counts(df: DataFrame) -> DataFrame:
-    """One row, one column per input column: count of NULLs — single pass
-    (ref `01:173` does this with a list comprehension of count(when(isNull)));
+    """One row, one column per input column: count of NULLs — single pass;
     map-side combine means the shuffle is one row per partition."""
-    return df.select(
-        [F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_nulls") for c in df.columns]
-    )
+    return df.select(null_count_cols(df.columns))
 
 
 def duplicate_keys(df: DataFrame, *keys: str) -> DataFrame:
