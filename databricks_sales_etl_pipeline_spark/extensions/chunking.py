@@ -27,23 +27,34 @@ from databricks_sales_etl_pipeline_spark.registry import query
 _WS = r"\s+"
 
 
-def md5_band(col: Column, mod: int, salt: str) -> Column:
-    """Deterministic [0, mod) bucket from the first 8 md5 hex chars of
-    ``salt || col`` — bit-identical to :func:`md5_band_sql`."""
-    h = F.md5(F.concat(F.lit(salt), col.cast("string")))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % mod
+def md5_int(col: Column) -> Column:
+    """The first 8 md5 hex chars of ``col`` as a bigint in [0, 2^32) — the
+    cross-engine hash, bit-identical to :func:`md5_int_sql`."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
-def md5_band_sql(expr: str, mod: int, salt: str) -> str:
-    """DuckDB twin of :func:`md5_band` (DuckDB has no hex→int cast, so the
+def md5_int_sql(expr: str) -> str:
+    """DuckDB twin of :func:`md5_int` (DuckDB has no hex→int cast, so the
     8 hex digits are summed positionally; 16^7 < 2^53 keeps the double
     arithmetic exact before the BIGINT cast)."""
     return (
-        f"(CAST(list_sum(list_transform(range(1, 9), i -> "
-        f"(strpos('0123456789abcdef', substring(md5('{salt}' || {expr}), "
-        f"CAST(i AS INT), 1)) - 1) * CAST(power(16, 8 - i) AS BIGINT))) "
-        f"AS BIGINT) % {mod})"
+        "CAST(list_sum(list_transform(range(1, 9), i -> "
+        f"(strpos('0123456789abcdef', substring(md5({expr}), "
+        "CAST(i AS INT), 1)) - 1) * CAST(power(16, 8 - i) AS BIGINT))) "
+        "AS BIGINT)"
     )
+
+
+def md5_band(col: Column, mod: int, salt: str) -> Column:
+    """Deterministic [0, mod) bucket from the first 8 md5 hex chars of
+    ``salt || col`` — bit-identical to :func:`md5_band_sql`."""
+    return md5_int(F.concat(F.lit(salt), col.cast("string"))) % mod
+
+
+def md5_band_sql(expr: str, mod: int, salt: str) -> str:
+    """DuckDB twin of :func:`md5_band`."""
+    salted = f"'{salt}' || {expr}"
+    return f"({md5_int_sql(salted)} % {mod})"
 
 
 CHUNK_W = 32   # tokens per chunk

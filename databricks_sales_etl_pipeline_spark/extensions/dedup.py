@@ -9,17 +9,26 @@ Scale posture (the whole point of these at 100 TB):
   the candidate join explodes quadratically on hot shingles, so at scale it
   runs AFTER a banding/LSH filter; here it doubles as the exact oracle twin.
 - MinHash-LSH: sub-quadratic candidate generation (pyspark.ml MinHashLSH,
-  fixed seed), the scale path.
+  fixed seed). The scale path is the built-in banded MinHash, written once:
+  ``minhash_bands`` builds the signature table and its band rows for a
+  given band hash (``xxhash_band_hash`` in production, ``md5_band_hash``
+  where a DuckDB twin checks it) and ``band_candidates`` self-joins the
+  band rows into candidate pairs. The native, verified, calibration and
+  hot-band guarded queries and the scale tools all call these two.
 - SimHash: 64-bit hamming sketch via xxhash64 — near-dup bucketing with one
   bigint per doc.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.extensions.chunking import (
+    md5_int,
+    md5_int_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions import par
 from databricks_sales_etl_pipeline_spark.registry import query
 
@@ -308,7 +317,64 @@ def ext_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-N_TABLES = 8
+N_BANDS = 8
+
+
+def xxhash_band_hash(j: int) -> Column:
+    """Band j's shingle hash on the production path: xxhash64 seeded by the
+    band index (fast, seed-stable, no DuckDB twin)."""
+    return F.xxhash64(F.lit(j), F.col("shingle"))
+
+
+def md5_band_hash(j: int) -> Column:
+    """Band j's shingle hash on the oracle-checked path: the first 8 md5 hex
+    chars of ``"{j}:{shingle}"``, which DuckDB computes bit-identically."""
+    return md5_int(F.concat(F.lit(f"{j}:"), F.col("shingle")))
+
+
+def minhash_bands(sh: DataFrame, band_hash):
+    """Banded MinHash over long-format shingle rows ``sh`` (doc_id,
+    shingle), N_BANDS bands of one min-hash each (r=1): returns ``(sig,
+    bands)`` — ``sig`` is (doc_id, h0..h7) and ``bands`` its long form
+    (doc_id, band, h), one row per document and band. ``band_hash(j)`` is
+    band j's hash of the ``shingle`` column."""
+    # sig is checkpointed (round-13): the bands self-join clones the plan,
+    # and a LogicalRDD leaf never canonicalizes equal across the clone
+    # (round-12 exchange-reuse facts) — without this the min-hash
+    # aggregation over every shingle ran once per consumer branch. Lazy:
+    # signatures are 9 longs per doc, the bounded-artifact scale class.
+    sig = sh.groupBy("doc_id").agg(
+        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(N_BANDS)]
+    ).localCheckpoint(eager=False)
+    bands = sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
+                    for j in range(N_BANDS)
+                ]
+            )
+        ).alias("bh"),
+    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
+    return sig, bands
+
+
+def band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs that share a band bucket — the
+    band-bucketed self-join, never all-pairs."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.h") == F.col("b.h"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 @query("ext_dedup_minhash_native")  # rows-only: hash-based candidates, no SQL twin
@@ -326,44 +392,10 @@ def ext_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared by signature build + both sides of the verify join — checkpoint
     # the codegen'd long-format shingle pipeline once
     sh = shingle_rows(d).localCheckpoint(eager=False)
-    # checkpoint the signature table too (round-13): the bands self-join
-    # clones the plan, and a LogicalRDD leaf never canonicalizes equal
-    # across the clone (round-12 exchange-reuse facts) — without this the
-    # 8×min-xxhash64 aggregation over every shingle ran TWICE, once per
-    # branch (profiled as two ~equal sig-agg stages). Signatures are 9
-    # longs per doc — the bounded-artifact scale class, cheap to hold.
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-            for j in range(N_TABLES)
-        ]
-    ).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(N_TABLES)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    _, bands = minhash_bands(sh, xxhash_band_hash)
     # exact verify on the (small) candidate set via count-join — long-format
     # rows, no arrays, no higher-order functions
-    return exact_jaccard_on_candidates(candidates, sh, t)
+    return exact_jaccard_on_candidates(band_candidates(bands), sh, t)
 
 
 _MINHASH_VERIFIED_ORACLE = """
@@ -410,9 +442,10 @@ _MINHASH_VERIFIED_ORACLE = """
 def ext_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2b'' — banded MinHash with a FULL DuckDB oracle (round-2 judge ask:
     the xxhash64 variant's candidate generation was verification-blind).
-    Identical pipeline shape to ext_dedup_minhash_native — 8 per-band
-    min-hashes per doc, candidates = pairs sharing any band minimum, exact
-    Jaccard verify >= 0.5 — but the band hash is the first 8 hex chars of
+    The same `minhash_bands` + `band_candidates` pipeline as
+    ext_dedup_minhash_native — 8 per-band min-hashes per doc, candidates =
+    pairs sharing any band minimum, exact Jaccard verify >= 0.5 — but the
+    band hash is `md5_band_hash`: the first 8 hex chars of
     md5(f"{band}:{shingle}") parsed as an integer, which Spark (md5 + conv)
     and DuckDB (md5 + positional hex-digit sum) compute bit-identically, so
     signature build, banding, candidate generation AND verify are all
@@ -425,46 +458,10 @@ def ext_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     production uses the native variant; this one exists to prove the
     algorithm exact end-to-end."""
     t = 0.5
-    n_bands = 8
     d = load(spark, sf_dir, "documents")
     sh = shingle_rows(d).localCheckpoint(eager=False)
-
-    def band_hash(j: int):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-
-    # same sig checkpoint as the native variant: the bands self-join would
-    # otherwise run the 8×min-md5 aggregation once per branch
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(n_bands)]
-    ).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return exact_jaccard_on_candidates(candidates, sh, t)
+    _, bands = minhash_bands(sh, md5_band_hash)
+    return exact_jaccard_on_candidates(band_candidates(bands), sh, t)
 
 
 @query("ext_dedup_simhash")  # rows-only: xxhash64 has no DuckDB twin
@@ -728,18 +725,6 @@ def ext_dup_clusters_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-checked, proving the algorithm (bit votes / rolling window minima)
 # exact, not just non-crashing.
 
-_H32_SQL = (
-    "CAST(list_sum(list_transform(range(1, 9), i -> "
-    "(strpos('0123456789abcdef', substring(md5({expr}), CAST(i AS INT), 1)) - 1)"
-    " * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)"
-)
-
-
-def _h32(col):
-    """First 8 md5 hex chars of col as a bigint — Spark side of _H32_SQL."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
 def _simhash_oracle() -> str:
     bit_sums = ",\n               ".join(
         f"SUM(CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS s{b}"
@@ -749,7 +734,7 @@ def _simhash_oracle() -> str:
         f"(CASE WHEN s{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
         for b in range(32)
     )
-    h = _H32_SQL.format(expr="'sh:' || tok")
+    h = md5_int_sql("'sh:' || tok")
     return f"""
     WITH w AS (
         SELECT doc_id,
@@ -784,7 +769,7 @@ def ext_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
     ).where(F.col("tok") != "")
-    h = _h32(F.concat(F.lit("sh:"), F.col("tok")))
+    h = md5_int(F.concat(F.lit("sh:"), F.col("tok")))
     hh = tok.select("doc_id", h.alias("h"))
     votes = hh.groupBy("doc_id").agg(
         *[
@@ -817,7 +802,7 @@ _WINNOW_VERIFIED_ORACLE = f"""
         WHERE len(toks) >= 3
     ), h AS (
         SELECT doc_id, pos,
-               {_H32_SQL.format(expr="'wg:' || gram")} AS kh
+               {md5_int_sql("'wg:' || gram")} AS kh
         FROM g
     ), fp AS (
         SELECT doc_id,
@@ -852,7 +837,7 @@ def ext_fingerprint_winnow_verified(spark: SparkSession, sf_dir: str) -> DataFra
         words.select(
             "doc_id",
             "pos",
-            _h32(
+            md5_int(
                 F.concat(F.lit("wg:"), F.concat_ws(" ", F.col("w"), l1, l2))
             ).alias("kh"),
             l2.isNotNull().alias("_full"),
@@ -1099,58 +1084,22 @@ def ext_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import broadcast
 
-    n_bands = 8
     d = load(spark, sf_dir, "documents")
     sh = shingle_rows(d).localCheckpoint(eager=False)
-
-    def band_hash(j: int):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-
-    # sig checkpoint (round-13): FOUR consumers (bands self-join ×2, sig_a,
-    # sig_b) and a LogicalRDD leaf never canonicalizes equal across plan
-    # clones — without it the 8×min-md5 aggregation ran once per consumer
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(band_hash(j)).alias(f"h{j}") for j in range(n_bands)]
-    ).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig, bands = minhash_bands(sh, md5_band_hash)
+    candidates = band_candidates(bands)
     sig_a = sig.select(
         F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{j}").alias(f"a{j}") for j in range(n_bands)],
+        *[F.col(f"h{j}").alias(f"a{j}") for j in range(N_BANDS)],
     )
     sig_b = sig.select(
         F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{j}").alias(f"b{j}") for j in range(n_bands)],
+        *[F.col(f"h{j}").alias(f"b{j}") for j in range(N_BANDS)],
     )
     n_match = sum(
         [
             F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-            for j in range(n_bands)
+            for j in range(N_BANDS)
         ],
         F.lit(0),
     ).cast("long")
@@ -1181,7 +1130,7 @@ def ext_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a",
         "doc_b",
         "n_bands_match",
-        (F.col("n_bands_match").cast("double") / 8).alias("est_jaccard"),
+        (F.col("n_bands_match").cast("double") / N_BANDS).alias("est_jaccard"),
         exact.alias("exact_jaccard"),
     )
 

@@ -20,6 +20,7 @@ from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
+    md5_int,
 )
 from databricks_sales_etl_pipeline_spark.registry import query
 
@@ -286,13 +287,9 @@ def ext_class_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_class"))
     target = counts.agg(F.min("n_class").alias("n_min"))
-    # md5_band with a per-row modulus (class size), so the band arithmetic
-    # is inlined (chunking.md5_band takes a literal mod)
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("rebal:"), F.col("doc_id").cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("bigint")
+    # md5_band with a per-row modulus (class size), so the modulus is
+    # applied below (chunking.md5_band takes a literal mod)
+    h = md5_int(F.concat(F.lit("rebal:"), F.col("doc_id").cast("string")))
     scored = (
         d.select("doc_id", "lang")
         .join(broadcast(counts), "lang")

@@ -18,15 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from databricks_sales_etl_pipeline_spark.plans.medallion import (
     Medallion,
+    layer_schemas,
     silver_transform,
 )
 from databricks_sales_etl_pipeline_spark.streaming.util import await_finished
-
-
-def bronze_stream_schema(spark: SparkSession, m: Medallion):
-    # schema comes from the existing Bronze footprint (explicit, not inferred
-    # per-batch): streaming sources require a fixed schema up front
-    return spark.read.parquet(m.bronze).schema
 
 
 def run_incremental_silver(
@@ -39,8 +34,10 @@ def run_incremental_silver(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         silver_transform(batch).write.mode("append").parquet(m.silver)
 
+    # streaming sources need a fixed schema up front: Bronze's, from the
+    # plans (no footer-reading job on every run)
     q = (
-        spark.readStream.schema(bronze_stream_schema(spark, m))
+        spark.readStream.schema(layer_schemas(spark)[0])
         .parquet(m.bronze)
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)

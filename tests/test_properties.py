@@ -206,12 +206,3 @@ def test_exclusive_carry_multi_matches_per_dimension(spark, triples, d1, d2):
         assert sorted(map(tuple, got.collect())) == sorted(
             (r[bucket], r["carry_in"]) for r in ref.collect()
         )
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

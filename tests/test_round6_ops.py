@@ -791,12 +791,3 @@ class TestGroupingId:
         assert len(total) == 1
         leaf_n = sum(r["n_orders"] for r in out if r["grouping_id"] == 0)
         assert leaf_n == total[0]["n_orders"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

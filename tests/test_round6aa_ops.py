@@ -80,12 +80,3 @@ class TestMojibakeDetect:
             assert r["len_before"] == len(body)
             assert r["len_after"] == len(fixed) == len(body) - 1
             assert r["repaired_md5"] == hashlib.md5(fixed.encode()).hexdigest()
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

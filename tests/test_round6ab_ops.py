@@ -189,12 +189,3 @@ class TestHazardLifetable:
             assert r["hazard_ppm"] == events * 1_000_000 // at_risk
         # censoring exists on this fixture (users active near the horizon)
         assert any(r["censored"] > 0 for r in out.values())
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -74,12 +74,3 @@ class TestDispersionIndex:
             assert r["dispersion_milli"] == disp
             assert r["overdispersed"] == (1 if disp > 1500 else 0)
             assert disp >= 0
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

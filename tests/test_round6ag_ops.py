@@ -147,12 +147,3 @@ class TestControlChartC:
             assert r["cbar_milli"] == sx * 1000 // nd
             assert r["breach_hi"] == (1 if x > ucl else 0)
             assert r["breach_lo"] == (1 if x < lcl else 0)
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -131,12 +131,3 @@ class TestRunsTest:
         assert math.isclose(r["z_value"], z, rel_tol=1e-12)
         assert r["reject_h0"] == (1 if abs(r["z_value"]) > 1.96 else 0)
         assert n1 + n2 > 100  # the daily series is long enough to test
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -166,12 +166,3 @@ class TestSqlSessionVariable:
         a = QUERIES["sql_session_variable"](spark, SF_DIR).collect()
         b = QUERIES["sql_session_variable"](spark, SF_DIR).collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

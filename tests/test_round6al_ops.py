@@ -138,12 +138,3 @@ class TestRepurchaseCycle:
             assert r["n_customers"] == len(custs)
             assert r["n_overdue"] == overdue
             assert 0 <= r["n_overdue"] < r["n_customers"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -131,12 +131,3 @@ class TestBotRegularity:
         sgg = 10 * 60 * 60
         cv2 = (n * sgg - sg * sg) * 10000 // (sg * sg)
         assert cv2 == 0 and cv2 < BOT_CV2_X10K
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

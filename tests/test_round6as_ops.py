@@ -144,12 +144,3 @@ class TestRegDiscontinuity:
         p = (pa + pb) / (na + nb)
         se = math.sqrt(p * (1 - p) * (1 / na + 1 / nb))
         assert abs(r["jump_ppm"]) <= 4 * se * 1_000_000 + 1
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -125,12 +125,3 @@ class TestTermTrends:
         assert [(r["tok"]) for r in out] == [t for _, t, _, _ in want]
         for r, (ns, t, d0, d1) in zip(out, want):
             assert (r["df0"], r["df1"], r["trend_milli"]) == (d0, d1, -ns)
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -102,12 +102,3 @@ class TestChao1:
             r["chao1_estimate"],
         ) == (d, s1, s2, chao1)
         assert r["chao1_estimate"] > r["observed_vocab"]  # unseen mass exists
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -62,12 +62,3 @@ class TestDtwDistance:
         dtw = _dtw(base, lagged)
         l1 = sum(abs(a - b) for a, b in zip(base, lagged))
         assert dtw < l1 // 4
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -90,12 +90,3 @@ class TestGrowthAccounting:
                 r["active"]
                 == r["new_users"] + r["retained"] + r["resurrected"]
             )
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -89,12 +89,3 @@ class TestCrossCorrelation:
                 assert r["xcorr"] is None
         # more overlap at lag 0 than at the extremes
         assert out[0]["n"] >= out[XCORR_MAX_LAG]["n"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

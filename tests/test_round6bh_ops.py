@@ -51,12 +51,3 @@ class TestRobustLocation:
         # the robust estimates bracket sensibly on a unimodal series
         assert min(xs) <= r["hodges_lehmann"] <= max(xs)
         assert min(xs) * 1000 <= r["trimmed_milli"] <= max(xs) * 1000
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

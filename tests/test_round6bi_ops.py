@@ -47,12 +47,3 @@ class TestMannKendall:
         assert r["trend_detected"] == (1 if abs(z) > 1.96 else 0)
         # |S| is bounded by the pair count
         assert abs(s) <= n * (n - 1) // 2
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

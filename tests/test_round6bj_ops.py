@@ -85,12 +85,3 @@ class TestAssortativity:
         assert -1.0 - 1e-12 <= r["assortativity"] <= 1.0 + 1e-12
         # symmetric construction → sx == sy by definition
         assert r["sx"] == r["sy"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

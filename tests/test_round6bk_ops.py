@@ -59,12 +59,3 @@ class TestModularity:
             intra.get(c, 0) / m - (dsum[c] / (2 * m)) ** 2 for c in dsum
         )
         assert abs(q / 1e6 - qf) < 1e-3
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -143,12 +143,3 @@ class TestDbscanCells:
         ).fetchone()[0]
         assert sum(r["n_points"] for r in rows) == total
         assert sum(1 for r in rows if r["cluster_id"] != -1) >= 2
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -145,12 +145,3 @@ class TestRougeLcs:
         assert any(r["lcs_len"] < r["n_tok"] for r in rows)
         for r in rows:
             assert r["lcs_len"] * 2 >= r["n_tok"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

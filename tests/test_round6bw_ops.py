@@ -110,12 +110,3 @@ class TestSubseqTriples:
         got = QUERIES["ext_subseq_triples"](spark, SF_DIR).collect()
         assert len(got) == SEQ3_TOPN
         assert all(r["support"] > 0 for r in got)
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -111,12 +111,3 @@ class TestKneeDetection:
         # cumulative share must trail the rank share
         r = QUERIES["ext_knee_detection"](spark, SF_DIR).collect()[0]
         assert r["knee_share_ppm"] < r["knee_rank_ppm"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -96,12 +96,3 @@ class TestQuantileNormalize:
         for r in rows:
             per_max[r["source"]] = max(per_max[r["source"]], r["norm_chars"])
         assert all(v == pooled_max for v in per_max.values())
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

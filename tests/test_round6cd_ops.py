@@ -139,12 +139,3 @@ class TestConsistentHashRing:
         frac = r["moved_ppm"] / 1e6
         assert frac < 3 / (RING_NODES + 1)
         assert frac > 1 / (3 * (RING_NODES + 1))
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -110,12 +110,3 @@ class TestRetryBackoff:
         assert abs(by_att[1] - total * 7 // 10) < total // 10
         for k in range(2, 4):
             assert by_att[k] < by_att[k - 1]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

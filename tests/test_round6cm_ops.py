@@ -77,12 +77,3 @@ class TestHashCollisionAudit:
         # observed/expected within a factor of 2 — md5 spreads uniformly
         r = QUERIES["ext_hash_collision_audit"](spark, SF_DIR).collect()[0]
         assert 500 <= r["ratio_milli"] <= 2000
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

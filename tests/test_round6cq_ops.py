@@ -137,12 +137,3 @@ class TestBordaCondorcet:
         total_wins = sum(r["pairwise_wins"] for r in rows)
         nb = len(rows)
         assert total_wins <= nb * (nb - 1) // 2 + nb  # ties impossible
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -110,12 +110,3 @@ class TestNelsonRules:
         # iid-ish daily revenue: run rules fire on a small share of days
         assert r["rule2_signals"] < r["n_days"] // 20
         assert r["rule3_signals"] < r["n_days"] // 20
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -56,12 +56,3 @@ class TestLuhnCheck:
         # non-Luhn-generated keys: ~1 in 10 pass by chance
         assert abs(valid * 10 - total) < total  # within (0%, 20%)
         assert 0 < valid < total
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -46,12 +46,3 @@ class TestLisPatience:
         n = r["n_months"]
         # Ulam: random order gives ~2*sqrt(n); monotone gives n
         assert math.isqrt(n) <= r["lis_len"] <= n
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

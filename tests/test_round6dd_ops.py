@@ -70,12 +70,3 @@ class TestDidPlacebo:
         assert sorted(r["abs_rank"] for r in rows) == list(
             range(1, DID_PLACEBOS + 2)
         )
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -62,12 +62,3 @@ class TestQte:
             for r in sorted(rows, key=lambda r: r["q"])
         ]
         assert vals == sorted(vals)  # quantiles monotone in q
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

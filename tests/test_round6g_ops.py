@@ -62,12 +62,3 @@ class TestPythonStreamSource:
         assert max(r["max_id"] for r in out.values()) == 202
         for cat, r in out.items():
             assert r["n_rows"] == len([i for i in range(203) if i % 7 == cat])
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

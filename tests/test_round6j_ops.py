@@ -75,12 +75,3 @@ class TestAqeSkew:
         assert r["n_rows"] == 200_000
         # confs restored after the eager demonstration
         assert spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor") != "2"
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

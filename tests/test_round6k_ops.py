@@ -53,12 +53,3 @@ class TestQualityComposite:
         # the synthetic corpus is wordy and diverse: most docs score high
         high = sum(r["n_docs"] for r in out if r["score"] >= 3)
         assert high > n_docs // 2
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -107,12 +107,3 @@ class TestBm25Rank:
             rarity = ((2 * n - 2 * df + 1) * 1_000_000) // (2 * df + 1)
             assert top["sat_ppm"] == sat and top["rarity_ppm"] == rarity
             assert top["score"] == sat * rarity // 1_000_000
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

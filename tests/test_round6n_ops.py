@@ -151,12 +151,3 @@ class TestAudioSilenceSplit:
             idx = sorted(r["seg_idx"] for r in out[doc_id])
             assert idx == list(range(1, len(segs) + 1))
             assert doc_id < MM_DOC_LIMIT
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -81,12 +81,3 @@ class TestImageHistogram:
                 want[key] = want.get(key, 0) + 1
             assert out[doc_id] == want, doc_id
             assert sum(out[doc_id].values()) == w * h * 3
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -76,12 +76,3 @@ class TestJoinCardEstimate:
             total_true += true
         # full cross-check: the exact join size equals the bucket sum
         assert total_true == sum(a[k] * b[k] for k in a if k in b)
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

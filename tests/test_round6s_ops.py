@@ -130,12 +130,3 @@ class TestInventoryAbc:
         assert revs == sorted(revs)
         # all three classes exist on this distribution
         assert {r["abc_class"] for r in rows} == {"A", "B", "C"}
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

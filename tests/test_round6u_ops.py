@@ -83,12 +83,3 @@ class TestTheilsenSlope:
         assert r["slope_min"] == min(slopes)
         assert r["slope_max"] == max(slopes)
         assert abs(r["slope_milli_median"] - statistics.median(slopes)) < 1e-9
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

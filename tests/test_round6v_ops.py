@@ -95,12 +95,3 @@ class TestRetrievalRrf:
             # system (that is RRF's point), so no top-k heuristic here
             for r in rows:
                 assert r["rank_tf"] >= 1 and r["rank_pos"] >= 1
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

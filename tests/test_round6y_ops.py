@@ -59,12 +59,3 @@ class TestFeatureGiniGain:
         # per-value truncation, which is at most n_values ppm)
         for fname, r in out.items():
             assert r["gain_ppm"] >= -r["n_values"]
-
-
-# Round-14 gate tier: this file's queries are value-checked by
-# tests/test_parity.py in the DEFAULT run; the planted-corpus/unit tests
-# here run in the `slow` tier (round_close / -m "slow or not slow") so the
-# driver's verification window fits (r13 verdict ask #1a).
-import pytest as _pytest
-
-pytestmark = _pytest.mark.slow

@@ -13,6 +13,7 @@ from databricks_sales_etl_pipeline_spark.plans.incremental import (
 )
 from databricks_sales_etl_pipeline_spark.plans.medallion import (
     Medallion,
+    silver_transform,
     to_bronze_format,
 )
 from databricks_sales_etl_pipeline_spark.registry import QUERIES, load_all
@@ -37,6 +38,13 @@ def test_incremental_silver_processes_only_new(spark, tmp_path):
     assert silver.count() == 115
     # no duplicates: each order transformed exactly once across the two runs
     assert silver.select("order_id").distinct().count() == 115
+    # and the streamed Silver equals the batch transform of Bronze on disk,
+    # value for value (the stream reads Bronze with the plans' schema)
+    expected = silver_transform(read_table(spark, m.bronze))
+    assert silver.dtypes == expected.dtypes
+    assert sorted(silver.collect(), key=repr) == sorted(
+        expected.collect(), key=repr
+    )
     # and a third run with nothing new appends nothing
     run_incremental_silver(spark, m)
     assert read_table(spark, m.silver).count() == 115

@@ -25,9 +25,12 @@ import os
 import sys
 import time
 
-from pyspark.sql import functions as F
-
-from databricks_sales_etl_pipeline_spark.extensions.dedup import shingle_rows
+from databricks_sales_etl_pipeline_spark.extensions.dedup import (
+    band_candidates,
+    minhash_bands,
+    shingle_rows,
+    xxhash_band_hash,
+)
 from databricks_sales_etl_pipeline_spark.extensions.dedup_substring import (
     shared_gram_hits,
 )
@@ -82,37 +85,8 @@ def main() -> None:
             # here, and caching 780 M exploded rows at 10 M docs squeezes
             # the execution pool into AGGREGATE_OUT_OF_MEMORY
             sh = shingle_rows(d)
-            sig = sh.groupBy("doc_id").agg(
-                *[
-                    F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-                    for j in range(8)
-                ]
-            )
-            bands = sig.select(
-                "doc_id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(j).alias("band"), F.col(f"h{j}").alias("h")
-                            )
-                            for j in range(8)
-                        ]
-                    )
-                ).alias("bh"),
-            )
-            a, b = bands.alias("a"), bands.alias("b")
-            rec["candidates"] = (
-                a.join(
-                    b,
-                    (F.col("a.bh.band") == F.col("b.bh.band"))
-                    & (F.col("a.bh.h") == F.col("b.bh.h"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select("a.doc_id", "b.doc_id")
-                .distinct()
-                .count()
-            )
+            _, bands = minhash_bands(sh, xxhash_band_hash)
+            rec["candidates"] = band_candidates(bands).count()
             t["minhash_sig_candidates"] = round(time.perf_counter() - t0, 2)
             rec["minhash_kdocs_per_sec"] = round(
                 n / t["minhash_sig_candidates"] / 1e3, 1

@@ -16,7 +16,14 @@ import time
 
 from pyspark.sql import functions as F
 
-from databricks_sales_etl_pipeline_spark.extensions.dedup import shingle_rows
+from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_band
+from databricks_sales_etl_pipeline_spark.extensions.dedup import (
+    band_candidates,
+    md5_band_hash,
+    minhash_bands,
+    shingle_rows,
+    xxhash_band_hash,
+)
 from databricks_sales_etl_pipeline_spark.session import get_spark, tune_shuffle_partitions
 
 VOCAB = 5000
@@ -56,20 +63,8 @@ def main() -> None:
 
         t0 = time.perf_counter()
         sh = shingle_rows(d).localCheckpoint(eager=False)
-        sig = sh.groupBy("doc_id").agg(
-            *[F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-              for j in range(8)]
-        )
-        bands = sig.select("doc_id", F.explode(F.array(
-            *[F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-              for j in range(8)])).alias("bh"))
-        a, b = bands.alias("a"), bands.alias("b")
-        n_cand = a.join(
-            b,
-            (F.col("a.bh.band") == F.col("b.bh.band"))
-            & (F.col("a.bh.h") == F.col("b.bh.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select("a.doc_id", "b.doc_id").distinct().count()
+        _, bands = minhash_bands(sh, xxhash_band_hash)
+        n_cand = band_candidates(bands).count()
         t["minhash_sig_candidates"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
@@ -100,10 +95,7 @@ def main() -> None:
         t["chunk_sliding"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
-        band = F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint") % 100
+        band = md5_band(F.col("doc_id"), 100, "split:")
         d.select(
             F.when(band < 80, "train").when(band < 90, "val").otherwise("test").alias("s")
         ).groupBy("s").count().count()
@@ -145,10 +137,7 @@ def main() -> None:
         t["substring_spans"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
-        md5h = F.conv(
-            F.substring(F.md5(F.concat(F.lit("0:"), F.col("shingle"))), 1, 8), 16, 10
-        ).cast("bigint")
-        sh.groupBy("doc_id").agg(F.min(md5h).alias("h0")).count()
+        sh.groupBy("doc_id").agg(F.min(md5_band_hash(0)).alias("h0")).count()
         t["md5_sig_1band"] = round(time.perf_counter() - t0, 2)
 
         rec = {"docs": n, "candidates": n_cand, "n_chunks": n_chunks,

@@ -34,7 +34,12 @@ import time
 
 from pyspark.sql import functions as F
 
-from databricks_sales_etl_pipeline_spark.extensions.dedup import shingle_rows
+from databricks_sales_etl_pipeline_spark.extensions.dedup import (
+    band_candidates,
+    minhash_bands,
+    shingle_rows,
+    xxhash_band_hash,
+)
 from databricks_sales_etl_pipeline_spark.extensions.dedup_substring import (
     HOT_BAND_CAP,
 )
@@ -44,7 +49,6 @@ from databricks_sales_etl_pipeline_spark.session import (
 )
 from tools.bench_scale_docs import VOCAB, WORDS_PER_DOC
 
-N_TABLES = 8
 BP_WORDS = 20
 BP_FRACTION_MOD = 10  # id % 10 == 7 carries the boilerplate prefix
 
@@ -78,26 +82,7 @@ def main() -> None:
         d = gen_documents_boilerplate(spark, n).localCheckpoint(eager=True)
         t0 = time.perf_counter()
         sh = shingle_rows(d).localCheckpoint(eager=False)
-        sig = sh.groupBy("doc_id").agg(
-            *[
-                F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-                for j in range(N_TABLES)
-            ]
-        )
-        bands = sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                        for j in range(N_TABLES)
-                    ]
-                )
-            ).alias("bh"),
-        ).select(
-            "doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h")
-        )
-        bands = bands.localCheckpoint(eager=False)  # feeds pop AND both join sides
+        _, bands = minhash_bands(sh, xxhash_band_hash)
         pop = bands.groupBy("band", "h").agg(F.count(F.lit(1)).alias("p"))
         # analytic uncapped projection over hot buckets — one aggregation,
         # the join itself is never materialized (the gramdf method)
@@ -112,20 +97,7 @@ def main() -> None:
         )
         hot = pop.where(F.col("p") > HOT_BAND_CAP).select("band", "h")
         kept = bands.join(hot, ["band", "h"], "left_anti")
-        a, b = kept.alias("a"), kept.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.h") == F.col("b.h"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        cand = band_candidates(kept).localCheckpoint(eager=True)
         capped = cand.count()
         planted_found = cand.where(
             (F.col("doc_b") == F.col("doc_a") + 1) & (F.col("doc_b") % 10 == 0)

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for the bench headline queries (or a named
-subset) to plans/r13/<query>_<suffix>.txt — the round-13 optimization
-evidence files (the judge checks plan claims against these).
+subset) to <out_dir>/<query>_<suffix>.txt — the before/after plan evidence
+a performance change commits beside its numbers (plans/r13, plans/r14).
 
 Usage:
-    PYTHONPATH=. python tools/dump_r13_plans.py before [name ...]
-    PYTHONPATH=. python tools/dump_r13_plans.py after  [name ...]
+    PYTHONPATH=. python tools/dump_headline_plans.py <out_dir> before [name ...]
+    PYTHONPATH=. python tools/dump_headline_plans.py <out_dir> after  [name ...]
 """
 
 from __future__ import annotations
@@ -21,12 +21,14 @@ from databricks_sales_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     import bench
 
-    names = sys.argv[2:] or bench.HEADLINE
+    names = sys.argv[3:] or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO, "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
 
     load_all()

@@ -25,14 +25,17 @@ import sys
 
 from pyspark.sql import functions as F
 
-from databricks_sales_etl_pipeline_spark.extensions.dedup import shingle_rows
+from databricks_sales_etl_pipeline_spark.extensions.dedup import (
+    band_candidates,
+    minhash_bands,
+    shingle_rows,
+    xxhash_band_hash,
+)
 from databricks_sales_etl_pipeline_spark.session import (
     get_spark,
     tune_shuffle_partitions,
 )
 from tools.bench_scale_docs import gen_documents
-
-N_TABLES = 8
 
 
 def classify(spark, n: int) -> dict:
@@ -50,35 +53,8 @@ def classify(spark, n: int) -> dict:
     # memory, read a lazily-checkpointed copy
     sh_raw = shingle_rows(d)
     sh = sh_raw.select("doc_id", "shingle").localCheckpoint(eager=False)
-    sig = sh_raw.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-            for j in range(N_TABLES)
-        ]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(j).alias("band"), F.col(f"h{j}").alias("h"))
-                    for j in range(N_TABLES)
-                ]
-            )
-        ).alias("bh"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.bh.band") == F.col("b.bh.band"))
-            & (F.col("a.bh.h") == F.col("b.bh.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    _, bands = minhash_bands(sh_raw, xxhash_band_hash)
+    cand = band_candidates(bands).localCheckpoint(eager=True)
     is_planted = (F.col("doc_b") == F.col("doc_a") + 1) & (F.col("doc_b") % 10 == 0)
     total = cand.count()
     planted = cand.where(is_planted).count()
@@ -100,7 +76,7 @@ def classify(spark, n: int) -> dict:
         .count()
     )
     collisions = total - planted - sharing
-    pop = bands.groupBy(F.col("bh.band"), F.col("bh.h")).agg(
+    pop = bands.groupBy("band", "h").agg(
         F.count(F.lit(1)).alias("p")
     )
     dist = {

@@ -3,62 +3,21 @@
 Usage: PYTHONPATH=. python tools/quick_parity.py name1 name2 ...
        (no names = every registered oracle)
 
-Runs the SAME pandas-canonicalized comparison as tests/test_parity.py /
-the round driver, at SF_DIR (env QP_SF_DIR, default sf0.001), in one
-process — for iterating on new operators without the pytest startup cost.
+Runs the SAME pandas-canonicalized comparison as tests/test_parity.py
+(it imports that test's ``_canon``), at SF_DIR (env QP_SF_DIR, default
+sf0.001), in one process — for iterating on new operators without the
+pytest startup cost.
 """
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import math
 import os
 import sys
 
 import duckdb
-import numpy as np
-import pandas as pd
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def norm(v, col):
-    if v is None:
-        return None
-    if isinstance(v, (list, tuple, np.ndarray)):
-        raise AssertionError(f"{col}: array cell crashes driver canonicalizer")
-    if not isinstance(v, (str, bytes, bytearray)) and pd.isna(v):
-        return None
-    if isinstance(v, decimal.Decimal):
-        raise AssertionError(f"{col}: Decimal cell — driver type hazard")
-    if isinstance(v, (np.floating, float)):
-        f = float(v)
-        return None if math.isnan(f) else ("f", repr(f + 0.0))
-    if isinstance(v, (np.bool_, bool)):
-        return ("b", bool(v))
-    if isinstance(v, (np.integer, int)):
-        return ("i", int(v))
-    if isinstance(v, pd.Timestamp):
-        v = v.to_pydatetime()
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is None and v.time() == datetime.time(0, 0):
-            return ("d", v.date().isoformat())
-        return ("t", v.isoformat())
-    if isinstance(v, datetime.date):
-        return ("d", v.isoformat())
-    if isinstance(v, (bytes, bytearray)):
-        return ("x", bytes(v).hex())
-    return ("s", v)
-
-
-def canon(pdf):
-    cols = sorted(pdf.columns)
-    rows = [tuple(norm(r[c], c) for c in cols) for r in pdf.to_dict("records")]
-    return cols, sorted(rows, key=repr)
+from databricks_sales_etl_pipeline_spark.catalog import TABLES
+from tests.test_parity import _canon as canon
 
 
 def main() -> int:
