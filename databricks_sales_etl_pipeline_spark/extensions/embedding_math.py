@@ -18,17 +18,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.catalog import load
-from databricks_sales_etl_pipeline_spark.extensions.similarity import int_dot, quantize
+from databricks_sales_etl_pipeline_spark.extensions.similarity import (
+    int_dot,
+    quantize,
+    quantize_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
 @query(
     "ext_embedding_norms",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id, label,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+                   x -> {quantize_sql('x')}) AS qv
         FROM embeddings
     )
     SELECT vec_id, label,
@@ -54,11 +58,11 @@ def ext_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_embedding_centroids",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT label,
                unnest(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))) AS qval,
+                   x -> {quantize_sql('x')})) AS qval,
                unnest(range(1, len(embedding) + 1)) AS dim
         FROM embeddings
     )
@@ -161,7 +165,7 @@ def _proj_component(j: int, i: int) -> int:
     SELECT vec_id,
            CAST(j.range AS BIGINT) AS dim,
            CAST(list_sum(list_transform(range(1, {_PROJ_IN} + 1),
-               i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000 + 0.5) AS BIGINT)
+               i -> {quantize_sql('embedding[i]')}
                     * (CAST((j.range * {_PROJ_IN} + i - 1) * 2654435761 % 2001 AS BIGINT) - 1000)
            )) AS BIGINT) AS value
     FROM embeddings, range(0, {_PROJ_OUT}) j
@@ -201,10 +205,10 @@ def ext_embedding_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_pca_power_step",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))
+                   x -> {quantize_sql('x')})
                    AS qv
         FROM embeddings
     ), g AS (

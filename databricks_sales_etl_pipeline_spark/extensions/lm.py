@@ -74,14 +74,13 @@ def ext_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles. Self-scoring here; scoring a held-out corpus is the same
     plan with the model table persisted and re-joined."""
     d = load(spark, sf_dir, "documents")
-    # round-14: (a) par.by_key moves the doc_id exchange BEFORE the explode
+    # round-14: par.by_key moves the doc_id exchange BEFORE the explode
     # (compact doc rows shuffle instead of word rows; split/explode/lead run
     # at core parallelism instead of inside the single scan task — guide
-    # §2.3/§2.5); (b) the bigram relation feeds THREE consumers (c1, model,
-    # the scoring join) whose differing column pruning defeats exchange
-    # reuse (round-12 facts), so it recomputed per branch — one lazy
-    # localCheckpoint materializes it once. Corpus-proportional scratch
-    # (one row per bigram occurrence), the documented single-box trade.
+    # §2.3/§2.5). The bigram relation feeds three consumers (c1, model, the
+    # scoring join) and is recomputed per branch; it is not checkpointed
+    # because that writes corpus-proportional scratch and measured no
+    # faster (12 alternating reps at sf0.02, 4 cores).
     words = par.by_key(d.select("doc_id", "text"), "doc_id").select(
         "doc_id",
         F.posexplode(
@@ -96,7 +95,7 @@ def ext_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("w", 1).over(win).alias("w2"),
         )
         .where(F.col("w2").isNotNull())
-    ).localCheckpoint(eager=False)
+    )
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).cast("bigint").alias("n1"))
     model = bg.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("n2")

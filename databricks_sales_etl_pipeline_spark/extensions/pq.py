@@ -6,16 +6,19 @@ PQ is how a 100 TB embedding corpus actually fits an ANN index: split each
 D-dim vector into S subspaces, k-means each subspace independently, and
 store S small codes (here 4 × 3 bits) instead of D floats — a 64-dim
 float32 vector (256 B) compresses to 4 codes (≤ 4 B), with search done via
-per-subspace lookup tables. The index-build dataflow reuses
-``similarity.train_kmeans`` (one groupBy shuffle of K·subdim longs per
-Lloyd iteration, bounded driver artifact) once per subspace; the final
-encode is a single zero-shuffle Arrow pandas UDF over the corpus.
+per-subspace lookup tables. The index build is
+``similarity.train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)``: all S codebooks
+trained jointly, one corpus scan and one groupBy shuffle of K·D longs per
+Lloyd iteration (bounded driver artifact). The final encode,
+``pq_codes``, is a single zero-shuffle Arrow pandas UDF over the corpus.
 
 Everything is integer-exact (milli-unit quantized vectors, floor-mean
-centroids, int64 squared distances), so the WHOLE pipeline — all four
-per-subspace Lloyd trainings AND the final codes + reconstruction error —
-is hash-checked against a DuckDB twin that unrolls the same iterations as
-namespaced CTE chains.
+centroids, int64 squared distances), so the WHOLE pipeline — every
+subspace's Lloyd training AND the final codes + reconstruction error —
+is hash-checked against a DuckDB twin that unrolls the same iterations
+per subspace as namespaced ``similarity._lloyd_ctes`` chains (one
+subspace at a time: the joint training gives each 16-dim slice exactly
+the centroids of its own ``n_sub=1`` training).
 """
 
 from __future__ import annotations
@@ -23,9 +26,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
 from ..registry import query
-from .similarity import LLOYD_ITERS, quantize
+from .similarity import (
+    _SQD,
+    LLOYD_ITERS,
+    NPROBE,
+    _assign_cells,
+    _centroid_mats,
+    _kmeans_cte_prefix,
+    _lloyd_ctes,
+    _nearest_fn,
+    _nearest_sql,
+    _probe_cells,
+    _sqdists,
+    quantize_sql,
+    quantized_vectors,
+    train_kmeans,
+)
 
 PQ_SUB = 4  # subspaces
 PQ_SUBDIM = 16  # dims per subspace (embeddings are 64-dim)
@@ -40,220 +57,94 @@ PQ_TOPK = 5
 PQ_REFINE_MULT = 3
 
 
-def _assign_all_fn(cent_sets):
-    """Nearest codebook centroid for ALL subspaces in one Arrow pass —
-    returns [cid_0..cid_{S-1}] per row. Same exact int-in-float64 distance
-    math and first-minimum (= dist ASC, cid ASC) tiebreak as the encoder."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [
-        (
-            np.array([c for c, _ in cents], dtype=np.int64),
-            np.array([cv for _, cv in cents], dtype=np.float64),
-        )
-        for cents in cent_sets
-    ]
-
-    @pandas_udf("array<long>")
-    def assign_all(v):
-        if v.empty:
-            return pd.Series([], dtype="object")
-        V = np.stack(v.to_numpy()).astype(np.float64)
-        n = len(V)
-        out = np.empty((n, PQ_SUB), dtype=np.int64)
-        for si, (cids, C) in enumerate(mats):
-            Vs = V[:, si * PQ_SUBDIM : (si + 1) * PQ_SUBDIM]
-            vn = (Vs * Vs).sum(axis=1)
-            cn = (C * C).sum(axis=1)
-            d = vn[:, None] - 2.0 * (Vs @ C.T) + cn[None, :]
-            out[:, si] = cids[d.argmin(axis=1)]
-        return pd.Series([list(row) for row in out])
-
-    return assign_all
-
-
-def _train_codebooks(vecs, k: int = PQ_K):
-    """All S codebooks trained JOINTLY: the subspace Lloyd problems are
-    independent, so one corpus scan per iteration serves every subspace —
-    assign all S cids in one Arrow pass, posexplode to (si, cid) rows
-    (in-memory only: map-side partial aggregation collapses them before the
-    shuffle, which carries S·K groups of D sums), floor-mean on the driver.
-    3 actions total instead of S×(ITERS+1) separate trainings — the same
-    bit-exact centroids as ``similarity.train_kmeans`` per 16-dim slice
-    (the per-subspace oracle chains pin this)."""
-    seed_rows = (
-        vecs.where(F.col("vec_id") < k).select("vec_id", "v").collect()
+def pq_codes(vecs: DataFrame, cent_sets) -> DataFrame:
+    """The PQ index rows (vec_id, code_0..code_{S-1}, recon_err): one
+    zero-shuffle Arrow pass of ``similarity._nearest`` over the corpus —
+    per subspace the nearest codebook centroid, plus the summed squared
+    distance to them (the integer reconstruction error)."""
+    return vecs.select("vec_id", _nearest_fn(cent_sets)("v").alias("ce")).select(
+        "vec_id", "ce.*"
     )
-    if not seed_rows:
-        raise ValueError(
-            f"_train_codebooks: no seed vectors with vec_id < {k}; the "
-            "seeding contract requires ids starting at 0"
-        )
-    dim = len(seed_rows[0]["v"])
-    cent_sets = [
-        sorted(
-            (
-                int(r["vec_id"]),
-                [int(x) for x in r["v"]][
-                    si * PQ_SUBDIM : (si + 1) * PQ_SUBDIM
-                ],
-            )
-            for r in seed_rows
-        )
-        for si in range(PQ_SUB)
-    ]
-    for _ in range(LLOYD_ITERS):
-        assign_all = _assign_all_fn(cent_sets)
-        # long-format update (round-13, same rationale as
-        # similarity.train_kmeans): the wide form built D getItem SUMs per
-        # iteration — heavy driver-side expression chatter — and computed
-        # all D sums for every (si, cid) group although each subspace only
-        # uses its own subdim slice. posexplode v to (d, val), recover the
-        # subspace as d DIV subdim and its cid from the assignment array:
-        # 3 Column objects, K·D groups after partial aggregation, and only
-        # the sums that are actually used. Identical exact integers.
-        stats = (
-            vecs.select(assign_all("v").alias("cids"), "v")
-            .select("cids", F.posexplode("v").alias("d", "val"))
-            .select(
-                "d",
-                "val",
-                F.element_at(
-                    "cids", F.expr(f"CAST(d DIV {PQ_SUBDIM} AS INT) + 1")
-                ).alias("cid"),
-            )
-            .groupBy("d", "cid")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("val").alias("s"))
-            .collect()
-        )
-        acc: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            d = int(r["d"])
-            acc.setdefault((d // PQ_SUBDIM, int(r["cid"])), {})[
-                d % PQ_SUBDIM
-            ] = (int(r["s"]), int(r["n"]))
-        new_sets: list[list] = [[] for _ in range(PQ_SUB)]
-        for (si, cid), dims in acc.items():
-            new_sets[si].append(
-                (cid, [dims[dl][0] // dims[dl][1] for dl in range(PQ_SUBDIM)])
-            )
-        cent_sets = [sorted(s) for s in new_sets]
-    return cent_sets
 
 
-def _pq_encode_fn(cent_sets):
-    """One Arrow batch pass: per subspace, exact int-in-float64 squared
-    distances to that subspace's centroids (same matmul form and exactness
-    argument as ``similarity._sqdists`` — every product/partial sum is an
-    integer ≪ 2^53), argmin code (first-minimum on cid-sorted rows = the
-    oracle's dist ASC, cid ASC tiebreak), plus the summed reconstruction
-    error. Returns [code_0..code_{S-1}, recon_err] per row."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [
-        (
-            np.array([c for c, _ in cents], dtype=np.int64),
-            np.array([cv for _, cv in cents], dtype=np.float64),
-        )
-        for cents in cent_sets
+def _pq_queries(vecs: DataFrame) -> list[tuple[int, list[int]]]:
+    """The bounded query set [(qid, vec)]: the first PQ_QUERIES vectors —
+    the sanctioned small-artifact driver collect (MLlib pattern)."""
+    return [
+        (int(r["vec_id"]), [int(x) for x in r["v"]])
+        for r in vecs.where(F.col("vec_id") < PQ_QUERIES)
+        .select("vec_id", "v")
+        .collect()
     ]
 
-    @pandas_udf("array<long>")
-    def encode(v):
-        if v.empty:
-            return pd.Series([], dtype="object")
-        V = np.stack(v.to_numpy()).astype(np.float64)
-        n = len(V)
-        codes = np.empty((n, PQ_SUB), dtype=np.int64)
-        err = np.zeros(n, dtype=np.int64)
-        for si, (cids, C) in enumerate(mats):
-            Vs = V[:, si * PQ_SUBDIM : (si + 1) * PQ_SUBDIM]
-            vn = (Vs * Vs).sum(axis=1)
-            cn = (C * C).sum(axis=1)
-            d = (vn[:, None] - 2.0 * (Vs @ C.T) + cn[None, :]).astype(np.int64)
-            idx = d.argmin(axis=1)
-            codes[:, si] = cids[idx]
-            err += d[np.arange(n), idx]
-        return pd.Series(
-            [list(codes[i]) + [int(err[i])] for i in range(n)]
+
+def _pq_chains() -> str:
+    """One namespaced DuckDB Lloyd chain per subspace si over ``qvecs``:
+    slice ``p{si}v`` → ``similarity._lloyd_ctes`` → final ``p{si}fin``
+    (vec_id, v, cid, d)."""
+    ctes = []
+    for si in range(PQ_SUB):
+        ns = f"p{si}"
+        fin = _nearest_sql(
+            f"{ns}v",
+            f"{ns}c{LLOYD_ITERS}",
+            f"v.vec_id, v.v, c.cid, CAST({_SQD} AS BIGINT) AS d",
         )
-
-    return encode
-
-
-_SQD_NS = (
-    "list_sum(list_transform(range(1, len(v.v) + 1),"
-    " i -> (v.v[i] - c.cv[i]) * (v.v[i] - c.cv[i])))"
-)
-
-
-def _pq_chain(si: int) -> str:
-    """Namespaced DuckDB Lloyd chain for subspace ``si``: slice → seed →
-    unrolled iterations (same floor-mean and tiebreak shapes as
-    ``similarity._kmeans_cte_prefix``) → final (vec_id, cid, d)."""
-    ns = f"p{si}"
-    lo, hi = si * PQ_SUBDIM + 1, (si + 1) * PQ_SUBDIM
-
-    def assign(src_c: str, out: str, keep_d: bool = False) -> str:
-        d_col = f", CAST({_SQD_NS} AS BIGINT) AS d" if keep_d else ""
-        d_keep = ", d" if keep_d else ""
-        return f"""{out} AS (
-        SELECT vec_id, v, cid{d_keep} FROM (
-            SELECT v.vec_id, v.v, c.cid{d_col},
-                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                      ORDER BY {_SQD_NS} ASC, c.cid ASC) AS rn
-            FROM {ns}v v CROSS JOIN {src_c} c
-        ) WHERE rn = 1
-    )"""
-
-    def update(src_a: str, out: str) -> str:
-        return f"""{out} AS (
-        SELECT cid, list(m ORDER BY dim) AS cv FROM (
-            SELECT cid, dim, (s - ((s % n) + n) % n) // n AS m
-            FROM (
-                SELECT cid, dim, SUM(val) AS s, COUNT(*) AS n
-                FROM (
-                    SELECT cid, unnest(range(1, len(v) + 1)) AS dim,
-                           unnest(v) AS val
-                    FROM {src_a}
-                ) exploded
-                GROUP BY cid, dim
-            ) sums
-        ) means
-        GROUP BY cid
-    )"""
-
-    ctes = [
-        f"{ns}v AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM qvecs)",
-        f"{ns}c0 AS (SELECT vec_id AS cid, v AS cv FROM {ns}v WHERE vec_id < {PQ_K})",
-    ]
-    src = f"{ns}c0"
-    for it in range(1, LLOYD_ITERS + 1):
-        ctes.append(assign(src, f"{ns}a{it}"))
-        ctes.append(update(f"{ns}a{it}", f"{ns}c{it}"))
-        src = f"{ns}c{it}"
-    ctes.append(assign(src, f"{ns}fin", keep_d=True))
+        ctes += [
+            f"{ns}v AS (SELECT vec_id,"
+            f" v[{si * PQ_SUBDIM + 1}:{(si + 1) * PQ_SUBDIM}] AS v FROM qvecs)",
+            *_lloyd_ctes(f"{ns}v", ns, PQ_K),
+            f"{ns}fin AS ({fin})",
+        ]
     return ",\n    ".join(ctes)
 
 
+_QVECS = (
+    "qvecs AS (SELECT vec_id,"
+    f" list_transform(embedding, x -> {quantize_sql('x')}) AS v FROM embeddings)"
+)
+
+
+def _adc_sql(nb: str) -> tuple[str, str]:
+    """(joins, adc_dist): the DuckDB twin of ``_adc_lut`` for neighbor id
+    ``nb`` against query vectors ``q``. Per subspace, join the neighbor's
+    final code and that code's trained centroid, and sum the squared
+    distances from the query's subvectors to them."""
+    joins, terms = [], []
+    for si in range(PQ_SUB):
+        lo = si * PQ_SUBDIM
+        joins.append(
+            f"JOIN p{si}fin f{si} ON f{si}.vec_id = {nb} "
+            f"JOIN p{si}c{LLOYD_ITERS} cb{si} ON cb{si}.cid = f{si}.cid"
+        )
+        terms.append(
+            f"list_sum(list_transform(range(1, {PQ_SUBDIM} + 1),"
+            f" i -> (q.v[{lo} + i] - cb{si}.cv[i])"
+            f" * (q.v[{lo} + i] - cb{si}.cv[i])))"
+        )
+    return " ".join(joins), f"CAST({' + '.join(terms)} AS BIGINT)"
+
+
+#: final SELECT of both ADC oracles: top-k of the ``adc`` CTE per query
+_ADC_TOPK = f"""
+    SELECT query_id, neighbor_id, adc_dist, rank FROM (
+        SELECT query_id, neighbor_id, adc_dist,
+               ROW_NUMBER() OVER (PARTITION BY query_id
+                                  ORDER BY adc_dist ASC, neighbor_id ASC)
+                   AS rank
+        FROM adc
+    ) WHERE rank <= {PQ_TOPK}"""
+
+
 def _pq_oracle() -> str:
-    qv = (
-        "list_transform(embedding,"
-        " x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-    )
-    chains = ",\n    ".join(_pq_chain(si) for si in range(PQ_SUB))
     code_cols = ", ".join(f"p{si}fin.cid AS code_{si}" for si in range(PQ_SUB))
     err = " + ".join(f"p{si}fin.d" for si in range(PQ_SUB))
     joins = " ".join(
         f"JOIN p{si}fin ON p{si}fin.vec_id = p0fin.vec_id"
         for si in range(1, PQ_SUB)
     )
-    return f"""WITH qvecs AS (SELECT vec_id, {qv} AS v FROM embeddings),
-    {chains}
+    return f"""WITH {_QVECS},
+    {_pq_chains()}
     SELECT p0fin.vec_id AS vec_id, {code_cols},
            CAST({err} AS BIGINT) AS recon_err
     FROM p0fin {joins}
@@ -268,53 +159,47 @@ def ext_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle Arrow encode pass emitting the 4 codes + integer
     reconstruction error per vector.
 
-    Scale: codebook training is S × ITERS bounded-artifact shuffles
-    (K·subdim longs each); the encode scan is embarrassingly parallel and
+    Scale: codebook training is ITERS bounded-artifact shuffles (K·D longs
+    each, all subspaces at once); the encode scan is embarrassingly parallel and
     the output is ~60× smaller than the input vectors — this is the write
     path of a disk-backed IVF-PQ index at 100 TB."""
-    e = load(spark, sf_dir, "embeddings")
-    vecs = e.select(
-        "vec_id", quantize(F.col("embedding")).alias("v")
-    ).localCheckpoint(eager=False)  # the seed collect is a full pass anyway
-    cent_sets = _train_codebooks(vecs)
-    enc = _pq_encode_fn(cent_sets)
-    out = vecs.select("vec_id", enc("v").alias("ce"))
-    cols = [
-        F.element_at("ce", si + 1).alias(f"code_{si}") for si in range(PQ_SUB)
-    ]
-    return out.select(
-        "vec_id",
-        *cols,
-        F.element_at("ce", PQ_SUB + 1).alias("recon_err"),
-    ).orderBy("vec_id")
+    vecs = quantized_vectors(spark, sf_dir)
+    cent_sets = train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)
+    return pq_codes(vecs, cent_sets).orderBy("vec_id")
 
 
 # --- ADC search over the compressed codes -----------------------------------
 
 
-def _adc_scan_fn(cent_sets, queries):
-    """The FAISS-style ADC kernel: per query, precompute the S×K lookup
-    table of exact int64 squared distances from the query's subvectors to
-    every codebook centroid; scanning the corpus then costs S table
-    gathers + adds per (query, vector) pair — the compressed codes never
-    decompress. All integers, so the scan is hash-exact.
+def _adc_lut(cent_sets, queries):
+    """The ADC lookup table LUT[q, s, cid]: exact int64 squared distances
+    (``similarity._sqdists``) from query q's subvector s to every centroid
+    of codebook s. Dense over cid up to the largest live cid (cid labels are
+    seed ids 0..k-1, and codes only reference live cids), so the table
+    serves any PQ_K the caller trained with. ``queries`` is the bounded
+    collected query set [(qid, vec)]."""
+    import numpy as np
 
-    ``queries`` is the bounded collected query set [(qid, vec)] — the
-    sanctioned small-artifact driver collect (MLlib pattern)."""
+    Q = np.array([qv for _, qv in queries], dtype=np.int64)
+    kmax = 1 + max(cid for cents in cent_sets for cid, _ in cents)
+    lut = np.zeros((len(queries), len(cent_sets), kmax), dtype=np.int64)
+    for si, cents in enumerate(cent_sets):
+        cids, C = _centroid_mats(cents)
+        lut[:, si, cids] = _sqdists(Q[:, si * PQ_SUBDIM : (si + 1) * PQ_SUBDIM], C)
+    return lut
+
+
+def _adc_scan_fn(cent_sets, queries):
+    """The FAISS-style ADC kernel: per query, the S×K lookup table of
+    ``_adc_lut``; scanning the corpus then costs S table gathers + adds per
+    (query, vector) pair — the compressed codes never decompress. All
+    integers, so the scan is hash-exact."""
     import numpy as np
     import pandas as pd
 
-    # LUT[q, s, cid] — dense over cid (codes only reference live cids)
     n_q = len(queries)
-    lut = np.zeros((n_q, PQ_SUB, PQ_K), dtype=np.int64)
+    lut = _adc_lut(cent_sets, queries)
     qids = np.array([q for q, _ in queries], dtype=np.int64)
-    for qi, (_, qv) in enumerate(queries):
-        qarr = np.array(qv, dtype=np.int64)
-        for si, cents in enumerate(cent_sets):
-            qs = qarr[si * PQ_SUBDIM : (si + 1) * PQ_SUBDIM]
-            for cid, cv in cents:
-                d = qs - np.array(cv, dtype=np.int64)
-                lut[qi, si, cid] = int((d * d).sum())
 
     def scan(batches):
         for pdf in batches:
@@ -341,42 +226,17 @@ def _adc_scan_fn(cent_sets, queries):
 
 
 def _pq_search_oracle() -> str:
-    qv = (
-        "list_transform(embedding,"
-        " x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-    )
-    chains = ",\n    ".join(_pq_chain(si) for si in range(PQ_SUB))
-    # per-subspace ADC term: squared distance from the query's subvector to
-    # the centroid the neighbor's code points at
-    joins, terms = [], []
-    for si in range(PQ_SUB):
-        lo = si * PQ_SUBDIM
-        joins.append(
-            f"JOIN p{si}fin f{si} ON f{si}.vec_id = n.vec_id "
-            f"JOIN p{si}c{LLOYD_ITERS} cb{si} ON cb{si}.cid = f{si}.cid"
-        )
-        terms.append(
-            f"list_sum(list_transform(range(1, {PQ_SUBDIM} + 1),"
-            f" i -> (q.v[{lo} + i] - cb{si}.cv[i])"
-            f" * (q.v[{lo} + i] - cb{si}.cv[i])))"
-        )
-    return f"""WITH qvecs AS (SELECT vec_id, {qv} AS v FROM embeddings),
-    {chains},
+    joins, adc_dist = _adc_sql("n.vec_id")
+    return f"""WITH {_QVECS},
+    {_pq_chains()},
     adc AS (
         SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               CAST({" + ".join(terms)} AS BIGINT) AS adc_dist
+               {adc_dist} AS adc_dist
         FROM qvecs q
         JOIN qvecs n ON n.vec_id <> q.vec_id
-        {" ".join(joins)}
+        {joins}
         WHERE q.vec_id < {PQ_QUERIES}
-    )
-    SELECT query_id, neighbor_id, adc_dist, rank FROM (
-        SELECT query_id, neighbor_id, adc_dist,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY adc_dist ASC, neighbor_id ASC)
-                   AS rank
-        FROM adc
-    ) WHERE rank <= {PQ_TOPK}"""
+    ){_ADC_TOPK}"""
 
 
 @query("ext_pq_search", oracle=_pq_search_oracle())
@@ -393,26 +253,10 @@ def ext_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only shuffle is the per-query top-k window."""
     from pyspark.sql import Window
 
-    e = load(spark, sf_dir, "embeddings")
-    vecs = e.select(
-        "vec_id", quantize(F.col("embedding")).alias("v")
-    ).localCheckpoint(eager=False)  # the seed collect is a full pass anyway
-    cent_sets = _train_codebooks(vecs)
-    enc = _pq_encode_fn(cent_sets)
-    codes = vecs.select("vec_id", enc("v").alias("ce")).select(
-        "vec_id",
-        *[
-            F.element_at("ce", si + 1).alias(f"code_{si}")
-            for si in range(PQ_SUB)
-        ],
-    )
-    queries = [
-        (int(r["vec_id"]), [int(x) for x in r["v"]])
-        for r in vecs.where(F.col("vec_id") < PQ_QUERIES)
-        .select("vec_id", "v")
-        .collect()
-    ]
-    scanned = codes.mapInPandas(
+    vecs = quantized_vectors(spark, sf_dir)
+    cent_sets = train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)
+    queries = _pq_queries(vecs)
+    scanned = pq_codes(vecs, cent_sets).mapInPandas(
         _adc_scan_fn(cent_sets, queries),
         "query_id long, neighbor_id long, adc_dist long",
     ).where(F.col("neighbor_id") != F.col("query_id"))
@@ -437,17 +281,7 @@ def _adc_pair_fn(cent_sets, queries):
     from pyspark.sql.functions import pandas_udf
 
     qpos = {q: idx for idx, (q, _) in enumerate(queries)}
-    # table width = the codebook's actual code range (cid labels are seed
-    # ids 0..k-1), so the fn serves any PQ_K the caller trained with
-    kmax = 1 + max(cid for cents in cent_sets for cid, _ in cents)
-    lut = np.zeros((len(queries), PQ_SUB, kmax), dtype=np.int64)
-    for qi, (_, qv) in enumerate(queries):
-        qarr = np.array(qv, dtype=np.int64)
-        for si, cents in enumerate(cent_sets):
-            qs = qarr[si * PQ_SUBDIM : (si + 1) * PQ_SUBDIM]
-            for cid, cv in cents:
-                d = qs - np.array(cv, dtype=np.int64)
-                lut[qi, si, cid] = int((d * d).sum())
+    lut = _adc_lut(cent_sets, queries)
 
     @pandas_udf("long")
     def adc(qid, c0, c1, c2, c3):
@@ -467,54 +301,31 @@ def _pq_search_ctes() -> str:
     refined one: quantized vectors → coarse Lloyd chain → per-subspace PQ
     chains → probes → the `adc` candidate CTE (query_id, neighbor_id,
     adc_dist). Callers append their final SELECT (and extra CTEs)."""
-    from .similarity import _kmeans_cte_prefix, NPROBE, _SQD
-
-    pq_chains = ",\n    ".join(_pq_chain(si) for si in range(PQ_SUB))
-    joins, terms = [], []
-    for si in range(PQ_SUB):
-        lo = si * PQ_SUBDIM
-        joins.append(
-            f"JOIN p{si}fin f{si} ON f{si}.vec_id = fa.vec_id "
-            f"JOIN p{si}c{LLOYD_ITERS} cb{si} ON cb{si}.cid = f{si}.cid"
-        )
-        terms.append(
-            f"list_sum(list_transform(range(1, {PQ_SUBDIM} + 1),"
-            f" i -> (q.v[{lo} + i] - cb{si}.cv[i])"
-            f" * (q.v[{lo} + i] - cb{si}.cv[i])))"
-        )
-    final_c = f"c{LLOYD_ITERS}"
+    probes = _nearest_sql(
+        "vecs",
+        f"c{LLOYD_ITERS}",
+        "v.vec_id AS query_id, c.cid AS qcid",
+        NPROBE,
+        f"v.vec_id < {PQ_QUERIES}",
+    )
+    joins, adc_dist = _adc_sql("fa.vec_id")
     return f"""WITH {_kmeans_cte_prefix()},
     qvecs AS (SELECT vec_id, v FROM vecs),
-    {pq_chains},
-    probes AS (
-        SELECT query_id, qcid FROM (
-            SELECT v.vec_id AS query_id, c.cid AS qcid,
-                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                      ORDER BY {_SQD} ASC, c.cid ASC) AS rn
-            FROM vecs v CROSS JOIN {final_c} c
-            WHERE v.vec_id < {PQ_QUERIES}
-        ) WHERE rn <= {NPROBE}
-    ),
+    {_pq_chains()},
+    probes AS ({probes}),
     adc AS (
         SELECT p.query_id, fa.vec_id AS neighbor_id,
-               CAST({" + ".join(terms)} AS BIGINT) AS adc_dist
+               {adc_dist} AS adc_dist
         FROM probes p
         JOIN final_assign fa ON fa.cid = p.qcid
         JOIN qvecs q ON q.vec_id = p.query_id
-        {" ".join(joins)}
+        {joins}
         WHERE fa.vec_id <> p.query_id
     )"""
 
 
 def _pq_ivf_oracle() -> str:
-    return f"""{_pq_search_ctes()}
-    SELECT query_id, neighbor_id, adc_dist, rank FROM (
-        SELECT query_id, neighbor_id, adc_dist,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY adc_dist ASC, neighbor_id ASC)
-                   AS rank
-        FROM adc
-    ) WHERE rank <= {PQ_TOPK}"""
+    return _pq_search_ctes() + _ADC_TOPK
 
 
 def _pq_refine_oracle() -> str:
@@ -552,31 +363,14 @@ def _ivf_scored(spark: SparkSession, sf_dir: str):
     ADC search and the refined search both finish from here."""
     from pyspark.sql import Window
 
-    from .similarity import _assign_cells, _probe_cells, train_kmeans
-
-    e = load(spark, sf_dir, "embeddings")
-    vecs = e.select(
-        "vec_id", quantize(F.col("embedding")).alias("v")
-    ).localCheckpoint(eager=False)  # the seed collect is a full pass anyway
-    coarse = train_kmeans(vecs)
+    vecs = quantized_vectors(spark, sf_dir)
+    coarse = train_kmeans(vecs)[0]
     cells = _assign_cells(vecs, coarse).select("vec_id", "cid")
-    cent_sets = _train_codebooks(vecs)
-    enc = _pq_encode_fn(cent_sets)
-    codes = vecs.select("vec_id", enc("v").alias("ce")).select(
-        "vec_id",
-        *[
-            F.element_at("ce", si + 1).alias(f"code_{si}")
-            for si in range(PQ_SUB)
-        ],
-    )
-    index = codes.join(cells, "vec_id")  # the stored IVF-PQ posting lists
+    cent_sets = train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)
+    # the stored IVF-PQ posting lists
+    index = pq_codes(vecs, cent_sets).join(cells, "vec_id")
 
-    queries = [
-        (int(r["vec_id"]), [int(x) for x in r["v"]])
-        for r in vecs.where(F.col("vec_id") < PQ_QUERIES)
-        .select("vec_id", "v")
-        .collect()
-    ]
+    queries = _pq_queries(vecs)
     probes = _probe_cells(
         vecs.where(F.col("vec_id") < PQ_QUERIES), coarse
     ).select(
@@ -614,8 +408,6 @@ def ext_pq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the scan touches nprobe/K of the corpus at 4 ints/vector —
     ~120× less I/O than brute force over raw vectors; the only shuffle is
     the per-query top-k window."""
-    from pyspark.sql import Window  # noqa: F401  (kept for parity of shape)
-
     vecs, scored, w = _ivf_scored(spark, sf_dir)
     return scored.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= PQ_TOPK

@@ -37,6 +37,12 @@ def quantize(col):
     return F.transform(col, lambda x: F.floor(x.cast("double") * 1000 + 0.5))
 
 
+def quantize_sql(expr: str) -> str:
+    """DuckDB twin of ``quantize`` for one element: milli-units, same
+    tie-safe rounding."""
+    return f"CAST(floor(CAST({expr} AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
+
+
 def int_dot(a, b):
     """Exact dot product of two integer arrays (zip_with + aggregate —
     higher-order built-ins, JVM-side, no UDF)."""
@@ -50,11 +56,11 @@ def int_dot(a, b):
 _TOPK_ORACLE = f"""
     WITH q AS (
         SELECT vec_id AS query_id,
-               list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+               list_transform(embedding, x -> {quantize_sql('x')}) AS qv
         FROM embeddings WHERE vec_id < {N_QUERIES}
     ), c AS (
         SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS cv
+               list_transform(embedding, x -> {quantize_sql('x')}) AS cv
         FROM embeddings
     ), scored AS (
         SELECT q.query_id, c.neighbor_id,
@@ -154,7 +160,7 @@ def lsh_bucket_sql(cv: str) -> str:
 _LSH_ORACLE = f"""
     WITH c AS (
         SELECT vec_id,
-               list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS cv
+               list_transform(embedding, x -> {quantize_sql('x')}) AS cv
         FROM embeddings
     ), buckets AS (
         SELECT vec_id, {lsh_bucket_sql("cv")} AS bucket_id
@@ -186,7 +192,7 @@ _EMB_DEDUP_ORACLE = f"""
     WITH q AS (
         SELECT vec_id,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+                   x -> {quantize_sql('x')}) AS qv
         FROM embeddings
     ), bucketed AS (
         SELECT vec_id, qv, {lsh_bucket_sql("qv")} AS bucket_id FROM q
@@ -248,7 +254,7 @@ _IVF_ORACLE = f"""
     WITH q AS (
         SELECT vec_id, label,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+                   x -> {quantize_sql('x')}) AS qv
         FROM embeddings
     ), sums AS (  -- integer centroid SUM vectors (same direction as the mean)
         SELECT label, list(s ORDER BY dim) AS sv
@@ -416,7 +422,7 @@ def ext_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- X3d: real k-means coarse quantizer for IVF ANN -------------------------
+# --- X3d: k-means — the coarse IVF quantizer and the PQ codebooks -----------
 #
 # Round-3 judge gap: ext_similarity_ivf's "centroids" were the pre-existing
 # label column with nprobe=1. This is the real thing: Lloyd iterations over
@@ -430,14 +436,18 @@ def ext_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   while Spark `DIV` truncates toward zero);
 # - ties (equidistant centroids) break on the smaller centroid id.
 #
+# One trainer serves the whole ANN family: ``train_kmeans(n_sub=1)`` is the
+# coarse IVF quantizer, ``n_sub=PQ_SUB`` the PQ codebooks (pq.py). Its
+# twins are ``_nearest`` (the one nearest-centroid kernel) and, in DuckDB,
+# ``_lloyd_ctes`` / ``_nearest_sql``.
+#
 # EXECUTION SHAPE (the MLlib-style iterative pattern, and why there is a
 # driver collect here): centroids are K·D integers — bounded, tiny, and
 # needed by EVERY task — so each Lloyd iteration collects them to the
 # driver and ships them inside a VECTORIZED Arrow pandas UDF closure.
-# Assignment is then a ZERO-SHUFFLE numpy map over the corpus
-# ((n×K×D) int64 broadcast-subtract per Arrow batch — exact integers, no
-# floats), and the update is ONE groupBy(cid) shuffle carrying K rows of D
-# column-sums per partition (map-side partial agg, JVM-side). Per 100-TB
+# Assignment is then a ZERO-SHUFFLE numpy map over the corpus, and the
+# update is ONE groupBy(cid, d) shuffle carrying K·D partial sums per
+# partition (map-side partial agg, JVM-side) whatever n_sub is. Per 100-TB
 # scan: 1 shuffle of K·D longs per iteration — the optimal distributed
 # Lloyd. Two rejected drafts, for the record: window-over-crossJoin cost 15
 # shuffles; inlining K×D literal subtract-square terms as Spark expressions
@@ -452,6 +462,18 @@ NPROBE = 2
 Centroid = tuple[int, list[int]]
 
 
+def quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v) milli-unit embeddings, lazily checkpointed once: an
+    index build takes several actions over them (training, then the final
+    plan), and training's seed collect is the first of them and a full pass
+    anyway — one materialization beats re-scanning and re-quantizing
+    parquet per action."""
+    e = load(spark, sf_dir, "embeddings")
+    return e.select("vec_id", quantize(F.col("embedding")).alias("v")).localCheckpoint(
+        eager=False
+    )
+
+
 def _centroid_mats(centroids: list[Centroid]):
     import numpy as np
 
@@ -460,14 +482,17 @@ def _centroid_mats(centroids: list[Centroid]):
     return cids, C
 
 
-def _sqdists(v_series, C):
-    """(n×K) exact int64 squared-L2 distances for one Arrow batch, in the
-    ‖v‖² − 2v·c + ‖c‖² matmul form: O(nKD) with one n×K intermediate
-    instead of the n×K×D broadcast-subtract tensor (which at K=2000,
-    batch=10k, D=64 would materialize 10 GB)."""
+def _sqdists(V, C):
+    """(n×K) exact int64 squared-L2 distances from the rows of ``V`` (an
+    n×D array, or an Arrow batch column of integer arrays) to the rows of
+    ``C``, in the ‖v‖² − 2v·c + ‖c‖² matmul form: O(nKD) with one n×K
+    intermediate instead of the n×K×D broadcast-subtract tensor (which at
+    K=2000, batch=10k, D=64 would materialize 10 GB)."""
     import numpy as np
 
-    V = np.stack(v_series.to_numpy()).astype(np.float64)
+    if not isinstance(V, np.ndarray):
+        V = np.stack(V.to_numpy())
+    V = V.astype(np.float64, copy=False)
     Cf = C.astype(np.float64)
     # float64 BLAS here is EXACT, not approximate: every product and every
     # partial sum is an integer ≤ D·(milli-unit max)² ≈ 2e7 ≪ 2^53, so each
@@ -505,7 +530,7 @@ def matmul_chunk_rows(
     return max(lo, min(hi, budget_bytes // (k * 8)))
 
 
-def _chunked_sqdists(v_series, C, reduce_fn, step=None):
+def _chunked_sqdists(V, C, reduce_fn, step=None):
     """Apply ``reduce_fn`` (an n×K → n×… reducer like argmin/argsort-top-N)
     over ``_sqdists`` in row chunks of ``matmul_chunk_rows(K)`` and
     concatenate — peak memory ≈ chunk × K regardless of the Arrow batch
@@ -517,35 +542,65 @@ def _chunked_sqdists(v_series, C, reduce_fn, step=None):
     if step is None:
         step = matmul_chunk_rows(C.shape[0])
     return np.concatenate(
-        [
-            reduce_fn(_sqdists(v_series.iloc[i : i + step], C))
-            for i in range(0, len(v_series), step)
-        ]
+        [reduce_fn(_sqdists(V[i : i + step], C)) for i in range(0, len(V), step)]
     )
 
 
-def _assign_cells(vectors: DataFrame, centroids: list[Centroid]) -> DataFrame:
-    """Nearest-centroid assignment as a zero-shuffle vectorized map.
-    ``centroids`` is sorted by cid, so numpy argmin's first-minimum rule IS
-    the (distance ASC, cid ASC) tiebreak of the oracle. UDF built lazily —
+def _nearest(v, mats):
+    """Nearest centroid of every subspace for one Arrow batch ``v``.
+    ``mats`` holds one cid-sorted ``_centroid_mats`` pair per subspace;
+    their widths split the vector in order. Returns (codes: n×S cids,
+    err: n summed squared distances to them). numpy's first-minimum argmin
+    on cid-sorted rows IS the oracle's (distance ASC, cid ASC) tiebreak."""
+    import numpy as np
+
+    def argmin_and_min(d):
+        i = d.argmin(axis=1)
+        return np.stack([i, d[np.arange(len(d)), i]], axis=1)
+
+    V = np.stack(v.to_numpy()).astype(np.float64)
+    codes = np.empty((len(V), len(mats)), dtype=np.int64)
+    err = np.zeros(len(V), dtype=np.int64)
+    lo = 0
+    for si, (cids, C) in enumerate(mats):
+        hi = lo + C.shape[1]
+        best = _chunked_sqdists(V[:, lo:hi], C, argmin_and_min)
+        codes[:, si] = cids[best[:, 0]]
+        err += best[:, 1]
+        lo = hi
+    return codes, err
+
+
+def _nearest_fn(cent_sets: list[list[Centroid]]):
+    """Arrow UDF over the vector column: the struct (code_0..code_{S-1},
+    recon_err) of ``_nearest`` against every subspace's centroids. A
+    struct, not an array: pyspark hands a struct result back to the JVM
+    column by column, an array cell by cell in Python. UDF built lazily —
     pandas_udf needs an active session (CLAUDE.md discipline)."""
+    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cids, C = _centroid_mats(centroids)
+    mats = [_centroid_mats(c) for c in cent_sets]
+    cols = [f"code_{si}" for si in range(len(mats))] + ["recon_err"]
 
     # no type hints: under `from __future__ import annotations` the locally
     # imported pd isn't resolvable by pandas_udf's hint inference — the
     # hint-less form defaults to SCALAR eval, which is what this is
-    @pandas_udf("long")
+    @pandas_udf(", ".join(f"{c} long" for c in cols))
     def nearest(v):
         if v.empty:
-            return pd.Series([], dtype="int64")
-        return pd.Series(
-            cids[_chunked_sqdists(v, C, lambda d: d.argmin(axis=1))]
-        )
+            return pd.DataFrame(np.empty((0, len(cols)), dtype=np.int64), columns=cols)
+        codes, err = _nearest(v, mats)
+        return pd.DataFrame(np.column_stack([codes, err]), columns=cols)
 
-    return vectors.withColumn("cid", nearest("v"))
+    return nearest
+
+
+def _assign_cells(vectors: DataFrame, centroids: list[Centroid]) -> DataFrame:
+    """Nearest-centroid assignment as a zero-shuffle vectorized map: adds
+    the long column ``cid``."""
+    return vectors.withColumn("cid", _nearest_fn([centroids])("v")["code_0"])
 
 
 def _probe_cells(vectors: DataFrame, centroids: list[Centroid]) -> DataFrame:
@@ -569,48 +624,69 @@ def _probe_cells(vectors: DataFrame, centroids: list[Centroid]) -> DataFrame:
 
 
 def train_kmeans(
-    vectors: DataFrame, k: int = K_CELLS, iters: int = LLOYD_ITERS
-) -> list[Centroid]:
-    """Distributed Lloyd: per iteration one corpus scan → groupBy(cid) with
-    D per-dimension SUMs + COUNT (single shuffle, K result rows), floor-mean
-    on the driver in exact Python integer arithmetic. Empty cells drop out
-    (identical to the oracle's GROUP BY)."""
+    vectors: DataFrame,
+    k: int = K_CELLS,
+    iters: int = LLOYD_ITERS,
+    n_sub: int = 1,
+) -> list[list[Centroid]]:
+    """Distributed Lloyd over the ``n_sub`` equal-width subspaces of ``v``,
+    trained jointly (independent problems, so one corpus scan per iteration
+    serves them all), seeded by the vectors with vec_id < k. Per iteration:
+    one Arrow pass assigns every subspace's cid, v posexplodes to (d, val)
+    rows carrying the cid of d's subspace, one groupBy(cid, d) shuffle
+    (K·D groups after map-side partial aggregation) returns COUNT and SUM,
+    and the driver floor-means them in exact integers. Empty cells drop out
+    (as in the oracle's GROUP BY). Returns each subspace's cid-sorted
+    centroids."""
     seeds = vectors.where(F.col("vec_id") < k).select("vec_id", "v").collect()
-    centroids: list[Centroid] = sorted(
-        (int(r["vec_id"]), [int(x) for x in r["v"]]) for r in seeds
-    )
-    if not centroids:
+    if not seeds:
         raise ValueError(
             f"train_kmeans: no seed vectors with vec_id < {k}; the seeding "
             "contract requires ids starting at 0 (regenerate ids or remap)"
         )
-    dim = len(centroids[0][1])
+    sub = len(seeds[0]["v"]) // n_sub
+    cent_sets = [
+        sorted(
+            (int(r["vec_id"]), [int(x) for x in r["v"][si * sub : (si + 1) * sub]])
+            for r in seeds
+        )
+        for si in range(n_sub)
+    ]
+    # the cid of dimension d is code_{d // sub}; with one subspace, code_0
+    cid = F.col("code_0")
+    for si in range(1, n_sub):
+        cid = F.when(F.col("d") < si * sub, cid).otherwise(F.col(f"code_{si}"))
     for _ in range(iters):
         # long-format update (round-13): the wide form built D per-dim
         # getItem SUM expressions per iteration — ~200 py4j round trips of
         # pure driver chatter (measured ~1.1 s/iteration at D=64) and a
-        # D+1-column shuffle row. posexplode to (cid, d, val) keeps the
-        # whole aggregate at 3 Column objects; map-side partial aggregation
-        # still collapses to K·D groups before the shuffle, and the SUMs
-        # are the identical exact integers.
+        # D+1-column shuffle row. posexplode keeps the whole aggregate at
+        # a few Column objects; the SUMs are the identical exact integers.
         stats = (
-            _assign_cells(vectors, centroids)
-            .select("cid", F.posexplode("v").alias("d", "val"))
-            .groupBy("cid", "d")
+            vectors.select(_nearest_fn(cent_sets)("v").alias("ne"), "v")
+            .select("ne.*", F.posexplode("v").alias("d", "val"))
+            # (cid, d), not (d, cid): measured ~20% faster per iteration
+            # at 200 k vectors, K = 447, on 4 vCPUs
+            .groupBy(cid.alias("cid"), "d")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("val").alias("s"))
             .collect()
         )
-        by_cid: dict[int, dict[int, tuple[int, int]]] = {}
+        acc: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
         for r in stats:
-            by_cid.setdefault(int(r["cid"]), {})[int(r["d"])] = (
+            d = int(r["d"])
+            acc.setdefault((d // sub, int(r["cid"])), {})[d % sub] = (
                 int(r["s"]),
                 int(r["n"]),
             )
-        centroids = sorted(
-            (cid, [dims[d][0] // dims[d][1] for d in range(dim)])
-            for cid, dims in by_cid.items()
-        )
-    return centroids
+        cent_sets = [
+            sorted(
+                (cid, [dims[dl][0] // dims[dl][1] for dl in range(sub)])
+                for (s, cid), dims in acc.items()
+                if s == si
+            )
+            for si in range(n_sub)
+        ]
+    return cent_sets
 
 
 _SQD = (
@@ -619,77 +695,81 @@ _SQD = (
 )
 
 
-def _kmeans_cte_prefix(vecs_cte: str | None = None) -> str:
-    """Shared DuckDB CTE chain: (vec_id, v) source → seed → unrolled Lloyd
-    iterations → final_assign (vec_id, v, cid). The IVF probe oracle, the
-    SemDeDup oracle, and the topic-clustering oracle all build on this
-    exact index, so the clustering itself is cross-checked three ways.
-    ``vecs_cte`` overrides the vector source (default: quantized
-    embeddings); it must yield columns (vec_id, v bigint list)."""
-    qv = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
-
-    def assign(src_c: str, out: str) -> str:
-        return f"""{out} AS (
-        SELECT vec_id, v, cid FROM (
-            SELECT v.vec_id, v.v, c.cid,
+def _nearest_sql(
+    vecs: str,
+    cents: str,
+    cols: str = "v.vec_id, v.v, c.cid",
+    n: int = 1,
+    where: str = "",
+) -> str:
+    """The DuckDB twin of ``_nearest``: for every row of ``vecs`` (alias v;
+    vec_id, v), its ``n`` nearest centroids of ``cents`` (alias c; cid, cv)
+    by (squared distance ASC, cid ASC), projected to ``cols``. ``where``
+    filters the vector side."""
+    cond = f" WHERE {where}" if where else ""
+    return f"""SELECT * EXCLUDE (rn) FROM (
+            SELECT {cols},
                    ROW_NUMBER() OVER (PARTITION BY v.vec_id
                                       ORDER BY {_SQD} ASC, c.cid ASC) AS rn
-            FROM vecs v CROSS JOIN {src_c} c
-        ) WHERE rn = 1
-    )"""
+            FROM {vecs} v CROSS JOIN {cents} c{cond}
+        ) WHERE rn <= {n}"""
 
-    def update(src_a: str, out: str) -> str:
-        return f"""{out} AS (
+
+def _lloyd_ctes(vecs: str, ns: str = "", k: int = K_CELLS) -> list[str]:
+    """The DuckDB twin of ``train_kmeans`` for one subspace: seed ``{ns}c0``
+    with the rows of ``vecs`` whose vec_id < k, then LLOYD_ITERS unrolled
+    (assign ``{ns}a{i}``, floor-mean update ``{ns}c{i}``) CTE pairs. The
+    trained centroids are ``{ns}c{LLOYD_ITERS}`` (cid, cv)."""
+    ctes = [
+        f"{ns}c0 AS (SELECT vec_id AS cid, v AS cv FROM {vecs} WHERE vec_id < {k})"
+    ]
+    for it in range(1, LLOYD_ITERS + 1):
+        ctes.append(f"{ns}a{it} AS ({_nearest_sql(vecs, f'{ns}c{it - 1}')})")
+        ctes.append(f"""{ns}c{it} AS (
         SELECT cid, list(m ORDER BY dim) AS cv FROM (
-            SELECT cid, dim,
-                   (s - ((s % n) + n) % n) // n AS m
+            SELECT cid, dim, (s - ((s % n) + n) % n) // n AS m
             FROM (
                 SELECT cid, dim, SUM(val) AS s, COUNT(*) AS n
                 FROM (
-                    SELECT cid,
-                           unnest(range(1, len(v) + 1)) AS dim,
+                    SELECT cid, unnest(range(1, len(v) + 1)) AS dim,
                            unnest(v) AS val
-                    FROM {src_a}
+                    FROM {ns}a{it}
                 ) exploded
                 GROUP BY cid, dim
             ) sums
         ) means
         GROUP BY cid
-    )"""
+    )""")
+    return ctes
 
+
+def _kmeans_cte_prefix(vecs_cte: str | None = None) -> str:
+    """Shared DuckDB CTE chain: (vec_id, v) source → ``_lloyd_ctes`` →
+    final_assign (vec_id, v, cid). The IVF probe oracle, the SemDeDup
+    oracle, and the topic-clustering oracle all build on this exact index,
+    so the clustering itself is cross-checked three ways. ``vecs_cte``
+    overrides the vector source (default: quantized embeddings); it must
+    yield columns (vec_id, v bigint list)."""
+    qv = f"list_transform(embedding, x -> {quantize_sql('x')})"
     ctes = [
         vecs_cte or f"vecs AS (SELECT vec_id, {qv} AS v FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cid, v AS cv FROM vecs WHERE vec_id < {K_CELLS})",
+        *_lloyd_ctes("vecs"),
+        f"final_assign AS ({_nearest_sql('vecs', f'c{LLOYD_ITERS}')})",
     ]
-    src = "c0"
-    for it in range(1, LLOYD_ITERS + 1):
-        ctes.append(assign(src, f"a{it}"))
-        ctes.append(update(f"a{it}", f"c{it}"))
-        src = f"c{it}"
-    ctes.append(f"""final_assign AS (
-        SELECT vec_id, v, cid FROM (
-            SELECT v.vec_id, v.v, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                      ORDER BY {_SQD} ASC, c.cid ASC) AS rn
-            FROM vecs v CROSS JOIN {src} c
-        ) WHERE rn = 1
-    )""")
     return ",\n    ".join(ctes)
 
 
 def _kmeans_oracle() -> str:
     """Unrolled Lloyd iterations as CTEs — the DuckDB twin of the Spark
     loop, exact integer arithmetic at every step."""
-    final_c = f"c{LLOYD_ITERS}"
-    body = f"""probes AS (
-        SELECT query_id, qv, cid FROM (
-            SELECT v.vec_id AS query_id, v.v AS qv, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                      ORDER BY {_SQD} ASC, c.cid ASC) AS rn
-            FROM vecs v CROSS JOIN {final_c} c
-            WHERE v.vec_id < {N_QUERIES}
-        ) WHERE rn <= {NPROBE}
-    ),
+    probes = _nearest_sql(
+        "vecs",
+        f"c{LLOYD_ITERS}",
+        "v.vec_id AS query_id, v.v AS qv, c.cid",
+        NPROBE,
+        f"v.vec_id < {N_QUERIES}",
+    )
+    body = f"""probes AS ({probes}),
     scored AS (
         SELECT p.query_id, f.vec_id AS neighbor_id,
                CAST(list_sum(list_transform(range(1, len(p.qv) + 1),
@@ -721,14 +801,8 @@ def ext_similarity_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     final plan = zero-shuffle cell assignment ⋈ broadcast 10-row probe set
     + one window shuffle for the per-query rank — re-rank touches only the
     probed cells' members (~NPROBE/K of the corpus) instead of everything."""
-    e = load(spark, sf_dir, "embeddings")
-    # cache the quantized vectors once: training takes ITERS+1 actions over
-    # them and the final plan re-reads them — one materialization, K·D longs
-    # per row, beats re-scanning + re-quantizing parquet per action
-    vecs = e.select("vec_id", quantize(F.col("embedding")).alias("v")).localCheckpoint(
-        eager=False  # the training seed collect right after is a full pass
-    )
-    centroids = train_kmeans(vecs)
+    vecs = quantized_vectors(spark, sf_dir)
+    centroids = train_kmeans(vecs)[0]
 
     cells = _assign_cells(vecs, centroids)
 
@@ -844,11 +918,8 @@ def ext_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gram-matrix pass inside applyInPandas."""
     from pyspark.sql import types as T
 
-    e = load(spark, sf_dir, "embeddings")
-    vecs = e.select("vec_id", quantize(F.col("embedding")).alias("v")).localCheckpoint(
-        eager=False  # the training seed collect right after is a full pass
-    )
-    centroids = train_kmeans(vecs)
+    vecs = quantized_vectors(spark, sf_dir)
+    centroids = train_kmeans(vecs)[0]
     cells = _assign_cells(vecs, centroids)
 
     out_schema = T.StructType(
@@ -956,7 +1027,7 @@ def ext_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.coalesce(F.col("v"), zero_vec).alias("v"))
     )
     vecs = vecs.localCheckpoint()  # featurization is the expensive scan here
-    centroids = train_kmeans(vecs)
+    centroids = train_kmeans(vecs)[0]
     return _assign_cells(vecs, centroids).select(
         F.col("vec_id").alias("doc_id"), F.col("cid").alias("topic")
     )
@@ -1008,7 +1079,7 @@ _HARD_NEG_ORACLE = f"""
     WITH v AS (
         SELECT vec_id, label,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))
+                   x -> {quantize_sql('x')})
                    AS qv
         FROM embeddings
     ), scored AS (
@@ -1110,7 +1181,7 @@ _NDCG_ORACLE = f"""
     WITH v AS (
         SELECT vec_id, label,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))
+                   x -> {quantize_sql('x')})
                    AS qv
         FROM embeddings
     ), scored AS (
@@ -1223,7 +1294,7 @@ _MRR_ORACLE = f"""
     WITH v AS (
         SELECT vec_id, label,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT))
+                   x -> {quantize_sql('x')})
                    AS qv
         FROM embeddings
     ), scored AS (
@@ -1308,8 +1379,8 @@ _DBSCAN_ENC = 1_000_000
 
 
 def _dbscan_oracle() -> str:
-    mx = "CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
-    my = "CAST(floor(CAST(embedding[2] AS DOUBLE) * 1000 + 0.5) AS BIGINT)"
+    mx = quantize_sql("embedding[1]")
+    my = quantize_sql("embedding[2]")
     offs = ", ".join(
         f"({dx}, {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1)
     )
@@ -1474,8 +1545,7 @@ SIL_DIM = 64
     WITH pts AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
                list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5)
-                             AS BIGINT) + {SIL_OFF}) AS v
+                   x -> {quantize_sql('x')} + {SIL_OFF}) AS v
         FROM embeddings
     ), dims AS (
         SELECT p.label, t.d, CAST(SUM(p.v[t.d]) AS BIGINT) AS s,
@@ -1632,10 +1702,7 @@ KC_K = 5
 
 
 def _kcenter_oracle() -> str:
-    qv = (
-        "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
-        " * 1000 + 0.5) AS BIGINT))"
-    )
+    qv = f"list_transform(embedding, x -> {quantize_sql('x')})"
     sq = (
         "CAST(list_sum(list_transform(range(1, 65),"
         " d -> (p.v[d] - c.v[d]) * (p.v[d] - c.v[d]))) AS BIGINT)"

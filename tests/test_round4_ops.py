@@ -63,10 +63,44 @@ def test_kmeans_centroids_cover_all_vectors(spark):
 
     e = load(spark, SF_DIR, "embeddings")
     vecs = e.select("vec_id", quantize(F.col("embedding")).alias("v"))
-    cells = _assign_cells(vecs, train_kmeans(vecs))
+    cells = _assign_cells(vecs, train_kmeans(vecs)[0])
     n_vec = vecs.count()
     assert cells.count() == n_vec, "assignment must be total and unique"
     assert cells.select("cid").distinct().count() <= K_CELLS
+
+
+def test_joint_subspace_training_equals_per_slice_training(spark):
+    """PQ's parity rests on this: training the PQ_SUB subspaces jointly
+    gives every PQ_SUBDIM-wide slice exactly the centroids of a plain
+    (n_sub=1) training on that slice alone — which is what the per-subspace
+    DuckDB chains of the PQ oracles compute."""
+    from databricks_sales_etl_pipeline_spark.catalog import load
+    from databricks_sales_etl_pipeline_spark.extensions.pq import (
+        PQ_K,
+        PQ_SUB,
+        PQ_SUBDIM,
+    )
+    from databricks_sales_etl_pipeline_spark.extensions.similarity import (
+        quantize,
+        train_kmeans,
+    )
+
+    from tests.conftest import SF_DIR as SMALL_SF_DIR
+
+    e = load(spark, SMALL_SF_DIR, "embeddings")
+    vecs = e.select("vec_id", quantize(F.col("embedding")).alias("v"))
+    joint = train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)
+    per_slice = [
+        train_kmeans(
+            vecs.select(
+                "vec_id", F.slice("v", si * PQ_SUBDIM + 1, PQ_SUBDIM).alias("v")
+            ),
+            k=PQ_K,
+        )[0]
+        for si in range(PQ_SUB)
+    ]
+    assert len(joint) == PQ_SUB
+    assert joint == per_slice
 
 
 # --- events.ts on-disk shape neutrality (round-3 regression class) ----------

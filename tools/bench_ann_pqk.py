@@ -29,8 +29,7 @@ from pyspark.sql import functions as F
 from databricks_sales_etl_pipeline_spark.extensions.pq import (
     PQ_SUB,
     _adc_pair_fn,
-    _pq_encode_fn,
-    _train_codebooks,
+    pq_codes,
 )
 from databricks_sales_etl_pipeline_spark.extensions.similarity import (
     _assign_cells,
@@ -67,7 +66,7 @@ def main() -> None:
     vecs = stage_parquet(spark, gen_embeddings(spark, n), f"pqk{n}")
     k = max(64, int(n**0.5))
     rec["coarse_k"] = k
-    coarse = train_kmeans(vecs, k=k)
+    coarse = train_kmeans(vecs, k=k)[0]
     cells = _assign_cells(vecs, coarse).select("vec_id", "cid")
     cells_staged = stage_parquet(spark, cells, f"pqkcells{n}")
 
@@ -94,7 +93,7 @@ def main() -> None:
 
     cids, C = _centroid_mats(coarse)
     Q = np.array([v for _, v in queries], dtype=np.float64)
-    order = _sqdists(pd.Series(list(Q)), C).argsort(axis=1, kind="stable")
+    order = _sqdists(Q, C).argsort(axis=1, kind="stable")
     probe_rows = [
         (int(queries[j][0]), int(cids[order[j, p]]))
         for j in range(len(queries))
@@ -117,17 +116,10 @@ def main() -> None:
     for pqk in pqks:
         r_k: dict = {}
         t0 = time.perf_counter()
-        cent_sets = _train_codebooks(vecs, k=pqk)
+        cent_sets = train_kmeans(vecs, k=pqk, n_sub=PQ_SUB)
         r_k["t_pq_train_s"] = round(time.perf_counter() - t0, 2)
-        enc = _pq_encode_fn(cent_sets)
         t0 = time.perf_counter()
-        codes = vecs.select("vec_id", enc("v").alias("ce")).select(
-            "vec_id",
-            *[
-                F.element_at("ce", s + 1).alias(f"code_{s}")
-                for s in range(PQ_SUB)
-            ],
-        )
+        codes = pq_codes(vecs, cent_sets).drop("recon_err")
         index = stage_parquet(
             spark, codes.join(cells_staged, "vec_id"), f"pqkidx{n}_{pqk}"
         )

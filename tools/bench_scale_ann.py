@@ -29,10 +29,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.extensions.pq import (
+    PQ_K,
     PQ_SUB,
     _adc_pair_fn,
-    _pq_encode_fn,
-    _train_codebooks,
+    pq_codes,
 )
 from databricks_sales_etl_pipeline_spark.extensions.similarity import (
     _assign_cells,
@@ -151,22 +151,15 @@ def main() -> None:
         k = max(64, int(n**0.5))
         rec["coarse_k"] = k
         t0 = time.perf_counter()
-        coarse = train_kmeans(vecs, k=k)
+        coarse = train_kmeans(vecs, k=k)[0]
         rec["t_coarse_train_s"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
         cells = _assign_cells(vecs, coarse).select("vec_id", "cid")
         t0b = time.perf_counter()
-        cent_sets = _train_codebooks(vecs)
+        cent_sets = train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)
         rec["t_pq_train_s"] = round(time.perf_counter() - t0b, 2)
-        enc = _pq_encode_fn(cent_sets)
-        codes = vecs.select("vec_id", enc("v").alias("ce")).select(
-            "vec_id",
-            *[
-                F.element_at("ce", s + 1).alias(f"code_{s}")
-                for s in range(PQ_SUB)
-            ],
-        )
+        codes = pq_codes(vecs, cent_sets).drop("recon_err")
         # the stored index: posting lists keyed by coarse cell — staged to
         # parquet once (this is the on-disk artifact a serving tier reads)
         index = stage_parquet(
@@ -206,9 +199,7 @@ def main() -> None:
 
         cids, C = _centroid_mats(coarse)
         Q = np.array([v for _, v in queries], dtype=np.float64)
-        import pandas as pd
-
-        qd = _sqdists(pd.Series(list(Q)), C)
+        qd = _sqdists(Q, C)
         order = qd.argsort(axis=1, kind="stable")
         adc = _adc_pair_fn(cent_sets, queries)
         rec["nprobe"] = {}

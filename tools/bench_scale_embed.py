@@ -58,7 +58,7 @@ def main() -> None:
         # invariant that keeps SemDeDup's within-cell compare linear overall
         k = max(8, n // 500)
         t0 = time.time()
-        centroids = train_kmeans(vecs, k=k)
+        centroids = train_kmeans(vecs, k=k)[0]
         t_train = time.time() - t0
 
         t0 = time.time()
@@ -82,24 +82,20 @@ def main() -> None:
 
         # round-5: PQ — joint codebook training, corpus encode, ADC top-k
         from databricks_sales_etl_pipeline_spark.extensions.pq import (
+            PQ_K,
             PQ_SUB,
             PQ_TOPK,
             _adc_scan_fn,
-            _pq_encode_fn,
-            _train_codebooks,
+            pq_codes,
         )
         from pyspark.sql import Window
 
         t0 = time.time()
-        cent_sets = _train_codebooks(vecs)
+        cent_sets = train_kmeans(vecs, k=PQ_K, n_sub=PQ_SUB)
         t_pq_train = time.time() - t0
 
         t0 = time.time()
-        enc = _pq_encode_fn(cent_sets)
-        codes = vecs.select("vec_id", enc("v").alias("ce")).select(
-            "vec_id",
-            *[F.element_at("ce", s + 1).alias(f"code_{s}") for s in range(PQ_SUB)],
-        ).localCheckpoint()
+        codes = pq_codes(vecs, cent_sets).drop("recon_err").localCheckpoint()
         t_pq_encode = time.time() - t0
 
         t0 = time.time()

@@ -13,10 +13,17 @@ result's canonical hash; compare against a baseline run. Any query whose
 canonical hash moves with layout is layout-dependent by construction.
 
 Usage:
-  PYTHONPATH=. python tools/determinism_sweep.py baseline out_a.json
-  PYTHONPATH=. python tools/determinism_sweep.py perturbed out_b.json
+  PYTHONPATH=. python tools/determinism_sweep.py baseline out_a.json [name ...]
+  PYTHONPATH=. python tools/determinism_sweep.py perturbed out_b.json [name ...]
   PYTHONPATH=. python tools/determinism_sweep.py compare out_a.json out_b.json
+Optional names restrict the run to those registered queries (default: all).
 Env: DS_SF_DIR (default /root/testdata/sf0.01).
+
+The committed ``tools/determinism_baseline_r12.json`` was written at sf0.1,
+so compare a run against it with DS_SF_DIR pointing at sf0.1: at the
+default sf0.01 every query reports a false difference. ``compare`` flags
+names present in only one file, so cut that baseline to the same names
+when the run was restricted.
 """
 
 from __future__ import annotations
@@ -69,7 +76,7 @@ def _canon_hash(pdf) -> str:
     return hashlib.md5(repr((cols, rows)).encode()).hexdigest()
 
 
-def run(mode: str, out_path: str) -> None:
+def run(mode: str, out_path: str, names: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as mod
@@ -93,7 +100,7 @@ def run(mode: str, out_path: str) -> None:
     sf = os.environ.get("DS_SF_DIR", "/root/testdata/sf0.01")
     qs = mod.queries()
     out: dict[str, str] = {}
-    for name in qs:
+    for name in names or qs:
         try:
             out[name] = _canon_hash(qs[name](spark, sf).toPandas())
         except Exception as exc:  # noqa: BLE001
@@ -152,4 +159,4 @@ def compare(a_path: str, b_path: str) -> int:
 if __name__ == "__main__":
     if sys.argv[1] == "compare":
         sys.exit(compare(sys.argv[2], sys.argv[3]))
-    run(sys.argv[1], sys.argv[2])
+    run(sys.argv[1], sys.argv[2], sys.argv[3:])
