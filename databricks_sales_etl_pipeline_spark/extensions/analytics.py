@@ -1047,16 +1047,21 @@ def ext_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape (round-6 verdict fix): the session build rides the usual ONE
     user_id shuffle; the delta timeline is 2 rows/session. The running
-    sum is the classic TWO-PHASE prefix sum, not a global ordered
-    window (a single task over a data-proportional timeline): hour
-    buckets partition the (t, +1-first) order — t DIV 1h is monotone in
-    t, so ties never cross buckets — phase A sums within each bucket in
-    parallel, phase B adds each bucket's exclusive-cumsum carry-in (a
-    bounded |hours|-row model artifact, collected and re-broadcast).
-    Bit-identical to the global window; the bucket granularity is the
-    knob that keeps the offset table bounded at 100 TB."""
+    sum is the classic TWO-PHASE prefix sum
+    (functions/prefix.py::global_order), not a global ordered window (a
+    single task over a data-proportional timeline): hour buckets
+    partition the (t, +1-first) order — t DIV 1h is monotone in t, so
+    ties never cross buckets — each bucket sums in parallel and adds its
+    exclusive-cumsum carry (a bounded |hours|-row model artifact). The
+    hourly MAX groups on the same bucket, so it reuses the window's
+    partitioning. Bit-identical to the global window; the bucket
+    granularity is the knob that keeps the carry table bounded at
+    100 TB."""
     from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
+
+    from databricks_sales_etl_pipeline_spark.functions.prefix import (
+        global_order,
+    )
 
     e = load(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("us")
@@ -1076,48 +1081,33 @@ def ext_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivals = sess.groupBy("user_id", "sid").agg(
         F.min("us").alias("s"), (F.max("us") + 1).alias("e")
     )
-    deltas = (
+    deltas = ivals.select(
+        F.col("s").alias("t"), F.lit(1).alias("delta"), "user_id", "sid"
+    ).unionAll(
         ivals.select(
-            F.col("s").alias("t"), F.lit(1).alias("delta"), "user_id", "sid"
+            F.col("e").alias("t"), F.lit(-1).alias("delta"), "user_id", "sid"
         )
-        .unionAll(
-            ivals.select(
-                F.col("e").alias("t"), F.lit(-1).alias("delta"), "user_id", "sid"
-            )
-        )
-        .withColumn("hour_bucket", F.expr("t DIV 3600000000").cast("bigint"))
     )
-    # phases A+B share it; sessionize once. Lazy (round-14): the totals
-    # collect right below is a full-partition pass and materializes the
-    # checkpoint as a side effect — the eager form paid a dedicated
-    # sessionize job first (r13 mechanism #3, missed at this site).
+    # the carry collect and the timeline share it; sessionize once. Lazy
+    # (round-14): the carry collect is a full-partition pass and
+    # materializes the checkpoint as a side effect — the eager form paid
+    # a dedicated sessionize job first (r13 mechanism #3).
     deltas = deltas.localCheckpoint(eager=False)
-    # phase B model artifact: per-bucket delta totals -> exclusive cumsum
-    totals = {
-        r["hour_bucket"]: r["d"]
-        for r in deltas.groupBy("hour_bucket").agg(F.sum("delta").alias("d")).collect()
-    }
-    carry, acc = [], 0
-    for hb in sorted(totals):
-        carry.append((hb, acc))
-        acc += totals[hb]
-    offs = local_df(spark, carry, "hour_bucket long, carry_in long")
-    # phase A: running sum within each hour bucket, in parallel
-    wt = Window.partitionBy("hour_bucket").orderBy(
-        "t", F.col("delta").desc(), "user_id", "sid"
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    timeline = deltas.select(
-        "hour_bucket", F.sum("delta").over(wt).alias("part_sum")
+    timeline = global_order(
+        spark,
+        deltas,
+        {
+            "pos": dict(
+                key="t",
+                then=[F.col("delta").desc(), "user_id", "sid"],
+                width=3600000000,
+                sums={"conc": "delta"},
+            )
+        },
     )
-    return (
-        timeline.join(broadcast(offs), "hour_bucket")
-        .groupBy("hour_bucket")
-        .agg(
-            F.max(F.col("carry_in") + F.col("part_sum"))
-            .cast("bigint")
-            .alias("peak_concurrency"),
-            F.count(F.lit(1)).cast("bigint").alias("n_changes"),
-        )
+    return timeline.groupBy(F.col("pos_bucket").alias("hour_bucket")).agg(
+        F.max("conc").cast("bigint").alias("peak_concurrency"),
+        F.count(F.lit(1)).cast("bigint").alias("n_changes"),
     )
 
 

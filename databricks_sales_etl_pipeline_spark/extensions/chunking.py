@@ -233,9 +233,9 @@ def ext_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus max). waste_ppm per bucket vs baseline is the measured
     throughput argument for length-aware batching. The NTILE is computed
     WITHOUT a global sort (round-7 scale fix): n_tokens is itself a
-    bounded monotone bucket of the sort order, so per-length windows
-    number rows in parallel, a broadcast exclusive-carry table turns
-    in-length positions into exact global positions, and
+    bounded monotone bucket of the sort order, so
+    functions/prefix.py::global_order numbers rows per length in parallel
+    and turns them into exact global positions, and
     functions/prefix.py::ntile_from_pos applies Spark's row-split rule
     in closed form — bit-identical to NTILE (pinned in
     tests/test_round7_scale.py), no single-partition task."""
@@ -245,11 +245,8 @@ def ext_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_tokens"),
     )
-    from pyspark.sql import Window as _W
-    from pyspark.sql.functions import broadcast as _bc
-
     from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        exclusive_carry,
+        global_order,
         ntile_from_pos,
     )
 
@@ -257,13 +254,9 @@ def ext_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # immutable parquet (deterministic) rather than materializing a
     # corpus-scale intermediate
     n = toks.count()
-    carry = exclusive_carry(spark, toks, "n_tokens")
-    pos = F.col("carry_in") + F.row_number().over(
-        _W.partitionBy("n_tokens").orderBy("doc_id")
-    )
-    bucketed = toks.join(_bc(carry), "n_tokens").withColumn(
-        "bucket", ntile_from_pos(pos, n, _LB_BUCKETS)
-    )
+    bucketed = global_order(
+        spark, toks, {"pos": dict(key="n_tokens", then=["doc_id"])}
+    ).withColumn("bucket", ntile_from_pos(F.col("pos"), n, _LB_BUCKETS))
     per = bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.max("n_tokens").cast("bigint").alias("max_len"),

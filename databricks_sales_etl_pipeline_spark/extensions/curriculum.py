@@ -334,26 +334,25 @@ def ext_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quality_permille"
         ),
     )
-    from pyspark.sql import Window as _W
-    from pyspark.sql.functions import broadcast as _bc
-
     from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        exclusive_carry,
+        global_order,
     )
 
     # NOTE: scored is a pure scan+project — the carry pass recomputes it
     # from immutable parquet (deterministic), which at 100 TB beats
     # materializing a corpus-scale intermediate; checkpoint only
     # shuffle-bearing subtrees (the ext_peak_concurrency pattern).
-    carry = exclusive_carry(
-        spark, scored, "quality_permille", weight=F.col("n_tokens"),
-        descending=True,
-    )
-    w = _W.partitionBy("quality_permille").orderBy("doc_id").rowsBetween(
-        _W.unboundedPreceding, 0
-    )
-    ranked = scored.join(_bc(carry), "quality_permille").withColumn(
-        "cum_tokens", F.col("carry_in") + F.sum("n_tokens").over(w)
+    ranked = global_order(
+        spark,
+        scored,
+        {
+            "pos": dict(
+                key="quality_permille",
+                then=["doc_id"],
+                desc=True,
+                sums={"cum_tokens": "n_tokens"},
+            )
+        },
     )
     return ranked.select(
         "doc_id",

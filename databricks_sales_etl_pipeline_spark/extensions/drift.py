@@ -22,6 +22,12 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band_sql,
 )
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.prefix import (
+    div_width,
+    doubled_midrank,
+    global_order,
+    ntile_from_pos,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 #: floor(1e6 * log10(1 + 1/d)) for d = 1..9 — Benford's first-digit law in
@@ -845,15 +851,10 @@ def ext_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape (round-8 scale fix): the value grid is NDV-scaled (the cents
     domain is unbounded), so the cumulative counts are TWO-PHASE —
     bucket on ``v DIV width`` (≤1025 buckets), running sums per bucket,
-    broadcast exclusive-carry offsets for both arms in one bounded
-    collect — and the global argmax is a plain ``max_by`` aggregate
+    carries for both arms in one bounded collect (``prefix.global_order``)
+    — and the global argmax is a plain ``max_by`` aggregate
     (map-side partial, no single-partition window; plan pinned in
     tests/test_round8_scale.py, values by the unchanged oracle)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carries,
-    )
-
     o = load(spark, sf_dir, "orders")
     s = o.select(
         cents(F.col("o_totalprice")).alias("v"),
@@ -873,20 +874,18 @@ def ext_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c1").cast("bigint"),
         F.sum("c2").cast("bigint"),
     ).first()
-    width = div_width(stats[0])
     n1, n2 = int(stats[1]), int(stats[2])
-    pb = per_v.withColumn("vb", F.expr(f"v DIV {width}"))
-    carry = exclusive_carries(
-        spark, pb, "vb", {"k1": F.col("c1"), "k2": F.col("c2")}
-    )
-    wv = Window.partitionBy("vb").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cums = pb.join(broadcast(carry), "vb").select(
-        "v",
-        (F.col("k1") + F.sum("c1").over(wv)).alias("cum1"),
-        (F.col("k2") + F.sum("c2").over(wv)).alias("cum2"),
-    )
+    cums = global_order(
+        spark,
+        per_v,
+        {
+            "pos": dict(
+                key="v",
+                width=div_width(stats[0]),
+                sums={"cum1": "c1", "cum2": "c2"},
+            )
+        },
+    ).select("v", "cum1", "cum2")
     diff = cums.withColumn(
         "ad", F.abs(F.col("cum1") * F.lit(n2) - F.col("cum2") * F.lit(n1))
     )
@@ -1049,16 +1048,10 @@ def ext_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical in both engines) and its α=0.05 verdict.
 
     Shape (round-8 scale fix): the value grid is NDV-scaled, so the
-    below-count prefix is TWO-PHASE — bucket on ``v DIV width``, running
-    sum per bucket, broadcast exclusive-carry offset (the ext_ks_test
-    recipe; one bounded collect). 2R₁ ≤ 2n² stays in int64 through
-    ~2·10⁹ rows per test cell; beyond that, test on a hash sample band
+    below-count prefix is a running sum from ``prefix.global_order`` (the
+    ext_ks_test recipe; one bounded collect). 2R₁ ≤ 2n² stays in int64
+    through ~2·10⁹ rows per test cell; beyond that, test on a hash sample band
     (the ``ext_sample_bernoulli`` primitive)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carry,
-    )
-
     o = load(spark, sf_dir, "orders")
     s = o.select(
         cents(F.col("o_totalprice")).alias("v"),
@@ -1077,28 +1070,15 @@ def ext_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c1").cast("bigint"),
         F.sum("c2").cast("bigint"),
     ).first()
-    width = div_width(stats[0])
     n1, n2 = int(stats[1]), int(stats[2])
-    pb = per_v.withColumn("vb", F.expr(f"v DIV {width}"))
-    carry = exclusive_carry(
-        spark, pb, "vb", weight=F.col("c1") + F.col("c2")
-    )
-    wv = Window.partitionBy("vb").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cums = pb.join(broadcast(carry), "vb").select(
-        "v",
-        "c1",
-        "c2",
-        (
-            F.col("carry_in")
-            + F.sum(F.col("c1") + F.col("c2")).over(wv)
-            - (F.col("c1") + F.col("c2"))
-        ).alias("below"),
-    )
     t = F.col("c1") + F.col("c2")
+    cums = global_order(
+        spark,
+        per_v,
+        {"pos": dict(key="v", width=div_width(stats[0]), sums={"cum": t})},
+    )
     agg = cums.agg(
-        F.sum(F.col("c1") * (2 * F.col("below") + t + 1))
+        F.sum(F.col("c1") * doubled_midrank(F.col("cum") - t, t))
         .cast("bigint")
         .alias("two_r1"),
         F.sum(t * t * t - t).cast("bigint").alias("tie_sum"),
@@ -1713,10 +1693,6 @@ def ext_wasserstein_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket's NEXT-bucket minimum value in the same bounded carry table
     (the per-bucket lead is null only at the bucket's last row, exactly
     where the next bucket's min is the global lead)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-    )
-
     o = load(spark, sf_dir, "orders")
     s = o.select(
         F.expr("CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)").alias("v"),
@@ -1734,8 +1710,8 @@ def ext_wasserstein_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = per_v.withColumn("vb", F.expr(f"v DIV {width}"))
     # one bounded collect (≤1025 buckets): per-bucket arm totals and min
     # value → exclusive carries + each bucket's next-bucket-min (the
-    # cross-bucket lead seam); the same bounded-model-artifact pattern
-    # as prefix.exclusive_carries
+    # cross-bucket lead seam, which is not a prefix sum, so this query
+    # keeps its own carry instead of prefix.global_order)
     per_b_rows = (
         pb.groupBy("vb")
         .agg(
@@ -1746,7 +1722,7 @@ def ext_wasserstein_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if any(r["vb"] is None for r in per_b_rows):
-        # same contract as prefix.exclusive_carries
+        # same contract as prefix.global_order
         raise ValueError("wasserstein: NULL value bucket (null amount?)")
     per_b = sorted(per_b_rows, key=lambda r: r["vb"])
     rows, a1, a2 = [], 0, 0
@@ -2467,20 +2443,15 @@ def ext_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = daily.select(
         "d",
-        (
-            2 * F.rank().over(Window.orderBy("x"))
-            + F.count(F.lit(1)).over(Window.partitionBy("x"))
-            - 1
-        )
-        .cast("bigint")
-        .alias("rx2"),
-        (
-            2 * F.rank().over(Window.orderBy("y"))
-            + F.count(F.lit(1)).over(Window.partitionBy("y"))
-            - 1
-        )
-        .cast("bigint")
-        .alias("ry2"),
+        *[
+            doubled_midrank(
+                F.rank().over(Window.orderBy(c)) - 1,
+                F.count(F.lit(1)).over(Window.partitionBy(c)),
+            )
+            .cast("bigint")
+            .alias(f"r{c}2")
+            for c in ("x", "y")
+        ],
     )
     m = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3206,21 +3177,14 @@ def ext_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext_prop_ztest, ext_power_analysis) cannot give. Enrollment order
     is the user_id order; decision = whichever bound is hit first.
 
-    Shape (round-8 scale fix): the walk is USER-scaled, so the running
-    LLR is TWO-PHASE — bucket on ``user_id DIV width`` (monotone in the
-    enrollment order, ≤1025 buckets), row_number + running sum per
-    bucket in parallel, broadcast exclusive-carry offsets (count carry
-    for rn, increment carry for cum — one bounded collect; the carry is
-    exact because prefix sums are associative and bucket order equals
-    enrollment order). One user_id groupBy, bucket-partitioned windows,
-    one scalar aggregate; no single-partition window (plan pinned in
+    Shape (round-8 scale fix): the walk is USER-scaled, so the enrollment
+    index and running LLR come from ``prefix.global_order`` — bucket on
+    ``user_id DIV width`` (monotone in the enrollment order, ≤1025
+    buckets), row_number + running sum per bucket in parallel plus one
+    bounded carry collect. One user_id groupBy, one bucket-partitioned
+    window, one scalar aggregate; no single-partition window (plan pinned in
     tests/test_round8_scale.py, values by the unchanged global-window
     DuckDB oracle)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carries,
-    )
-
     e = load(spark, sf_dir, "events")
     # the per-user aggregate feeds three consumers (max collect, carry
     # collect, walk) — materialize once
@@ -3231,23 +3195,11 @@ def ext_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     incr = F.when(F.col("conv") == 1, SPRT_L1_MICRO).otherwise(SPRT_L0_MICRO)
     width = div_width(u.agg(F.max("user_id")).first()[0])
-    ub = u.select(
-        "user_id", "conv", F.expr(f"user_id DIV {width}").alias("bk")
-    )
-    carry = exclusive_carries(
-        spark, ub, "bk", {"c_cnt": None, "c_sum": incr}
-    )
-    wb = Window.partitionBy("bk").orderBy("user_id")
-    walk = ub.join(broadcast(carry), "bk").select(
-        "conv",
-        (F.col("c_cnt") + F.row_number().over(wb)).alias("rn"),
-        (
-            F.col("c_sum")
-            + F.sum(incr).over(
-                wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-        ).alias("cum"),
-    )
+    walk = global_order(
+        spark,
+        u,
+        {"rn": dict(key="user_id", width=width, sums={"cum": incr})},
+    ).select("conv", "rn", "cum")
     big = 9223372036854775807
     h1 = F.min(
         F.when(F.col("cum") >= SPRT_BOUND_MICRO, F.col("rn"))
@@ -4243,21 +4195,14 @@ def ext_empirical_copula(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape (round-8 scale fix): the ranked table is ORDER-scaled (the
     o_orderkey tiebreak means every order row would sort in ONE task),
-    so both quantile NTILEs are TWO-PHASE — bucket each margin on a
-    monotone function of its own sort key (``v DIV width`` / ``nl DIV
-    width``, ≤1025 buckets, ties never cross), row_number per bucket in
-    parallel, broadcast exclusive-carry count offsets, and
-    ``prefix.ntile_from_pos`` rebuilds NTILE bit-for-bit from the global
-    position. One fact join + order groupBy + two bucket-partitioned
-    windows + one grid aggregate; no single-partition window (plan
-    pinned in tests/test_round8_scale.py, values by the unchanged
-    global-NTILE DuckDB oracle)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carry_multi,
-        ntile_from_pos,
-    )
-
+    so both quantile NTILEs are TWO-PHASE — ``prefix.global_order``
+    buckets each margin on its own sort key (``v DIV width`` / ``nl DIV
+    width``, ≤1025 buckets, ties never cross) with one carry collect for
+    both, and ``prefix.ntile_from_pos`` rebuilds NTILE bit-for-bit from
+    the global position. One fact join + order groupBy + two
+    bucket-partitioned windows + one grid aggregate; no single-partition
+    window (plan pinned in tests/test_round8_scale.py, values by the
+    unchanged global-NTILE DuckDB oracle)."""
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey")
     # the per-order aggregate feeds several consumers (stats, carry
@@ -4279,31 +4224,22 @@ def ext_empirical_copula(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_li, "o_orderkey")
     ).localCheckpoint(eager=False)
     stats = per.agg(F.max("v"), F.max("nl"), F.count(F.lit(1))).first()
-    wv, wn = div_width(stats[0]), div_width(stats[1])
     n = int(stats[2])
-    b = per.select(
-        "o_orderkey",
-        "v",
-        "nl",
-        F.expr(f"v DIV {wv}").alias("vb"),
-        F.expr(f"nl DIV {wn}").alias("nb"),
+    pos = global_order(
+        spark,
+        per,
+        {
+            "pos_v": dict(
+                key="v", then=["o_orderkey"], width=div_width(stats[0])
+            ),
+            "pos_n": dict(
+                key="nl", then=["o_orderkey"], width=div_width(stats[1])
+            ),
+        },
     )
-    # ONE grouping-sets pass for both margins' carries (round-13): this
-    # was two separate full scans of per, one per exclusive_carry
-    carries = exclusive_carry_multi(
-        spark, b, {"cv": ("vb", False), "cn": ("nb", False)}
-    )
-    cv, cn = carries["cv"], carries["cn"]
-    j = b.join(broadcast(cv), "vb").join(broadcast(cn), "nb")
-    pos_v = F.col("cv") + F.row_number().over(
-        Window.partitionBy("vb").orderBy("v", "o_orderkey")
-    )
-    pos_n = F.col("cn") + F.row_number().over(
-        Window.partitionBy("nb").orderBy("nl", "o_orderkey")
-    )
-    ranked = j.select(
-        ntile_from_pos(pos_v, n, COPULA_Q).alias("qu_v"),
-        ntile_from_pos(pos_n, n, COPULA_Q).alias("qu_n"),
+    ranked = pos.select(
+        ntile_from_pos(F.col("pos_v"), n, COPULA_Q).alias("qu_v"),
+        ntile_from_pos(F.col("pos_n"), n, COPULA_Q).alias("qu_n"),
     )
     return ranked.groupBy(
         F.col("qu_v").cast("bigint").alias("qu_value"),
@@ -4828,38 +4764,22 @@ def ext_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit test); per-group rank sums are reported so the reader sees
     which group drags.
 
-    Shape (round-7 scale fix): the global rank is TWO-PHASE — value
-    buckets ``v DIV width`` (monotone in v, ≤1025 of them via
-    functions/prefix.py::div_width) rank in parallel and a broadcast
-    exclusive-carry count table supplies each bucket's rank offset;
-    global rank = carry + in-bucket rank exactly (ties never cross
-    buckets). One group aggregate, one scalar fold; no single-partition
-    window (equality pinned in tests/test_round7_scale.py)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carry,
-    )
-
+    Shape (round-7 scale fix): the global rank and tie count come from
+    ``prefix.global_order`` — value buckets ``v DIV width`` (monotone in
+    v, ≤1025 of them) rank in parallel and one bounded carry collect
+    supplies each bucket's rank offset; ties never cross buckets, so the
+    tie count needs no second exchange. One group aggregate, one scalar
+    fold; no single-partition window (equality pinned in
+    tests/test_round7_scale.py)."""
     o = load(spark, sf_dir, "orders")
     x = o.select(
         F.col("o_orderpriority").alias("grp"),
         cents(F.col("o_totalprice")).cast("bigint").alias("v"),
     )
     width = div_width(x.agg(F.max("v")).first()[0])
-    xb = x.withColumn("vb", F.expr(f"v DIV {width}"))
-    carry = exclusive_carry(spark, xb, "vb")
-    rk = xb.join(broadcast(carry), "vb").select(
+    rk = global_order(spark, x, {"r": dict(key="v", width=width)}).select(
         "grp",
-        (
-            2
-            * (
-                F.col("carry_in")
-                + F.rank().over(Window.partitionBy("vb").orderBy("v"))
-                - 1
-            )
-            + F.count(F.lit(1)).over(Window.partitionBy("v"))
-            + 1
-        )
+        doubled_midrank(F.col("r_below"), F.col("r_ties"))
         .cast("bigint")
         .alias("d"),
     )
@@ -5292,10 +5212,9 @@ def ext_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rk = nz.select(
         "diff",
-        (
-            2 * (F.rank().over(Window.orderBy("ad")) - 1)
-            + F.count(F.lit(1)).over(Window.partitionBy("ad"))
-            + 1
+        doubled_midrank(
+            F.rank().over(Window.orderBy("ad")) - 1,
+            F.count(F.lit(1)).over(Window.partitionBy("ad")),
         )
         .cast("bigint")
         .alias("d2"),

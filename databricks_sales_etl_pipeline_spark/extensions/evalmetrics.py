@@ -23,6 +23,11 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band_sql,
 )
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.prefix import (
+    div_width,
+    doubled_midrank,
+    global_order,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -123,10 +128,9 @@ def ext_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents("o_totalprice").alias("score"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("label"),
     )
-    midrank2 = (
-        2 * F.rank().over(Window.partitionBy("grp").orderBy("score"))
-        + F.count(F.lit(1)).over(Window.partitionBy("grp", "score"))
-        - 1
+    midrank2 = doubled_midrank(
+        F.rank().over(Window.partitionBy("grp").orderBy("score")) - 1,
+        F.count(F.lit(1)).over(Window.partitionBy("grp", "score")),
     )
     ranked = r.withColumn("midrank2", midrank2)
     agg = ranked.groupBy("grp").agg(
@@ -1731,10 +1735,10 @@ def ext_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-negative sums.
 
     Shape (round-7 scale fix): one group-mean aggregate on train; the
-    calibration order statistic is TWO-PHASE — residual-value buckets
-    (``r DIV width``, ≤1025 via functions/prefix.py) rank in parallel,
-    a broadcast exclusive-carry table turns in-bucket ranks into exact
-    global ranks, and the single row with rank k_q is q_hat — then a
+    calibration order statistic is TWO-PHASE — functions/prefix.py's
+    global_order ranks residual-value buckets (``r DIV width``, ≤1025)
+    in parallel and turns in-bucket ranks into exact global ranks, and
+    the single row with rank k_q is q_hat — then a
     broadcast of the 1-row q_hat onto the test scan. No
     single-partition window; bit-identical to the global ORDER BY."""
     o = load(spark, sf_dir, "orders").select(
@@ -1757,25 +1761,13 @@ def ext_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(mu), "grp")
         .select(F.abs(F.col("y") - F.col("mu_cents")).alias("r"))
     )
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carry,
-    )
-
     cal = cal.localCheckpoint(eager=False)  # max+count collect materializes it
     # one pass for max AND count (round-13: these were two separate actions)
     _mx, n_cal = cal.agg(F.max("r"), F.count(F.lit(1))).first()
-    width = div_width(_mx)
-    cb = cal.withColumn("rb", F.expr(f"r DIV {width}"))
-    carry = exclusive_carry(spark, cb, "rb")
     # exact integer k_q = (9*(n_cal+1)+9) DIV 10 — ceil((n_cal+1)*0.9)
     k_q = (9 * (n_cal + 1) + 9) // 10
-    ranked = cb.join(broadcast(carry), "rb").select(
-        "r",
-        (
-            F.col("carry_in")
-            + F.row_number().over(Window.partitionBy("rb").orderBy("r"))
-        ).alias("rk"),
+    ranked = global_order(
+        spark, cal, {"rk": dict(key="r", width=div_width(_mx))}
     )
     qhat = ranked.where(F.col("rk") == k_q).select(
         F.lit(n_cal).cast("bigint").alias("n_cal"),

@@ -27,6 +27,11 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.prefix import (
+    div_width,
+    global_order,
+    ntile_from_pos,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -66,22 +71,15 @@ def ext_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape (round-8 scale fix): customers grow linearly with the data
     (~1.5e9 at 100 TB TPC-H geometry), so the three quintile NTILEs are
-    TWO-PHASE — each dimension buckets on a monotone function of its own
-    sort key (``key DIV width``, ≤1025 buckets via
-    functions/prefix.py::div_width; ties never cross buckets), computes
-    row_number per bucket in parallel, and adds a broadcast
-    exclusive-carry count offset; ``prefix.ntile_from_pos`` then
+    TWO-PHASE — ``prefix.global_order`` buckets each dimension on its own
+    sort key (``key DIV width``, ≤1025 buckets; ties never cross
+    buckets), numbers rows per bucket in parallel and takes all three
+    count carries from one collect; ``prefix.ntile_from_pos`` then
     reproduces NTILE(5) bit-for-bit from the exact global position. One
     custkey groupBy plus three bucket-partitioned windows; no
     single-partition sort anywhere (plan pinned in
     tests/test_round8_scale.py, values by the unchanged global-NTILE
     DuckDB oracle)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carry_multi,
-        ntile_from_pos,
-    )
-
     o = load(spark, sf_dir, "orders")
     pc = o.groupBy("o_custkey").agg(
         F.max(F.col("o_orderdate").cast("date")).alias("last_dt"),
@@ -103,47 +101,25 @@ def ext_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("recency_days"), F.max("freq"), F.max("monetary_cents"),
         F.count(F.lit(1)),
     ).first()
-    wr, wf, wm = (div_width(stats[0]), div_width(stats[1]),
-                  div_width(stats[2]))
     n = stats[3]
-    b = rec.select(
-        "o_custkey",
+    dims = {"r": ("recency_days", False), "f": ("freq", True),
+            "m": ("monetary_cents", True)}
+    pos = global_order(
+        spark,
+        rec,
+        {
+            f"pos_{d}": dict(
+                key=key, then=["o_custkey"], desc=desc, width=div_width(mx)
+            )
+            for (d, (key, desc)), mx in zip(dims.items(), stats)
+        },
+    )
+    q = pos.select(
         "monetary_cents",
-        "recency_days",
-        "freq",
-        F.expr(f"recency_days DIV {wr}").alias("rb"),
-        F.expr(f"freq DIV {wf}").alias("fb"),
-        F.expr(f"monetary_cents DIV {wm}").alias("mb"),
-    )
-    # ONE grouping-sets pass for all three carry dimensions (round-13):
-    # this was three separate full scans of rec, one per exclusive_carry
-    carries = exclusive_carry_multi(
-        spark, b, {"cr": ("rb", False), "cf": ("fb", True), "cm": ("mb", True)}
-    )
-    cr, cf, cm = carries["cr"], carries["cf"], carries["cm"]
-    j = (
-        b.join(broadcast(cr), "rb")
-        .join(broadcast(cf), "fb")
-        .join(broadcast(cm), "mb")
-    )
-    pos_r = F.col("cr") + F.row_number().over(
-        Window.partitionBy("rb").orderBy(
-            F.asc("recency_days"), F.asc("o_custkey")
-        )
-    )
-    pos_f = F.col("cf") + F.row_number().over(
-        Window.partitionBy("fb").orderBy(F.desc("freq"), F.asc("o_custkey"))
-    )
-    pos_m = F.col("cm") + F.row_number().over(
-        Window.partitionBy("mb").orderBy(
-            F.desc("monetary_cents"), F.asc("o_custkey")
-        )
-    )
-    q = j.select(
-        "monetary_cents",
-        ntile_from_pos(pos_r, n, 5).alias("r_q"),
-        ntile_from_pos(pos_f, n, 5).alias("f_q"),
-        ntile_from_pos(pos_m, n, 5).alias("m_q"),
+        *[
+            ntile_from_pos(F.col(f"pos_{d}"), n, 5).alias(f"{d}_q")
+            for d in dims
+        ],
     )
     return q.groupBy("r_q", "f_q", "m_q").agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -1312,37 +1288,22 @@ def ext_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r*N + n_s - 1) // n_s, no interpolation, deterministic under ties
     because the mapped VALUE comes from the sorted pooled sequence.
 
-    Shape (round-7 scale fix): the pooled global rank is TWO-PHASE —
-    ``n_chars DIV width`` buckets (≤1025, functions/prefix.py) number in
-    parallel and a broadcast exclusive-carry table supplies the global
+    Shape (round-7 scale fix): the pooled global rank comes from
+    ``prefix.global_order`` — ``n_chars DIV width`` buckets (≤1025)
+    number in parallel and one bounded carry collect supplies the global
     offset; the per-source rank was already partitioned. ONE equi-join
     on the mapped index; no single-partition window (equality pinned in
     tests/test_round7_scale.py)."""
-    from pyspark.sql.functions import broadcast as _bc
-
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carry,
-    )
-
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", F.col("n_chars").cast("bigint").alias("n_chars")
     )  # pure scan+project: passes recompute it (deterministic) — cheaper
     # at 100 TB than materializing a corpus-scale intermediate
     width = div_width(docs.agg(F.max("n_chars")).first()[0])
-    db = docs.withColumn("cb", F.expr(f"n_chars DIV {width}"))
-    carry = exclusive_carry(spark, db, "cb")
-    pooled = db.join(_bc(carry), "cb").select(
-        F.col("n_chars").alias("pooled_chars"),
-        (
-            F.col("carry_in")
-            + F.row_number().over(
-                Window.partitionBy("cb").orderBy("n_chars", "doc_id")
-            )
-        )
-        .cast("bigint")
-        .alias("k"),
-    )
+    pooled = global_order(
+        spark,
+        docs,
+        {"k": dict(key="n_chars", then=["doc_id"], width=width)},
+    ).select(F.col("n_chars").alias("pooled_chars"), "k")
     ws = Window.partitionBy("source")
     ranked = docs.select(
         "doc_id",

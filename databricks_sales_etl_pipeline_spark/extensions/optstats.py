@@ -65,9 +65,9 @@ def ext_histogram_equiheight(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket error bounded on skewed money distributions.
 
     Shape (round-8): the exact NTILE is TWO-PHASE (the
-    ext_empirical_copula recipe) — bucket on ``val DIV width`` (ties
-    never cross), row_number per bucket + broadcast exclusive-carry
-    count offsets, ``prefix.ntile_from_pos`` rebuilds NTILE bit-for-bit
+    ext_empirical_copula recipe) — ``prefix.global_order`` buckets on
+    ``val DIV width`` (ties never cross) and numbers rows per bucket plus
+    one carry collect, ``prefix.ntile_from_pos`` rebuilds NTILE bit-for-bit
     from the global position — so even the EXACT path has no
     single-partition window (this was the audit's last accepted flag).
     The sketch twin :func:`histogram_equiheight_by_value`
@@ -76,7 +76,7 @@ def ext_histogram_equiheight(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pass beats the extra scan."""
     from databricks_sales_etl_pipeline_spark.functions.prefix import (
         div_width,
-        exclusive_carry,
+        global_order,
         ntile_from_pos,
     )
 
@@ -86,15 +86,17 @@ def ext_histogram_equiheight(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-scaled intermediate — the ext_length_bucketing convention
     v = o.select("o_orderkey", cents(F.col("o_totalprice")).alias("val"))
     stats = v.agg(F.max("val"), F.count(F.lit(1))).first()
-    width = div_width(stats[0])
     n = int(stats[1])
-    vb = v.withColumn("vb", F.expr(f"val DIV {width}"))
-    carry = exclusive_carry(spark, vb, "vb")
-    pos = F.col("carry_in") + F.row_number().over(
-        Window.partitionBy("vb").orderBy("val", "o_orderkey")
-    )
-    tiled = vb.join(broadcast(carry), "vb").select(
-        "val", ntile_from_pos(pos, n, HIST_BUCKETS).alias("bucket")
+    tiled = global_order(
+        spark,
+        v,
+        {
+            "pos": dict(
+                key="val", then=["o_orderkey"], width=div_width(stats[0])
+            )
+        },
+    ).select(
+        "val", ntile_from_pos(F.col("pos"), n, HIST_BUCKETS).alias("bucket")
     )
     return tiled.groupBy(F.col("bucket").cast("bigint").alias("bucket")).agg(
         F.min("val").cast("bigint").alias("lo_cents"),

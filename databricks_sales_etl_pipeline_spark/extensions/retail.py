@@ -34,6 +34,10 @@ from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_band, md5_band_sql
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.prefix import (
+    div_width,
+    global_order,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -525,18 +529,12 @@ def ext_inventory_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape (round-8 scale fix): parts grow linearly with the data (~2e9
     at 100 TB TPC-H geometry), so the cumulative-revenue rank is
-    TWO-PHASE — bucket on ``rev_cents DIV width`` (monotone in the sort
-    key, ≤1025 buckets, ties never cross buckets), rank and running-sum
-    per bucket in parallel, then add broadcast exclusive-carry offsets
-    (count carry for rk, revenue carry for cum_cents — one bounded
-    collect via prefix.exclusive_carries). No single-partition window
+    TWO-PHASE via ``prefix.global_order`` — bucket on ``rev_cents DIV
+    width`` (monotone in the sort key, ≤1025 buckets, ties never cross
+    buckets), rank and running-sum per bucket in parallel, plus count and
+    revenue carries from one bounded collect. No single-partition window
     (plan pinned in tests/test_round8_scale.py; values by the unchanged
     global-window DuckDB oracle)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carries,
-    )
-
     li = load(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("part_id")).agg(
         F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
@@ -546,27 +544,19 @@ def ext_inventory_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = rev.agg(
         F.max("rev_cents"), F.sum("rev_cents").cast("bigint")
     ).first()
-    width = div_width(stats[0])
     total = int(stats[1])
-    rb = rev.withColumn("bk", F.expr(f"rev_cents DIV {width}"))
-    carry = exclusive_carries(
+    ranked = global_order(
         spark,
-        rb,
-        "bk",
-        {"c_cnt": None, "c_sum": F.col("rev_cents")},
-        descending=True,
-    )
-    w = Window.partitionBy("bk").orderBy(F.col("rev_cents").desc(), "part_id")
-    ranked = rb.join(broadcast(carry), "bk").select(
-        "part_id",
-        "rev_cents",
-        (
-            F.col("c_sum")
-            + F.sum("rev_cents").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
+        rev,
+        {
+            "rk": dict(
+                key="rev_cents",
+                then=["part_id"],
+                desc=True,
+                width=div_width(stats[0]),
+                sums={"cum_cents": "rev_cents"},
             )
-        ).alias("cum_cents"),
-        (F.col("c_cnt") + F.row_number().over(w)).alias("rk"),
+        },
     )
     return ranked.select(
         "part_id",
@@ -733,6 +723,17 @@ def ext_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 GINI_DECILES = 10
 
 
+def _lorenz(max_r: int) -> dict:
+    """The ascending Lorenz ordering of per-part revenue ``r``: position
+    ``i`` and running revenue ``cum`` over (r, part_id) — the curve under
+    both ext_gini_concentration and ext_knee_detection."""
+    return {
+        "i": dict(
+            key="r", then=["part_id"], width=div_width(max_r), sums={"cum": "r"}
+        )
+    }
+
+
 @query(
     "ext_gini_concentration",
     oracle=f"""
@@ -789,17 +790,13 @@ def ext_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     one number to trend concentration over time.
 
     Shape (round-8 scale fix): parts grow linearly with the data, so the
-    Lorenz rank/cumsum is TWO-PHASE (the ext_inventory_abc recipe) —
-    bucket on ``r DIV width``, rank + running sum per bucket, broadcast
-    exclusive-carry offsets; n and t are one bounded stats collect.
+    Lorenz rank/cumsum is TWO-PHASE (``prefix.global_order``, the
+    ext_inventory_abc recipe) — bucket on ``r DIV width``, rank + running
+    sum per bucket, one bounded carry collect; n and t are one bounded
+    stats collect.
     Σ(2i−n−1)x stays in int64 (i ≤ 2e5 parts × cents sums < 2^63 at any
     tested sf; at sf≥1 quantize r to dollars first — documented
     switch)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carries,
-    )
-
     li = load(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("part_id")).agg(
         F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
@@ -809,22 +806,9 @@ def ext_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = rev.agg(
         F.max("r"), F.count(F.lit(1)), F.sum("r").cast("bigint")
     ).first()
-    width = div_width(stats[0])
     n, t = int(stats[1]), int(stats[2])
-    rb = rev.withColumn("bk", F.expr(f"r DIV {width}"))
-    carry = exclusive_carries(
-        spark, rb, "bk", {"c_cnt": None, "c_sum": F.col("r")}
-    )
-    wb = Window.partitionBy("bk").orderBy("r", "part_id")
-    ranked = rb.join(broadcast(carry), "bk").select(
-        "r",
-        (F.col("c_cnt") + F.row_number().over(wb)).alias("i"),
-        F.lit(n).alias("n"),
-        F.lit(t).alias("t"),
-        (
-            F.col("c_sum")
-            + F.sum("r").over(wb.rowsBetween(Window.unboundedPreceding, 0))
-        ).alias("cum"),
+    ranked = global_order(spark, rev, _lorenz(stats[0])).select(
+        "r", "i", F.lit(n).alias("n"), F.lit(t).alias("t"), "cum"
     )
     gsums = ranked.agg(
         F.max("n").cast("bigint").alias("n_parts"),
@@ -2177,21 +2161,16 @@ def ext_knee_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext_gini_concentration summarizes into one number.
 
     Shape (round-8 scale fix): parts grow linearly with the data, so the
-    Lorenz rank/cumsum is TWO-PHASE — bucket on ``r DIV width`` (monotone
-    in the sort key, ≤1025 buckets, ties never cross), rank + running sum
-    per bucket in parallel, broadcast exclusive-carry offsets (count and
-    revenue carries in one bounded collect), and the argmax is a plain
+    Lorenz rank/cumsum is TWO-PHASE (``prefix.global_order``) — bucket on
+    ``r DIV width`` (monotone in the sort key, ≤1025 buckets, ties never
+    cross), rank + running sum per bucket in parallel, count and revenue
+    carries from one bounded collect, and the argmax is a plain
     ``max_by`` aggregate (map-side partial, no global sort). The share
     ppm uses the staged 3-level long division (the
     ext_gini_concentration pattern) so no cum·1e6 intermediate exists —
     int64-safe to ~sf4000; cum·n cross products stay integer-exact to
     ~4e17 (shard or rescale to dollars beyond ~1e6 parts at full TPC-H
     prices — documented bound, not silent overflow)."""
-    from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        div_width,
-        exclusive_carries,
-    )
-
     li = load(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("part_id")).agg(
         F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
@@ -2201,22 +2180,8 @@ def ext_knee_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = rev.agg(
         F.max("r"), F.count(F.lit(1)), F.sum("r").cast("bigint")
     ).first()
-    width = div_width(stats[0])
     n, t = int(stats[1]), int(stats[2])
-    rb = rev.withColumn("bk", F.expr(f"r DIV {width}"))
-    carry = exclusive_carries(
-        spark, rb, "bk", {"c_cnt": None, "c_sum": F.col("r")}
-    )
-    w = Window.partitionBy("bk").orderBy("r", "part_id")
-    curve = rb.join(broadcast(carry), "bk").select(
-        (F.col("c_cnt") + F.row_number().over(w)).alias("i"),
-        (
-            F.col("c_sum")
-            + F.sum("r").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-        ).alias("cum"),
-    )
+    curve = global_order(spark, rev, _lorenz(stats[0])).select("i", "cum")
     dist = curve.select(
         "i",
         "cum",

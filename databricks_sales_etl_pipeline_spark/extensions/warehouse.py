@@ -358,14 +358,12 @@ def ext_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-7 scale fix: the NTILE runs WITHOUT a global sort — the epoch
     day is a bounded (|calendar|-sized) monotone bucket of the sort
-    order, so per-day windows number rows in parallel, a broadcast
-    exclusive-carry table converts to exact global positions, and
-    ntile_from_pos (functions/prefix.py) applies Spark's row-split rule
-    in closed form; bit-identical, no single-partition task."""
-    from pyspark.sql.functions import broadcast as _bc
-
+    order, so global_order (functions/prefix.py) numbers rows per day in
+    parallel and converts to exact global positions, and ntile_from_pos
+    applies Spark's row-split rule in closed form; bit-identical, no
+    single-partition task."""
     from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        exclusive_carry,
+        global_order,
         ntile_from_pos,
     )
 
@@ -377,11 +375,9 @@ def ext_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # pure scan+project: passes recompute it (deterministic) — cheaper
     # at 100 TB than materializing a fact-scale intermediate
     n = o.count()
-    carry = exclusive_carry(spark, o, "d")
-    pos = F.col("carry_in") + F.row_number().over(
-        Window.partitionBy("d").orderBy("o_orderkey")
-    )
-    z = o.join(_bc(carry), "d").withColumn("zone_id", ntile_from_pos(pos, n, 64))
+    z = global_order(
+        spark, o, {"pos": dict(key="d", then=["o_orderkey"])}
+    ).withColumn("zone_id", ntile_from_pos(F.col("pos"), n, 64))
     lo = F.datediff(F.lit(_ZONE_LO).cast("date"), F.lit("1970-01-01").cast("date"))
     hi = F.datediff(F.lit(_ZONE_HI).cast("date"), F.lit("1970-01-01").cast("date"))
     stats = z.groupBy("zone_id").agg(

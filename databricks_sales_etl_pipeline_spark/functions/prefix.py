@@ -1,185 +1,172 @@
-"""Two-phase distributed prefix machinery (round-7 scale hardening).
+"""Exact global orderings without a single-task window.
 
 A global ordered window (``row_number``/``rank``/running ``SUM`` with no
-partition key) executes as ONE task — the classic 100 TB scale-killer the
-round-6 verdict flagged. When the leading sort key admits a monotone
-bucketing (any integer function ``b(key)`` that never splits ties across
-buckets and preserves order between buckets), the global prefix splits
-into:
+partition key) executes as ONE task. When the leading sort key admits a
+monotone bucketing (an integer function ``b(key)`` that never splits ties
+across buckets and preserves order between buckets), the global result
+splits into two phases:
 
   phase A: the same window PARTITIONED BY the bucket — parallel tasks;
-  phase B: per-bucket totals, collected as a bounded model artifact
-           (the MLlib collect-and-rebroadcast pattern), exclusive-cumsum
-           carry-in offsets joined back via broadcast hash join.
+  phase B: per-bucket totals, collected as a bounded model artifact, whose
+           exclusive prefix is broadcast back as each bucket's carry.
 
-``global = carry_in(bucket) + local`` is bit-identical to the global
-window because prefix aggregation is associative and bucket order equals
-sort order. Used by ext_shuffle_order, ext_peak_concurrency,
-ext_budget_select, ext_kruskal_wallis, ext_length_bucketing,
-ext_zone_map_stats, ext_quantile_normalize, ext_conformal_interval,
-ext_rle_runs_report, ext_nn_matching (tests/test_round7_scale.py pins
-equality to the single-window form for each).
+``global = carry(bucket) + local`` equals the global window exactly
+because prefix aggregation is associative and bucket order equals sort
+order. :func:`global_order` is that recipe, written once; every engine
+query that needs an exact global position, rank or running sum calls it
+(``grep global_order`` lists them). The collect stays bounded because the
+caller picks the bucket fan-out: ``key DIV div_width(max_key)`` has at
+most 1025 buckets whatever the data volume, and bounded domains (calendar
+days, token lengths, permille scores) are their own buckets.
 
-At 100 TB the collect stays bounded because the CALLER picks the bucket
-fan-out (e.g. ``value DIV width`` with ``width = max_value DIV 1024 + 1``
-— ≤ 1025 rows whatever the data volume).
+``exclusive_carry_max`` is the same shape for a running MAX (skyline
+frontiers). Seams that are not prefix aggregates — a next-bucket minimum
+for a cross-bucket ``lead``, LOCF edges — stay with their callers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 
 
-def exclusive_carry(
-    spark: SparkSession,
-    df: DataFrame,
-    bucket: str,
-    weight: Column | None = None,
-    descending: bool = False,
-) -> DataFrame:
-    """Per-bucket exclusive prefix totals, ready for ``broadcast(...)``
-    equi-join on ``bucket``: row i of the result holds the total weight
-    (row count when ``weight`` is None) of every bucket strictly BEFORE
-    it in bucket order. The per-bucket totals are a bounded model
-    artifact (caller bounds the fan-out), so the collect is the same
-    bounded-collect pattern as Lloyd centroids / PQ codebooks.
+def _col(c: str | Column) -> Column:
+    return F.col(c) if isinstance(c, str) else c
 
-    Contract: the ``bucket`` column must be NON-NULL (a NULL key has no
-    place in a total order of buckets) — violated keys raise a clear
-    error instead of a ``sorted()`` TypeError."""
-    return exclusive_carries(
-        spark, df, bucket, {"carry_in": weight}, descending=descending
+
+class _Ordering(NamedTuple):
+    key: str
+    then: tuple | list = ()
+    desc: bool = False
+    width: int | None = None
+    sums: dict[str, str | Column] = {}
+
+
+def global_order(
+    spark: SparkSession, df: DataFrame, orders: dict[str, dict]
+) -> DataFrame:
+    """``df`` plus, for each ordering ``p`` in ``orders``, the columns the
+    single global window ``ORDER BY key [DESC], *then`` would give:
+
+    - ``p``: ``row_number()`` (long);
+    - ``p_below``: ``rank() - 1``, the rows strictly before the row's
+      peer group; ``p_ties``: the size of that peer group (doubled
+      midrank = ``doubled_midrank(p_below, p_ties)``);
+    - ``p_bucket``: the bucket, ``key DIV width`` when ``width`` is given,
+      else ``key`` itself — group by it to reuse the window's partitioning;
+    - one inclusive running ``SUM`` (ROWS frame) per ``sums`` entry
+      ``name -> weight column``.
+
+    An ordering is a dict with ``key`` (a non-negative integer column
+    name), optional ``then`` (tie-breakers: names or sort Columns),
+    ``desc`` (key order), ``width`` and ``sums``. Every ordering's bucket
+    totals come from ONE collect (a GROUPING SETS pass), the only action
+    this launches; outputs the caller never selects are pruned from the
+    plan. Keys must be non-null and no bucket's weights all NULL: either
+    raises ValueError."""
+    specs = {p: _Ordering(**o) for p, o in orders.items()}
+    buckets = [f"{p}_bucket" for p in specs]
+    based = df.select(
+        "*",
+        *[
+            (
+                F.expr(f"`{o.key}` DIV {o.width}")
+                if o.width
+                else F.col(o.key).cast("long")
+            ).alias(b)
+            for b, o in zip(buckets, specs.values())
+        ],
     )
-
-
-def exclusive_carries(
-    spark: SparkSession,
-    df: DataFrame,
-    bucket: str,
-    weights: dict[str, Column | None],
-    descending: bool = False,
-) -> DataFrame:
-    """``exclusive_carry`` for SEVERAL weights in ONE bounded collect:
-    ``weights`` maps each output carry-column name to its weight Column
-    (None = row count). Used when a two-phase rewrite needs both a rank
-    offset (count carry) and a running-sum offset (value carry) over the
-    same bucketing — e.g. a Pareto/Lorenz cumulative curve. Same non-null
-    bucket contract as ``exclusive_carry``."""
-    aggs = [
-        (F.count(F.lit(1)) if c is None else F.sum(c)).cast("long").alias(k)
-        for k, c in weights.items()
-    ]
-    names = list(weights)
-    totals: dict[int, tuple] = {}
-    for r in (
-        df.groupBy(F.col(bucket).cast("long").alias("b")).agg(*aggs).collect()
-    ):
-        if r["b"] is None:
-            raise ValueError(
-                f"exclusive_carry: NULL key in bucket column {bucket!r} — "
-                "buckets must be non-null (filter or coalesce first)"
-            )
-        vals = tuple(r[k] for k in names)
-        for k, v in zip(names, vals):
-            if v is None:
-                raise ValueError(
-                    f"exclusive_carry: bucket {r['b']} has NULL total for "
-                    f"carry {k!r} (all-NULL weight column) — coalesce the "
-                    "weight to 0 or filter NULL rows first"
-                )
-        totals[r["b"]] = vals
-    rows: list[tuple] = []
-    acc = [0] * len(names)
-    for b in sorted(totals, reverse=descending):
-        rows.append((b, *acc))
-        acc = [a + t for a, t in zip(acc, totals[b])]
-    schema = f"{bucket} long, " + ", ".join(f"{k} long" for k in names)
-    # Arrow local relation: the carry table is consumed as a broadcast side
-    # by every caller — the list form would launch a 32-task Python-RDD job
-    # per consumption just to rebuild these ≤~1k rows (localrel.py numbers)
-    return local_df(spark, rows, schema)
-
-
-def exclusive_carry_multi(
-    spark: SparkSession,
-    df: DataFrame,
-    buckets: dict[str, tuple[str, bool]],
-) -> dict[str, DataFrame]:
-    """COUNT carries for SEVERAL independent bucketings in ONE aggregation
-    pass (round-13 optimization): ``buckets`` maps each output carry-column
-    name to ``(bucket_col, descending)``. Result is per name a broadcastable
-    frame ``(bucket_col long, name long)`` with exactly the rows
-    ``exclusive_carry(spark, df, bucket_col, descending=d)`` would produce —
-    but the input is scanned ONCE via GROUPING SETS ((b1), (b2), …) instead
-    of once per dimension (ext_rfm_segmentation's three quintile dimensions
-    were three full passes over the per-customer aggregate; the copula's two
-    margins were two). Same non-null bucket contract."""
-    names = list(buckets)
-    cols = [buckets[k][0] for k in names]
-    # Contract guards (r13 advisor): a duplicated bucket column corrupts the
-    # grouping_id bitmask / duplicates grouping sets, and a bucket column
-    # named like the aggregate aliases collides at resolution time.
-    if len(set(cols)) != len(cols):
-        raise ValueError(
-            f"exclusive_carry_multi: bucket columns must be pairwise "
-            f"distinct, got {cols!r}"
-        )
-    bad = [c for c in cols if c in ("gid", "cnt")]
-    if bad:
-        raise ValueError(
-            f"exclusive_carry_multi: bucket column name(s) {bad!r} collide "
-            "with the internal aggregate aliases ('gid', 'cnt') — rename"
-        )
-    k = len(cols)
-    # grouping_id bitmask: bit (k-1-i) CLEAR ⇔ column i is grouped
-    want_gid = {
-        name: (2**k - 1) & ~(1 << (k - 1 - i))
-        for i, name in enumerate(names)
-    }
+    # grouping_id() is an aggregate expression (it loses its grouping
+    # context in a later projection); bit k-1-i is CLEAR in the rows of
+    # the grouping set of bucket i
+    names, k = list(specs), len(specs)
+    which = {(2**k - 1) & ~(1 << (k - 1 - i)): names[i] for i in range(k)}
     rows = (
-        df.groupingSets(
-            [[F.col(c)] for c in cols], *[F.col(c) for c in cols]
+        based.groupingSets(
+            [[F.col(b)] for b in buckets], *[F.col(b) for b in buckets]
         )
-        # grouping_id() must be an aggregate expression — it loses its
-        # grouping context in a post-agg projection
         .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.grouping_id().alias("gid"),
-        )
-        .select(
-            "gid",
-            *[F.col(c).cast("long").alias(f"_b{i}") for i, c in enumerate(cols)],
-            "cnt",
+            F.count(F.lit(1)).alias("_n"),
+            *[
+                F.sum(_col(w)).cast("long").alias(f"_{p}_{s}")
+                for p, o in specs.items()
+                for s, w in o.sums.items()
+            ],
+            F.grouping_id().alias("_gid"),
         )
         .collect()
     )
-    out: dict[str, DataFrame] = {}
-    for i, name in enumerate(names):
-        bucket, descending = buckets[name]
-        totals: dict[int, int] = {}
-        for r in rows:
-            if r["gid"] != want_gid[name]:
-                continue
-            b = r[f"_b{i}"]
-            if b is None:
+    totals: dict[str, dict[int, tuple]] = {p: {} for p in specs}
+    for r in rows:
+        p = which[r["_gid"]]
+        b = r[f"{p}_bucket"]
+        if b is None:
+            raise ValueError(
+                f"global_order: NULL key in {specs[p].key!r} (ordering "
+                f"{p!r}) — keys must be non-null (filter or coalesce first)"
+            )
+        for s in specs[p].sums:
+            if r[f"_{p}_{s}"] is None:
                 raise ValueError(
-                    f"exclusive_carry_multi: NULL key in bucket column "
-                    f"{bucket!r} — buckets must be non-null (filter or "
-                    "coalesce first)"
+                    f"global_order: bucket {b} has NULL total for sum "
+                    f"{s!r} (all-NULL weight column) — coalesce the "
+                    "weight to 0 or filter NULL rows first"
                 )
-            totals[b] = r["cnt"]
-        carry_rows: list[tuple] = []
-        acc = 0
-        for b in sorted(totals, reverse=descending):
-            carry_rows.append((b, acc))
-            acc += totals[b]
-        out[name] = local_df(
-            spark, carry_rows, f"{bucket} long, {name} long"
+        totals[p][b] = (r["_n"], *[r[f"_{p}_{s}"] for s in specs[p].sums])
+
+    out, cols = based, []
+    for (p, o), b in zip(specs.items(), buckets):
+        carry_rows, acc = [], [0] * (1 + len(o.sums))
+        for v in sorted(totals[p], reverse=o.desc):
+            carry_rows.append((v, *acc))
+            acc = [x + y for x, y in zip(acc, totals[p][v])]
+        carry = [f"_{p}_c{j}" for j in range(len(acc))]
+        # Arrow local relation: a LocalTableScan broadcast, no job to build
+        out = out.join(
+            F.broadcast(
+                local_df(
+                    spark,
+                    carry_rows,
+                    ", ".join(f"{c} long" for c in [b, *carry]),
+                )
+            ),
+            b,
         )
-    return out
+        w = Window.partitionBy(b).orderBy(
+            F.col(o.key).desc() if o.desc else F.col(o.key).asc(),
+            *[_col(t) for t in o.then],
+        )
+        c_n = F.col(carry[0])
+        cols += [
+            (c_n + F.row_number().over(w)).alias(p),
+            (c_n + F.rank().over(w) - 1).alias(f"{p}_below"),
+            F.count(F.lit(1))
+            .over(w.rangeBetween(Window.currentRow, Window.currentRow))
+            .alias(f"{p}_ties"),
+            F.col(b),
+            *[
+                (
+                    F.col(c)
+                    + F.sum(_col(wt)).over(
+                        w.rowsBetween(Window.unboundedPreceding, 0)
+                    )
+                ).alias(s)
+                for c, (s, wt) in zip(carry[1:], o.sums.items())
+            ],
+        ]
+    return out.select(*[F.col(f"`{c}`") for c in df.columns], *cols)
+
+
+def doubled_midrank(below: Column, ties: Column) -> Column:
+    """Twice the midrank of a peer group of ``ties`` rows with ``below``
+    rows strictly before it: ``2·below + ties + 1`` — always an integer,
+    so rank statistics under ties stay exact in int64."""
+    return 2 * below + ties + 1
 
 
 def exclusive_carry_max(
@@ -192,8 +179,8 @@ def exclusive_carry_max(
     """Exclusive running MAX of ``value`` over buckets strictly before
     each bucket in bucket order (NULL carry for the first bucket) —
     max is associative, so ``global running max = max(carry, local
-    running max)`` exactly. Same bounded-collect / non-null-bucket
-    contract as ``exclusive_carry``. Powers skyline/frontier scans."""
+    running max)`` exactly. Same bounded collect and non-null bucket
+    contract as :func:`global_order`. Powers skyline/frontier scans."""
     totals: dict[int, int] = {}
     for r in (
         df.groupBy(F.col(bucket).cast("long").alias("b"))

@@ -93,15 +93,17 @@ def test_carry_tables_plan_local(spark):
     stay LocalTableScan (regression guard for the 32-task Python-RDD shape
     this round removed)."""
     from databricks_sales_etl_pipeline_spark.functions.prefix import (
-        exclusive_carries,
         exclusive_carry_max,
+        global_order,
     )
     from pyspark.sql import functions as F
 
     base = spark.range(100).select(
         (F.col("id") % 7).alias("bk"), F.col("id").alias("v")
     )
-    c = exclusive_carries(spark, base, "bk", {"cnt": None, "sm": F.col("v")})
+    c = global_order(
+        spark, base, {"p": dict(key="bk", then=["v"], sums={"sm": "v"})}
+    )
     m = exclusive_carry_max(spark, base, "bk", F.col("v"))
     assert "LocalTableScan" in _plan(c) and "ExistingRDD" not in _plan(c)
     assert "LocalTableScan" in _plan(m) and "ExistingRDD" not in _plan(m)

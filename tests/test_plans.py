@@ -486,5 +486,5 @@ def test_shuffle_order_has_no_global_window(spark):
     df = QUERIES["ext_shuffle_order"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange SinglePartition" not in plan
-    assert "Window" in plan and "rb" in plan        # bucketed window
+    assert "Window" in plan and "pos_bucket" in plan  # bucketed window
     assert "BroadcastHashJoin" in plan              # offsets join is broadcast

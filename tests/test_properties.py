@@ -77,15 +77,14 @@ def test_shingle_rows_match_python_model(spark, texts):
     assert got == expected
 
 
-# --- round-7 two-phase prefix helpers (functions/prefix.py) -----------------
+# --- the two-phase global-order kernel (functions/prefix.py) ---------------
 
 from pyspark.sql import Window as _W  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from databricks_sales_etl_pipeline_spark.functions.prefix import (  # noqa: E402
     div_width,
-    exclusive_carry,
-    exclusive_carry_multi,
+    global_order,
     ntile_from_pos,
 )
 
@@ -108,69 +107,53 @@ def test_ntile_from_pos_matches_spark_ntile(spark, keys, k):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(st.lists(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=300))
-def test_two_phase_row_number_matches_global(spark, keys):
-    """carry + in-bucket row_number == global row_number for the
-    value-DIV-width monotone bucketing, whatever the value distribution."""
-    from pyspark.sql.functions import broadcast
-
-    rows = [(i, v) for i, v in enumerate(keys)]
-    df = spark.createDataFrame(rows, "id long, v long")
-    want = df.select(
-        "id", F.row_number().over(_W.orderBy("v", "id")).cast("long").alias("rk")
-    )
-    width = div_width(max(keys), fanout=7)  # tiny fanout → many bucket crossings
-    b = df.withColumn("vb", F.expr(f"v DIV {width}"))
-    carry = exclusive_carry(spark, b, "vb")
-    got = b.join(broadcast(carry), "vb").select(
-        "id",
-        (
-            F.col("carry_in")
-            + F.row_number().over(_W.partitionBy("vb").orderBy("v", "id"))
-        ).alias("rk"),
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=100),  # bucketable key
-            st.integers(min_value=0, max_value=1000),  # weight
-        ),
-        min_size=1,
-        max_size=300,
+TIED_PAIRS = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=60),  # key, heavily tied
+        st.integers(min_value=0, max_value=1000),  # weight
     ),
-    st.booleans(),
+    min_size=1,
+    max_size=300,
 )
-def test_two_phase_running_sum_matches_global(spark, pairs, descending):
-    """carry + in-bucket running SUM == the global ordered running SUM,
-    both ascending and descending bucket order."""
-    from pyspark.sql.functions import broadcast
 
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(TIED_PAIRS, st.booleans())
+def test_global_order_matches_single_window(spark, pairs, descending):
+    """Every kernel output equals the single global window over the same
+    order: row_number for ``p``, rank()-1 for ``p_below``, the peer-group
+    size for ``p_ties``, the ROWS running SUM for each ``sums`` entry —
+    ascending and descending, with buckets small enough (fanout 7) that
+    ties and running sums cross bucket edges often."""
     rows = [(i, k, w) for i, (k, w) in enumerate(pairs)]
     df = spark.createDataFrame(rows, "id long, k long, w long")
-    order = [F.col("k").desc() if descending else F.col("k").asc(), F.col("id")]
+    width = div_width(max(k for k, _ in pairs), fanout=7)
+    key = F.col("k").desc() if descending else F.col("k").asc()
+    full, ties = _W.orderBy(key, "id"), _W.orderBy(key)
     want = df.select(
         "id",
-        F.sum("w")
-        .over(_W.orderBy(*order).rowsBetween(_W.unboundedPreceding, 0))
-        .alias("c"),
+        F.row_number().over(full).cast("long").alias("p"),
+        F.sum("w").over(full.rowsBetween(_W.unboundedPreceding, 0)).alias("cw"),
+        F.sum(F.col("w") * 3).over(full.rowsBetween(_W.unboundedPreceding, 0))
+        .alias("cw3"),
+        (F.rank().over(ties) - 1).cast("long").alias("q_below"),
+        F.count(F.lit(1)).over(_W.partitionBy("k")).alias("q_ties"),
     )
-    carry = exclusive_carry(spark, df, "k", weight=F.col("w"), descending=descending)
-    got = df.join(broadcast(carry), "k").select(
-        "id",
-        (
-            F.col("carry_in")
-            + F.sum("w").over(
-                _W.partitionBy("k")
-                .orderBy("id")
-                .rowsBetween(_W.unboundedPreceding, 0)
-            )
-        ).alias("c"),
-    )
+    got = global_order(
+        spark,
+        df,
+        {
+            "p": dict(
+                key="k",
+                then=["id"],
+                desc=descending,
+                width=width,
+                sums={"cw": "w", "cw3": F.col("w") * 3},
+            ),
+            "q": dict(key="k", desc=descending, width=width),
+        },
+    ).select(*want.columns)
+    assert got.dtypes == want.dtypes
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
@@ -188,21 +171,20 @@ def test_two_phase_running_sum_matches_global(spark, pairs, descending):
     st.booleans(),
     st.booleans(),
 )
-def test_exclusive_carry_multi_matches_per_dimension(spark, triples, d1, d2):
-    """The fused grouping-sets form (one input pass for N bucketings) must
-    reproduce exclusive_carry per dimension exactly — rows, types,
-    ascending AND descending bucket orders."""
+def test_global_order_orderings_share_one_collect(spark, triples, d1, d2):
+    """One call with three orderings (one GROUPING SETS collect) must
+    equal three one-ordering calls — every output column, ascending AND
+    descending, with and without a width."""
     rows = [(i, a, b, c) for i, (a, b, c) in enumerate(triples)]
     df = spark.createDataFrame(rows, "id long, a long, b long, c long")
-    fused = exclusive_carry_multi(
-        spark, df, {"ca": ("a", d1), "cb": ("b", d2), "cc": ("c", False)}
-    )
-    for name, (bucket, desc) in {
-        "ca": ("a", d1), "cb": ("b", d2), "cc": ("c", False)
-    }.items():
-        ref = exclusive_carry(spark, df, bucket, descending=desc)
-        got = fused[name]
-        assert got.schema.fieldNames() == [bucket, name]
-        assert sorted(map(tuple, got.collect())) == sorted(
-            (r[bucket], r["carry_in"]) for r in ref.collect()
+    orders = {
+        "pa": dict(key="a", then=["id"], desc=d1, width=4, sums={"sa": "c"}),
+        "pb": dict(key="b", then=["id"], desc=d2),
+        "pc": dict(key="c", then=["id"], width=3, sums={"sc": "a"}),
+    }
+    fused = global_order(spark, df, orders)
+    for name, order in orders.items():
+        one = global_order(spark, df, {name: order})
+        assert sorted(map(tuple, one.collect())) == sorted(
+            map(tuple, fused.select(*one.columns).collect())
         )

@@ -14,10 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from databricks_sales_etl_pipeline_spark.functions.prefix import (
-    exclusive_carries,
-    exclusive_carry,
-)
+from databricks_sales_etl_pipeline_spark.functions.prefix import global_order
 from databricks_sales_etl_pipeline_spark.registry import QUERIES, load_all
 from tests.conftest import SF_DIR
 from tools.audit_single_partition import (
@@ -59,38 +56,34 @@ def test_no_entity_scaled_single_partition_window(spark, name):
     assert not window_fed_by_single_partition(plan), name
 
 
-def test_exclusive_carries_matches_two_single_carries(spark):
-    """The multi-weight carry (one bounded collect) must equal two
-    independent exclusive_carry calls, ascending and descending."""
+def test_global_order_two_sums_match_single_sum_calls(spark):
+    """Two running sums in one ordering (one bounded collect) must equal
+    two one-sum calls, ascending and descending."""
     df = spark.createDataFrame(
         [(i % 7, i, 10 + i % 3) for i in range(200)], "bk long, a long, w long"
     )
     for desc in (False, True):
-        both = exclusive_carries(
-            spark, df, "bk", {"c_cnt": None, "c_sum": F.col("w")},
-            descending=desc,
-        ).collect()
-        cnt = {
-            r["bk"]: r["carry_in"]
-            for r in exclusive_carry(spark, df, "bk", descending=desc).collect()
-        }
-        sm = {
-            r["bk"]: r["carry_in"]
-            for r in exclusive_carry(
-                spark, df, "bk", weight=F.col("w"), descending=desc
-            ).collect()
-        }
-        for r in both:
-            assert r["c_cnt"] == cnt[r["bk"]]
-            assert r["c_sum"] == sm[r["bk"]]
+        order = dict(key="bk", then=["a"], desc=desc)
+        both = global_order(
+            spark, df, {"p": {**order, "sums": {"s_a": "a", "s_w": "w"}}}
+        ).select("a", "p", "s_a", "s_w")
+        one_a = global_order(
+            spark, df, {"p": {**order, "sums": {"s_a": "a"}}}
+        ).select("a", "p", "s_a")
+        one_w = global_order(
+            spark, df, {"p": {**order, "sums": {"s_w": "w"}}}
+        ).select("a", "s_w")
+        assert sorted(map(tuple, both.collect())) == sorted(
+            map(tuple, one_a.join(one_w, "a").collect())
+        )
 
 
-def test_exclusive_carry_rejects_null_bucket(spark):
-    """ADVICE fix: a NULL bucket key raises a clear contract error, not
-    a sorted() TypeError."""
+def test_global_order_rejects_null_key(spark):
+    """ADVICE fix: a NULL key raises a clear contract error, not a
+    sorted() TypeError."""
     df = spark.createDataFrame([(1, 1), (None, 2)], "bk long, w long")
     with pytest.raises(ValueError, match="NULL key"):
-        exclusive_carry(spark, df, "bk")
+        global_order(spark, df, {"p": dict(key="bk")})
 
 
 def test_tree_walk_ignores_sibling_branch_exchange(spark):

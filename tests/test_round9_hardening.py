@@ -12,21 +12,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.functions.prefix import (
-    exclusive_carry,
     exclusive_carry_max,
+    global_order,
 )
 from tools.audit_single_partition import window_feed_verdicts
 from tools.determinism_sweep import compare
 
 
-def test_exclusive_carry_rejects_all_null_weight(spark):
+def test_global_order_rejects_all_null_weight(spark):
     """A bucket whose weight column is all-NULL must raise a descriptive
     ValueError, not TypeError from `acc + None` in the Python fold."""
     df = spark.createDataFrame(
         [(1, None), (1, None), (2, 5)], "bk long, w long"
     )
     with pytest.raises(ValueError, match="NULL total"):
-        exclusive_carry(spark, df, "bk", weight=F.col("w"))
+        global_order(spark, df, {"p": dict(key="bk", sums={"s": "w"})})
 
 
 def test_exclusive_carry_max_rejects_all_null_value(spark):
@@ -37,17 +37,21 @@ def test_exclusive_carry_max_rejects_all_null_value(spark):
         exclusive_carry_max(spark, df, "bk", F.col("v"))
 
 
-def test_exclusive_carry_null_weight_in_nonempty_bucket_ok(spark):
+def test_global_order_null_weight_in_nonempty_bucket_ok(spark):
     """Partial NULLs are fine — F.sum skips them; only all-NULL buckets
-    have no total."""
+    have no total. The running sums equal the global window's."""
+    from pyspark.sql import Window
+
     df = spark.createDataFrame(
-        [(1, None), (1, 3), (2, 5)], "bk long, w long"
+        [(0, 1, None), (1, 1, 3), (2, 2, 5)], "id long, bk long, w long"
     )
-    rows = {
-        r["bk"]: r["carry_in"]
-        for r in exclusive_carry(spark, df, "bk", weight=F.col("w")).collect()
-    }
-    assert rows == {1: 0, 2: 3}
+    got = global_order(
+        spark, df, {"p": dict(key="bk", then=["id"], sums={"s": "w"})}
+    )
+    w = Window.orderBy("bk", "id").rowsBetween(Window.unboundedPreceding, 0)
+    want = df.select("id", F.sum("w").over(w).alias("s"))
+    assert {r["id"]: r["s"] for r in got.collect()} == {0: None, 1: 3, 2: 8}
+    assert {r["id"]: r["s"] for r in want.collect()} == {0: None, 1: 3, 2: 8}
 
 
 def test_audit_checkpoint_scan_not_bounded(spark):

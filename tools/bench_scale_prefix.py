@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""Round-7 scaling evidence: the two-phase prefix rewrite vs the global
-ordered window it replaced, measured on synthetic data far beyond the
-fixtures (distributed generation, no driver loops).
+"""Scaling evidence for the two-phase global order: the
+``functions/prefix.py::global_order`` kernel vs the global ordered window it
+replaces, measured on synthetic data far beyond the fixtures (distributed
+generation, no driver loops).
 
 Shapes timed at each size:
   global   — row_number() OVER (ORDER BY v, id): ONE task does all the work
-  twophase — per-bucket row_number (v DIV width buckets) + broadcast
-             exclusive-carry offsets (functions/prefix.py)
+  twophase — global_order with v DIV width buckets: per-bucket row_number
+             plus broadcast carries from one bounded collect
 
 Both produce identical positions (tests/test_properties.py); the question
 is wall-clock as rows grow.
@@ -21,11 +22,10 @@ import time
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.prefix import (
     div_width,
-    exclusive_carry,
+    global_order,
 )
 from databricks_sales_etl_pipeline_spark.session import get_spark
 
@@ -55,15 +55,9 @@ def main() -> None:
 
         t0 = time.perf_counter()
         width = div_width((1 << 40) - 1, fanout=1024)
-        b = df.withColumn("vb", F.expr(f"v DIV {width}"))
-        carry = exclusive_carry(spark, b, "vb")
-        tp = b.join(broadcast(carry), "vb").select(
-            "id",
-            (
-                F.col("carry_in")
-                + F.row_number().over(Window.partitionBy("vb").orderBy("v", "id"))
-            ).alias("rk"),
-        )
+        tp = global_order(
+            spark, df, {"rk": dict(key="v", then=["id"], width=width)}
+        ).select("id", "rk")
         tp_cnt = tp.agg(F.max("rk"), F.sum("rk")).collect()[0]
         t_two = time.perf_counter() - t0
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for the bench headline queries (or a named
-subset) to <out_dir>/<query>_<suffix>.txt — the before/after plan evidence
-a performance change commits beside its numbers (plans/r13, plans/r14).
+subset) to <out_dir>/<query>_<suffix>.txt — before/after plans to diff
+while working on a performance change. Commit a plan only when it backs a
+number the change reports.
 
 Usage:
     PYTHONPATH=. python tools/dump_headline_plans.py <out_dir> before [name ...]
