@@ -135,16 +135,6 @@ BROADCAST_ALWAYS = {"region", "nation"}
 # NEVER assume one shape — detect from the dtype actually read and normalize
 # to session-UTC TIMESTAMP, which is value-identical under a UTC session TZ
 # and matches DuckDB's naive-TIMESTAMP view of the same file.
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
 
 def nanos_to_ts(df: DataFrame, col: str = "ts") -> DataFrame:

@@ -499,11 +499,11 @@ def pipeline_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin of what `stream_foreachbatch_upsert` does per micro-batch.
     Sum/count are the mergeable pair; non-mergeable stats (exact median)
     must be re-derived or sketched (`ext_quantile_approx`)."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
-    from databricks_sales_etl_pipeline_spark.io import read_table, write_table
+    from databricks_sales_etl_pipeline_spark.io import (
+        read_table,
+        scratch_dir,
+        write_table,
+    )
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -516,9 +516,7 @@ def pipeline_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rc").cast("bigint").alias("rev_cents"),
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
     )
-    # unique temp path per call, left for the OS tmp reaper — the same
-    # lifecycle every sources/sinks.py query uses
-    path = _os.path.join(_tempfile.gettempdir(), f"dsep_rollup_{_uuid.uuid4().hex}")
+    path = scratch_dir("rollup")
     write_table(rollup(hist), path)
     return (
         read_table(spark, path)

@@ -15,6 +15,11 @@ readers get partition pruning.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -53,3 +58,41 @@ def read_table(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.load(path)
+
+
+_OWNED = re.compile(r"dsep_(\d+)_")
+
+
+def scratch_dir(tag: str) -> str:
+    """The one temp-directory policy of the engine: ``<tmp>/dsep_<pid>_<tag>``,
+    removed if it exists, so the caller starts from an absent path.
+
+    - One dir per (process, tag): repeated calls reuse it, so nothing
+      accumulates however often a query runs.
+    - PID-keyed: concurrent engine processes on one box never share, so one
+      process's wipe cannot delete another's live table or checkpoint.
+    - Dirs whose embedded PID no longer exists are removed on the way in. A
+      live process's dirs are never touched, nor is a dir with no owner PID.
+
+    Contract: a DataFrame that reads a scratch dir stays valid only until
+    the next ``scratch_dir`` call with the same tag."""
+    tmp = tempfile.gettempdir()
+    me = os.getpid()
+    try:
+        names = os.listdir(tmp)
+    except OSError:
+        names = []
+    for name in names:
+        m = _OWNED.match(name)
+        if not m or int(m.group(1)) == me:
+            continue
+        try:
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+        except OSError:
+            pass  # alive under another user, or unprobeable: leave it
+    path = os.path.join(tmp, f"dsep_{me}_{tag}")
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    return path

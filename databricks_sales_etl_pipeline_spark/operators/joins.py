@@ -21,8 +21,8 @@ from pyspark.sql.functions import broadcast
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.registry import query
-from databricks_sales_etl_pipeline_spark.streaming.util import sweep_dead_scratch
 
 _REV_CENTS = cents_sql("l_extendedprice * (1 - l_discount)")
 
@@ -421,22 +421,8 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (tests/test_plans.py asserts `dynamicpruning` in the plan). At
     100 TB this is the difference between scanning 2 months and 84. The
     oracle recomputes from the unpartitioned source with the fused filter."""
-    import os
-    import shutil
-    import tempfile
-
-    from databricks_sales_etl_pipeline_spark.functions.money import cents
-
     o = load(spark, sf_dir, "orders")
-    # PID-keyed (round-10 scratch_checkpoint lesson): concurrent engine
-    # processes must not wipe each other's live partitioned table mid-scan;
-    # dead owners' leftovers are swept on the way in (round-10 advisor)
-    sweep_dead_scratch("dsep_dpp_orders_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"dsep_dpp_orders_{os.getpid()}"
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    path = scratch_dir("dpp_orders")
     o.withColumn(
         "order_month", F.date_format("o_orderdate", "yyyy-MM")
     ).write.partitionBy("order_month").parquet(path)

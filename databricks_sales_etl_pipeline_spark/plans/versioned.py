@@ -280,28 +280,9 @@ class VersionedTable:
 
 # ---- registered driver queries (real write→time-travel round-trips) ----
 
-import tempfile  # noqa: E402
-
 from databricks_sales_etl_pipeline_spark.catalog import load  # noqa: E402
+from databricks_sales_etl_pipeline_spark.io import scratch_dir  # noqa: E402
 from databricks_sales_etl_pipeline_spark.registry import query  # noqa: E402
-from databricks_sales_etl_pipeline_spark.streaming.util import sweep_dead_scratch  # noqa: E402
-
-
-def _tmp_table(tag: str) -> str:
-    """Deterministic per-(process, tag) scratch path, wiped before reuse so
-    repeated bench/driver runs keep at most one copy on disk (round-2
-    advisor: the uuid-per-invocation form leaked without bound). PID-keyed
-    (round-10 scratch_checkpoint lesson): a bare per-tag path is shared
-    across concurrent engine processes, so one instance's wipe-before-reuse
-    rmtree's another's LIVE table mid-read. Dead owners' leftovers are
-    swept on the way in (round-10 advisor)."""
-    sweep_dead_scratch("dsep_vtbl_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"dsep_vtbl_{os.getpid()}_{tag}"
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    return path
 
 
 @query(
@@ -313,7 +294,7 @@ def tbl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     AS OF v0 — the oracle checks the v0 snapshot is bit-identical to the
     source even though the table has moved on."""
     n = load(spark, sf_dir, "nation")
-    t = VersionedTable(spark, _tmp_table("tt"))
+    t = VersionedTable(spark, scratch_dir("vtbl_tt"))
     t.write(n, mode="overwrite")                 # v0
     t.write(n.limit(7), mode="append")           # v1
     return t.read(version=0)
@@ -332,7 +313,7 @@ def tbl_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragmented into many small files, compacted, read back — the oracle is
     the plain doubled source (file layout is invisible to readers)."""
     n = load(spark, sf_dir, "nation")
-    t = VersionedTable(spark, _tmp_table("opt"))
+    t = VersionedTable(spark, scratch_dir("vtbl_opt"))
     t.write(n.repartition(8), mode="overwrite")
     t.write(n.repartition(8), mode="append")
     t.optimize()
@@ -422,7 +403,7 @@ def tbl_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two STORED versions must equal the diff computed straight from the
     source (storage is invisible to the change semantics)."""
     n = load(spark, sf_dir, "nation")
-    t = VersionedTable(spark, _tmp_table("cdf"))
+    t = VersionedTable(spark, scratch_dir("vtbl_cdf"))
     t.write(n, mode="overwrite")  # v0
     v1 = (
         n.where(F.col("n_nationkey") % 7 != 3)
@@ -459,10 +440,10 @@ def tbl_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     read v1. This is the dev/test-against-prod-data workflow Delta CLONE
     exists for."""
     n = load(spark, sf_dir, "nation")
-    src = VersionedTable(spark, _tmp_table("clsrc"))
+    src = VersionedTable(spark, scratch_dir("vtbl_clsrc"))
     src.write(n, mode="overwrite")  # v0
     src.write(n.where(F.col("n_nationkey") % 3 != 0), mode="overwrite")  # v1
-    clone = src.clone_to(_tmp_table("clone"))
+    clone = src.clone_to(scratch_dir("vtbl_clone"))
     src.write(n.where(F.col("n_nationkey") < 2), mode="overwrite")  # v2
     return clone.read()
 
@@ -477,7 +458,7 @@ def tbl_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     original rows, while the botched v1 stays in history (a restore is a
     new commit, not a rewrite). The one-command answer to a bad deploy."""
     n = load(spark, sf_dir, "nation")
-    t = VersionedTable(spark, _tmp_table("restore"))
+    t = VersionedTable(spark, scratch_dir("vtbl_restore"))
     t.write(n, mode="overwrite")  # v0
     t.write(n.where(F.col("n_nationkey") % 2 == 0), mode="overwrite")  # v1 (bad)
     t.restore(0)  # v2

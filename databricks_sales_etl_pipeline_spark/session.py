@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from databricks_sales_etl_pipeline_spark.catalog import ensure_runtime_conf
+
 # ~128 MB shuffle-partition target: the classic rule of thumb that keeps a
 # partition comfortably in executor memory while amortizing task overhead.
 TARGET_PARTITION_BYTES = 128 * 1024 * 1024
@@ -34,14 +36,8 @@ def get_spark(app_name: str = "dsep-engine", **extra_conf: str) -> SparkSession:
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.parquet carries TIMESTAMP(NANOS) which Spark4 rejects by
-        # default; read as long nanos, catalog.load converts to μs timestamps
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(TARGET_PARTITION_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
@@ -49,6 +45,9 @@ def get_spark(app_name: str = "dsep-engine", **extra_conf: str) -> SparkSession:
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # AQE, UTC and nanosAsLong come from the one runtime list the engine
+    # also applies to sessions it did not build
+    ensure_runtime_conf(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

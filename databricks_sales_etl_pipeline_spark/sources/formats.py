@@ -11,18 +11,13 @@ never run on them directly at 100 TB.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import SCHEMAS, load
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.registry import query
-
-
-def _tmp(tag: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"dsep_fmt_{tag}_{uuid.uuid4().hex}")
 
 
 @query(
@@ -34,7 +29,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest edge. Values survive exactly (ints + strings here; doubles would
     round-trip via Spark's shortest-repr float formatting)."""
     n = load(spark, sf_dir, "nation")
-    path = _tmp("csv")
+    path = scratch_dir("fmt_csv")
     n.write.option("header", "true").csv(path)
     return spark.read.schema(SCHEMAS["nation"]).option("header", "true").csv(path)
 
@@ -47,7 +42,7 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + source with explicit schema (no sampling pass —
     schema inference on JSON costs a full extra scan at scale)."""
     r = load(spark, sf_dir, "region")
-    path = _tmp("json")
+    path = scratch_dir("fmt_json")
     r.write.json(path)
     return spark.read.schema(SCHEMAS["region"]).json(path)
 
@@ -62,7 +57,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS a valid analytics-resident format; doubles round-trip bit-exactly
     through its typed encoding (no string formatting involved)."""
     s = load(spark, sf_dir, "supplier")
-    path = _tmp("orc")
+    path = scratch_dir("fmt_orc")
     s.select("s_suppkey", "s_name", "s_nationkey", "s_acctbal").write.orc(path)
     return spark.read.orc(path)
 
@@ -111,7 +106,7 @@ def src_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql.files.maxPartitionBytes batching; content never leaves the
     executor (digests do)."""
     d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    path = _tmp("binfiles")
+    path = scratch_dir("fmt_binfiles")
     os.makedirs(path)
     # bounded materialization: 100 docs, driver writes the fixture files
     for r in d.select("doc_id", "text").collect():
@@ -138,7 +133,7 @@ def src_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-line text (the synthetic corpus; production escapes newlines
     first), so the oracle is the untouched table."""
     d = load(spark, sf_dir, "documents")
-    path = _tmp("lines")
+    path = scratch_dir("fmt_lines")
     d.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias(
             "value"
@@ -192,7 +187,7 @@ def src_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("}"),
         )
     )
-    path = _tmp("jsonc")
+    path = scratch_dir("fmt_jsonc")
     d.select(line.alias("value")).write.text(path)
     schema = StructType(
         [

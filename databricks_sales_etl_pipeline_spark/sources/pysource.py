@@ -123,10 +123,7 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-    from databricks_sales_etl_pipeline_spark.streaming.util import (
-        await_finished,
-        scratch_checkpoint,
-    )
+    from databricks_sales_etl_pipeline_spark.io import scratch_dir
 
     class SynthStreamReader(SimpleDataSourceStreamReader):
         def initialOffset(self):
@@ -152,9 +149,6 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return SynthStreamReader()
 
     spark.dataSource.register(SynthStreamSource)
-    import uuid as _uuid
-
-    sink = f"pysrc_{_uuid.uuid4().hex[:12]}"
     # a vanilla driver session runs 200 shuffle partitions; the streaming
     # agg state would pay 200 tasks PER micro-batch for 203 rows. Scope a
     # sane value and restore (the ADVICE conf-leak discipline) — the
@@ -173,9 +167,9 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("doc_id").cast("bigint").alias("max_id"),
             )
             .writeStream.format("memory")
-            .queryName(sink)
+            .queryName("dsep_pysrc")
             .outputMode("complete")
-            .option("checkpointLocation", scratch_checkpoint("pysrcstream"))
+            .option("checkpointLocation", scratch_dir("pysrcstream"))
             .start()
         )
         try:
@@ -184,5 +178,4 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _ = await_finished  # AvailableNow helper unused here (see docstring)
-    return spark.table(sink)
+    return spark.table("dsep_pysrc")

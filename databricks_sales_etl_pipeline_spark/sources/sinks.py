@@ -1,28 +1,20 @@
 """Sink operators as oracle-checkable queries (SURVEY §2.1 S4–S6).
 
-Each query performs a real write→read round-trip through io.py into a
-process-unique temp directory, then returns the read-back DataFrame — so the
+Each query performs a real write→read round-trip through io.py into an
+``io.scratch_dir`` directory, then returns the read-back DataFrame — so the
 oracle (pure SELECT over the source tables) verifies the sink preserved the
 data exactly, which is a stronger check than rows-only.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
-from databricks_sales_etl_pipeline_spark.io import read_table, write_table
+from databricks_sales_etl_pipeline_spark.io import read_table, scratch_dir, write_table
 from databricks_sales_etl_pipeline_spark.registry import query
-
-
-def _tmp_path(tag: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"dsep_sink_{tag}_{uuid.uuid4().hex}")
 
 
 @query(
@@ -33,7 +25,7 @@ def sink_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 — full-table replace (ref `01:122,208`, `02:69-71`): write twice in
     overwrite mode; the second write fully replaces the first."""
     n = load(spark, sf_dir, "nation")
-    path = _tmp_path("overwrite")
+    path = scratch_dir("sink_overwrite")
     write_table(n.limit(5), path, mode="overwrite")  # stale content…
     write_table(n, path, mode="overwrite")  # …fully replaced
     return read_table(spark, path)
@@ -51,7 +43,7 @@ def sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 — incremental append (ref `03:90` Bronze daily ingest): overwrite
     then append; read-back is exactly source×2."""
     r = load(spark, sf_dir, "region")
-    path = _tmp_path("append")
+    path = scratch_dir("sink_append")
     write_table(r, path, mode="overwrite")
     write_table(r, path, mode="append")
     return read_table(spark, path)
@@ -91,7 +83,7 @@ def sink_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema drift from the actual on-disk footers (not the intended write
     schema — the report must witness what the sink really did)."""
     n = load(spark, sf_dir, "nation")
-    path = _tmp_path("drift")
+    path = scratch_dir("sink_drift")
     write_table(n, path, mode="overwrite")
     before = read_table(spark, path).schema
     evolved = n.withColumn("n_extra", (F.col("n_nationkey") * 2).cast("int"))
@@ -116,7 +108,7 @@ def sink_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     column drift): append a batch carrying a new column; merge-schema read
     unions the schemas, old rows get NULL."""
     n = load(spark, sf_dir, "nation")
-    path = _tmp_path("merge")
+    path = scratch_dir("sink_merge")
     write_table(n, path, mode="overwrite")
     evolved = n.withColumn("n_extra", (F.col("n_nationkey") * 2).cast("int"))
     write_table(evolved, path, mode="append", merge_schema=True)
@@ -143,7 +135,7 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
     )
-    path = _tmp_path("part")
+    path = scratch_dir("sink_part")
     write_table(o, path, mode="overwrite", partition_by=["order_month"])
     return read_table(spark, path).where(F.col("order_month") == "1996-03")
 
@@ -172,7 +164,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    path = _tmp_path("dynover")
+    path = scratch_dir("sink_dynover")
     base = n.withColumn("src", F.lit("base"))
     write_table(base, path, mode="overwrite", partition_by=["n_regionkey"])
     patched = (
@@ -224,7 +216,7 @@ def src_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB _metadata is how quarantine reports point at offending
     ingest files; it is projection-pruned like any other column."""
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    path = _tmp_path("filemeta")
+    path = scratch_dir("sink_filemeta")
     n.repartition(1).write.mode("overwrite").partitionBy(
         "n_regionkey"
     ).parquet(path)

@@ -19,19 +19,14 @@ batch)."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import events_readstream
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.registry import query
-from databricks_sales_etl_pipeline_spark.streaming.util import (
-    await_finished,
-    scratch_checkpoint,
-    sweep_dead_scratch,
-)
+from databricks_sales_etl_pipeline_spark.streaming.util import await_finished
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -67,16 +62,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     its per-user latest with the previous snapshot, recomputes the window
     winner, and writes a NEW versioned directory (atomic swap by pointer,
     never in-place overwrite of files a lazy plan may still read)."""
-    # deterministic per-(process, tag) dir wiped before reuse (same
-    # discipline as scratch_checkpoint: no unbounded tempdir leak, no
-    # mid-read deletion; PID-keyed so concurrent engine processes never
-    # rmtree each other's live state — the round-10 sweep lesson)
-    sweep_dead_scratch("dsep_febatch_state_")
-    base = os.path.join(
-        tempfile.gettempdir(), f"dsep_febatch_state_{os.getpid()}"
-    )
-    if os.path.exists(base):
-        shutil.rmtree(base)
+    base = scratch_dir("febatch_state")
     os.makedirs(base)
     state = {"version": -1}
 
@@ -97,7 +83,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_readstream(spark, sf_dir)
     q = (
         stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", scratch_checkpoint("febatch"))
+        .option("checkpointLocation", scratch_dir("febatch"))
         .trigger(availableNow=True)
         .start()
     )

@@ -9,20 +9,13 @@ join feasible on unbounded input; without it state grows forever.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import events_readstream
 from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
-from databricks_sales_etl_pipeline_spark.streaming.util import (
-    await_finished,
-    scratch_checkpoint,
-)
+from databricks_sales_etl_pipeline_spark.streaming.util import run_to_memory
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,20 +70,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("signup_ts") <= F.col("purchase_ts"))
         & (F.col("signup_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 7 DAYS")),
     ).select("purchase_id", "user_id", "purchase_ts", "signup_ts")
-    sink = f"ssj_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            scratch_checkpoint(sink.split("_")[0]),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 180)
-    return spark.table(sink)
+    return run_to_memory(joined, "ssj", "append", timeout_s=180)
 
 
 # Oracle-able: stream-static joins re-read the static side per micro-batch;
@@ -130,17 +110,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents("value")).alias("value_cents"),
         )
     )
-    sink = f"ssj2_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_checkpoint(sink.split("_")[0]))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(sink)
+    return run_to_memory(agg, "ssj2", "complete")
 
 
 # Oracle-able: AvailableNow's final commit advances the GLOBAL watermark to
@@ -217,17 +187,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("signup_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 7 DAYS")),
         "left_outer",
     ).select("purchase_id", "user_id", "purchase_ts", "signup_ts")
-    sink = f"sloj_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_checkpoint(sink.split("_")[0]))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 180)
-    return spark.table(sink)
+    return run_to_memory(joined, "sloj", "append", timeout_s=180)
 
 
 # Oracle-able: with one AvailableNow batch, dropDuplicatesWithinWatermark
@@ -255,14 +215,4 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    sink = f"ddw_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_checkpoint("ddw"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 180)
-    return spark.table(sink)
+    return run_to_memory(stream, "ddw", "append", timeout_s=180)

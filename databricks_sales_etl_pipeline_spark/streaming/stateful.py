@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -26,10 +25,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from databricks_sales_etl_pipeline_spark.catalog import events_readstream
 from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
-from databricks_sales_etl_pipeline_spark.streaming.util import (
-    await_finished,
-    scratch_checkpoint,
-)
+from databricks_sales_etl_pipeline_spark.streaming.util import run_to_memory
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -79,20 +75,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    sink = f"dedup_{uuid.uuid4().hex[:12]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            scratch_checkpoint(sink.split("_")[0]),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(sink)
+    return run_to_memory(deduped, "dedup", "append")
 
 
 # Oracle-able: single-batch AvailableNow -> update mode emits exactly one
@@ -119,20 +102,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"state_{uuid.uuid4().hex[:12]}"
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            scratch_checkpoint(sink.split("_")[0]),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(sink)
+    return run_to_memory(counted, "state", "update")
 
 
 #: transformWithState's Python driver worker needs google.protobuf, which is
@@ -246,22 +216,9 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        sink = f"tws_{uuid.uuid4().hex[:12]}"
-        q = (
-            counted.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                scratch_checkpoint(sink.split("_")[0]),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+        return run_to_memory(counted, "tws", "update")
     finally:
         if prev_provider is None:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, prev_provider)
-    return spark.table(sink)

@@ -13,19 +13,16 @@ stream accumulates unbounded window state.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import events_readstream, load
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.registry import query
 from databricks_sales_etl_pipeline_spark.streaming.util import (
     await_finished,
-    scratch_checkpoint,
+    run_to_memory,
 )
 
 
@@ -128,21 +125,7 @@ def stream_watermark_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink. Single batch → one emission per window, so the row count is
     deterministic and equals the batch twin's."""
     stream = events_readstream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    sink = f"wm_{uuid.uuid4().hex[:12]}"
-    q = (
-        tumbling_counts(stream)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            scratch_checkpoint(sink.split("_")[0]),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(sink)
+    return run_to_memory(tumbling_counts(stream), "wm", "update")
 
 
 # Oracle-able state introspection: with NO watermark nothing is ever
@@ -162,12 +145,11 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the state read is partitioned like the operator (one state file
     per shuffle partition); no full-stream replay."""
     stream = events_readstream(spark, sf_dir)  # no watermark → no eviction
-    sink = f"sti_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch_checkpoint(sink)
+    ckpt = scratch_dir("sti")
     q = (
         tumbling_counts(stream)
         .writeStream.format("memory")
-        .queryName(sink)
+        .queryName("dsep_sti")
         .outputMode("update")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -272,17 +254,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_subwindows",
         )
     )
-    sink = f"chain_{uuid.uuid4().hex[:12]}"
-    q = (
-        lvl2.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_checkpoint("chain"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 180)
-    return spark.table(sink)
+    return run_to_memory(lvl2, "chain", "append", timeout_s=180)
 
 
 #: trending top-k: k per hourly window, ranked by count with the
@@ -325,8 +297,7 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     stream = events_readstream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    sink = f"trend_{uuid.uuid4().hex[:12]}"
-    q = (
+    counts = (
         stream.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -334,19 +305,12 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("n_events").cast("bigint").alias("n_events"),
         )
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", scratch_checkpoint("trend"))
-        .trigger(availableNow=True)
-        .start()
     )
-    await_finished(q, 120)
     w = Window.partitionBy("hour_start").orderBy(
         F.col("n_events").desc(), "event_type"
     )
     return (
-        spark.table(sink)
+        run_to_memory(counts, "trend", "update")
         .withColumn("rk", F.row_number().over(w).cast("bigint"))
         .where(F.col("rk") <= TREND_K)
     )

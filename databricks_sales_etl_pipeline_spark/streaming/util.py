@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 
 
 def await_finished(q: StreamingQuery, timeout_s: int) -> None:
@@ -20,57 +23,21 @@ def await_finished(q: StreamingQuery, timeout_s: int) -> None:
         )
 
 
-def sweep_dead_scratch(prefix: str) -> None:
-    """Best-effort removal of sibling ``{prefix}<pid>...`` scratch dirs whose
-    owning process is gone. PID-keying (round-10 fix) stopped concurrent
-    processes rmtree-ing each other's LIVE dirs, but left every dead
-    process's dirs to the OS tmp reaper — repeated driver/bench invocations
-    accumulate copies (round-10 advisor finding). Only dirs whose embedded
-    PID no longer exists are removed, so a concurrent live process is never
-    touched; our own PID is skipped (the caller wipes its own dir itself)."""
-    import os
-    import re
-    import shutil
-    import tempfile
-
-    tmp = tempfile.gettempdir()
-    pat = re.compile(re.escape(prefix) + r"(\d+)")
-    try:
-        names = os.listdir(tmp)
-    except OSError:
-        return
-    for name in names:
-        m = pat.match(name)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        try:
-            os.kill(int(m.group(1)), 0)
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
-        except (PermissionError, OSError):
-            pass  # alive (other user) or unprobeable — leave it
-
-
-def scratch_checkpoint(tag: str) -> str:
-    """Deterministic per-(process, tag) checkpoint dir, wiped before reuse —
-    memory-sink demo queries re-process everything each invocation anyway,
-    and the uuid-per-invocation form leaked tempdir without bound (the
-    round-2 advisor's versioned-table finding, same class). PID-keyed
-    (round-10 lesson): a bare per-tag path is SHARED across concurrent
-    engine processes on one box, so instance A's wipe-before-reuse rmtree's
-    instance B's LIVE checkpoint mid-commit (observed as STREAM_FAILED /
-    'Directory not empty' when two verification sessions ran the same
-    streaming query simultaneously). Within one process the tag still
-    reuses its dir, so the leak stays bounded. Durable pipelines pass
-    their own stable checkpoint path instead (plans/incremental.py)."""
-    import os
-    import shutil
-    import tempfile
-
-    sweep_dead_scratch("dsep_ckpt_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"dsep_ckpt_{os.getpid()}_{tag}"
+def run_to_memory(
+    stream: DataFrame, name: str, mode: str, timeout_s: int = 120
+) -> DataFrame:
+    """Run ``stream`` as one Trigger.AvailableNow query into a memory sink
+    and return the sink table. The view is ``dsep_<name>``, fixed per query,
+    so a rerun replaces its view instead of adding one; the checkpoint is
+    ``scratch_dir(name)``."""
+    view = f"dsep_{name}"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(view)
+        .outputMode(mode)
+        .option("checkpointLocation", scratch_dir(name))
+        .trigger(availableNow=True)
+        .start()
     )
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    return path
+    await_finished(q, timeout_s)
+    return stream.sparkSession.table(view)

@@ -80,13 +80,11 @@ def _batch_max_ts(spark, multi_sf):
 
 
 def _n_batches(tag: str) -> int:
-    # scratch_checkpoint PID-keys its dirs (round-10 concurrency lesson);
-    # in local mode the driver pid IS the test process pid
+    # the query's checkpoint is io.scratch_dir(tag), PID-keyed; in local
+    # mode the driver pid IS the test process pid
     import tempfile
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"dsep_ckpt_{os.getpid()}_{tag}"
-    )
+    ckpt = os.path.join(tempfile.gettempdir(), f"dsep_{os.getpid()}_{tag}")
     return len(os.listdir(os.path.join(ckpt, "offsets")))
 
 

@@ -20,7 +20,6 @@ lesson: a LogicalRDD leaf defeats AQE exchange reuse downstream).
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -40,12 +39,10 @@ from databricks_sales_etl_pipeline_spark.extensions.similarity import (
     _sqdists,
     train_kmeans,
 )
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.session import (
     get_spark,
     tune_shuffle_partitions,
-)
-from databricks_sales_etl_pipeline_spark.streaming.util import (
-    sweep_dead_scratch,
 )
 from tools.bench_scale_embed import DIM, gen_embeddings
 
@@ -55,15 +52,7 @@ NPROBES = [2, 8, 32]
 
 
 def stage_parquet(spark, df, tag: str):
-    import shutil
-    import tempfile
-
-    sweep_dead_scratch("dsep_annscale_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"dsep_annscale_{os.getpid()}_{tag}"
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    path = scratch_dir(f"annscale_{tag}")
     df.write.parquet(path)
     return spark.read.parquet(path)
 

@@ -34,12 +34,10 @@ from databricks_sales_etl_pipeline_spark.extensions.dedup import (
 from databricks_sales_etl_pipeline_spark.extensions.dedup_substring import (
     shared_gram_hits,
 )
+from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.session import (
     get_spark,
     tune_shuffle_partitions,
-)
-from databricks_sales_etl_pipeline_spark.streaming.util import (
-    sweep_dead_scratch,
 )
 from tools.bench_scale_docs import gen_documents
 
@@ -53,15 +51,7 @@ def stage_corpus(spark, n: int):
     corpus storage pool). A parquet stage is the honest production shape
     (real corpora live on disk), restores exchange reuse, and reads back
     columnar."""
-    import shutil
-    import tempfile
-
-    sweep_dead_scratch("dsep_scalecorpus_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"dsep_scalecorpus_{os.getpid()}_{n}"
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    path = scratch_dir(f"scalecorpus_{n}")
     gen_documents(spark, n).write.parquet(path)
     return spark.read.parquet(path)
 

@@ -25,7 +25,6 @@ import os
 import shutil
 import subprocess
 import sys
-import tempfile
 import threading
 import time
 from pathlib import Path
@@ -77,6 +76,8 @@ def child(n_docs: int) -> None:
 
 
 def main() -> None:
+    from databricks_sales_etl_pipeline_spark.io import scratch_dir
+
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
         child(int(sys.argv[2]))
         return
@@ -98,11 +99,7 @@ def main() -> None:
             stop.wait(10)
 
     for i in range(nproc):
-        root = os.path.join(
-            tempfile.gettempdir(), f"dsep_clustersim_{os.getpid()}_{i}"
-        )
-        if os.path.exists(root):
-            shutil.rmtree(root)
+        root = scratch_dir(f"clustersim_{i}")
         os.makedirs(root)
         roots.append(root)
         env = {

@@ -6,11 +6,10 @@ identical results.
 This is the live repro of the bug class the round-10 determinism sweep
 exposed: any FIXED shared temp path with wipe-before-reuse semantics lets
 concurrent engine processes rmtree each other's LIVE dirs mid-read/commit
-(observed as STREAM_FAILED / 'Directory not empty'). All such paths are now
-PID-keyed (streaming/util.py scratch_checkpoint, plans/versioned.py
-_tmp_table, streaming/foreachbatch.py state dirs, operators/joins.py DPP
-table); run this after touching any of them, or after adding a new scratch
-dir, to prove concurrent instances stay isolated.
+(observed as STREAM_FAILED / 'Directory not empty'). Every temp dir the
+engine writes now comes from ``io.scratch_dir(tag)``, which PID-keys it;
+run this after touching that helper, or after adding a new kind of scratch
+user, to prove concurrent instances stay isolated.
 
     PYTHONPATH=. python tools/concurrency_check.py [sf_dir]
 
@@ -24,11 +23,15 @@ import sys
 
 #: every query that touches a process-scratch dir (extend when adding one)
 QUERIES = [
-    "stream_watermark_agg",          # scratch_checkpoint
-    "stream_foreachbatch_upsert",    # febatch state dirs + checkpoint
+    "stream_watermark_agg",          # run_to_memory checkpoint
+    "stream_static_join",            # run_to_memory, complete mode
+    "stream_foreachbatch_upsert",    # febatch state dir + checkpoint
     "stream_transform_state",        # protobuf shim + checkpoint
     "tbl_time_travel",               # versioned-table scratch
     "join_dpp_prune",                # DPP partitioned table
+    "sink_overwrite",                # sinks.py write/read round-trip
+    "src_csv_roundtrip",             # formats.py write/read round-trip
+    "pipeline_incremental_rollup",   # rollup history table
 ]
 
 _WORKER = """
