@@ -1,14 +1,17 @@
-"""Explicit schema registry + table loading.
+"""Schema registry + table loading.
 
 The reference infers every schema from Python dicts
-(`01_project_setup_and_ingestion.py:107`, `02:44-49`, `03:89`); we keep
-explicit StructTypes per table (SURVEY §1.6) so production paths never depend
-on inference, and inference is only allowed at Bronze ingest.
+(`01_project_setup_and_ingestion.py:107`, `02:44-49`, `03:89`). `SCHEMAS`
+keeps an explicit StructType per table (SURVEY §1.6); today only the
+CSV/JSON readers of `sources/formats.py` pass them to Spark.
 
 Tables are the driver's TPC-H-ish star schema + event/LLM tables
-(FIXTURES.md §A). `load` reads parquet with schema verification;
-`register_views` exposes all tables as temp views so the SQL front-end and
-the DataFrame front-end run against one catalog (SURVEY §3.2).
+(FIXTURES.md §A). `load` reads a table's parquet with the schema Spark
+infers from the file footers, on every call (one inference job each), and
+normalizes `events.ts` to a session-UTC timestamp; it does not check the
+result against `SCHEMAS`. `register_views` exposes all tables as temp views
+so the SQL front-end and the DataFrame front-end run against one catalog
+(SURVEY §3.2).
 """
 
 from __future__ import annotations

@@ -15,6 +15,12 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    DAILY_EVENTS_SQL,
+    daily_events,
+    epoch_day,
+    epoch_day_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 FUNNEL_STAGES = ["signup", "view", "purchase"]
@@ -1594,8 +1600,7 @@ _SMD_EXPR = (
         SELECT CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END AS t,
                CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS price_dollars,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS day_num
+               {epoch_day_sql('o_orderdate')} AS day_num
         FROM orders
     ), long AS (
         SELECT t, 'price_dollars' AS covariate, price_dollars AS v FROM base
@@ -1640,12 +1645,7 @@ def ext_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)").alias(
             "price_dollars"
         ),
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("day_num"),
+        epoch_day("o_orderdate").alias("day_num"),
     )
     long = o.select(
         "t",
@@ -1692,11 +1692,10 @@ def ext_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_repurchase_cycle",
-    oracle="""
+    oracle=f"""
     WITH o AS (
         SELECT o_custkey,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d
+               {epoch_day_sql('o_orderdate')} AS d
         FROM orders
     ), seq AS (
         SELECT o_custkey, d,
@@ -1745,11 +1744,7 @@ def ext_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report is reproducible (no wall clock)."""
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-        )
-        .cast("bigint")
-        .alias("d"),
+        epoch_day("o_orderdate").alias("d"),
     )
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     from pyspark.sql import Window as _W
@@ -2576,11 +2571,10 @@ def ext_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_growth_accounting",
-    oracle="""
+    oracle=f"""
     WITH uw AS (
         SELECT DISTINCT user_id,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) // 7
+               CAST({epoch_day_sql('CAST(ts AS TIMESTAMP)')} // 7
                     AS BIGINT) AS w
         FROM events
     ), marked AS (
@@ -2626,15 +2620,12 @@ def ext_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: ONE (user, week) distinct + one user-partitioned window
     (first/lag) + a week groupBy — the session-family cost profile."""
     e = load(spark, sf_dir, "events")
-    week = (
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        )
-        / 7
-    ).cast("bigint")
-    uw = e.select("user_id", F.expr(
-        "CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') DIV 7 AS BIGINT)"
-    ).alias("w")).distinct().localCheckpoint()
+    uw = (
+        e.select("user_id", epoch_day("ts").alias("d"))
+        .select("user_id", F.expr("d DIV 7").alias("w"))
+        .distinct()
+        .localCheckpoint()
+    )
     from pyspark.sql import Window as _W
 
     marked = uw.select(
@@ -2813,15 +2804,7 @@ _XC_GUARD = "n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0"
 @query(
     "ext_cross_correlation",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM events GROUP BY 1
+    WITH daily AS ({DAILY_EVENTS_SQL}
     ), lagged AS (
         SELECT b.d - a.d AS lag,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -2852,18 +2835,7 @@ def ext_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one date groupBy + a (2*{XCORR_MAX_LAG}+1)-banded
     self-join of the ~30-row daily table — constant beyond the scan."""
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-    ).localCheckpoint()
+    daily = daily_events(load(spark, sf_dir, "events")).localCheckpoint()
     a = daily.select(F.col("d").alias("da"), F.col("x").alias("xa"))
     b = daily.select(F.col("d").alias("db"), F.col("y").alias("yb"))
     lagged = (
@@ -3098,8 +3070,7 @@ BGNBD_FREQ_CAP = 8
     oracle=f"""
     WITH o AS (
         SELECT o_custkey,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d
+               {epoch_day_sql('o_orderdate')} AS d
         FROM orders
     ), horizon AS (
         SELECT CAST(MAX(d) AS BIGINT) AS h FROM o
@@ -3135,11 +3106,7 @@ def ext_bgnbd_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid aggregate."""
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-        )
-        .cast("bigint")
-        .alias("d"),
+        epoch_day("o_orderdate").alias("d"),
     )
     horizon = o.agg(F.max("d").cast("bigint").alias("h"))
     per_c = (
@@ -3297,9 +3264,7 @@ _ITS_AT_CUT_POST = (
     "ext_interrupted_ts",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
+        SELECT {epoch_day_sql('CAST(ts AS TIMESTAMP)')} AS d,
                CAST(COUNT(*) AS BIGINT) AS y
         FROM events GROUP BY 1
     ), cutoff AS (
@@ -3350,10 +3315,7 @@ def ext_interrupted_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one date groupBy + a 1-row cutoff broadcast + a 1-row
     moment aggregate."""
     e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
+    daily = e.groupBy(epoch_day("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("y")
     ).localCheckpoint()
     cutoff = daily.agg(
@@ -4226,15 +4188,9 @@ def _mmm_oracle() -> str:
             FROM daily"""
             )
     return f"""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE))
-                    AS BIGINT) AS dd,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS clicks,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                        END) AS BIGINT) AS purch
-        FROM events GROUP BY 1
+    WITH ev AS ({DAILY_EVENTS_SQL}
+    ), daily AS (
+        SELECT d AS dd, x AS clicks, y AS purch FROM ev
     ), ads AS ({" UNION ALL ".join(configs)}),
     fit AS (
         SELECT decay, lag_depth,
@@ -4277,21 +4233,11 @@ def ext_mmm_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar table; the 9-row grid carries the argmin."""
     from pyspark.sql import Window
 
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-        )
-        .cast("bigint")
-        .alias("dd")
-    ).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("clicks"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("purch"),
-    ).localCheckpoint()
+    daily = (
+        daily_events(load(spark, sf_dir, "events"))
+        .withColumnsRenamed({"d": "dd", "x": "clicks", "y": "purch"})
+        .localCheckpoint()
+    )
     wo = Window.orderBy("dd")
     ads = None
     for d in MMM_DECAYS:

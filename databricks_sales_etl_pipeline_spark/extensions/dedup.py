@@ -130,6 +130,23 @@ def shingle_rows(df: DataFrame, col: str = "text", k: int = 3) -> DataFrame:
     )
 
 
+_WORDS_SQL = "string_split_regex(lower(text), '\\s+')"
+
+
+def shingles_sql(k: int = 3) -> str:
+    """DuckDB twin of :func:`shingle_rows` over ``documents``: a SELECT of
+    the distinct (doc_id, shingle) rows, for ``WITH sh AS (…)``; callers
+    count ``n_sh`` themselves. Its list_transform binds ``i`` — an outer
+    lambda around it must use another name (DuckDB lambda shadowing, as
+    in ``md5_band_sql``)."""
+    grams = " || ' ' || ".join(f"{_WORDS_SQL}[i+{j}]" for j in range(k))
+    return f"""
+        SELECT doc_id, unnest(list_distinct(list_transform(
+            range(1, greatest(len({_WORDS_SQL}) - {k - 2}, 0)),
+            i -> {grams}))) AS shingle
+        FROM documents"""
+
+
 def shingles(col: str = "text", k: int = 3):
     """Column-expression form (tests / small frames). Prefer with_shingles
     in data paths — see its docstring for the lambda-recompute hazard."""
@@ -171,16 +188,8 @@ def exact_jaccard_on_candidates(candidates: DataFrame, sh: DataFrame, t: float) 
     )
 
 
-_NGRAM_ORACLE = """
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+_NGRAM_ORACLE = f"""
+    WITH sh AS ({shingles_sql()}
     ), sizes AS (
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), pairs AS (
@@ -398,16 +407,8 @@ def ext_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_jaccard_on_candidates(band_candidates(bands), sh, t)
 
 
-_MINHASH_VERIFIED_ORACLE = """
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+_MINHASH_VERIFIED_ORACLE = f"""
+    WITH sh AS ({shingles_sql()}
     ), sizes AS (
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), sig AS (
@@ -540,16 +541,8 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECON_NGRAM_ORACLE = """
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+_DECON_NGRAM_ORACLE = f"""
+    WITH sh AS ({shingles_sql()}
     )
     SELECT t.doc_id
     FROM (SELECT DISTINCT doc_id FROM sh WHERE doc_id % 10 <> 0) t
@@ -958,16 +951,8 @@ def ext_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_contamination_score",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+    oracle=f"""
+    WITH sh AS ({shingles_sql()}
     ), eval_sh AS (
         SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0
     ), train AS (
@@ -1022,16 +1007,8 @@ def ext_contamination_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_CALIBRATION_ORACLE = """
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+_MINHASH_CALIBRATION_ORACLE = f"""
+    WITH sh AS ({shingles_sql()}
     ), sizes AS (
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), sig AS (

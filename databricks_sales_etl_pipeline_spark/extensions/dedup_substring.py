@@ -48,6 +48,7 @@ from databricks_sales_etl_pipeline_spark.extensions.dedup import (
     md5_band_hash,
     minhash_bands,
     shingle_rows,
+    shingles_sql,
 )
 from databricks_sales_etl_pipeline_spark.functions import par
 from databricks_sales_etl_pipeline_spark.registry import query
@@ -336,15 +337,7 @@ def ext_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 HOT_BAND_CAP = 16
 
 _GUARDED_ORACLE = f"""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+    WITH sh AS ({shingles_sql()}
     ), sizes AS (
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), sig AS (
@@ -625,15 +618,7 @@ def ext_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAIN_T = 0.6
 
 _CONTAIN_ORACLE = f"""
-    WITH sh AS (
-        SELECT doc_id, unnest(list_distinct(
-            list_transform(
-                range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 1, 0)),
-                i -> string_split_regex(lower(text), '\\s+')[i] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+1] || ' ' ||
-                     string_split_regex(lower(text), '\\s+')[i+2]
-            ))) AS shingle
-        FROM documents
+    WITH sh AS ({shingles_sql()}
     ), sizes AS (
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), pairs AS (

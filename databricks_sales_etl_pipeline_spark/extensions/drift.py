@@ -11,7 +11,7 @@ so every report is hash-checkable against its SQL twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -27,6 +27,12 @@ from databricks_sales_etl_pipeline_spark.functions.prefix import (
     doubled_midrank,
     global_order,
     ntile_from_pos,
+)
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    DAILY_EVENTS_SQL,
+    daily_events,
+    epoch_day,
+    epoch_day_sql,
 )
 from databricks_sales_etl_pipeline_spark.registry import query
 
@@ -466,8 +472,7 @@ ACF_MAX_LAG = 7  # lags to report (weekly seasonality screen)
     "ext_acf_daily",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), tot AS (
@@ -513,10 +518,7 @@ def ext_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins over the tiny daily series — the fact table is scanned
     once; lag pairing rides lead() in Spark (no join at all)."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
     tot = daily.agg(
@@ -570,10 +572,9 @@ def ext_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_seasonal_decompose",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), tr AS (
@@ -619,10 +620,7 @@ def ext_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one calendar-bounded groupBy, one ordered window over the
     tiny daily series, one 7-row broadcast join back."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
     w = Window.orderBy("d").rowsBetween(-3, 3)
@@ -666,10 +664,9 @@ def ext_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_theilsen_slope",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), pairs AS (
@@ -700,10 +697,7 @@ def ext_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop; at 100 TB the calendar doesn't grow with the data, so
     this stays constant-cost after the one date groupBy."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -732,8 +726,7 @@ ROLL_MED_W = 27  # rolling frame: current day + 27 preceding = 28 days
     "ext_rolling_median_band",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), rolled AS (
@@ -765,10 +758,7 @@ def ext_rolling_median_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the window runs on the calendar-bounded daily rollup; the
     fact table pays one date groupBy."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
     w = Window.orderBy("d").rowsBetween(-ROLL_MED_W, 0)
@@ -793,6 +783,37 @@ def ext_rolling_median_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _half_year_tally(o: DataFrame, value: Column) -> DataFrame:
+    """``orders`` → the merged value grid of the half-year two-sample
+    tests: one row per ``v`` = ``value`` with its first-half (``c1``) and
+    second-half (``c2``) order counts, bigint."""
+    s = o.select(
+        value.alias("v"),
+        (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("g1"),
+    )
+    return s.groupBy("v").agg(
+        F.sum(F.when(F.col("g1"), 1).otherwise(0)).cast("bigint").alias("c1"),
+        F.sum(F.when(F.col("g1"), 0).otherwise(1)).cast("bigint").alias("c2"),
+    )
+
+
+def _half_year_tally_sql(value: str) -> str:
+    """DuckDB twin of :func:`_half_year_tally` as two CTEs: ``per_v``
+    (v, c1, c2) and ``tot`` (the arm totals n1, n2)."""
+    return f"""per_v AS (
+        SELECT v,
+               CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS c2
+        FROM (SELECT {value} AS v,
+                     (month(CAST(o_orderdate AS DATE)) <= 6) AS g1
+              FROM orders)
+        GROUP BY v
+    ), tot AS (
+        SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
+        FROM per_v
+    )"""
+
+
 #: KS significance gate at alpha=0.05 — ONE shared expression string
 #: (sqrt on integer-derived doubles; the ext_rank_wilson discipline).
 _KS_FLAG = (
@@ -805,20 +826,7 @@ _KS_FLAG = (
 @query(
     "ext_ks_test",
     oracle=f"""
-    WITH s AS (
-        SELECT {cents_sql('o_totalprice')} AS v,
-               (month(CAST(o_orderdate AS DATE)) <= 6) AS g1
-        FROM orders
-    ), tot AS (
-        SELECT CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS n2
-        FROM s
-    ), per_v AS (
-        SELECT v,
-               CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS c2
-        FROM s GROUP BY v
-    ), cums AS (
+    WITH {_half_year_tally_sql(cents_sql('o_totalprice'))}, cums AS (
         SELECT v,
                SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum1,
                SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum2
@@ -856,19 +864,14 @@ def ext_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side partial, no single-partition window; plan pinned in
     tests/test_round8_scale.py, values by the unchanged oracle)."""
     o = load(spark, sf_dir, "orders")
-    s = o.select(
-        cents(F.col("o_totalprice")).alias("v"),
-        (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("g1"),
-    )
     # the value grid feeds three consumers (stats, carry collect, final
     # plan) and carries the arm totals — materialize once; n1/n2 fold
-    # out of it instead of re-scanning the fact table
-    per_v = s.groupBy("v").agg(
-        F.sum(F.when(F.col("g1"), 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("g1"), 0).otherwise(1)).cast("bigint").alias("c2"),
-        # lazy (round-14): the full-pass collect right below materializes
-        # the checkpoint as a side effect — eager paid a dedicated job
-    ).localCheckpoint(eager=False)
+    # out of it instead of re-scanning the fact table. Lazy (round-14):
+    # the full-pass collect right below materializes the checkpoint as a
+    # side effect — eager paid a dedicated job
+    per_v = _half_year_tally(o, cents(F.col("o_totalprice"))).localCheckpoint(
+        eager=False
+    )
     stats = per_v.agg(
         F.max("v"),
         F.sum("c1").cast("bigint"),
@@ -916,12 +919,10 @@ def ext_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_dispersion_index",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT event_type,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
+               {epoch_day_sql('CAST(ts AS TIMESTAMP)')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM events GROUP BY 1, 2
     ), moments AS (
@@ -950,10 +951,7 @@ def ext_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one (type, day) groupBy then a 5-row moment aggregate."""
     e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
+    daily = e.groupBy("event_type", epoch_day("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
     moments = daily.groupBy("event_type").agg(
@@ -1000,20 +998,7 @@ _MW_REJECT = (
 @query(
     "ext_mann_whitney",
     oracle=f"""
-    WITH s AS (
-        SELECT {cents_sql('o_totalprice')} AS v,
-               (month(CAST(o_orderdate AS DATE)) <= 6) AS g1
-        FROM orders
-    ), tot AS (
-        SELECT CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS n2
-        FROM s
-    ), per_v AS (
-        SELECT v,
-               CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS c2
-        FROM s GROUP BY v
-    ), cums AS (
+    WITH {_half_year_tally_sql(cents_sql('o_totalprice'))}, cums AS (
         SELECT v, c1, c2,
                CAST(SUM(c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
                     AS BIGINT) - (c1 + c2) AS below
@@ -1053,18 +1038,13 @@ def ext_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ~2·10⁹ rows per test cell; beyond that, test on a hash sample band
     (the ``ext_sample_bernoulli`` primitive)."""
     o = load(spark, sf_dir, "orders")
-    s = o.select(
-        cents(F.col("o_totalprice")).alias("v"),
-        (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("g1"),
-    )
     # materialize the grid once (stats, carry collect, final plan); the
-    # arm totals n1/n2 fold out of it instead of re-scanning the facts
-    per_v = s.groupBy("v").agg(
-        F.sum(F.when(F.col("g1"), 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("g1"), 0).otherwise(1)).cast("bigint").alias("c2"),
-        # lazy (round-14): the full-pass collect right below materializes
-        # the checkpoint as a side effect — eager paid a dedicated job
-    ).localCheckpoint(eager=False)
+    # arm totals n1/n2 fold out of it instead of re-scanning the facts.
+    # Lazy (round-14): the full-pass collect right below materializes the
+    # checkpoint as a side effect — eager paid a dedicated job
+    per_v = _half_year_tally(o, cents(F.col("o_totalprice"))).localCheckpoint(
+        eager=False
+    )
     stats = per_v.agg(
         F.max("v"),
         F.sum("c1").cast("bigint"),
@@ -1244,8 +1224,7 @@ _C_LCL = (
     "ext_control_chart_c",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), tot AS (
@@ -1275,10 +1254,7 @@ def ext_control_chart_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one date groupBy + a 1-row totals broadcast fanned onto the
     calendar-sized daily table."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
     tot = daily.agg(
@@ -1324,8 +1300,7 @@ _RUNS_REJECT = (
     "ext_runs_test",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
@@ -1365,10 +1340,7 @@ def ext_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one date groupBy, two ordered windows over the
     calendar-sized daily table, one 1-row aggregate."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.sum(cents(F.col("o_totalprice"))).cast("bigint").alias("x")
     )
     wd = Window.orderBy("d")
@@ -1440,15 +1412,7 @@ _GRANGER_F = (
 @query(
     "ext_granger_causality",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM events GROUP BY 1
+    WITH daily AS ({DAILY_EVENTS_SQL}
     ), lagged AS (
         SELECT y AS w,
                lag(y) OVER (ORDER BY d) AS u,
@@ -1499,18 +1463,7 @@ def ext_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one date groupBy, one ordered lag window over the
     calendar-sized table, one 1-row moment aggregate."""
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-    )
+    daily = daily_events(load(spark, sf_dir, "events"))
     wd = Window.orderBy("d")
     lagged = daily.select(
         F.col("y").alias("w"),
@@ -1643,21 +1596,8 @@ def ext_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_wasserstein_shift",
-    oracle="""
-    WITH s AS (
-        SELECT CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS v,
-               (month(CAST(o_orderdate AS DATE)) <= 6) AS g1
-        FROM orders
-    ), tot AS (
-        SELECT CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS n2
-        FROM s
-    ), per_v AS (
-        SELECT v,
-               CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS c2
-        FROM s GROUP BY v
-    ), cums AS (
+    oracle=f"""
+    WITH {_half_year_tally_sql('CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)')}, cums AS (
         SELECT v,
                CAST(SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
                     AS BIGINT) AS cum1,
@@ -1694,17 +1634,12 @@ def ext_wasserstein_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the per-bucket lead is null only at the bucket's last row, exactly
     where the next bucket's min is the global lead)."""
     o = load(spark, sf_dir, "orders")
-    s = o.select(
-        F.expr("CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)").alias("v"),
-        (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("g1"),
-    )
     # materialize the grid once (max collect, bucket collect, final
-    # plan); the arm totals fold out of the bucket collect below
-    per_v = s.groupBy("v").agg(
-        F.sum(F.when(F.col("g1"), 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("g1"), 0).otherwise(1)).cast("bigint").alias("c2"),
-        # lazy (round-14): the full-pass collect right below materializes
-        # the checkpoint as a side effect — eager paid a dedicated job
+    # plan); the arm totals fold out of the bucket collect below. Lazy
+    # (round-14): the full-pass collect right below materializes the
+    # checkpoint as a side effect — eager paid a dedicated job
+    per_v = _half_year_tally(
+        o, F.expr("CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)")
     ).localCheckpoint(eager=False)
     width = div_width(per_v.agg(F.max("v")).first()[0])
     pb = per_v.withColumn("vb", F.expr(f"v DIV {width}"))
@@ -1922,8 +1857,7 @@ _MAHAL_D2 = (
     WITH pts AS (
         SELECT o_orderkey AS ok,
                CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS x,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS y
+               {epoch_day_sql('o_orderdate')} AS y
         FROM orders
     ), m AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1957,11 +1891,7 @@ def ext_mahalanobis_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = o.select(
         F.col("o_orderkey").alias("ok"),
         F.expr("CAST(FLOOR(o_totalprice + 0.5) AS BIGINT)").alias("x"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-        )
-        .cast("bigint")
-        .alias("y"),
+        epoch_day("o_orderdate").alias("y"),
     )
     m = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -2084,15 +2014,7 @@ _RCORR_GUARD = (
 @query(
     "ext_rolling_corr",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM events GROUP BY 1
+    WITH daily AS ({DAILY_EVENTS_SQL}
     ), rolled AS (
         SELECT d, x, y,
                CAST(COUNT(*) OVER w AS BIGINT) AS wn,
@@ -2123,18 +2045,7 @@ def ext_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one date groupBy + ONE ordered window computing all six
     moments in a single pass over the calendar-sized table."""
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-    )
+    daily = daily_events(load(spark, sf_dir, "events"))
     w = Window.orderBy("d").rangeBetween(-ROLL_CORR_W, 0)
     rolled = daily.select(
         "d",
@@ -2160,10 +2071,9 @@ def ext_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_pattern_match",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
@@ -2217,10 +2127,7 @@ def ext_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors + the islands window — calendar-sized state
     throughout."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.sum(cents(F.col("o_totalprice"))).cast("bigint").alias("x")
     )
     w = Window.orderBy("d")
@@ -2282,16 +2189,8 @@ def ext_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_kendall_tau",
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM events GROUP BY 1
+    oracle=f"""
+    WITH daily AS ({DAILY_EVENTS_SQL}
     ), pairs AS (
         SELECT
           CAST(SUM(CASE WHEN (a.x - b.x) * (a.y - b.y) > 0 THEN 1 ELSE 0 END)
@@ -2323,18 +2222,7 @@ def ext_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one date groupBy + the calendar^2 pairwise join (~30^2
     pairs, data-size-independent)."""
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-    ).localCheckpoint()
+    daily = daily_events(load(spark, sf_dir, "events")).localCheckpoint()
     a = daily.select(
         F.col("d").alias("da"), F.col("x").alias("xa"), F.col("y").alias("ya")
     )
@@ -2388,15 +2276,7 @@ _SPEAR_DEN = (
 @query(
     "ext_spearman_rho",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM events GROUP BY 1
+    WITH daily AS ({DAILY_EVENTS_SQL}
     ), ranked AS (
         SELECT d,
                CAST(2 * rank() OVER (ORDER BY x)
@@ -2429,18 +2309,7 @@ def ext_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one date groupBy + two global rank windows over the
     calendar-sized table + a 1-row moment aggregate."""
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-    )
+    daily = daily_events(load(spark, sf_dir, "events"))
     ranked = daily.select(
         "d",
         *[
@@ -2471,10 +2340,9 @@ def ext_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_robust_location",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), cuts AS (
@@ -2518,10 +2386,7 @@ def ext_robust_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent) — at a larger calendar, HL switches to the
     binary-search-on-quantile form."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     ).localCheckpoint()
     cuts = daily.agg(
@@ -2588,8 +2453,7 @@ _MK_Z = (
     "ext_mann_kendall",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS x
         FROM orders GROUP BY 1
@@ -2627,10 +2491,7 @@ def ext_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one date groupBy + the calendar^2 pair join
     (data-size-independent) + a tie groupBy on the value grid."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.sum(cents(F.col("o_totalprice"))).cast("bigint").alias("x")
     ).localCheckpoint()
     a = daily.select(F.col("d").alias("da"), F.col("x").alias("xa"))
@@ -2697,8 +2558,7 @@ _ENS_POIS = (
     "ext_anomaly_ensemble",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(COUNT(*) AS BIGINT) AS x
         FROM orders GROUP BY 1
     ), tot AS (
@@ -2742,10 +2602,7 @@ def ext_anomaly_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one date groupBy + two 1-row estimator broadcasts fanned
     onto the calendar-sized table."""
     o = load(spark, sf_dir, "orders")
-    day = F.datediff(
-        F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = o.groupBy(day.alias("d")).agg(
+    daily = o.groupBy(epoch_day("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     ).localCheckpoint()
     tot = daily.agg(
@@ -3236,8 +3093,7 @@ _RANSAC_SALT = "ransac-r6"
     "ext_ransac_line",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
+        SELECT {epoch_day_sql('o_orderdate')} AS x,
                CAST(SUM({cents_sql('o_totalprice')}) AS BIGINT) AS y
         FROM orders GROUP BY 1
     ), idx AS (
@@ -3304,12 +3160,7 @@ def ext_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts votes — the vote count is the only data-sized aggregate."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("x")
+        epoch_day("o_orderdate").alias("x")
     ).agg(F.sum(cents(F.col("o_totalprice"))).cast("bigint").alias("y"))
     w = Window.partitionBy(F.lit(1))
     idx = daily.select(
@@ -3539,8 +3390,7 @@ BSEG_MINLEN = 30
     "ext_binary_segmentation",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice) AS BIGINT))
                    AS BIGINT) AS v
         FROM orders GROUP BY 1
@@ -3588,12 +3438,7 @@ def ext_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook O(n^2) SSE sweep."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d")
+        epoch_day("o_orderdate").alias("d")
     ).agg(F.sum(F.floor(F.col("o_totalprice")).cast("bigint")).alias("v"))
     w = Window.partitionBy(F.lit(1))
     wo = w.orderBy("d")
@@ -3670,8 +3515,7 @@ def _mp_win_cols(src: str, engine_lead: str) -> str:
     "ext_matrix_profile",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice) AS BIGINT)) // 1000
                     AS BIGINT) AS v
         FROM orders GROUP BY 1
@@ -3735,12 +3579,7 @@ def ext_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes the oracle exact."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d")
+        epoch_day("o_orderdate").alias("d")
     ).agg(
         F.expr(
             "CAST(sum(CAST(floor(o_totalprice) AS BIGINT)) DIV 1000 AS BIGINT)"
@@ -3915,8 +3754,7 @@ SAX_TOPN = 10
     "ext_sax_symbolic",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice) AS BIGINT))
                    AS BIGINT) AS v
         FROM orders GROUP BY 1
@@ -3967,12 +3805,7 @@ def ext_sax_symbolic(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage after the first aggregate is calendar-bounded."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d")
+        epoch_day("o_orderdate").alias("d")
     ).agg(F.sum(F.floor(F.col("o_totalprice")).cast("bigint")).alias("v"))
     weekly = daily.groupBy(
         F.expr("d DIV 7").alias("wk")
@@ -4028,8 +3861,7 @@ HAAR_TOPC = 8
 def _haar_oracle() -> str:
     ctes = [
         f"""daily AS MATERIALIZED (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice) AS BIGINT))
                    AS BIGINT) AS v
         FROM orders GROUP BY 1
@@ -4094,12 +3926,7 @@ def ext_haar_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     a calendar-bounded table."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d")
+        epoch_day("o_orderdate").alias("d")
     ).agg(F.sum(F.floor(F.col("o_totalprice")).cast("bigint")).alias("v"))
     w = Window.orderBy(F.col("d").desc())
     lvl = (
@@ -4458,8 +4285,7 @@ XBAR_D4_MILLI = 2114
     "ext_xbar_r_chart",
     oracle=f"""
     WITH sub AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
                ROW_NUMBER() OVER (PARTITION BY CAST(o_orderdate AS DATE)
                                   ORDER BY o_orderkey) AS rk
@@ -4506,12 +4332,7 @@ def ext_xbar_r_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey"
     )
     sub = o.select(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d"),
+        epoch_day("o_orderdate").alias("d"),
         cents(F.col("o_totalprice")).cast("bigint").alias("v"),
         F.row_number().over(w).alias("rk"),
     ).where(F.col("rk") <= XBAR_N)
@@ -4573,8 +4394,7 @@ NELSON_R3 = 6
     "ext_nelson_rules",
     oracle=f"""
     WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS v
         FROM orders GROUP BY 1
@@ -4639,12 +4459,7 @@ def ext_nelson_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows — O(calendar) after the aggregate."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d")
+        epoch_day("o_orderdate").alias("d")
     ).agg(
         F.sum(
             F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(

@@ -38,6 +38,12 @@ from databricks_sales_etl_pipeline_spark.functions.prefix import (
     div_width,
     global_order,
 )
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    DAILY_EVENTS_SQL,
+    daily_events,
+    epoch_day,
+    epoch_day_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -1163,13 +1169,7 @@ ADSTOCK_W = [1_000_000, 500_000, 250_000, 125_000, 62_500, 31_250, 15_625,
 @query(
     "ext_adstock_decay",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x
-        FROM events GROUP BY 1
+    WITH daily AS ({DAILY_EVENTS_SQL}
     )
     SELECT d, x,
            CAST({' + '.join(f"lag(x, {k}, 0) OVER (ORDER BY d) * {w}"
@@ -1191,15 +1191,7 @@ def ext_adstock_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one date groupBy + ONE ordered window evaluating all 8 lags
     in a single pass over the calendar-sized daily table. Per-channel
     variants partition the window by channel — same single shuffle."""
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x")
-    )
+    daily = daily_events(load(spark, sf_dir, "events"))
     wd = Window.orderBy("d")
     conv = None
     for k, wgt in enumerate(ADSTOCK_W):
@@ -2373,8 +2365,7 @@ def _elo_oracle() -> str:
                CAST(ROW_NUMBER() OVER (ORDER BY p_brand) AS BIGINT) AS bi
         FROM (SELECT DISTINCT p_brand FROM part)
     ), drev AS MATERIALIZED (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(l.l_shipdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('l.l_shipdate')} AS d,
                br.bi,
                CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
                              AS BIGINT)) AS BIGINT) AS rev
@@ -2445,12 +2436,7 @@ def ext_elo_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins final ratings back onto the distributed win/loss counts."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.datediff(
-            F.col("l_shipdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d"),
+        epoch_day("l_shipdate").alias("d"),
         cents(F.col("l_extendedprice")).cast("bigint").alias("c"),
     )
     p = load(spark, sf_dir, "part").select(

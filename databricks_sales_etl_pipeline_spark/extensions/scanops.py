@@ -49,6 +49,12 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    DAILY_EVENTS_SQL,
+    daily_events,
+    epoch_day,
+    epoch_day_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 #: queue fixture constants (shared by Spark + oracle + tests)
@@ -70,8 +76,7 @@ def _jobs_sql() -> str:
     """DuckDB job-table twin: per-lineitem (server, arrival, service)."""
     return f"""
         SELECT l_suppkey AS server_id,
-               CAST(datediff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
-                    AS BIGINT) * {Q_DAY}
+               {epoch_day_sql('l_shipdate')} * {Q_DAY}
                + (l_orderkey * {Q_OFF_A} + l_linenumber * {Q_OFF_B})
                  % {Q_DAY} AS arr_s,
                {Q_BASE_SVC} + CAST(l_quantity AS BIGINT) * {Q_SVC_PER_QTY}
@@ -131,13 +136,10 @@ def ext_queue_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-server job count, busy time, total/max waiting time, makespan
     and utilization. ONE suppkey shuffle; each partition scanned once."""
     li = load(spark, sf_dir, "lineitem")
-    day = F.datediff(
-        F.col("l_shipdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
     jobs = li.select(
         F.col("l_suppkey").alias("server_id"),
         (
-            day * Q_DAY
+            epoch_day("l_shipdate") * Q_DAY
             + (
                 F.col("l_orderkey") * Q_OFF_A
                 + F.col("l_linenumber").cast("bigint") * Q_OFF_B
@@ -188,8 +190,7 @@ def ext_queue_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH moves AS (
         SELECT l_partkey AS part_id,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(l_shipdate AS DATE)) AS BIGINT) AS d,
+               {epoch_day_sql('l_shipdate')} AS d,
                CASE WHEN l_returnflag = 'R'
                     THEN CAST(l_quantity AS BIGINT)
                     ELSE -CAST(l_quantity AS BIGINT) END AS delta,
@@ -236,13 +237,10 @@ def ext_inventory_runout(spark: SparkSession, sf_dir: str) -> DataFrame:
     part: move count, peak/end stock, total lost sales and stockout-step
     count. ONE partkey shuffle; two chained windows on one ordering."""
     li = load(spark, sf_dir, "lineitem")
-    day = F.datediff(
-        F.col("l_shipdate").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
     qty = F.col("l_quantity").cast("bigint")
     moves = li.select(
         F.col("l_partkey").alias("part_id"),
-        day.alias("d"),
+        epoch_day("l_shipdate").alias("d"),
         F.when(F.col("l_returnflag") == "R", qty).otherwise(-qty).alias("delta"),
         "l_orderkey",
         "l_linenumber",
@@ -589,16 +587,8 @@ def ext_penny_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_dtw_distance",
-    oracle="""
-    WITH RECURSIVE daily AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS d,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x,
-               CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM events GROUP BY 1
+    oracle=f"""
+    WITH RECURSIVE daily AS ({DAILY_EVENTS_SQL}
     ), xs AS (
         SELECT list(x ORDER BY d) AS xv, list(y ORDER BY d) AS yv,
                COUNT(*) AS n,
@@ -648,18 +638,7 @@ def ext_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     across keys — embarrassingly parallel."""
     import pandas as pd
 
-    e = load(spark, sf_dir, "events")
-    day = F.datediff(
-        F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-    ).cast("bigint")
-    daily = e.groupBy(day.alias("d")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y"),
-    )
+    daily = daily_events(load(spark, sf_dir, "events"))
 
     def _dtw(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("d")
@@ -906,8 +885,7 @@ CROSTON_A = 5
     "ext_croston_intermittent",
     oracle=f"""
     WITH RECURSIVE dem AS (
-        SELECT CAST(datediff('day', DATE '1970-01-01',
-                             CAST(l.l_shipdate AS DATE)) AS BIGINT) AS d,
+        SELECT {epoch_day_sql('l.l_shipdate')} AS d,
                CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q
         FROM lineitem l
         WHERE l.l_partkey % {CROSTON_MOD} = 0
@@ -960,12 +938,7 @@ def ext_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey") % CROSTON_MOD == 0
     )
     dem = li.groupBy(
-        F.datediff(
-            F.col("l_shipdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("d")
+        epoch_day("l_shipdate").alias("d")
     ).agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("q"))
 
     def _croston(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1400,10 +1373,8 @@ def _act_oracle() -> str:
     return f"""
     WITH RECURSIVE iv AS MATERIALIZED (
         SELECT l_suppkey AS sk,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(l_shipdate AS DATE)) AS BIGINT) AS st,
-               CAST(datediff('day', DATE '1970-01-01',
-                             CAST(l_shipdate AS DATE))
+               {epoch_day_sql('l_shipdate')} AS st,
+               CAST({epoch_day_sql('l_shipdate')}
                     + CAST(l_quantity AS BIGINT) // 10 + 1 AS BIGINT)
                    AS en,
                l_orderkey, l_linenumber
@@ -1468,17 +1439,9 @@ def ext_activity_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_suppkey").alias("sk"),
-        F.datediff(
-            F.col("l_shipdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("st"),
+        epoch_day("l_shipdate").alias("st"),
         (
-            F.datediff(
-                F.col("l_shipdate").cast("date"),
-                F.lit("1970-01-01").cast("date"),
-            )
+            epoch_day("l_shipdate")
             + F.expr("CAST(l_quantity AS BIGINT) DIV 10")
             + 1
         )

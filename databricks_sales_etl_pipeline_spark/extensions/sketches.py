@@ -26,6 +26,7 @@ from pyspark.sql.functions import broadcast
 from ..catalog import load
 from ..extensions.chunking import md5_band, md5_band_sql
 from ..functions.money import cents
+from ..functions.series import epoch_day, epoch_day_sql
 from ..registry import query
 
 _WS = r"\s+"
@@ -541,10 +542,9 @@ def ext_bitmap_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_rolling_wau_bitmap",
-    oracle="""
+    oracle=f"""
     WITH e AS (
-        SELECT date_diff('day', DATE '1970-01-01',
-                         CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS day,
+        SELECT {epoch_day_sql('CAST(ts AS TIMESTAMP)')} AS day,
                user_id
         FROM events
     ), bm AS (
@@ -591,9 +591,7 @@ def ext_rolling_wau_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE (day, word) shuffle builds the bitmaps; the window state is the
     bitmap relation, thousands of times smaller than the event log."""
     e = load(spark, sf_dir, "events").select(
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("day"),
+        epoch_day("ts").alias("day"),
         "user_id",
     )
     bm = (

@@ -35,6 +35,10 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band_sql,
 )
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    epoch_day,
+    epoch_day_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -314,14 +318,14 @@ def ext_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ZONE_LO = "1998-01-01"
 _ZONE_HI = "1998-07-01"  # exclusive
+_LO_DAY, _HI_DAY = (epoch_day_sql(f"DATE '{d}'") for d in (_ZONE_LO, _ZONE_HI))
 
 
 @query(
     "ext_zone_map_stats",
     oracle=f"""
     WITH z AS (
-        SELECT date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-                   AS d,
+        SELECT {epoch_day_sql('o_orderdate')} AS d,
                CAST(ntile(64) OVER (ORDER BY CAST(o_orderdate AS DATE),
                                              o_orderkey) AS BIGINT) AS zone_id
         FROM orders
@@ -330,16 +334,14 @@ _ZONE_HI = "1998-07-01"  # exclusive
                CAST(MIN(d) AS BIGINT) AS min_day,
                CAST(MAX(d) AS BIGINT) AS max_day,
                CAST(COUNT(*) FILTER (WHERE
-                   d >= date_diff('day', DATE '1970-01-01', DATE '{_ZONE_LO}')
-                   AND d < date_diff('day', DATE '1970-01-01', DATE '{_ZONE_HI}'))
+                   d >= {_LO_DAY}
+                   AND d < {_HI_DAY})
                    AS BIGINT) AS rows_matching
         FROM z GROUP BY zone_id
     )
     SELECT zone_id, n_rows, min_day, max_day,
-           CAST(CASE WHEN max_day >= date_diff('day', DATE '1970-01-01',
-                                               DATE '{_ZONE_LO}')
-                      AND min_day < date_diff('day', DATE '1970-01-01',
-                                              DATE '{_ZONE_HI}')
+           CAST(CASE WHEN max_day >= {_LO_DAY}
+                      AND min_day < {_HI_DAY}
                      THEN 1 ELSE 0 END AS BIGINT) AS zone_hit,
            rows_matching
     FROM stats
@@ -368,9 +370,7 @@ def ext_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load(spark, sf_dir, "orders").select(
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-            "d"
-        ),
+        epoch_day("o_orderdate").alias("d"),
         "o_orderkey",
     )  # pure scan+project: passes recompute it (deterministic) — cheaper
     # at 100 TB than materializing a fact-scale intermediate
@@ -378,8 +378,8 @@ def ext_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = global_order(
         spark, o, {"pos": dict(key="d", then=["o_orderkey"])}
     ).withColumn("zone_id", ntile_from_pos(F.col("pos"), n, 64))
-    lo = F.datediff(F.lit(_ZONE_LO).cast("date"), F.lit("1970-01-01").cast("date"))
-    hi = F.datediff(F.lit(_ZONE_HI).cast("date"), F.lit("1970-01-01").cast("date"))
+    lo = epoch_day(F.lit(_ZONE_LO))
+    hi = epoch_day(F.lit(_ZONE_HI))
     stats = z.groupBy("zone_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.min("d").cast("bigint").alias("min_day"),

@@ -21,8 +21,10 @@ from pyspark.sql.functions import broadcast
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.series import epoch_day
 from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.registry import query
+from databricks_sales_etl_pipeline_spark.session import scoped_conf
 
 _REV_CENTS = cents_sql("l_extendedprice * (1 - l_discount)")
 
@@ -364,18 +366,17 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_add(F.min("l_shipdate"), 7).alias("b_end"),
         )
     )
-    day = lambda c: F.datediff(F.col(c), F.lit("1970-01-01").cast("date"))
     a_buck = a.withColumn(
         "bucket",
         F.explode(
             F.sequence(
-                (day("a_start") / _IV_BUCKET_DAYS).cast("int"),
-                (day("a_end") / _IV_BUCKET_DAYS).cast("int"),
+                (epoch_day("a_start") / _IV_BUCKET_DAYS).cast("int"),
+                (epoch_day("a_end") / _IV_BUCKET_DAYS).cast("int"),
             )
         ),
     )
     b_buck = b.withColumn(
-        "bucket", (day("b_start") / _IV_BUCKET_DAYS).cast("int")
+        "bucket", (epoch_day("b_start") / _IV_BUCKET_DAYS).cast("int")
     )
     # B intervals are 7 days = bucket width: they touch <= 2 buckets, so we
     # also probe the next bucket from the B side (cheaper than exploding B)
@@ -474,20 +475,16 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     join.
 
     The three bloom confs are plan-affecting session overrides, so they are
-    scoped: set, force this query's (memoized) plan compilation, then
-    restore in ``finally`` — later queries in the shared session see the
-    defaults (ADVICE r5; same save/restore discipline as
-    streaming/stateful.py's provider-class override)."""
+    scoped (``session.scoped_conf``): set, force this query's (memoized)
+    plan compilation, then restore — later queries in the shared session
+    see the defaults (ADVICE r5)."""
     _BLOOM_CONFS = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter."
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "64MB",
     }
-    prior = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
         o = (
             load(spark, sf_dir, "orders")
@@ -505,12 +502,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cannot undo it for the driver's later collect.
         out._jdf.queryExecution().executedPlan()
         return out
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 #: synthetic grid coordinates in integer tenths (non-negative, so DIV and
@@ -641,15 +632,7 @@ def join_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         "spark.sql.shuffle.partitions": "8",
     }
-    prev: dict[str, str | None] = {}
-    for k in confs:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         fact = spark.range(_AQE_SKEW_N).select(
             F.when(F.col("id") % 5 != 0, F.lit(7))
             .otherwise(F.pmod(F.col("id"), _AQE_SKEW_DIM))
@@ -669,12 +652,6 @@ def join_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         row = j.collect()[0]
         plan = j._jdf.queryExecution().executedPlan().toString()
         skew_applied = "skew=true" in plan
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return local_df(spark, 
         [(row["n_rows"], row["checksum"], skew_applied)],
         "n_rows bigint, checksum bigint, skew_applied boolean",

@@ -14,6 +14,10 @@ from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    epoch_day,
+    epoch_day_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 _ORDER_CENTS = cents_sql("o_totalprice")
@@ -217,12 +221,10 @@ def window_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_range_frame",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT user_id,
-               CAST(date_diff('day', DATE '1970-01-01',
-                              CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT)
-                   AS day_no,
+               {epoch_day_sql('CAST(ts AS TIMESTAMP)')} AS day_no,
                CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                    AS day_cents
         FROM events
@@ -249,9 +251,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("day_no"),
+        epoch_day("ts").alias("day_no"),
     ).agg(F.sum(cents(F.col("value"))).alias("day_cents"))
     w = (
         Window.partitionBy("user_id")

@@ -16,6 +16,8 @@ One place for every config that matters at scale:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +62,22 @@ def tune_shuffle_partitions(spark: SparkSession, input_bytes: int) -> None:
     """
     parts = max(default_parallelism(), input_bytes // TARGET_PARTITION_BYTES + 1)
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of a ``with`` block, then put every key
+    back as it was: its old value, or unset when the session had none.
+    Plan-affecting overrides must not leak into later queries on a shared
+    session."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from databricks_sales_etl_pipeline_spark.registry import query
+from databricks_sales_etl_pipeline_spark.session import scoped_conf
 
 N_ROWS = 203  # deliberately not divisible by N_PARTS: exercises the remainder shard
 N_PARTS = 8
@@ -153,9 +154,7 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg state would pay 200 tasks PER micro-batch for 203 rows. Scope a
     # sane value and restore (the ADVICE conf-leak discipline) — the
     # setting bakes into the query's state partitioning at start().
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             spark.readStream.format("dsep_synth_stream")
             .load()
@@ -176,6 +175,4 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()  # blocks until the source reports no progress
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table("dsep_pysrc")

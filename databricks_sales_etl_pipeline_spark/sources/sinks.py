@@ -15,6 +15,7 @@ from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.io import read_table, scratch_dir, write_table
 from databricks_sales_etl_pipeline_spark.registry import query
+from databricks_sales_etl_pipeline_spark.session import scoped_conf
 
 
 @query(
@@ -171,18 +172,12 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.where(F.col("n_regionkey") == 0)
         .withColumn("src", F.lit("patched"))
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         write_table(
             patched, path, mode="overwrite", partition_by=["n_regionkey"]
         )
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
     out = read_table(spark, path)
     return out.select(
         "n_nationkey",

@@ -25,6 +25,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from databricks_sales_etl_pipeline_spark.catalog import events_readstream
 from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
+from databricks_sales_etl_pipeline_spark.session import scoped_conf
 from databricks_sales_etl_pipeline_spark.streaming.util import run_to_memory
 
 OUTPUT_SCHEMA = T.StructType(
@@ -202,13 +203,10 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (named state variables = column families), which is also the right
     store at scale — state spills to disk instead of executor heap."""
     _ensure_worker_protobuf(spark)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}
+    ):
         stream = events_readstream(spark, sf_dir)
         counted = stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=_make_counter_processor(),
@@ -217,8 +215,3 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         return run_to_memory(counted, "tws", "update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from databricks_sales_etl_pipeline_spark.io import scratch_dir
+from databricks_sales_etl_pipeline_spark.session import scoped_conf
 
 
 def await_finished(q: StreamingQuery, timeout_s: int) -> None:
@@ -29,15 +30,25 @@ def run_to_memory(
     """Run ``stream`` as one Trigger.AvailableNow query into a memory sink
     and return the sink table. The view is ``dsep_<name>``, fixed per query,
     so a rerun replaces its view instead of adding one; the checkpoint is
-    ``scratch_dir(name)``."""
+    ``scratch_dir(name)``.
+
+    A stateful query fixes its state-store partition count from
+    ``spark.sql.shuffle.partitions`` when it first runs. A vanilla session
+    says 200, which costs 200 state-store tasks per micro-batch, so the
+    run is capped at ``defaultParallelism`` partitions and the session
+    value is restored afterwards."""
+    spark = stream.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    parts = min(int(spark.conf.get(key)), spark.sparkContext.defaultParallelism)
     view = f"dsep_{name}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(view)
-        .outputMode(mode)
-        .option("checkpointLocation", scratch_dir(name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, timeout_s)
-    return stream.sparkSession.table(view)
+    with scoped_conf(spark, {key: str(parts)}):
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(view)
+            .outputMode(mode)
+            .option("checkpointLocation", scratch_dir(name))
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_finished(q, timeout_s)
+    return spark.table(view)

@@ -1,0 +1,118 @@
+"""Cross-engine twins of the relations several analytics queries share.
+
+Each Spark builder must equal its DuckDB twin, and each definition must be
+spelled in one place only: a query calls the builder or the twin, never a
+copy of its body."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.extensions.dedup import (
+    shingle_rows,
+    shingles_sql,
+)
+from databricks_sales_etl_pipeline_spark.extensions.drift import (
+    _half_year_tally,
+    _half_year_tally_sql,
+)
+from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.series import (
+    DAILY_EVENTS_SQL,
+    daily_events,
+    epoch_day,
+    epoch_day_sql,
+)
+from tests.conftest import SF_DIR
+
+ENGINE = Path(__file__).resolve().parents[1] / "databricks_sales_etl_pipeline_spark"
+
+# a pre-1970 date, the epoch itself, a leap day and the last second of it
+_DAYS = [
+    "DATE '1969-07-20'",
+    "DATE '1970-01-01'",
+    "DATE '2024-02-29'",
+    "TIMESTAMP '2024-02-29 23:59:59'",
+]
+
+
+def test_epoch_day_matches_its_sql_twin(spark):
+    got = spark.range(1).select(
+        *(epoch_day(F.expr(d)).alias(f"d{i}") for i, d in enumerate(_DAYS))
+    )
+    assert {t for _, t in got.dtypes} == {"bigint"}
+    want = duckdb.sql(
+        "SELECT " + ", ".join(epoch_day_sql(d) for d in _DAYS)
+    ).fetchone()
+    assert tuple(got.first()) == want == (-165, 0, 19782, 19782)
+
+
+# empty, 1-word and 2-word docs yield no shingle; doc 4 repeats "a b c"
+_CORPUS = [
+    (1, ""),
+    (2, "one"),
+    (3, "two words"),
+    (4, "a b c a b c d"),
+    (5, "The quick  brown Fox jumps"),
+]
+
+
+@pytest.mark.parametrize("k", [2, 3])
+def test_shingle_rows_match_shingles_sql(spark, k):
+    docs = spark.createDataFrame(_CORPUS, "doc_id bigint, text string")
+    got = sorted(
+        map(tuple, shingle_rows(docs, k=k).select("doc_id", "shingle").collect())
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", _CORPUS)
+    want = sorted(con.execute(shingles_sql(k)).fetchall())
+    assert got == want
+    assert {d for d, _ in got} == {4, 5} | ({3} if k == 2 else set())
+    assert [s for d, s in got if d == 4].count("a b c") == (1 if k == 3 else 0)
+
+
+def test_daily_events_matches_its_sql_twin(spark, duck):
+    got = daily_events(load(spark, SF_DIR, "events"))
+    assert got.dtypes == [("d", "bigint"), ("x", "bigint"), ("y", "bigint")]
+    want = duck.execute(DAILY_EVENTS_SQL).fetchall()
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+
+def test_half_year_tally_matches_its_sql_twin(spark, duck):
+    got = _half_year_tally(
+        load(spark, SF_DIR, "orders"), cents(F.col("o_totalprice"))
+    )
+    want = duck.execute(
+        f"WITH {_half_year_tally_sql(cents_sql('o_totalprice'))}"
+        " SELECT v, c1, c2 FROM per_v"
+    ).fetchall()
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+
+def _spellings(pattern: str) -> dict[str, int]:
+    rx = re.compile(pattern)
+    counts = {
+        str(p.relative_to(ENGINE)): len(rx.findall(p.read_text()))
+        for p in ENGINE.rglob("*.py")
+    }
+    return {f: n for f, n in counts.items() if n}
+
+
+@pytest.mark.parametrize(
+    "pattern, home",
+    [
+        (re.escape("DATE '1970-01-01'"), "functions/series.py"),
+        (re.escape('F.lit("1970-01-01")'), "functions/series.py"),
+        # the shingle body: distinct k-word windows over the split words
+        (r"unnest\(list_distinct\(\s*list_transform\(", "extensions/dedup.py"),
+    ],
+)
+def test_shared_definitions_have_one_home(pattern, home):
+    assert _spellings(pattern) == {home: 1}

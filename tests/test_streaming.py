@@ -4,6 +4,9 @@ and the stateful counter's agreement with its batch equivalent."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
@@ -17,6 +20,7 @@ from databricks_sales_etl_pipeline_spark.plans.medallion import (
     to_bronze_format,
 )
 from databricks_sales_etl_pipeline_spark.registry import QUERIES, load_all
+from databricks_sales_etl_pipeline_spark.session import scoped_conf
 from databricks_sales_etl_pipeline_spark.sources.generator import gen_orders
 from tests.conftest import SF_DIR
 
@@ -74,6 +78,31 @@ def test_stateful_counter_matches_batch_agg(spark):
         .collect()
     }
     assert got == expected
+
+
+def test_stateful_stream_caps_state_partitions(spark):
+    """A vanilla session says 200 shuffle partitions; the stateful query
+    must not build 200 state-store partitions for it, and the session value
+    must read 200 again afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    with scoped_conf(spark, {key: "200"}):
+        QUERIES["stream_stateful_counter"](spark, SF_DIR).count()
+        assert spark.conf.get(key) == "200"
+    # run_to_memory's checkpoint: scratch_dir("state"), operator 0
+    state = os.path.join(
+        tempfile.gettempdir(), f"dsep_{os.getpid()}_state", "state", "0"
+    )
+    parts = [d for d in os.listdir(state) if d.isdigit()]
+    assert 0 < len(parts) <= spark.sparkContext.defaultParallelism
+
+
+def test_scoped_conf_restores_set_keys_and_unsets_absent_ones(spark):
+    key, absent = "spark.sql.shuffle.partitions", "dsep.test.scoped"
+    before = spark.conf.get(key)
+    with scoped_conf(spark, {key: "3", absent: "on"}):
+        assert (spark.conf.get(key), spark.conf.get(absent)) == ("3", "on")
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(absent, None) is None
 
 
 def test_late_event_behind_watermark_is_dropped(spark, tmp_path):
