@@ -2,19 +2,25 @@
 
 The reference infers every schema from Python dicts
 (`01_project_setup_and_ingestion.py:107`, `02:44-49`, `03:89`). `SCHEMAS`
-keeps an explicit StructType per table (SURVEY §1.6); today only the
-CSV/JSON readers of `sources/formats.py` pass them to Spark.
+keeps an explicit StructType per table (SURVEY §1.6): it is the reader
+contract of the CSV/JSON readers in `sources/formats.py`, NOT the on-disk
+parquet schema — on disk `o_orderdate`, `l_shipdate` and `ts` are
+`timestamp_ntz`, where `SCHEMAS` says `timestamp`.
 
 Tables are the driver's TPC-H-ish star schema + event/LLM tables
 (FIXTURES.md §A). `load` reads a table's parquet with the schema Spark
-infers from the file footers, on every call (one inference job each), and
-normalizes `events.ts` to a session-UTC timestamp; it does not check the
-result against `SCHEMAS`. `register_views` exposes all tables as temp views
-so the SQL front-end and the DataFrame front-end run against one catalog
+would infer from its footer, which `parquet_schema` reads on the driver
+(no Spark job; memoised per file version and conf), and normalizes
+`events.ts` to a session-UTC timestamp; it does not check the result
+against `SCHEMAS`. `register_views` exposes all tables as temp views so the
+SQL front-end and the DataFrame front-end run against one catalog
 (SURVEY §3.2).
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -168,9 +174,10 @@ def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 def events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with the on-disk schema DETECTED
-    from a batch read (a FileStreamSource cannot infer it), then normalized
-    through the same :func:`normalize_events_ts` as the batch path — so the
-    stream and its batch twin always agree, whatever the testdata vintage.
+    by :func:`parquet_schema` (a FileStreamSource cannot infer it), then
+    normalized through the same :func:`normalize_events_ts` as the batch
+    path — so the stream and its batch twin always agree, whatever the
+    testdata vintage.
 
     Two source layouts (a production stream points at an arriving-files
     dir, the fixture is one immutable file):
@@ -182,12 +189,9 @@ def events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
       verdict's multi-batch evidence seam. The real driver never sets the
       env var, so fixture runs keep the single-batch AvailableNow shape.
     """
-    import os
-
     ensure_runtime_conf(spark)
     src = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(src).schema
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream.schema(parquet_schema(spark, src))
     mfpt = os.environ.get("DSEP_STREAM_MAX_FILES_PER_TRIGGER")
     if mfpt:
         reader = reader.option("maxFilesPerTrigger", int(mfpt)).option(
@@ -218,13 +222,67 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
             pass  # never fail a read over a tuning conf
 
 
+#: The SQL confs that change the schema a parquet footer converts to:
+#: ns timestamps read as bigint, naive timestamps as TIMESTAMP_NTZ.
+_FOOTER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_footer_schemas: dict[tuple, T.StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, without the
+    Spark job that inference launches (~100 ms warm per read).
+
+    For a single file the footer is read on the driver through the very
+    functions Spark's inference job runs per file (``ParquetFooterReader``,
+    ``ParquetFileFormat.readSchemaFromFooter``), so Spark's row metadata,
+    ``nanosAsLong`` and ``inferTimestampNTZ`` apply exactly as they do
+    there; like every file-source read, the schema is made nullable. It is
+    memoised per (real path, mtime, size, :data:`_FOOTER_CONFS`): a
+    regenerated or rewritten file — e.g. another ``events.ts`` on-disk
+    shape — re-reads its footer. Any other path (a directory of part
+    files, a URI) keeps Spark's inference."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path).schema
+    st = os.stat(path)
+    key = (
+        os.path.realpath(path),
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(k) for k in _FOOTER_CONFS),
+    )
+    if key not in _footer_schemas:
+        jvm = spark._jvm
+        state = spark._jsparkSession.sessionState()
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        meta = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                hpath, state.newHadoopConf()
+            ),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        schema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
+            pq.ParquetToSparkSchemaConverter(state.conf()),
+        )
+        _footer_schemas[key] = T.StructType.fromJson(
+            json.loads(schema.asNullable().json())
+        )
+    return _footer_schemas[key]
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table. Column pruning + predicate pushdown reach the
-    parquet scan because we return the raw scan node (no barriers)."""
+    """Read one testdata table with its :func:`parquet_schema` — no Spark
+    job on the read. Column pruning + predicate pushdown reach the parquet
+    scan because we return the raw scan node (no barriers)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

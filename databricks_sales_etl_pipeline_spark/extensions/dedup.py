@@ -1237,9 +1237,6 @@ def ext_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_b"), F.col("simhash32").alias("sk_b")
     )
     j = pairs.join(a, "doc_a").join(b, "doc_b")
-    from pyspark.sql import Window as _W
-
-    wall = _W.partitionBy()
     hamming = F.bit_count(
         F.col("sk_a").bitwiseXOR(F.col("sk_b"))
     ).cast("bigint")

@@ -1514,25 +1514,13 @@ TV_BAND_CENTS = 5_000_000
 @query(
     "ext_tv_distance",
     oracle=f"""
-    WITH s AS (
-        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
-                   // {TV_BAND_CENTS} AS band,
-               (month(CAST(o_orderdate AS DATE)) <= 6) AS g1
-        FROM orders
-    ), tot AS (
-        SELECT CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS n2
-        FROM s
-    ), bands AS (
-        SELECT CAST(band AS BIGINT) AS band,
-               CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-               CAST(SUM(CASE WHEN g1 THEN 0 ELSE 1 END) AS BIGINT) AS c2
-        FROM s GROUP BY band
-    ), shares AS (
-        SELECT b.band, b.c1, b.c2,
+    WITH {_half_year_tally_sql(
+        f"CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) // {TV_BAND_CENTS}"
+    )}, shares AS (
+        SELECT CAST(b.v AS BIGINT) AS band, b.c1, b.c2,
                CAST(b.c1 * 1000000 // t.n1 AS BIGINT) AS p_ppm,
                CAST(b.c2 * 1000000 // t.n2 AS BIGINT) AS q_ppm
-        FROM bands b, tot t
+        FROM per_v b, tot t
     )
     SELECT band, c1, c2, p_ppm, q_ppm,
            CAST(abs(p_ppm - q_ppm) AS BIGINT) AS abs_diff_ppm,
@@ -1552,32 +1540,28 @@ def ext_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the actionable part: WHICH bands moved), and the scalar TV rides
     every row via a whole-relation window total.
 
-    Shape: one band groupBy + a 1-row totals broadcast + one
-    10-row window. Nothing but the scan scales."""
+    Shape: one band groupBy over the one ``orders`` scan; the arm totals
+    sum its ≤10 rows into a 1-row broadcast; one 10-row window. Nothing
+    but the scan scales."""
     o = load(spark, sf_dir, "orders")
-    s = o.select(
+    bands = _half_year_tally(
+        o,
         F.expr(
             f"CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
             f" DIV {TV_BAND_CENTS}"
-        ).alias("band"),
-        (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("g1"),
+        ),
     )
-    tot = s.agg(
-        F.sum(F.when(F.col("g1"), 1).otherwise(0)).cast("bigint").alias("n1"),
-        F.sum(F.when(F.col("g1"), 0).otherwise(1)).cast("bigint").alias("n2"),
-    )
-    bands = s.groupBy("band").agg(
-        F.sum(F.when(F.col("g1"), 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("g1"), 0).otherwise(1)).cast("bigint").alias("c2"),
+    tot = bands.agg(
+        F.sum("c1").cast("bigint").alias("n1"),
+        F.sum("c2").cast("bigint").alias("n2"),
     )
     shares = bands.crossJoin(broadcast(tot)).select(
-        F.col("band").cast("bigint").alias("band"),
+        F.col("v").cast("bigint").alias("band"),
         "c1",
         "c2",
         F.expr("CAST(c1 * 1000000 DIV n1 AS BIGINT)").alias("p_ppm"),
         F.expr("CAST(c2 * 1000000 DIV n2 AS BIGINT)").alias("q_ppm"),
     )
-    wall = Window.partitionBy()
     return shares.select(
         "band",
         "c1",

@@ -41,8 +41,6 @@ Scale shapes (100 TB posture):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast

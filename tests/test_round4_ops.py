@@ -170,6 +170,54 @@ def test_events_readstream_ts_is_ltz_for_all_shapes(spark, ts_shape_dirs):
         assert dict(stream.dtypes)["ts"] == "timestamp", shape
 
 
+def test_parquet_schema_equals_spark_inference(spark, ts_shape_dirs):
+    """The driver-side footer schema is the schema Spark's inference job
+    gives, for every table and for each events.ts on-disk shape."""
+    from databricks_sales_etl_pipeline_spark.catalog import TABLES, parquet_schema
+
+    paths = [f"{d}/events.parquet" for d in ts_shape_dirs.values()]
+    paths += [f"{SF_DIR}/{t}.parquet" for t in TABLES]
+    for p in paths:
+        assert parquet_schema(spark, p) == spark.read.parquet(p).schema, p
+
+
+def test_load_launches_no_job(spark, monkeypatch):
+    """catalog.load over every table, memo cold, runs no Spark job."""
+    from databricks_sales_etl_pipeline_spark import catalog
+
+    monkeypatch.setattr(catalog, "_footer_schemas", {})
+    sc = spark.sparkContext
+    group = "test_load_launches_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        for t in catalog.TABLES:
+            catalog.load(spark, SF_DIR, t)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_parquet_schema_sees_a_rewritten_file(spark, tmp_path):
+    """The memo is keyed on the file version: rewriting the same path with
+    another ts type returns the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from databricks_sales_etl_pipeline_spark.catalog import (
+        ensure_runtime_conf,
+        parquet_schema,
+    )
+
+    ensure_runtime_conf(spark)
+    p = str(tmp_path / "events.parquet")
+    seen = {}
+    for unit in ["us", "ns"]:
+        ts = pa.array([0, 1_000_000], pa.int64()).cast(pa.timestamp(unit))
+        pq.write_table(pa.table({"ts": ts}), p)
+        seen[unit] = parquet_schema(spark, p)["ts"].dataType.simpleString()
+    assert seen == {"us": "timestamp_ntz", "ns": "bigint"}
+
+
 # --- BPE trainer vs pure-Python reference -----------------------------------
 
 
