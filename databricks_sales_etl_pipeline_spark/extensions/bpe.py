@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.text import words
 from databricks_sales_etl_pipeline_spark.registry import query
 
-_WS = r"\s+"
 N_MERGES = 5
 EOW = "</w>"
 
@@ -37,7 +37,7 @@ def word_freqs(docs: DataFrame) -> DataFrame:
     """(word, count) over lowercased whitespace tokens — the only
     corpus-sized scan in the whole algorithm."""
     return (
-        docs.select(F.explode(F.split(F.lower("text"), _WS)).alias("w"))
+        docs.select(F.explode(words("text")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -153,7 +153,7 @@ def ext_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         syms = syms.localCheckpoint(eager=False)
     word_tokens = syms.select("w", F.size("syms").cast("long").alias("n_tok"))
     toks = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), _WS)).alias("w")
+        "doc_id", F.explode(words("text")).alias("w")
     ).where(F.col("w") != "")
     return (
         toks.join(F.broadcast(word_tokens), "w")

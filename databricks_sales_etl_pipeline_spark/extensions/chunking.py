@@ -22,9 +22,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql, words
 from databricks_sales_etl_pipeline_spark.registry import query
-
-_WS = r"\s+"
 
 
 def md5_int(col: Column) -> Column:
@@ -66,8 +65,7 @@ CHUNK_S = 16   # stride (tokens) → 50% overlap
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents
     ), c AS (
         SELECT doc_id, CAST(i AS INT) AS chunk_idx,
@@ -94,7 +92,7 @@ def ext_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode(sequence) over the chunk count → slice + array_join. No
     shuffle: chunking is embarrassingly row-local."""
     d = load(spark, sf_dir, "documents")
-    toks = F.array_remove(F.split(F.lower("text"), _WS), "")
+    toks = F.array_remove(words("text"), "")
     base = (
         d.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") > 0)
@@ -196,8 +194,7 @@ _LB_BUCKETS = 16
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                    x -> x <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     ), bucketed AS (
         SELECT doc_id, n_tokens,
@@ -241,7 +238,7 @@ def ext_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round7_scale.py), no single-partition task."""
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != ""))
+        F.size(tokens("text"))
         .cast("bigint")
         .alias("n_tokens"),
     )

@@ -32,21 +32,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..catalog import load
+from ..functions.text import WS, tokens_sql
 from ..registry import query
 from .chunking import md5_band, md5_band_sql
 
-_WS = r"\s+"
 N_FEATS = 1024  # hashed token buckets; feature N_FEATS is the bias
 N_MARKERS = 8  # planted per-language marker tokens per doc
 
 
 def _marked_tokens_sql() -> str:
-    """DuckDB token stream with the planted per-language marker suffix."""
-    return (
-        "list_filter(string_split_regex("
-        "lower(COALESCE(text, '')) || "
+    """DuckDB token stream with the planted per-language marker suffix.
+    ``tokens_sql`` lowercases the suffix too, which matches the Spark side
+    (text lowercased, markers not) because lang codes are lowercase."""
+    return tokens_sql(
+        "COALESCE(text, '') || "
         + " || ".join(f"' mk' || lang || '{k}'" for k in range(N_MARKERS))
-        + ", '\\s+'), x -> x <> '')"
     )
 
 
@@ -69,7 +69,7 @@ def _features(d: DataFrame) -> DataFrame:
     toks = d.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(-1).alias("y"),
-        F.explode(F.filter(F.split(marked, _WS), lambda x: x != "")).alias(
+        F.explode(F.filter(F.split(marked, WS), lambda x: x != "")).alias(
             "tok"
         ),
     )

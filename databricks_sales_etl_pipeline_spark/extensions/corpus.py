@@ -23,12 +23,13 @@ from pyspark.sql import functions as F
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_band_sql
 from databricks_sales_etl_pipeline_spark.extensions.textstats import STOPWORDS, _SW_SQL
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 _PIPELINE_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id, lang, text,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     ), gated AS (
@@ -59,7 +60,7 @@ def pipeline_llm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     sw = F.array(*[F.lit(w) for w in STOPWORDS])
     base = d.select("doc_id", "lang", "text", toks.alias("toks"))
     sw_ratio = (
@@ -94,8 +95,7 @@ PARA_BLOCK_TOKENS = 12
     oracle=f"""
     WITH lt AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents
     ),
     blocks AS (
@@ -142,7 +142,7 @@ def ext_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     lt = d.select("doc_id", toks.alias("toks")).where(F.size("toks") > 0)
     blocks = lt.select(
         "doc_id",
@@ -209,8 +209,7 @@ BOILERPLATE_DF = 3  # a block seen in >= this many DISTINCT docs is boilerplate
     oracle=f"""
     WITH lt AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents
     ),
     blocks AS (
@@ -255,7 +254,7 @@ def ext_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassembly. Two shuffles + a bounded join (the boilerplate table is
     tiny by definition — high-df blocks only)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     lt = d.select("doc_id", toks.alias("toks")).where(F.size("toks") > 0)
     blocks = lt.select(
         "doc_id",
@@ -324,8 +323,7 @@ _IDX_SAMPLE = 10
     "ext_inverted_index",
     oracle=f"""
     WITH words AS (
-        SELECT doc_id, unnest(list_filter(
-            string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS term
+        SELECT doc_id, unnest({tokens_sql()}) AS term
         FROM documents
     ), tf AS (
         SELECT term, doc_id, COUNT(*) AS tf FROM words GROUP BY 1, 2
@@ -364,9 +362,7 @@ def ext_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition."""
     words = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     tf = words.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
     stats = (
@@ -394,17 +390,13 @@ def ext_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_source_overlap",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
         SELECT DISTINCT source, shingle FROM (
             SELECT source,
                    unnest(list_transform(
-                       range(1, greatest(len(list_filter(
-                           string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '')) - 2, 0) + 1),
-                       si -> array_to_string(list_slice(list_filter(
-                           string_split_regex(lower(text), '\\s+'),
-                           x -> x <> ''), si, si + 2), ' ')))
+                       range(1, greatest(len({tokens_sql()}) - 2, 0) + 1),
+                       si -> array_to_string(list_slice({tokens_sql()}, si, si + 2), ' ')))
                    AS shingle
             FROM documents
         ) t
@@ -442,7 +434,7 @@ def ext_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
 
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     # in-row shingle slicing (documents are short; slice is JVM-side)
     sh = (
         d.select(
@@ -508,9 +500,7 @@ TREND_TOP_K = 20
         SELECT doc_id,
                CASE WHEN {md5_band_sql('doc_id', 2, 'snap:')} = 0
                     THEN 0 ELSE 1 END AS s,
-               list_distinct(list_filter(
-                   string_split_regex(lower(text), '\\s+'),
-                   x -> x <> '')) AS toks
+               list_distinct({tokens_sql()}) AS toks
         FROM documents
     ), n_docs AS (
         SELECT CAST(SUM(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
@@ -557,9 +547,7 @@ def ext_term_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(md5_band(F.col("doc_id"), 2, "snap:") == 0, 0)
         .otherwise(1)
         .alias("s"),
-        F.array_distinct(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("toks"),
+        F.array_distinct(tokens("text")).alias("toks"),
     ).localCheckpoint(eager=False)
     n_docs = snap.agg(
         F.sum(F.when(F.col("s") == 0, 1).otherwise(0))

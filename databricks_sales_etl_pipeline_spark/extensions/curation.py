@@ -18,7 +18,7 @@ division), never floats, so bucket boundaries cannot drift.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
@@ -26,9 +26,13 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
 )
+from databricks_sales_etl_pipeline_spark.functions.text import (
+    WS,
+    tokens,
+    tokens_sql,
+    words,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
-
-_WS = r"\s+"
 
 # Java-regex / RE2 common-subset patterns (char classes + {n,m} only).
 _RE_EMAIL = "[a-z0-9._]+@[a-z0-9]+[.][a-z][a-z]+"
@@ -135,7 +139,7 @@ def _doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     language' proxy, in exact integer arithmetic."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), _WS)).alias("token")
+        "doc_id", F.explode(words("text")).alias("token")
     ).where(F.col("token") != "")
     stats = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
@@ -160,8 +164,7 @@ _QUALITY_SQL = f"""
                len(list_filter(toks, x -> x IN {_STOPWORDS!r})) AS n_stop
         FROM (
             SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '\\s+'),
-                               x -> x <> '') AS toks
+                   {tokens_sql()} AS toks
             FROM documents
         )
         WHERE len(toks) > 0
@@ -561,7 +564,7 @@ _HTML_RAW_SQL = (
     ), stripped AS (
         SELECT doc_id,
                trim(regexp_replace(regexp_replace(html, '<[^>]*>', ' ', 'g'),
-                                   '\\s+', ' ', 'g')) AS clean
+                                   '{WS}', ' ', 'g')) AS clean
         FROM raw
     )
     SELECT doc_id,
@@ -581,7 +584,7 @@ def ext_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     html = F.expr(_HTML_RAW_SQL)
     clean = F.trim(
         F.regexp_replace(
-            F.regexp_replace(html, "<[^>]*>", " "), r"\s+", " "
+            F.regexp_replace(html, "<[^>]*>", " "), WS, " "
         )
     )
     return d.select(
@@ -770,8 +773,7 @@ from databricks_sales_etl_pipeline_spark.extensions.textstats import (  # noqa: 
     WITH pertok AS (
         SELECT doc_id, tok FROM (
             SELECT doc_id,
-                   unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                      x -> x <> '')) AS tok
+                   unnest({tokens_sql()}) AS tok
             FROM documents
         )
     ), perdoc AS (
@@ -814,9 +816,7 @@ def ext_quality_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored low."""
     pertok = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     wt = Window.partitionBy("doc_id", "tok")
     perdoc = (

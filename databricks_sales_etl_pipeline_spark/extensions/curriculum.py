@@ -26,23 +26,23 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
 )
+from databricks_sales_etl_pipeline_spark.functions.text import (
+    normalized,
+    normalized_sql,
+    tokens,
+    tokens_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
-_WS = r"\s+"
 TARGET_TOKENS = 5000          # per-source token budget
 _MIX_MOD = 4294967296         # 2^32: full md5 band (pinned doc order)
-
-_N_TOKENS_SQL = (
-    "CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),"
-    " x -> x <> '')) AS BIGINT)"
-)
 
 
 @query(
     "ext_mix_epochs",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, source, {_N_TOKENS_SQL} AS n_tokens,
+        SELECT doc_id, source, CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens,
                {md5_band_sql("doc_id", _MIX_MOD, "mix:")} AS band
         FROM documents
     ), totals AS (
@@ -74,7 +74,7 @@ def ext_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split(F.lower("text"), _WS), lambda x: x != ""))
+        F.size(tokens("text"))
         .cast("long")
         .alias("n_tokens"),
         md5_band(F.col("doc_id"), _MIX_MOD, "mix:").alias("band"),
@@ -109,8 +109,8 @@ def ext_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang, source, n_chars,
-               {_N_TOKENS_SQL} AS n_tokens,
-               md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp
+               CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens,
+               md5({normalized_sql()}) AS fp
         FROM documents
     ), global AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -144,10 +144,10 @@ def ext_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         "n_chars",
-        F.size(F.filter(F.split(F.lower("text"), _WS), lambda x: x != ""))
+        F.size(tokens("text"))
         .cast("long")
         .alias("n_tokens"),
-        F.md5(F.lower(F.regexp_replace("text", _WS, " "))).alias("fp"),
+        F.md5(normalized("text")).alias("fp"),
     )
     global_ = toks.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -272,8 +272,7 @@ BUDGET_TOKENS = 6000  # corpus-selection token budget (fixture-scaled)
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS tk
+               {tokens_sql()} AS tk
         FROM documents
     ), scored AS (
         SELECT doc_id,
@@ -313,7 +312,7 @@ def ext_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned in tests/test_round7_scale.py); no single-partition task
     anywhere."""
     d = load(spark, sf_dir, "documents")
-    tk = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    tk = tokens("text")
     scored = d.select(
         "doc_id",
         F.size(tk).cast("bigint").alias("n_tokens"),

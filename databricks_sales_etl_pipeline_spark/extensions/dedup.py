@@ -30,6 +30,15 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_int_sql,
 )
 from databricks_sales_etl_pipeline_spark.functions import par
+from databricks_sales_etl_pipeline_spark.functions.text import (
+    WS_SPARK_SQL,
+    normalized,
+    normalized_sql,
+    tokens,
+    tokens_sql,
+    words,
+    words_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -54,9 +63,9 @@ def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fingerprint
+           md5({normalized_sql()}) AS fingerprint
     FROM documents
     """,
 )
@@ -67,7 +76,7 @@ def ext_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.md5(F.lower(F.regexp_replace("text", r"\s+", " "))).alias("fingerprint"),
+        F.md5(normalized("text")).alias("fingerprint"),
     )
 
 
@@ -84,7 +93,7 @@ def with_shingles(df: DataFrame, col: str = "text", k: int = 3, out: str = "sh")
     only cheap string concat. zip_with pads the shorter side with null; the
     final slice drops the padded tail. Texts with fewer than k words yield
     an empty array."""
-    w = F.split(F.lower(F.col(col)), r"\s+")
+    w = words(col)
     zipped = w
     for j in range(1, k):
         shifted = F.slice(w, j + 1, F.greatest(F.size(w) - j, F.lit(0)))
@@ -111,13 +120,13 @@ def shingle_rows(df: DataFrame, col: str = "text", k: int = 3) -> DataFrame:
     are all satisfied by this one exchange — exchange count unchanged."""
     from pyspark.sql import Window
 
-    words = par.by_key(df.select("doc_id", F.col(col)), "doc_id").select(
-        "doc_id", F.posexplode(F.split(F.lower(F.col(col)), r"\s+")).alias("pos", "w")
+    pw = par.by_key(df.select("doc_id", F.col(col)), "doc_id").select(
+        "doc_id", F.posexplode(words(col)).alias("pos", "w")
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("w", j).over(win) for j in range(1, k)]
     sh = (
-        words.select(
+        pw.select(
             "doc_id",
             F.concat_ws(" ", F.col("w"), *leads).alias("shingle"),
             leads[-1].isNotNull().alias("_full"),
@@ -130,19 +139,16 @@ def shingle_rows(df: DataFrame, col: str = "text", k: int = 3) -> DataFrame:
     )
 
 
-_WORDS_SQL = "string_split_regex(lower(text), '\\s+')"
-
-
 def shingles_sql(k: int = 3) -> str:
     """DuckDB twin of :func:`shingle_rows` over ``documents``: a SELECT of
     the distinct (doc_id, shingle) rows, for ``WITH sh AS (…)``; callers
     count ``n_sh`` themselves. Its list_transform binds ``i`` — an outer
     lambda around it must use another name (DuckDB lambda shadowing, as
     in ``md5_band_sql``)."""
-    grams = " || ' ' || ".join(f"{_WORDS_SQL}[i+{j}]" for j in range(k))
+    grams = " || ' ' || ".join(f"{words_sql()}[i+{j}]" for j in range(k))
     return f"""
         SELECT doc_id, unnest(list_distinct(list_transform(
-            range(1, greatest(len({_WORDS_SQL}) - {k - 2}, 0)),
+            range(1, greatest(len({words_sql()}) - {k - 2}, 0)),
             i -> {grams}))) AS shingle
         FROM documents"""
 
@@ -150,13 +156,13 @@ def shingles_sql(k: int = 3) -> str:
 def shingles(col: str = "text", k: int = 3):
     """Column-expression form (tests / small frames). Prefer with_shingles
     in data paths — see its docstring for the lambda-recompute hazard."""
-    words = F.split(F.lower(F.col(col)), r"\s+")
-    seq = F.sequence(F.lit(0), F.size(words) - k)
+    w = words(col)
+    seq = F.sequence(F.lit(0), F.size(w) - k)
     make = F.transform(
         seq,
-        lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(k)]),
+        lambda i: F.concat_ws(" ", *[F.element_at(w, i + j + 1) for j in range(k)]),
     )
-    return F.when(F.size(words) >= k, F.array_distinct(make)).otherwise(
+    return F.when(F.size(w) >= k, F.array_distinct(make)).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -302,13 +308,13 @@ def ext_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "w")
+    pw = d.select(
+        "doc_id", F.posexplode(words("text")).alias("pos", "w")
     )
     seq = Window.partitionBy("doc_id").orderBy("pos")
     l1, l2 = F.lead("w", 1).over(seq), F.lead("w", 2).over(seq)
     grams = (
-        words.select(
+        pw.select(
             "doc_id",
             "pos",
             F.xxhash64(F.concat_ws(" ", F.col("w"), l1, l2)).alias("h"),
@@ -472,7 +478,7 @@ def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a few bits (hamming). Built-ins only (explode + bitwise ops), no UDF."""
     d = load(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("token")
+        "doc_id", F.explode(words("text")).alias("token")
     ).where(F.col("token") != "")
     h = tok.select("doc_id", F.xxhash64("token").alias("h"))
     votes = h.select(
@@ -494,13 +500,11 @@ def ext_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketch
 
 
-_DECON_FP = "md5(lower(regexp_replace(text, '\\s+', ' ', 'g')))"
-
 _DECON_ORACLE = f"""
     WITH train AS (
-        SELECT doc_id, lang, {_DECON_FP} AS fp FROM documents WHERE doc_id % 10 <> 0
+        SELECT doc_id, lang, md5({normalized_sql()}) AS fp FROM documents WHERE doc_id % 10 <> 0
     ), eval_fp AS (
-        SELECT DISTINCT {_DECON_FP} AS fp FROM documents WHERE doc_id % 10 = 0
+        SELECT DISTINCT md5({normalized_sql()}) AS fp FROM documents WHERE doc_id % 10 = 0
     )
     SELECT t.lang,
            COUNT(*) AS n_train,
@@ -526,7 +530,7 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing. Same dataflow at 100 TB with the eval set broadcast to every
     executor."""
     d = load(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", r"\s+", " ")))
+    fp = F.md5(normalized("text"))
     train = d.where(F.col("doc_id") % 10 != 0).select("doc_id", "lang", fp.alias("fp"))
     eval_fp = (
         d.where(F.col("doc_id") % 10 == 0).select(fp.alias("efp")).distinct()
@@ -731,8 +735,7 @@ def _simhash_oracle() -> str:
     return f"""
     WITH w AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS tok
+               unnest({tokens_sql()}) AS tok
         FROM documents
     ), hh AS (
         SELECT doc_id, {h} AS h FROM w
@@ -760,7 +763,7 @@ def ext_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (map-side combined); no arrays, no HOFs in the hot path."""
     d = load(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
+        "doc_id", F.explode(words("text")).alias("tok")
     ).where(F.col("tok") != "")
     h = md5_int(F.concat(F.lit("sh:"), F.col("tok")))
     hh = tok.select("doc_id", h.alias("h"))
@@ -784,7 +787,7 @@ def ext_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WINNOW_VERIFIED_ORACLE = f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     ), g AS (
@@ -821,13 +824,13 @@ def ext_fingerprint_winnow_verified(spark: SparkSession, sf_dir: str) -> DataFra
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "w")
+    pw = d.select(
+        "doc_id", F.posexplode(words("text")).alias("pos", "w")
     )
     seq = Window.partitionBy("doc_id").orderBy("pos")
     l1, l2 = F.lead("w", 1).over(seq), F.lead("w", 2).over(seq)
     grams = (
-        words.select(
+        pw.select(
             "doc_id",
             "pos",
             md5_int(
@@ -903,10 +906,10 @@ def ext_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_dedup_incremental",
-    oracle="""
+    oracle=f"""
     WITH fp AS (
         SELECT doc_id,
-               md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fingerprint
+               md5({normalized_sql()}) AS fingerprint
         FROM documents
     ), idx AS (
         SELECT DISTINCT fingerprint FROM fp WHERE doc_id % 5 <> 0
@@ -933,7 +936,7 @@ def ext_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     fp = d.select(
         "doc_id",
-        F.md5(F.lower(F.regexp_replace("text", r"\s+", " "))).alias("fingerprint"),
+        F.md5(normalized("text")).alias("fingerprint"),
     )
     idx = (
         fp.where(F.col("doc_id") % 5 != 0)
@@ -1277,15 +1280,11 @@ _CANONICAL_ORACLE = f"""
     quality AS (
         SELECT doc_id,
                CAST(len(list_filter(
-                        list_filter(string_split_regex(lower(text), '\\s+'),
-                                    x -> x <> ''),
+                        {tokens_sql()},
                         x -> x IN ('the','a','of','and','to','in','is')))
-                    * 1000 // len(list_filter(
-                        string_split_regex(lower(text), '\\s+'),
-                        x -> x <> '')) AS BIGINT) AS q
+                    * 1000 // len({tokens_sql()}) AS BIGINT) AS q
         FROM documents
-        WHERE len(list_filter(string_split_regex(lower(text), '\\s+'),
-                              x -> x <> '')) > 0
+        WHERE len({tokens_sql()}) > 0
     ),
     scored AS (
         SELECT l.cluster_id, l.node AS doc_id, q.q,
@@ -1319,14 +1318,14 @@ def ext_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ext_dedup_minhash_verified(spark, sf_dir).select("doc_a", "doc_b")
     labels = min_label_components(pairs)
     d = load(spark, sf_dir, "documents")
-    tk = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    tk = tokens("text")
     quality = d.select(
         "doc_id",
         F.expr(
-            "CAST(size(filter(filter(split(lower(text), '\\\\s+'),"
+            f"CAST(size(filter(filter(split(lower(text), '{WS_SPARK_SQL}'),"
             " x -> x != ''), x -> array_contains("
             "array('the','a','of','and','to','in','is'), x))) * 1000"
-            " DIV size(filter(split(lower(text), '\\\\s+'), x -> x != ''))"
+            f" DIV size(filter(split(lower(text), '{WS_SPARK_SQL}'), x -> x != ''))"
             " AS BIGINT)"
         ).alias("q"),
     ).where(F.size(tk) > 0)

@@ -51,6 +51,12 @@ from databricks_sales_etl_pipeline_spark.extensions.dedup import (
     shingles_sql,
 )
 from databricks_sales_etl_pipeline_spark.functions import par
+from databricks_sales_etl_pipeline_spark.functions.text import (
+    normalized,
+    normalized_sql,
+    tokens,
+    tokens_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 #: token k-gram length for substring matching: a repeated span must be at
@@ -65,8 +71,7 @@ MAX_GRAM_DF = 32
 _SUBSTRING_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS t
+               {tokens_sql()} AS t
         FROM documents
     ), grams AS (
         SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
@@ -115,9 +120,7 @@ def gram_table(d: DataFrame, k: int = SUB_K) -> DataFrame:
         raise ValueError(f"gram_table requires k >= 2 (a 1-gram has no lead window), got {k}")
     words = d.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos", "w"),
+        F.posexplode(tokens("text")).alias("pos", "w"),
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("w", j).over(win) for j in range(1, k)]
@@ -166,9 +169,7 @@ def materialize_grams(
             F.sum(
                 F.greatest(
                     F.lit(0),
-                    F.size(
-                        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-                    ) - (k - 1),
+                    F.size(tokens("text")) - (k - 1),
                 )
             )
         ).first()[0] or 0
@@ -451,7 +452,6 @@ def _bloom_pos_sql(expr: str, j: int) -> str:
     return md5_band_sql(expr, BLOOM_BITS, f"bloom{j}:")
 
 
-_NORM_SQL = "lower(regexp_replace(text, '\\s+', ' ', 'g'))"
 _HELD_POS = " UNION ".join(
     f"SELECT {_bloom_pos_sql('norm', j)} AS pos FROM held" for j in range(BLOOM_K)
 )
@@ -461,11 +461,11 @@ _PROBE_POS = " UNION ALL ".join(
 )
 _BLOOM_ORACLE = f"""
     WITH held AS (
-        SELECT {_NORM_SQL} AS norm FROM documents WHERE doc_id % 10 = 3
+        SELECT {normalized_sql()} AS norm FROM documents WHERE doc_id % 10 = 3
     ), held_pos AS (
         {_HELD_POS}
     ), probe AS (
-        SELECT doc_id, {_NORM_SQL} AS norm FROM documents WHERE doc_id % 10 <> 3
+        SELECT doc_id, {normalized_sql()} AS norm FROM documents WHERE doc_id % 10 <> 3
     ), probe_pos AS (
         {_PROBE_POS}
     )
@@ -496,7 +496,7 @@ def ext_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round5_ops.py bounds the approximation on a disjoint
     corpus."""
     d = load(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace("text", r"\s+", " "))
+    norm = normalized("text")
     held = d.where(F.col("doc_id") % 10 == 3).select(norm.alias("norm"))
     positions = held.select(
         F.explode(
@@ -540,8 +540,7 @@ _CUT_ORACLE = f"""
         -- COALESCE: a NULL-text doc must yield an EMPTY token list (not
         -- NULL) so the length/md5 columns agree with the Spark side
         SELECT doc_id,
-               COALESCE(list_filter(string_split_regex(lower(text), '\\s+'),
-                                    x -> x <> ''), []) AS t
+               COALESCE({tokens_sql()}, []) AS t
         FROM documents
     ), cutd AS (
         SELECT d.doc_id, d.t,
@@ -592,7 +591,7 @@ def ext_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         F.coalesce(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != ""),
+            tokens("text"),
             F.array().cast("array<string>"),
         ).alias("t"),
     )

@@ -28,6 +28,7 @@ from databricks_sales_etl_pipeline_spark.functions.prefix import (
     doubled_midrank,
     global_order,
 )
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -159,8 +160,7 @@ CAL_LONG_DOC_TOKENS = 40
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents
     ), scored AS (
         SELECT doc_id,
@@ -190,7 +190,7 @@ def ext_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic stand-ins wiring the REPORT shape (swap any model score
     / label column; the plan is one scan + one tiny decile aggregate)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     base = d.select("doc_id", toks.alias("toks")).where(F.size("toks") > 0)
     scored = base.select(
         F.expr(
@@ -223,8 +223,7 @@ PR_THRESHOLDS = (50, 100, 150, 200, 300)
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents
     ), scored AS (
         SELECT (1000 * len(list_filter(toks,
@@ -264,7 +263,7 @@ def ext_eval_pr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     confusion cells as conditional aggregates — thresholds are columns of
     ONE pass, not one job per cutoff."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     scored = (
         d.select(toks.alias("toks"))
         .where(F.size("toks") > 0)
@@ -316,11 +315,10 @@ def ext_eval_pr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_eval_token_f1",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS ref
+               {tokens_sql()} AS ref
         FROM documents WHERE doc_id % 5 = 0
     ), exploded AS (
         SELECT doc_id, ref[CAST(i AS INT)] AS tok,
@@ -364,7 +362,7 @@ def ext_eval_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     between prediction and reference relations is ever materialized."""
     toks = load(spark, sf_dir, "documents").where(F.col("doc_id") % 5 == 0).select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "").alias("ref"),
+        tokens("text").alias("ref"),
     )
     exploded = toks.select(
         "doc_id", F.posexplode("ref").alias("pos", "tok")
@@ -414,8 +412,7 @@ _BLEU_GEOMEAN = (
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS ref
+               {tokens_sql()} AS ref
         FROM documents WHERE doc_id % 5 = 0
     ), stream AS (
         SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
@@ -490,7 +487,7 @@ def ext_eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate×reference join materializes."""
     toks = load(spark, sf_dir, "documents").where(F.col("doc_id") % 5 == 0).select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "").alias("ref"),
+        tokens("text").alias("ref"),
     )
     stream = toks.select(
         "doc_id", F.posexplode("ref").alias("pos", "tok")
@@ -987,8 +984,7 @@ _CAL_SCORED_SQL = f"""
                    // len(toks) AS p,
                CASE WHEN len(toks) >= {CAL_LONG_DOC_TOKENS} THEN 1 ELSE 0 END
                    AS y
-        FROM (SELECT list_filter(string_split_regex(lower(text), '\\s+'),
-                                 x -> x <> '') AS toks
+        FROM (SELECT {tokens_sql()} AS toks
               FROM documents) t
         WHERE len(toks) > 0
 """
@@ -1018,7 +1014,7 @@ def ext_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one scan, one 1-row aggregate."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     base = d.select(toks.alias("toks")).where(F.size("toks") > 0)
     scored = base.select(
         F.expr(
@@ -1072,7 +1068,7 @@ def ext_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one scan, one decile groupBy, one 1-row aggregate."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     base = d.select(toks.alias("toks")).where(F.size("toks") > 0)
     scored = base.select(
         F.expr(
@@ -1322,7 +1318,7 @@ def ext_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one scan + one 10-row band groupBy + one tiny window + a
     1-row class-totals broadcast."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     base = d.select(toks.alias("toks")).where(F.size("toks") > 0)
     scored = base.select(
         F.expr(
@@ -1410,7 +1406,7 @@ def ext_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one scan + one 10-row band groupBy + one tiny window + a
     1-row totals broadcast."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     base = d.select(toks.alias("toks")).where(F.size("toks") > 0)
     scored = base.select(
         F.expr(
@@ -1556,8 +1552,7 @@ _ROUGE_SWAP = (
     oracle=f"""
     WITH RECURSIVE toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '')[1:{ROUGE_MAXTOK}] AS a
+               {tokens_sql()}[1:{ROUGE_MAXTOK}] AS a
         FROM documents WHERE doc_id % {ROUGE_MOD} = 0
     ), pair AS (
         SELECT doc_id, a, CAST(len(a) AS BIGINT) AS n,
@@ -1620,10 +1615,7 @@ def ext_rouge_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.slice(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\s+"),
-                lambda x: x != "",
-            ),
+            tokens("text"),
             1,
             ROUGE_MAXTOK,
         ).alias("a"),

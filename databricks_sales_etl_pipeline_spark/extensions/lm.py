@@ -20,18 +20,16 @@ from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.functions import par
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_band_sql
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql, words
 from databricks_sales_etl_pipeline_spark.registry import query
-
-_WS = r"\s+"
 
 
 @query(
     "ext_ngram_lm_score",
-    oracle="""
+    oracle=f"""
     WITH lt AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS w
+               {tokens_sql()} AS w
         FROM documents
     ),
     bg AS (
@@ -83,9 +81,7 @@ def ext_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # faster (12 alternating reps at sf0.02, 4 cores).
     words = par.by_key(d.select("doc_id", "text"), "doc_id").select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), _WS), lambda x: x != "")
-        ).alias("pos", "w"),
+        F.posexplode(tokens("text")).alias("pos", "w"),
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
     bg = (
@@ -114,10 +110,9 @@ def ext_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_zipf_check",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS tok
+        SELECT unnest({tokens_sql()}) AS tok
         FROM documents
     ), freq AS (
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS f FROM toks GROUP BY tok
@@ -165,9 +160,7 @@ def ext_zipf_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, not the corpus."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("tok")
+        F.explode(tokens("text")).alias("tok")
     )
     freq = toks.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("f")
@@ -223,8 +216,7 @@ MLM_MOD = 8
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS tk
+               {tokens_sql()} AS tk
         FROM documents
     ), marked AS (
         SELECT doc_id,
@@ -269,9 +261,7 @@ def ext_mlm_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("pos", "tok"),
+        F.posexplode(tokens("text")).alias("pos", "tok"),
     )
     key = F.concat_ws(":", F.col("doc_id"), F.col("pos"))
     marked = toks.select(
@@ -331,8 +321,7 @@ GT_MAX_R = 5
     "ext_good_turing",
     oracle=f"""
     WITH tk AS (
-        SELECT list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS t
+        SELECT {tokens_sql()} AS t
         FROM documents
     ), toks AS (
         SELECT unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
@@ -376,7 +365,7 @@ def ext_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one token groupBy (vocab-sized), one frequency-of-frequency
     groupBy (tiny), a 1-row totals broadcast."""
     d = load(spark, sf_dir, "documents")
-    tk = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    tk = tokens("text")
     toks = d.select(
         F.explode(
             F.transform(
@@ -429,10 +418,9 @@ def ext_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_chao1_richness",
-    oracle="""
+    oracle=f"""
     WITH tk AS (
-        SELECT list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS t
+        SELECT {tokens_sql()} AS t
         FROM documents
     ), toks AS (
         SELECT unnest(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
@@ -467,7 +455,7 @@ def ext_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one vocab-sized groupBy + one 1-row aggregate."""
     d = load(spark, sf_dir, "documents")
-    tk = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    tk = tokens("text")
     toks = d.select(
         F.explode(
             F.transform(
@@ -513,8 +501,7 @@ def _huffman_oracle() -> str:
     n2 = 2 * HUF_N - 1
     return f"""
     WITH RECURSIVE toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS tok
+        SELECT unnest({tokens_sql()}) AS tok
         FROM documents
     ), freq AS (
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS f,
@@ -624,12 +611,7 @@ def ext_huffman_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ids, freqs, parents) carried as LIST state."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("tok")
+        F.explode(tokens("text")).alias("tok")
     )
     freq = (
         toks.groupBy("tok")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 DECODE_SCHEMA = T.StructType(
@@ -819,8 +820,6 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: payloads never shuffle — only (video, frame-hash) pairs do;
     candidates are bounded by frame-hash bucket occupancy, the same
     LSH-inverted-index shape as MinHash banding."""
-    import struct as _struct  # noqa: F401  (documented dependency of the walk)
-
     d = load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < MM_DOC_LIMIT
     )
@@ -985,8 +984,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.doc_id,
            i.pix_checksum,
-           CAST(len(list_filter(string_split_regex(lower(d.text), '\\s+'),
-                                x -> x <> '')) AS BIGINT) AS n_caption_tokens,
+           CAST(len({tokens_sql('d.text')}) AS BIGINT) AS n_caption_tokens,
            md5(CAST(i.pix_checksum AS VARCHAR) || ':'
                || md5(COALESCE(d.text, ''))) AS pair_fingerprint
     FROM documents d JOIN img i ON i.doc_id = d.doc_id
@@ -1017,7 +1015,7 @@ def mm_pair_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["doc_id", "pix_checksum"])
 
     img = bin_df.mapInPandas(checksum, "doc_id bigint, pix_checksum bigint")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     return (
         d.select("doc_id", "text")
         .join(img, "doc_id")

@@ -997,8 +997,6 @@ def ext_knapsack_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one top-N scan; the DP is N x CAP integer ops on the
     collected bounded artifact."""
-    import pandas as pd  # noqa: F401
-
     p = load(spark, sf_dir, "part")
     items = (
         p.select(

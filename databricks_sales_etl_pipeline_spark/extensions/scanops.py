@@ -53,6 +53,7 @@ from databricks_sales_etl_pipeline_spark.functions.series import (
     epoch_day,
     epoch_day_sql,
 )
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 #: queue fixture constants (shared by Spark + oracle + tests)
@@ -289,8 +290,7 @@ def ext_inventory_runout(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE toks AS (
         SELECT doc_id, doc_id % {PACK_BUCKETS} AS bucket,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                        x -> x <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     ), seq AS (
         SELECT doc_id, bucket, n_tokens,
@@ -335,9 +335,7 @@ def ext_pack_bins_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401  (applyInPandas contract)
 
     d = load(spark, sf_dir, "documents")
-    n_tokens = F.size(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-    ).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     toks = d.select(
         "doc_id",
         (F.col("doc_id") % PACK_BUCKETS).cast("bigint").alias("bucket"),

@@ -25,6 +25,7 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 N_QUERIES = 5
@@ -948,8 +949,7 @@ def _topic_vecs_cte() -> str:
     return f"""tok AS (
         SELECT doc_id, {band} AS dim FROM (
             SELECT doc_id,
-                   unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                          x -> x <> '')) AS x
+                   unnest({tokens_sql()}) AS x
             FROM documents
         ) words
     ), cnt AS (
@@ -990,9 +990,7 @@ def ext_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("x"),
+        F.explode(tokens("text")).alias("x"),
     )
     cnt = (
         toks.select("doc_id", md5_band(F.col("x"), _TOPIC_DIM, "topic:").alias("dim"))

@@ -27,9 +27,8 @@ from ..catalog import load
 from ..extensions.chunking import md5_band, md5_band_sql
 from ..functions.money import cents
 from ..functions.series import epoch_day, epoch_day_sql
+from ..functions.text import tokens, tokens_sql, words
 from ..registry import query
-
-_WS = r"\s+"
 
 HH_K = 200  # heavy hitter = token with > 1/k of all token occurrences
 
@@ -57,8 +56,7 @@ def _local_candidates_fn():
     "ext_heavy_hitters",
     oracle=f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS token
+        SELECT unnest({tokens_sql()}) AS token
         FROM documents
     ),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tok FROM toks)
@@ -79,7 +77,7 @@ def ext_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     points (integer DIV — parity-safe)."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.explode(F.split(F.lower("text"), _WS)).alias("token")
+        F.explode(words("text")).alias("token")
     ).where(F.col("token") != "")
 
     cands = (
@@ -113,8 +111,7 @@ NOVELTY_TOP_N = 500  # "boilerplate" = the N most frequent corpus bigrams
     oracle=f"""
     WITH lt AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS w
+               {tokens_sql()} AS w
         FROM documents
     ),
     bg AS (
@@ -155,9 +152,7 @@ def ext_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     words = d.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.lower("text"), _WS), lambda x: x != "")
-        ).alias("pos", "w"),
+        F.posexplode(tokens("text")).alias("pos", "w"),
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
     bg = (
@@ -312,8 +307,7 @@ def _cms_salts() -> list[str]:
     "ext_countmin_sketch",
     oracle=f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS token
+        SELECT unnest({tokens_sql()}) AS token
         FROM documents
     ),
     buckets AS (
@@ -360,7 +354,7 @@ def ext_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the tiny sketch table."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.explode(F.split(F.lower("text"), _WS)).alias("token")
+        F.explode(words("text")).alias("token")
     ).where(F.col("token") != "")
     bucket_arr = F.array(
         *[md5_band(F.col("token"), CMS_W, s) for s in _cms_salts()]

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.text import WS, tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 #: pseudo-sentence length (tokens) — the synthetic corpus has no sentence
@@ -41,17 +42,13 @@ RAKE_STOPS = ("a", "the", "and", "of", "to", "in", "is", "it", "for", "on")
 BM25_TERMS = ("table", "spark", "hash")
 BM25_TOPK = 20
 
-_TOKS_SQL = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
-)
-
 
 @query(
     "ext_readability",
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               CAST(len({_TOKS_SQL}) AS BIGINT) AS words,
+               CAST(len({tokens_sql()}) AS BIGINT) AS words,
                CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
                     AS BIGINT) AS syllables
         FROM documents
@@ -77,9 +74,7 @@ def ext_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator ``100·W·S`` so both engines evaluate ONE truncating
     integer division — no doubles anywhere. Zero-shuffle scan."""
     d = load(spark, sf_dir, "documents")
-    words = F.size(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-    ).cast("bigint")
+    words = F.size(tokens("text")).cast("bigint")
     syl = F.size(
         F.expr("regexp_extract_all(lower(text), '[aeiouy]+', 0)")
     ).cast("bigint")
@@ -110,7 +105,7 @@ _STOPS_SQL = "(" + ", ".join(f"'{s}'" for s in RAKE_STOPS) + ")"
     "ext_keyword_rake",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {tokens_sql()} AS toks FROM documents
     ), pos AS (
         SELECT doc_id, CAST(i AS BIGINT) AS pos, toks[CAST(i AS INT)] AS tok
         FROM t, unnest(range(1, len(toks) + 1)) AS u(i)
@@ -145,7 +140,7 @@ def ext_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-format pipeline CLAUDE.md prescribes over per-row
     higher-order-function folds. Score in exact integer ppm."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     pos = d.select(
         "doc_id", F.posexplode(toks).alias("pos", "tok")
     )
@@ -180,7 +175,7 @@ _TERMS_SQL = "(" + ", ".join(f"'{t}'" for t in BM25_TERMS) + ")"
     "ext_bm25_rank",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {tokens_sql()} AS toks FROM documents
     ), dl AS (
         SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t
     ), corpus AS (
@@ -235,7 +230,7 @@ def ext_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (term, doc) groupBy; corpus constants broadcast; top-k is a bounded
     per-term window with a doc_id tiebreak."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     t = d.select("doc_id", toks.alias("toks"))
     dl = t.select("doc_id", F.size("toks").cast("bigint").alias("dl"))
     corpus = dl.agg(
@@ -291,7 +286,7 @@ AUTOC_TOPK = 3
     oracle=f"""
     WITH toks AS (
         SELECT tok FROM (
-            SELECT unnest({_TOKS_SQL}) AS tok FROM documents
+            SELECT unnest({tokens_sql()}) AS tok FROM documents
         )
     ), pref AS (
         SELECT substring(tok, 1, CAST(k AS INT)) AS prefix, tok
@@ -322,9 +317,7 @@ def ext_prefix_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counting."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("tok")
+        F.explode(tokens("text")).alias("tok")
     )
     pref = toks.select(
         F.explode(
@@ -354,7 +347,7 @@ RRF_TOPK = 10
     "ext_retrieval_rrf",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {tokens_sql()} AS toks FROM documents
     ), posts AS (
         SELECT doc_id, toks[CAST(i AS INT)] AS term,
                CAST(COUNT(*) AS BIGINT) AS tf,
@@ -397,7 +390,7 @@ def ext_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     both tf and min-pos), two ranking windows over the matched set, one
     fusion projection — never the corpus after the postings shuffle."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     posts = (
         d.select("doc_id", F.posexplode(toks).alias("pos", "term"))
         .where(F.col("term").isin(*BM25_TERMS))
@@ -432,12 +425,12 @@ def ext_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_template_mining",
-    oracle="""
+    oracle=f"""
     WITH sk AS (
         SELECT doc_id, text,
-               array_to_string(list_slice(list_filter(string_split_regex(
-                   regexp_replace(lower(text), '[0-9]+', '#', 'g'),
-                   '\\s+'), x -> x <> ''), 1, 8), ' ') AS head
+               array_to_string(list_slice({tokens_sql(
+                   "regexp_replace(lower(text), '[0-9]+', '#', 'g')")},
+                   1, 8), ' ') AS head
         FROM documents
     )
     SELECT md5(head) AS skeleton_md5,
@@ -471,7 +464,7 @@ def ext_template_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.filter(
                 F.split(
                     F.regexp_replace(F.lower("text"), "[0-9]+", "#"),
-                    r"\s+",
+                    WS,
                 ),
                 lambda x: x != "",
             ),

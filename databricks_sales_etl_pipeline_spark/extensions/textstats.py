@@ -14,17 +14,16 @@ from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions import par
+from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql, words
 from databricks_sales_etl_pipeline_spark.registry import query
-
-_WS = r"\s+"
 
 
 @query(
     "ext_text_tokens",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     )
@@ -48,7 +47,7 @@ def ext_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct phase and the doc_id aggregate are satisfied by this one
     # exchange, so no further shuffle remains.
     toks = par.by_key(d.select("doc_id", "text"), "doc_id").select(
-        "doc_id", F.explode(F.split(F.lower("text"), _WS)).alias("token")
+        "doc_id", F.explode(words("text")).alias("token")
     )
     counted = (
         toks.where(F.col("token") != "")
@@ -92,12 +91,11 @@ def ext_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_term_frequency",
-    oracle="""
+    oracle=f"""
     SELECT token, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
     FROM (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS token
+               unnest({tokens_sql()}) AS token
         FROM documents
     )
     GROUP BY token
@@ -112,7 +110,7 @@ def ext_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     production adds a per-partition pre-aggregation — which Catalyst's
     partial HashAggregate already provides."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), _WS), lambda x: x != "")
+    toks = tokens("text")
     return (
         d.select("doc_id", F.explode(toks).alias("token"))
         .groupBy("token")
@@ -162,7 +160,7 @@ _SW_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
     WITH t AS (
         SELECT doc_id,
                length(text) AS n_chars_len, text,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     )
@@ -184,7 +182,7 @@ def ext_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4c — document quality signals (length, stopword ratio, mean token
     length) + a boolean gate, the C4/Gopher-style pre-training filter shape."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), _WS), lambda x: x != "")
+    toks = tokens("text")
     sw = F.array(*[F.lit(w) for w in STOPWORDS])
     base = d.select(
         "doc_id", F.length("text").alias("n_chars_len"), "text", toks.alias("toks")
@@ -227,7 +225,7 @@ def _marker_sql(lang: str) -> str:
 _LANG_ORACLE = f"""
     WITH t AS (
         SELECT doc_id, lang,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     ), scored AS (
@@ -257,7 +255,7 @@ def ext_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment swaps the marker lists for char-n-gram profiles; the dataflow
     (scan → per-row array ops → no shuffle) is the same."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), _WS), lambda x: x != "")
+    toks = tokens("text")
     base = d.select("doc_id", "lang", toks.alias("toks")).where(F.size("toks") > 0)
     def _count_markers(markers: list[str]):
         arr = F.array(*[F.lit(w) for w in markers])
@@ -291,8 +289,7 @@ N_PACK_BUCKETS = 16
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, doc_id % {N_PACK_BUCKETS} AS bucket,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                        x -> x <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     ), packed AS (
         SELECT bucket, n_tokens,
@@ -325,9 +322,7 @@ def ext_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    n_tokens = F.size(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-    ).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     toks = d.select(
         "doc_id",
         (F.col("doc_id") % N_PACK_BUCKETS).alias("bucket"),
@@ -354,10 +349,10 @@ def ext_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_quality_gopher",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     ), w AS (
@@ -400,7 +395,7 @@ def ext_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions, identical in the oracle."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), _WS)).alias("tok")
+        "doc_id", F.explode(words("text")).alias("tok")
     ).where(F.col("tok") != "")
     s = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
@@ -429,10 +424,10 @@ def ext_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_repetition_ratio",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               {tokens_sql()}
                    AS toks
         FROM documents
     ), bg AS (
@@ -467,12 +462,12 @@ def ext_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), _WS)).alias("pos", "w")
+    pw = d.select(
+        "doc_id", F.posexplode(words("text")).alias("pos", "w")
     ).where(F.col("w") != "")
     nxt = F.lead("w", 1).over(Window.partitionBy("doc_id").orderBy("pos"))
     bg = (
-        words.select(
+        pw.select(
             "doc_id", F.concat_ws(" ", F.col("w"), nxt).alias("bigram"),
             nxt.isNotNull().alias("_full"),
         )
@@ -493,11 +488,10 @@ def ext_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_tfidf_relevance",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS token
+               unnest({tokens_sql()}) AS token
         FROM documents
     ), tf AS (
         SELECT doc_id, token, COUNT(*) AS tf FROM w GROUP BY doc_id, token
@@ -534,7 +528,7 @@ def ext_tfidf_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     w = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), _WS)).alias("token")
+        "doc_id", F.explode(words("text")).alias("token")
     ).where(F.col("token") != "")
     tf = w.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -567,8 +561,7 @@ def ext_tfidf_relevance(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, doc_id % {N_PACK_BUCKETS} AS bucket,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                        x -> x <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     )
     SELECT doc_id, bucket,
@@ -590,9 +583,7 @@ def ext_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
-    n_tokens = F.size(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-    ).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     toks = d.select(
         "doc_id",
         (F.col("doc_id") % N_PACK_BUCKETS).alias("bucket"),
@@ -615,7 +606,7 @@ def ext_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_langmix_report",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT lang,
                CASE WHEN (CAST(list_sum(list_transform(range(1, 9), i ->
@@ -630,8 +621,7 @@ def ext_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         CAST(i AS INT), 1)) - 1)
                      * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) % 100) < 90
                     THEN 'val' ELSE 'test' END AS split,
-               CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                        x -> x <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     )
     SELECT split, lang,
@@ -653,9 +643,7 @@ def ext_langmix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = (
         F.when(band < 80, "train").when(band < 90, "val").otherwise("test")
     )
-    n_tokens = F.size(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-    ).cast("bigint")
+    n_tokens = F.size(tokens("text")).cast("bigint")
     return (
         d.select(split.alias("split"), "lang", n_tokens.alias("n_tokens"))
         .groupBy("split", "lang")
@@ -674,8 +662,7 @@ VOCAB_TOP_K = 50
     oracle=f"""
     WITH w AS (
         SELECT lang,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS token
+               unnest({tokens_sql()}) AS token
         FROM documents
     ), tf AS (
         SELECT lang, token, COUNT(*) AS tf FROM w GROUP BY lang, token
@@ -704,7 +691,7 @@ def ext_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     w = d.select(
-        "lang", F.explode(F.split(F.lower("text"), _WS)).alias("token")
+        "lang", F.explode(words("text")).alias("token")
     ).where(F.col("token") != "")
     tf = w.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("tf"))
     rnk = F.row_number().over(
@@ -768,8 +755,7 @@ _COOC_MIN_DF = 5
     "ext_cooccurrence_lift",
     oracle=f"""
     WITH dt AS (
-        SELECT DISTINCT doc_id, unnest(list_filter(
-            string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS tok
+        SELECT DISTINCT doc_id, unnest({tokens_sql()}) AS tok
         FROM documents
     ), df AS (
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM dt GROUP BY tok
@@ -803,9 +789,7 @@ def ext_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     dt = d.select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-            )
+            F.array_distinct(tokens("text"))
         ).alias("tok"),
     )
     df_tok = dt.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
@@ -962,8 +946,7 @@ VOCAB_GRID_STEPS = 10
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  x -> x <> '')) AS tok
+               unnest({tokens_sql()}) AS tok
         FROM documents
     ), firsts AS (
         SELECT tok, CAST(MIN(doc_id) AS BIGINT) AS first_doc FROM toks
@@ -1000,9 +983,7 @@ def ext_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-        ).alias("tok"),
+        F.explode(tokens("text")).alias("tok"),
     )
     firsts = toks.groupBy("tok").agg(
         F.min("doc_id").cast("bigint").alias("first_doc")

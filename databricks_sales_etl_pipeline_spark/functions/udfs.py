@@ -16,6 +16,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.text import (
+    WS,
+    py_tokens,
+    tokens_sql,
+    words_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -33,13 +39,11 @@ def fee_adjusted():
 
 @query(
     "udtf_tokenize",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(unnest(range(0, len(list_filter(
-               string_split_regex(lower(text), '\\s+'), x -> x <> '')))) AS INT)
+           CAST(unnest(range(0, len({tokens_sql()}))) AS INT)
                AS pos,
-           unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                              x -> x <> '')) AS token
+           unnest({tokens_sql()}) AS token
     FROM documents WHERE doc_id < 50
     """,
 )
@@ -54,7 +58,7 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="pos: int, token: string")
     class Tokenize:
         def eval(self, text: str):
-            for i, tok in enumerate(text.lower().split()):
+            for i, tok in enumerate(py_tokens(text)):
                 yield i, tok
 
     spark.udtf.register("tokenize", Tokenize)
@@ -159,9 +163,9 @@ def udf_grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_map_in_arrow",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, length(text) AS n_chars,
-           len(string_split_regex(text, '\\s+')) AS n_ws_tokens
+           len({words_sql()}) AS n_ws_tokens
     FROM documents WHERE doc_id < 100
     """,
 )
@@ -186,7 +190,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                     batch.column("doc_id"),
                     pc.cast(pc.utf8_length(text), pa.int32()),
                     pc.cast(
-                        pc.list_value_length(pc.split_pattern_regex(text, r"\s+")),
+                        pc.list_value_length(pc.split_pattern_regex(text, WS)),
                         pa.int32(),
                     ),
                 ],
@@ -380,11 +384,10 @@ def udf_scalar_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udtf_analyze_dynamic",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS toks
+               {tokens_sql()} AS toks
         FROM documents WHERE doc_id < 60
     )
     SELECT doc_id,
@@ -423,7 +426,7 @@ def udtf_analyze_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
             return AnalyzeResult(schema=StructType(fields))
 
         def eval(self, text: str, k: int):
-            toks = [t for t in text.lower().split() if t]
+            toks = py_tokens(text)
             yield tuple(
                 (toks[i] if i < len(toks) else "") for i in range(k)
             ) + (len(toks),)

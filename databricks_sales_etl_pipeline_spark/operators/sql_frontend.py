@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from databricks_sales_etl_pipeline_spark.catalog import register_views
 from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
+from databricks_sales_etl_pipeline_spark.functions.text import WS_SPARK_SQL, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 _ORDER_CENTS = cents_sql("o_totalprice")
@@ -162,23 +163,22 @@ def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_LATERAL)
 
 
-_SQL_LV_OUTER = """
+_SQL_LV_OUTER = f"""
     SELECT doc_id, tok
     FROM documents
     LATERAL VIEW OUTER explode(
-        filter(split(lower(text), '\\\\s+'), x -> x != '')
+        filter(split(lower(text), '{WS_SPARK_SQL}'), x -> x != '')
     ) t AS tok
     WHERE doc_id < 50
 """
 
-_LV_OUTER_ORACLE = """
+_LV_OUTER_ORACLE = f"""
     SELECT doc_id,
            unnest(CASE WHEN lt IS NULL OR len(lt) = 0
                        THEN [CAST(NULL AS VARCHAR)] ELSE lt END) AS tok
     FROM (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'),
-                           x -> x <> '') AS lt
+               {tokens_sql()} AS lt
         FROM documents
         WHERE doc_id < 50
     )

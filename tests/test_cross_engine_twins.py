@@ -29,6 +29,15 @@ from databricks_sales_etl_pipeline_spark.functions.series import (
     epoch_day,
     epoch_day_sql,
 )
+from databricks_sales_etl_pipeline_spark.functions.text import (
+    normalized,
+    normalized_sql,
+    py_tokens,
+    tokens,
+    tokens_sql,
+    words,
+    words_sql,
+)
 from tests.conftest import SF_DIR
 
 ENGINE = Path(__file__).resolve().parents[1] / "databricks_sales_etl_pipeline_spark"
@@ -53,13 +62,16 @@ def test_epoch_day_matches_its_sql_twin(spark):
     assert tuple(got.first()) == want == (-165, 0, 19782, 19782)
 
 
-# empty, 1-word and 2-word docs yield no shingle; doc 4 repeats "a b c"
+# empty, 1-word and 2-word docs yield no shingle; doc 4 repeats "a b c";
+# doc 6's leading space is a positional empty word; doc 7 splits on \t, \x0b
 _CORPUS = [
     (1, ""),
     (2, "one"),
     (3, "two words"),
     (4, "a b c a b c d"),
     (5, "The quick  brown Fox jumps"),
+    (6, " a b c"),
+    (7, "a\tb\x0bc d"),
 ]
 
 
@@ -74,8 +86,44 @@ def test_shingle_rows_match_shingles_sql(spark, k):
     con.executemany("INSERT INTO documents VALUES (?, ?)", _CORPUS)
     want = sorted(con.execute(shingles_sql(k)).fetchall())
     assert got == want
-    assert {d for d, _ in got} == {4, 5} | ({3} if k == 2 else set())
+    assert {d for d, _ in got} == {4, 5, 6, 7} | ({3} if k == 2 else set())
     assert [s for d, s in got if d == 4].count("a b c") == (1 if k == 3 else 0)
+
+
+# leading, trailing and doubled spaces, tab, newline, \x0b (Java \s, not
+# RE2 \s), \xa0 (Python str.split, not Java \s), uppercase, empty
+_EDGE = [
+    "",
+    " a b",
+    "a  b ",
+    "a\tb\n",
+    "a\x0bb",
+    "a\xa0b",
+    "A\x0cB\rc",
+    "  The  Quick\n\nFOX  ",
+]
+
+
+def test_tokens_match_their_sql_and_python_twins(spark):
+    rows = list(enumerate(_EDGE))
+    got = (
+        spark.createDataFrame(rows, "i int, s string")
+        .select("i", words("s"), tokens("s"), normalized("s"))
+        .orderBy("i")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = con.execute(
+        f"SELECT i, {words_sql('s')}, {tokens_sql('s')}, {normalized_sql('s')}"
+        " FROM t ORDER BY i"
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
+    assert [r[2] for r in got] == [py_tokens(s) for s in _EDGE]
+    assert py_tokens("a\x0bb") == ["a", "b"]
+    assert py_tokens("a\xa0b") == ["a\xa0b"]
+    assert want[1][1] == ["", "a", "b"]
 
 
 def test_daily_events_matches_its_sql_twin(spark, duck):
@@ -112,6 +160,10 @@ def _spellings(pattern: str) -> dict[str, int]:
         (re.escape('F.lit("1970-01-01")'), "functions/series.py"),
         # the shingle body: distinct k-word windows over the split words
         (r"unnest\(list_distinct\(\s*list_transform\(", "extensions/dedup.py"),
+        # the whitespace-token rule, Spark and DuckDB spellings
+        (re.escape(r'r"\s+"'), "functions/text.py"),
+        (re.escape(r"'\\s+'"), "functions/text.py"),
+        (re.escape("string_split_regex("), "functions/text.py"),
     ],
 )
 def test_shared_definitions_have_one_home(pattern, home):
