@@ -15,6 +15,15 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.extensions.evalmetrics import (
+    RETURNED_LABEL_SQL,
+    returned_label,
+)
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.series import (
     DAILY_EVENTS_SQL,
     daily_events,
@@ -162,8 +171,7 @@ ATTRIB_WINDOW_H = 24
     )
     SELECT COALESCE(channel, 'direct') AS channel,
            CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           CAST(SUM(CAST(FLOOR((value) * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS value_cents
+           {sum_bigint_sql(cents_sql('value'))} AS value_cents
     FROM attributed GROUP BY COALESCE(channel, 'direct')
     """,
 )
@@ -176,8 +184,6 @@ def ext_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — last_value(ignore nulls) over rows preceding — i.e. the as-of
     join shape: one shuffle on user_id, no per-purchase probe."""
     from pyspark.sql import Window
-
-    from databricks_sales_etl_pipeline_spark.functions.money import cents
 
     e = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
@@ -459,12 +465,12 @@ def ext_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_resample_ohlc",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT user_id, event_id,
                CAST(ts AS TIMESTAMP) AS ts,
                date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start,
-               CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+               {cents_sql('value')} AS cents
         FROM events
     )
     SELECT user_id, hour_start,
@@ -483,13 +489,12 @@ def ext_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id unique), so ties can never flip the survivor across engines
     or partition layouts. One groupBy shuffle; map-side partial min/max."""
     e = load(spark, sf_dir, "events")
-    cents_col = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
     prep = e.select(
         "user_id",
         "event_id",
         "ts",
         F.date_trunc("hour", "ts").alias("hour_start"),
-        cents_col.alias("cents"),
+        cents("value").alias("cents"),
     )
     order_key = F.struct(F.col("ts"), F.col("event_id"))
     return prep.groupBy("user_id", "hour_start").agg(
@@ -526,8 +531,7 @@ def _ewms_terms_sql() -> str:
     oracle=f"""
     WITH daily AS (
         SELECT o_orderpriority, o_orderdate,
-               CAST(SUM(CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS rev_c
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS rev_c
         FROM orders
         GROUP BY o_orderpriority, o_orderdate
     )
@@ -551,9 +555,7 @@ def ext_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, not {W} self-joins."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy("o_orderpriority", "o_orderdate").agg(
-        F.sum(
-            F.floor(F.col("o_totalprice").cast("double") * 100 + 0.5)
-        ).cast("long").alias("rev_c")
+        F.sum(cents("o_totalprice")).cast("long").alias("rev_c")
     )
     from pyspark.sql import Window
 
@@ -1352,13 +1354,13 @@ def ext_hazard_lifetable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_diff_in_diff",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
         SELECT CASE WHEN c.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
                    AS treated,
                CASE WHEN month(CAST(o.o_orderdate AS DATE)) > 6
                     THEN 1 ELSE 0 END AS post,
-               CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS v
+               {cents_sql('o.o_totalprice')} AS v
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ), agg AS (
         SELECT
@@ -1406,8 +1408,6 @@ def ext_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one broadcast customer join + ONE conditional-sum pass (no
     groupBy shuffle at all — the 2×2 grid lives in eight running
     aggregates). At 100 TB the only data-sized cost is the fact scan."""
-    from databricks_sales_etl_pipeline_spark.functions.money import cents
-
     o = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -1471,14 +1471,8 @@ QINI_BAND_CENTS = 5_000_000
 @query(
     "ext_uplift_qini",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), scored AS (
-        SELECT CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT)
-                   // {QINI_BAND_CENTS} AS band,
+    WITH truth AS ({RETURNED_LABEL_SQL}), scored AS (
+        SELECT {cents_sql('o.o_totalprice')} // {QINI_BAND_CENTS} AS band,
                CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END AS t,
                COALESCE(tr.y, 0) AS y
@@ -1521,22 +1515,14 @@ def ext_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one label groupBy, one band groupBy, one ordered window
     over the constant band table. Only the two fact aggregations scale
     with data."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
     scored = o.join(
         truth, o["o_orderkey"] == truth["l_orderkey"], "left"
     ).select(
-        F.expr(
-            f"CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
-            f" DIV {QINI_BAND_CENTS}"
-        ).alias("band"),
+        F.expr(f"{cents_sql('o_totalprice')} DIV {QINI_BAND_CENTS}").alias("band"),
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
         .otherwise(0)
         .alias("t"),
@@ -1893,8 +1879,7 @@ MIGRATION_BAND_CENTS = 50_000_000
     WITH spend AS (
         SELECT o_custkey,
                (month(CAST(o_orderdate AS DATE)) <= 6) AS h1,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS rev
         FROM orders GROUP BY 1, 2
     ), bands AS (
         SELECT o_custkey,
@@ -1932,9 +1917,7 @@ def ext_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("h1"),
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
-            "rc"
-        ),
+        cents("o_totalprice").alias("rc"),
     )
     spend = o.groupBy("o_custkey").agg(
         F.coalesce(
@@ -2304,17 +2287,11 @@ RDD_BANDWIDTH_CENTS = 5_000_000
 @query(
     "ext_reg_discontinuity",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), local_ AS (
-        SELECT CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT)
-                   AS v,
+    WITH truth AS ({RETURNED_LABEL_SQL}), local_ AS (
+        SELECT {cents_sql('o.o_totalprice')} AS v,
                COALESCE(t.y, 0) AS y
         FROM orders o LEFT JOIN truth t ON o.o_orderkey = t.l_orderkey
-        WHERE CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT)
+        WHERE {cents_sql('o.o_totalprice')}
               BETWEEN {RDD_CUTOFF_CENTS - RDD_BANDWIDTH_CENTS}
                   AND {RDD_CUTOFF_CENTS + RDD_BANDWIDTH_CENTS - 1}
     ), sides AS (
@@ -2350,18 +2327,13 @@ def ext_reg_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the bandwidth predicate pushes into the scan (only the
     local window is read at 100 TB with value-clustered layout), one
     label groupBy, one 1-row aggregate."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    v = F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)")
     local_ = (
         o.join(truth, o["o_orderkey"] == truth["l_orderkey"], "left")
         .select(
-            v.alias("v"), F.coalesce(F.col("y"), F.lit(0)).alias("y")
+            cents("o_totalprice").alias("v"),
+            F.coalesce(F.col("y"), F.lit(0)).alias("y"),
         )
         .where(
             (F.col("v") >= RDD_CUTOFF_CENTS - RDD_BANDWIDTH_CENTS)
@@ -2696,8 +2668,7 @@ _PT_SLOPE_C = (
     WITH monthly AS (
         SELECT CASE WHEN c.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS t,
                CAST(month(CAST(o.o_orderdate AS DATE)) AS BIGINT) AS m,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev
+               {sum_bigint_sql(cents_sql('o.o_totalprice'))} AS rev
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         WHERE month(CAST(o.o_orderdate AS DATE)) <= 6
         GROUP BY 1, 2
@@ -2740,9 +2711,7 @@ def ext_parallel_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
         F.month(F.col("o_orderdate").cast("date")).cast("bigint").alias("m"),
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
-            "rc"
-        ),
+        cents("o_totalprice").alias("rc"),
     ).where(F.col("m") <= 6)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     monthly = (
@@ -2865,17 +2834,12 @@ def ext_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_nn_matching",
-    oracle="""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), base AS (
+    oracle=f"""
+    WITH truth AS ({RETURNED_LABEL_SQL}), base AS (
         SELECT o.o_orderkey AS ok,
                CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END AS t,
-               CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+               {cents_sql('o.o_totalprice')} AS v,
                COALESCE(tr.y, 0) AS y
         FROM orders o LEFT JOIN truth tr ON o.o_orderkey = tr.l_orderkey
     ), lined AS (
@@ -2937,12 +2901,7 @@ def ext_nn_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-bucket carry-in. Ties of v never cross buckets, so
     coalesce(in-bucket, carry) is bit-identical to the global window
     (pinned in tests/test_round7_scale.py); no single-partition task."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -2953,7 +2912,7 @@ def ext_nn_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
         .otherwise(0)
         .alias("t"),
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias("v"),
+        cents("o_totalprice").alias("v"),
         F.coalesce(F.col("y"), F.lit(0)).alias("y"),
     )
     from pyspark.sql import Window as _W
@@ -3364,7 +3323,7 @@ QRATIO_PAIRS = [(90, 10), (90, 50), (99, 50)]
     "ext_quantile_ratios",
     oracle=f"""
     WITH s AS (
-        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+        SELECT {cents_sql('o_totalprice')} AS v
         FROM orders
     ), q AS (
         SELECT quantile_cont(v, [{', '.join(
@@ -3398,7 +3357,7 @@ def ext_quantile_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one scan, one multi-quantile aggregate, a 3-row expansion."""
     o = load(spark, sf_dir, "orders")
     s = o.select(
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias("v")
+        cents("o_totalprice").alias("v")
     )
     his = "array(" + ", ".join(
         f"CAST('0.{hi:02d}' AS DOUBLE)" for hi, _ in QRATIO_PAIRS
@@ -3883,7 +3842,7 @@ _SWB_SALT = "switchback-r6"
     oracle=f"""
     WITH e AS (
         SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS bucket,
-               CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
+               {cents_sql('value')} AS v
         FROM events
     ), b AS (
         SELECT bucket,
@@ -3942,9 +3901,7 @@ def ext_switchback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events").select(
         F.expr("unix_micros(ts) DIV 3600000000").alias("bucket"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents("value").alias("v"),
     )
     b = e.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4306,7 +4263,7 @@ DID_PLACEBOS = 8
                    AS treated,
                CAST(year(o.o_orderdate) * 12
                     + (month(o.o_orderdate) - 1) AS BIGINT) AS mi,
-               CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS v
+               {cents_sql('o.o_totalprice')} AS v
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
     ), ext AS (
         SELECT MIN(mi) AS lo, MAX(mi) AS hi FROM seg
@@ -4365,9 +4322,7 @@ def ext_did_placebo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("mi"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents("o_totalprice").alias("v"),
     )
     c = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
@@ -4440,7 +4395,7 @@ QTE_QS = (10, 25, 50, 75, 90)
     WITH x AS (
         SELECT CASE WHEN c.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
                    AS treated,
-               CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+               {cents_sql('o.o_totalprice')} AS v,
                o.o_orderkey
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
     ), rk AS (
@@ -4479,9 +4434,7 @@ def ext_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("v"),
+        cents("o_totalprice").alias("v"),
     )
     c = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),

@@ -26,6 +26,7 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
 )
+from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
 from databricks_sales_etl_pipeline_spark.functions.text import (
     WS,
     tokens,
@@ -672,8 +673,7 @@ ACCT_BAND_CENTS = 250_000
     oracle=f"""
     WITH base AS (
         SELECT n.n_name, c.c_mktsegment,
-               CAST(FLOOR(c.c_acctbal * 100 + 0.5) AS BIGINT)
-                   // {ACCT_BAND_CENTS} AS acct_band
+               {cents_sql('c.c_acctbal')} // {ACCT_BAND_CENTS} AS acct_band
         FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey
     )
     SELECT n_name, c_mktsegment,
@@ -700,9 +700,9 @@ def ext_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "n_name",
         "c_mktsegment",
-        F.expr(
-            f"CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) DIV {ACCT_BAND_CENTS}"
-        ).alias("acct_band"),
+        F.expr(f"{cents_sql('c_acctbal')} DIV {ACCT_BAND_CENTS}").alias(
+            "acct_band"
+        ),
     )
     return base.groupBy("n_name", "c_mktsegment").agg(
         F.count(F.lit(1)).cast("bigint").alias("class_size"),
@@ -721,8 +721,7 @@ def ext_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
            'u_' || substring(md5('pseud:' || CAST(c_custkey AS VARCHAR)), 1, 12)
                AS pseudo_id,
            substring(md5('pseud:' || c_name), 1, 16) AS name_token,
-           CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)
-               // 100000 * 100000 AS acct_cents_coarse,
+           {cents_sql('c_acctbal')} // 100000 * 100000 AS acct_cents_coarse,
            c_mktsegment
     FROM customer
     WHERE c_custkey % 9 = 0
@@ -753,10 +752,9 @@ def ext_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(
             F.md5(F.concat(F.lit("pseud:"), F.col("c_name"))), 1, 16
         ).alias("name_token"),
-        F.expr(
-            "CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) "
-            "DIV 100000 * 100000"
-        ).alias("acct_cents_coarse"),
+        F.expr(f"{cents_sql('c_acctbal')} DIV 100000 * 100000").alias(
+            "acct_cents_coarse"
+        ),
         "c_mktsegment",
     )
 

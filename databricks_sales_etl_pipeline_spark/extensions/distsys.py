@@ -31,7 +31,7 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
 )
-from databricks_sales_etl_pipeline_spark.functions.money import cents
+from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 # --- two-sided geometric mechanism, alpha = 1/2 (epsilon = ln 2) ---
@@ -601,8 +601,8 @@ _SHAMIR_SALT = "shamir-r6"
     "ext_shamir_shares",
     oracle=f"""
     WITH sec AS (
-        SELECT CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    % {SHAMIR_P} AS BIGINT) AS s
+        SELECT CAST(SUM({cents_sql('o_totalprice')}) % {SHAMIR_P} AS BIGINT)
+                   AS s
         FROM orders
     ), coef AS (
         SELECT sec.s,
@@ -642,16 +642,7 @@ def ext_shamir_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size field arithmetic."""
     o = load(spark, sf_dir, "orders")
     sec = o.agg(
-        (
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "bigint"
-                )
-            )
-            % SHAMIR_P
-        )
-        .cast("bigint")
-        .alias("s")
+        (F.sum(cents("o_totalprice")) % SHAMIR_P).cast("bigint").alias("s")
     )
     coef = sec.select(
         "s",
@@ -811,7 +802,7 @@ def _pip_inside_sql(x: str, y: str) -> str:
                              1000, _PIP_SALT)} AS x,
                {md5_band_sql("'py:' || CAST(o_orderkey AS VARCHAR)",
                              1000, _PIP_SALT)} AS y,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+               {cents_sql('o_totalprice')} AS v
         FROM orders
     )
     SELECT {_pip_inside_sql("x", "y")} AS inside,

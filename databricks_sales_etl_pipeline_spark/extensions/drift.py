@@ -21,7 +21,11 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
 )
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.prefix import (
     div_width,
     doubled_midrank,
@@ -152,7 +156,7 @@ def ext_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     base = o.select(
         F.least(
-            F.expr(f"{_CENTS_EXPR} DIV {DRIFT_BAND_CENTS}"),
+            F.expr(f"{cents_sql('o_totalprice')} DIV {DRIFT_BAND_CENTS}"),
             F.lit(DRIFT_MAX_BUCKET),
         ).alias("bucket"),
         (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("is_base"),
@@ -200,9 +204,6 @@ def ext_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("t_base", "t_cur")
     )
-
-
-_CENTS_EXPR = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
 
 
 @query(
@@ -1301,8 +1302,7 @@ _RUNS_REJECT = (
     oracle=f"""
     WITH daily AS (
         SELECT {epoch_day_sql('o_orderdate')} AS d,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS x
         FROM orders GROUP BY 1
     ), moves AS (
         SELECT d,
@@ -1515,7 +1515,7 @@ TV_BAND_CENTS = 5_000_000
     "ext_tv_distance",
     oracle=f"""
     WITH {_half_year_tally_sql(
-        f"CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) // {TV_BAND_CENTS}"
+        f"{cents_sql('o_totalprice')} // {TV_BAND_CENTS}"
     )}, shares AS (
         SELECT CAST(b.v AS BIGINT) AS band, b.c1, b.c2,
                CAST(b.c1 * 1000000 // t.n1 AS BIGINT) AS p_ppm,
@@ -1546,10 +1546,7 @@ def ext_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     bands = _half_year_tally(
         o,
-        F.expr(
-            f"CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
-            f" DIV {TV_BAND_CENTS}"
-        ),
+        F.expr(f"{cents_sql('o_totalprice')} DIV {TV_BAND_CENTS}"),
     )
     tot = bands.agg(
         F.sum("c1").cast("bigint").alias("n1"),
@@ -1686,10 +1683,10 @@ def ext_wasserstein_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_cvar_tail",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT o_orderpriority AS prio,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+               {cents_sql('o_totalprice')} AS v
         FROM orders
     ), var_ AS (
         SELECT prio,
@@ -1748,7 +1745,7 @@ _QQ_ARRAY = "array(" + ", ".join(f"CAST('{p}' AS DOUBLE)" for p in QQ_PROBS) + "
     "ext_qq_table",
     oracle=f"""
     WITH s AS (
-        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+        SELECT {cents_sql('o_totalprice')} AS v,
                (month(CAST(o_orderdate AS DATE)) <= 6) AS g1
         FROM orders
     ), q AS (
@@ -1776,7 +1773,7 @@ def ext_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one scan, one 2-cell aggregate, a 19-row expansion."""
     o = load(spark, sf_dir, "orders")
     s = o.select(
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias("v"),
+        cents("o_totalprice").alias("v"),
         (F.month(F.col("o_orderdate").cast("date")) <= 6).alias("g1"),
     )
     q = s.agg(
@@ -2058,8 +2055,7 @@ def ext_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
         SELECT {epoch_day_sql('o_orderdate')} AS d,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS x
         FROM orders GROUP BY 1
     ), ctx AS (
         SELECT d, x,
@@ -2438,8 +2434,7 @@ _MK_Z = (
     oracle=f"""
     WITH daily AS (
         SELECT {epoch_day_sql('o_orderdate')} AS d,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS x
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS x
         FROM orders GROUP BY 1
     ), s AS (
         SELECT CAST(SUM(CASE WHEN b.x > a.x THEN 1
@@ -3973,7 +3968,7 @@ COPULA_Q = 5
     oracle=f"""
     WITH per AS (
         SELECT o.o_orderkey,
-               CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+               {cents_sql('o.o_totalprice')} AS v,
                CAST(COUNT(l.l_orderkey) AS BIGINT) AS nl
         FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
         GROUP BY 1, 2
@@ -4102,8 +4097,7 @@ def _delta_exprs() -> dict[str, str]:
     oracle=f"""
     WITH per AS (
         SELECT user_id,
-               CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS y,
+               {sum_bigint_sql(cents_sql('value'))} AS y,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY user_id
     ), mom AS (
@@ -4138,11 +4132,7 @@ def ext_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole inference costs one shuffle."""
     e = load(spark, sf_dir, "events")
     per = e.groupBy("user_id").agg(
-        F.sum(
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("y"),
+        F.sum(cents("value")).cast("bigint").alias("y"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     mom = per.agg(
@@ -4185,8 +4175,7 @@ _JK_SE = (
     oracle=f"""
     WITH per AS (
         SELECT user_id,
-               CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS y,
+               {sum_bigint_sql(cents_sql('value'))} AS y,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY user_id
     ), tot AS (
@@ -4228,11 +4217,7 @@ def ext_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     U× blowup."""
     e = load(spark, sf_dir, "events")
     per = e.groupBy("user_id").agg(
-        F.sum(
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("y"),
+        F.sum(cents("value")).cast("bigint").alias("y"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     tot = per.agg(
@@ -4270,7 +4255,7 @@ XBAR_D4_MILLI = 2114
     oracle=f"""
     WITH sub AS (
         SELECT {epoch_day_sql('o_orderdate')} AS d,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+               {cents_sql('o_totalprice')} AS v,
                ROW_NUMBER() OVER (PARTITION BY CAST(o_orderdate AS DATE)
                                   ORDER BY o_orderkey) AS rk
         FROM orders QUALIFY rk <= {XBAR_N}
@@ -4379,8 +4364,7 @@ NELSON_R3 = 6
     oracle=f"""
     WITH daily AS (
         SELECT {epoch_day_sql('o_orderdate')} AS d,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS v
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS v
         FROM orders GROUP BY 1
     ), c AS (
         SELECT CAST(SUM(v) * 1000 // COUNT(*) AS BIGINT) AS center
@@ -4445,13 +4429,7 @@ def ext_nelson_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(
         epoch_day("o_orderdate").alias("d")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                "bigint"
-            )
-        )
-        .cast("bigint")
-        .alias("v")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("v")
     )
     c = daily.agg(
         F.expr("CAST(SUM(v) * 1000 DIV COUNT(*) AS BIGINT)").alias(
@@ -4526,7 +4504,7 @@ def _kw_sq_over(s: str, n: str) -> str:
     oracle=f"""
     WITH x AS (
         SELECT o_orderpriority AS grp,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+               {cents_sql('o_totalprice')} AS v
         FROM orders
     ), rk AS (
         SELECT grp, v,
@@ -4618,8 +4596,7 @@ FRIED_K = 5
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name AS blk, p.p_brand AS brand,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS r
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS r
         FROM lineitem l
         JOIN orders o ON o.o_orderkey = l.l_orderkey
         JOIN customer c ON c.c_custkey = o.o_custkey
@@ -4900,7 +4877,7 @@ def ext_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_wilcoxon_signed_rank",
-    oracle="""
+    oracle=f"""
     WITH cut AS (
         SELECT CAST((MIN(year(CAST(o_orderdate AS DATE)))
                      + MAX(year(CAST(o_orderdate AS DATE)))) // 2
@@ -4910,8 +4887,7 @@ def ext_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT p.p_brand AS brand,
                CASE WHEN year(CAST(o.o_orderdate AS DATE)) <= cut.y
                     THEN 1 ELSE 2 END AS h,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS r,
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS r,
                CAST(COUNT(DISTINCT year(CAST(o.o_orderdate AS DATE))
                           * 100 + month(CAST(o.o_orderdate AS DATE)))
                     AS BIGINT) AS months

@@ -659,6 +659,26 @@ def ext_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the returned-order label shared by the classifier evaluations: one row
+#: per order with lines, y = 1 when any of its lines was returned
+RETURNED_LABEL_SQL = """
+        SELECT l_orderkey,
+               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+                    AS BIGINT) AS y
+        FROM lineitem GROUP BY l_orderkey
+    """
+
+
+def returned_label(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of :data:`RETURNED_LABEL_SQL`: ``(l_orderkey, y)``."""
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
+    return li.groupBy("l_orderkey").agg(
+        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
+        .cast("bigint")
+        .alias("y")
+    )
+
+
 #: McNemar classifier-A decision threshold (cents) — mid-range of the
 #: fixture's order totals; shared by Spark, oracle and tests.
 MCNEMAR_A_CENTS = 25_000_000
@@ -667,12 +687,7 @@ MCNEMAR_A_CENTS = 25_000_000
 @query(
     "ext_mcnemar_test",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), paired AS (
+    WITH truth AS ({RETURNED_LABEL_SQL}), paired AS (
         SELECT COALESCE(t.y, 0) AS y,
                CASE WHEN {cents_sql('o.o_totalprice')} > {MCNEMAR_A_CENTS}
                     THEN 1 ELSE 0 END AS a,
@@ -718,12 +733,7 @@ def ext_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one lineitem groupBy (the label), one broadcast-joinable
     probe, one 1-row aggregate. The label aggregation is the only
     shuffle that scales with data."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -781,12 +791,7 @@ ISO_BAND_CENTS = 5_000_000
 @query(
     "ext_isotonic_calibration",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), scored AS (
+    WITH truth AS ({RETURNED_LABEL_SQL}), scored AS (
         SELECT {cents_sql('o.o_totalprice')} // {ISO_BAND_CENTS} AS band,
                COALESCE(t.y, 0) AS y
         FROM orders o LEFT JOIN truth t ON o.o_orderkey = t.l_orderkey
@@ -833,20 +838,12 @@ def ext_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one label groupBy + one band groupBy scale with data; the
     lattice math is O(B^3) on B=10 rows."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     scored = o.join(
         truth, o["o_orderkey"] == truth["l_orderkey"], "left"
     ).select(
-        F.expr(
-            f"CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
-            f" DIV {ISO_BAND_CENTS}"
-        ).alias("band"),
+        F.expr(f"{cents_sql('o_totalprice')} DIV {ISO_BAND_CENTS}").alias("band"),
         F.coalesce(F.col("y"), F.lit(0)).alias("y"),
     )
     # 10-row model table consumed FIVE times by the lattice below —
@@ -916,12 +913,7 @@ _POWER_EXPR = (
 @query(
     "ext_power_analysis",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), base AS (
+    WITH truth AS ({RETURNED_LABEL_SQL}), base AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(COALESCE(t.y, 0)) AS BIGINT) AS pos,
                CAST(COUNT(DISTINCT CAST(o.o_orderdate AS DATE)) AS BIGINT)
@@ -949,12 +941,7 @@ def ext_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(2·n_per_arm / daily_rate) is integer ceiling division.
 
     Shape: one label groupBy + a single 1-row scan aggregate."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     base = o.join(
         truth, o["o_orderkey"] == truth["l_orderkey"], "left"
@@ -1182,12 +1169,7 @@ def ext_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ext_cohens_kappa",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), paired AS (
+    WITH truth AS ({RETURNED_LABEL_SQL}), paired AS (
         SELECT CASE WHEN {cents_sql('o.o_totalprice')} > {MCNEMAR_A_CENTS}
                     THEN 1 ELSE 0 END AS a,
                CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1228,12 +1210,7 @@ def ext_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ; kappa asks how much they AGREE.
 
     Shape: one label groupBy + one 1-row conditional aggregate."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )

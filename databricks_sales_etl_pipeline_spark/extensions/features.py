@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.extensions.evalmetrics import (
+    RETURNED_LABEL_SQL,
+    returned_label,
+)
 from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
 from databricks_sales_etl_pipeline_spark.functions.prefix import (
     div_width,
@@ -868,7 +872,7 @@ _OLS2_B0 = (
     oracle=f"""
     WITH pts AS (
         SELECT CAST(l_quantity AS BIGINT) AS x,
-               CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT) AS z,
+               {cents_sql('l_discount')} AS z,
                {cents_sql('l_extendedprice')} AS y
         FROM lineitem
     ), sums AS (
@@ -907,7 +911,7 @@ def ext_ols_two_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     pts = li.select(
         F.col("l_quantity").cast("bigint").alias("x"),
-        F.floor(F.col("l_discount") * 100 + 0.5).cast("bigint").alias("z"),
+        cents("l_discount").alias("z"),
         cents(F.col("l_extendedprice")).cast("bigint").alias("y"),
     )
     sums = pts.agg(
@@ -1092,12 +1096,7 @@ ABUSE_MIN_ORDERS = 5
 @query(
     "ext_returns_abuse",
     oracle=f"""
-    WITH truth AS (
-        SELECT l_orderkey,
-               CAST(MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS y
-        FROM lineitem GROUP BY l_orderkey
-    ), per_c AS (
+    WITH truth AS ({RETURNED_LABEL_SQL}), per_c AS (
         SELECT o.o_custkey,
                CAST(COUNT(*) AS BIGINT) AS trials,
                CAST(SUM(COALESCE(t.y, 0)) AS BIGINT) AS succ
@@ -1132,12 +1131,7 @@ def ext_returns_abuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one label groupBy + one custkey groupBy + a 1-row global
     broadcast; the Wilson bound is per-row scalar math."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    truth = li.groupBy("l_orderkey").agg(
-        F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("bigint")
-        .alias("y")
-    )
+    truth = returned_label(spark, sf_dir)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     per_c = (
         o.join(truth, o["o_orderkey"] == truth["l_orderkey"], "left")
@@ -1336,10 +1330,10 @@ def ext_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_tukey_fences",
-    oracle="""
+    oracle=f"""
     WITH x AS (
         SELECT p.p_brand AS brand,
-               CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS c,
+               {cents_sql('l.l_extendedprice')} AS c,
                l.l_orderkey, l.l_linenumber
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     ), cum AS (

@@ -29,15 +29,38 @@ from ..functions.localrel import local_df
 from ..registry import query
 
 
+def copurchase_edges(li: DataFrame) -> DataFrame:
+    """The co-purchase graph's edges: distinct part pairs ``(a, b)`` with
+    a < b ordered on the same order. ``li`` carries ``l_orderkey`` and
+    ``l_partkey``; callers choose their own checkpoint."""
+    x, y = li.alias("x"), li.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
+        )
+        .select(
+            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
+        )
+        .distinct()
+    )
+
+
+def copurchase_edges_sql(src: str = "lineitem") -> str:
+    """SQL twin of :func:`copurchase_edges` over the relation ``src``."""
+    return f"""
+        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
+        FROM {src} l1
+        JOIN {src} l2 ON l2.l_orderkey = l1.l_orderkey
+                      AND l1.l_partkey < l2.l_partkey
+    """
+
+
 @query(
     "ext_graph_triangles",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey
-    ),
+    oracle=f"""
+    WITH e AS ({copurchase_edges_sql()}),
     deg AS (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS d
         FROM (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
@@ -60,23 +83,11 @@ def ext_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration (each triangle generated exactly once from its
     lowest-(degree, id) corner)."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("x"), li.alias("y")
     # Materialize the working set (edge list, degrees, oriented edges) with
     # localCheckpoint: the census reads each one from several consumers, and
     # without truncation every aggregate replays the whole upstream lineage
     # (first draft: 29 shuffles in one plan; this shape: 4).
-    edges = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = copurchase_edges(li).localCheckpoint()
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))
@@ -136,27 +147,16 @@ def ext_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_DEPTH = 3
 #: sparsify: only co-purchases from every 11th order, so distances > 1 exist
 _BFS_ORDER_MOD = 11
+_BFS_SLICE = f"(SELECT * FROM lineitem WHERE l_orderkey % {_BFS_ORDER_MOD} = 0)"
 
 
 @query(
     "ext_graph_bfs",
     oracle=f"""
     WITH RECURSIVE eu AS (
-        SELECT a, b FROM (
-            SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-            FROM lineitem l1
-            JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                            AND l1.l_partkey < l2.l_partkey
-            WHERE l1.l_orderkey % {_BFS_ORDER_MOD} = 0
-        )
+        SELECT a, b FROM ({copurchase_edges_sql(_BFS_SLICE)})
         UNION ALL
-        SELECT b, a FROM (
-            SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-            FROM lineitem l1
-            JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                            AND l1.l_partkey < l2.l_partkey
-            WHERE l1.l_orderkey % {_BFS_ORDER_MOD} = 0
-        )
+        SELECT b, a FROM ({copurchase_edges_sql(_BFS_SLICE)})
     ), bfs(v, d) AS (
         SELECT MIN(a), 0 FROM eu
         UNION ALL
@@ -180,20 +180,12 @@ def ext_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round, one frontier⋈edges shuffle + one min groupBy; the
     frontier-dedup is what keeps dense graphs from exploding the way the
     oracle's path enumeration would."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("x"), li.alias("y")
-    half = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .where(F.col("x.l_orderkey") % _BFS_ORDER_MOD == 0)
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
+    li = (
+        load(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .where(F.col("l_orderkey") % _BFS_ORDER_MOD == 0)
     )
+    half = copurchase_edges(li)
     eu = half.unionAll(
         half.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
@@ -219,12 +211,7 @@ JACCARD_TOP_K = 20
 @query(
     "ext_graph_jaccard_neighbors",
     oracle=f"""
-    WITH e AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey
-    ),
+    WITH e AS ({copurchase_edges_sql()}),
     adj AS (
         SELECT a AS v, b AS n FROM e UNION ALL SELECT b AS v, a AS n FROM e
     ),
@@ -263,19 +250,7 @@ def ext_graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact form is the right default. Three shuffles: adjacency
     groupBy, wedge groupBy, and the broadcast degree joins."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    x, y = li.alias("x"), li.alias("y")
-    edges = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = copurchase_edges(li).localCheckpoint()
     adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -316,13 +291,8 @@ LPA_ITERS = 3
 
 @query(
     "ext_graph_label_prop",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey
-    ),
+    oracle=f"""
+    WITH e AS ({copurchase_edges_sql()}),
     adj AS (
         SELECT a AS v, b AS n FROM e UNION ALL SELECT b AS v, a AS n FROM e
     ),
@@ -375,18 +345,7 @@ def ext_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final plan replays all K rounds). Oracle: the K=3 rounds unrolled
     as chained CTEs."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    x, y = li.alias("x"), li.alias("y")
-    edges = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-    )
+    edges = copurchase_edges(li)
     adj = (
         edges.select(F.col("a").alias("v"), F.col("b").alias("n"))
         .unionAll(edges.select(F.col("b").alias("v"), F.col("a").alias("n")))
@@ -597,13 +556,8 @@ def ext_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_degree_distribution",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey
-    ), adj AS (
+    oracle=f"""
+    WITH e AS ({copurchase_edges_sql()}), adj AS (
         SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e
     ), deg AS (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY v
@@ -633,18 +587,7 @@ def ext_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one distinct-edge projection, one degree groupBy
     (vertex-sized), a ~log2(maxdeg)-row bucket aggregate + lag."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("x"), li.alias("y")
-    e = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-    )
+    e = copurchase_edges(li)
     adj = e.select(F.col("a").alias("v")).unionAll(
         e.select(F.col("b").alias("v"))
     )
@@ -690,12 +633,7 @@ _ASSORT_DEN = (
 @query(
     "ext_assortativity",
     oracle=f"""
-    WITH e AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey
-    ), both_ AS (
+    WITH e AS ({copurchase_edges_sql()}), both_ AS (
         SELECT a AS u, b AS v FROM e UNION ALL SELECT b AS u, a AS v FROM e
     ), deg AS (
         SELECT u AS vtx, CAST(COUNT(*) AS BIGINT) AS d
@@ -729,19 +667,7 @@ def ext_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: distinct edges, one degree groupBy, two degree joins keyed
     on the vertex table, a 1-row moment aggregate."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("x"), li.alias("y")
-    e = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    e = copurchase_edges(li).localCheckpoint()
     both = e.select(
         F.col("a").alias("u"), F.col("b").alias("v")
     ).unionAll(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -772,13 +698,8 @@ def ext_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_modularity",
-    oracle="""
-    WITH e AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey
-    ), lab AS (
+    oracle=f"""
+    WITH e AS ({copurchase_edges_sql()}), lab AS (
         SELECT p_partkey AS v, p_brand AS c FROM part
     ), edges AS (
         SELECT la.c AS ca, lb.c AS cb
@@ -825,18 +746,7 @@ def ext_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     community aggregates."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    a, b = li.alias("x"), li.alias("y")
-    e = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-    )
+    e = copurchase_edges(li)
     la = p.select(F.col("p_partkey").alias("a"), F.col("p_brand").alias("ca"))
     lb = p.select(F.col("p_partkey").alias("b"), F.col("p_brand").alias("cb"))
     edges = (
@@ -892,19 +802,11 @@ def ext_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_K = 3
 KCORE_ROUNDS = 5
 
-_KCORE_EDGES = """
-    SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-    FROM lineitem l1
-    JOIN lineitem l2 ON l2.l_orderkey = l1.l_orderkey
-                    AND l1.l_partkey < l2.l_partkey
-"""
-
-
 def _kcore_oracle() -> str:
     """Unrolled peel: round i+1 keeps the edges whose BOTH endpoints have
     degree >= K in round i's surviving subgraph (simultaneous removal —
     identical to the Spark loop by construction)."""
-    ctes = [f"e0 AS MATERIALIZED ({_KCORE_EDGES})"]
+    ctes = [f"e0 AS MATERIALIZED ({copurchase_edges_sql()})"]
     for i in range(KCORE_ROUNDS):
         ctes.append(
             f"""k{i} AS MATERIALIZED (
@@ -949,19 +851,7 @@ def ext_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus two semi-joins against the vertex-sized keep list. Per-round
     census rows are 1-row aggregates unioned at the end."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    x, y = li.alias("x"), li.alias("y")
-    cur = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(
-            F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    cur = copurchase_edges(li).localCheckpoint()
     stats = []
     for r in range(KCORE_ROUNDS + 1):
         vs = cur.select(F.explode(F.array("a", "b")).alias("v"))

@@ -22,25 +22,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
-_SRC_SQL = """
+_SRC_SQL = f"""
     SELECT c_custkey, 'legacy' AS src, CAST(1 AS BIGINT) AS ts,
            c_name AS name,
-           CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS acct_cents,
+           {cents_sql('c_acctbal')} AS acct_cents,
            c_mktsegment AS segment
     FROM customer
     UNION ALL
     SELECT c_custkey, 'crm', CAST(2 AS BIGINT),
            upper(c_name),
            CASE WHEN c_custkey % 3 = 0 THEN NULL
-                ELSE CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) + 7 END,
+                ELSE {cents_sql('c_acctbal')} + 7 END,
            c_mktsegment
     FROM customer
     UNION ALL
     SELECT c_custkey, 'web', CAST(3 AS BIGINT),
            CASE WHEN c_custkey % 2 = 0 THEN NULL ELSE c_name END,
-           CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) + 11,
+           {cents_sql('c_acctbal')} + 11,
            CASE WHEN c_custkey % 5 = 0 THEN NULL ELSE c_mktsegment END
     FROM customer
 """
@@ -70,13 +71,13 @@ def ext_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     source recorded for lineage). One grouped aggregation over the
     unioned source feeds — the scalable MDM merge shape."""
     c = load(spark, sf_dir, "customer")
-    cents = F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
+    acct = cents("c_acctbal")
     legacy = c.select(
         "c_custkey",
         F.lit("legacy").alias("src"),
         F.lit(1).cast("bigint").alias("ts"),
         F.col("c_name").alias("name"),
-        cents.alias("acct_cents"),
+        acct.alias("acct_cents"),
         F.col("c_mktsegment").alias("segment"),
     )
     crm = c.select(
@@ -85,7 +86,7 @@ def ext_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2).cast("bigint").alias("ts"),
         F.upper("c_name").alias("name"),
         F.when(F.col("c_custkey") % 3 == 0, F.lit(None).cast("bigint"))
-        .otherwise(cents + 7)
+        .otherwise(acct + 7)
         .alias("acct_cents"),
         F.col("c_mktsegment").alias("segment"),
     )
@@ -96,7 +97,7 @@ def ext_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("c_custkey") % 2 == 0, F.lit(None).cast("string"))
         .otherwise(F.col("c_name"))
         .alias("name"),
-        (cents + 11).alias("acct_cents"),
+        (acct + 11).alias("acct_cents"),
         F.when(F.col("c_custkey") % 5 == 0, F.lit(None).cast("string"))
         .otherwise(F.col("c_mktsegment"))
         .alias("segment"),
@@ -118,13 +119,13 @@ def ext_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- CDC apply --------------------------------------------------------------
 
-_CDC_SQL = """
+_CDC_SQL = f"""
     SELECT o_orderkey AS k, 'I' AS op, CAST(1 AS BIGINT) AS ts,
-           CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+           {cents_sql('o_totalprice')} AS cents
     FROM orders
     UNION ALL
     SELECT o_orderkey, 'U', CAST(2 AS BIGINT),
-           CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) + 100
+           {cents_sql('o_totalprice')} + 100
     FROM orders WHERE o_orderkey % 3 = 0
     UNION ALL
     SELECT o_orderkey, 'D', CAST(3 AS BIGINT), NULL
@@ -164,18 +165,18 @@ def ext_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert at ts=1, +100-cent update at ts=2 for key%3=0, delete at ts=3
     for key%10=0) so every op interleaving occurs."""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
+    amt = cents("o_totalprice")
     ins = o.select(
         F.col("o_orderkey").alias("k"),
         F.lit("I").alias("op"),
         F.lit(1).cast("bigint").alias("ts"),
-        cents.alias("cents"),
+        amt.alias("cents"),
     )
     upd = o.where(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_orderkey").alias("k"),
         F.lit("U").alias("op"),
         F.lit(2).cast("bigint").alias("ts"),
-        (cents + 100).alias("cents"),
+        (amt + 100).alias("cents"),
     )
     dele = o.where(F.col("o_orderkey") % 10 == 0).select(
         F.col("o_orderkey").alias("k"),
@@ -202,10 +203,10 @@ def ext_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: perturbed second source for linkage: case-mangled names, slightly
 #: shifted balances, some segments dropped — same custkey = true match.
-_LINK_B_SQL = """
+_LINK_B_SQL = f"""
     SELECT c_custkey AS b_key, c_nationkey AS b_nat,
            upper(c_name) AS b_name,
-           CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)
+           {cents_sql('c_acctbal')}
                + CASE WHEN c_custkey % 4 = 0 THEN 7 ELSE 0 END AS b_bal,
            CASE WHEN c_custkey % 5 = 0 THEN NULL ELSE c_mktsegment END AS b_seg
     FROM customer
@@ -218,7 +219,7 @@ _LINK_B_SQL = """
     WITH a AS (
         SELECT c_custkey AS a_key, c_nationkey AS a_nat,
                c_name AS a_name,
-               CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS a_bal,
+               {cents_sql('c_acctbal')} AS a_bal,
                c_mktsegment AS a_seg
         FROM customer
     ), b AS ({_LINK_B_SQL}),
@@ -276,7 +277,7 @@ def ext_fellegi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("a_key"),
         F.col("c_nationkey").alias("a_nat"),
         F.col("c_name").alias("a_name"),
-        F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint").alias("a_bal"),
+        cents("c_acctbal").alias("a_bal"),
         F.col("c_mktsegment").alias("a_seg"),
     )
     b = c.select(
@@ -284,7 +285,7 @@ def ext_fellegi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("b_nat"),
         F.upper("c_name").alias("b_name"),
         (
-            F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
+            cents("c_acctbal")
             + F.when(F.col("c_custkey") % 4 == 0, 7).otherwise(0)
         ).alias("b_bal"),
         F.when(F.col("c_custkey") % 5 == 0, None)

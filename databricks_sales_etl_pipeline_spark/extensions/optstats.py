@@ -31,7 +31,11 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 HIST_BUCKETS = 16
@@ -371,8 +375,7 @@ def _gs_oracle() -> str:
     return f"""
     WITH RECURSIVE aff AS MATERIALIZED (
         SELECT l.l_suppkey AS s, p.p_brand AS b,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS v
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS v
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         GROUP BY 1, 2
     ), sup AS MATERIALIZED (
@@ -587,8 +590,7 @@ def _mp_round_ctes(i: int) -> str:
     oracle=f"""
     WITH cells AS MATERIALIZED (
         SELECT o.o_orderpriority AS a, c.c_mktsegment AS b,
-               CAST(CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5)
-                                  AS BIGINT)) AS BIGINT)
+               CAST({sum_bigint_sql(cents_sql('o.o_totalprice'))}
                     // COUNT(*) AS BIGINT) AS v
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         GROUP BY 1, 2
@@ -692,8 +694,8 @@ BZ_N = 8
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name AS player,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5)
-                             AS BIGINT)) // 100000000 AS BIGINT) AS w
+               CAST(SUM({cents_sql('o.o_totalprice')}) // 100000000 AS BIGINT)
+                   AS w
         FROM orders o
         JOIN customer c ON c.c_custkey = o.o_custkey
         JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -820,8 +822,8 @@ def _ss_popcount_sql(m: str) -> str:
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name AS player,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5)
-                             AS BIGINT)) // 100000000 AS BIGINT) AS w
+               CAST(SUM({cents_sql('o.o_totalprice')}) // 100000000 AS BIGINT)
+                   AS w
         FROM orders o
         JOIN customer c ON c.c_custkey = o.o_custkey
         JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -944,10 +946,10 @@ def _knap_oracle() -> str:
     return f"""
     WITH RECURSIVE items AS MATERIALIZED (
         SELECT p_partkey AS pid,
-               CAST(FLOOR(p_retailprice * 100 + 0.5) AS BIGINT) AS v,
+               {cents_sql('p_retailprice')} AS v,
                CAST(p_size AS BIGINT) AS w,
                CAST(ROW_NUMBER() OVER (
-                   ORDER BY FLOOR(p_retailprice * 100 + 0.5) DESC,
+                   ORDER BY {cents_sql('p_retailprice')} DESC,
                             p_partkey) AS BIGINT) AS i
         FROM part QUALIFY i <= {KNAP_N}
     ), iv AS MATERIALIZED (
@@ -1001,9 +1003,7 @@ def ext_knapsack_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = (
         p.select(
             F.col("p_partkey").alias("pid"),
-            F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("v"),
+            cents("p_retailprice").alias("v"),
             F.col("p_size").cast("bigint").alias("w"),
         )
         .withColumn(

@@ -33,7 +33,11 @@ from pyspark.sql.functions import broadcast
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_band, md5_band_sql
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.prefix import (
     div_width,
     global_order,
@@ -394,11 +398,11 @@ _CUPED_ADJ = (
         SELECT user_id,
                {md5_band_sql('user_id', 2, _CUPED_SALT)} AS arm,
                CAST(SUM(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= {_CUPED_CUT_DAY}
-                        THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                        THEN {cents_sql('value')}
                         ELSE 0 END) AS BIGINT) AS x,
                CAST(SUM(CASE WHEN day(CAST(ts AS TIMESTAMP)) > {_CUPED_CUT_DAY}
                              AND event_type = 'purchase'
-                        THEN CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
+                        THEN {cents_sql('value')}
                         ELSE 0 END) AS BIGINT) AS y
         FROM events GROUP BY user_id
     ), s AS (
@@ -1204,11 +1208,10 @@ def ext_adstock_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_hhi_concentration",
-    oracle="""
+    oracle=f"""
     WITH mkt AS (
         SELECT p.p_brand AS brand, l.l_suppkey AS s,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS rev
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         GROUP BY 1, 2
     ), tot AS (
@@ -1285,12 +1288,12 @@ def ext_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_chain_ladder",
-    oracle="""
+    oracle=f"""
     WITH o AS (
         SELECT o_custkey,
                CAST((year(CAST(o_orderdate AS DATE)) - 1995) * 12
                     + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS rc
+               {cents_sql('o_totalprice')} AS rc
         FROM orders
     ), coh AS (
         SELECT *, MIN(m) OVER (PARTITION BY o_custkey) AS cohort FROM o
@@ -1455,11 +1458,11 @@ def ext_newsvendor_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_price_index",
-    oracle="""
+    oracle=f"""
     WITH lines AS (
         SELECT l_partkey AS pk,
                (month(CAST(l_shipdate AS DATE)) <= 6) AS base,
-               CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS rev,
+               {cents_sql('l_extendedprice')} AS rev,
                CAST(l_quantity AS BIGINT) AS qty
         FROM lineitem
     ), per_part AS (
@@ -1550,7 +1553,7 @@ DISPERSION_TOP_K = 20
     oracle=f"""
     WITH units AS (
         SELECT l_partkey AS pk,
-               CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+               CAST({cents_sql('l_extendedprice')}
                     * 1000 // CAST(l_quantity AS BIGINT) AS BIGINT)
                    AS unit_milli
         FROM lineitem
@@ -1583,7 +1586,7 @@ def ext_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("pk"),
         F.expr(
-            "CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
+            f"CAST({cents_sql('l_extendedprice')}"
             " * 1000 DIV CAST(l_quantity AS BIGINT) AS BIGINT)"
         ).alias("unit_milli"),
     )
@@ -1614,7 +1617,7 @@ def ext_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_inventory_xyz",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT l_partkey AS pk, CAST(l_shipdate AS DATE) AS d,
                CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
@@ -1627,8 +1630,7 @@ def ext_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM daily GROUP BY pk
     ), rev AS (
         SELECT l_partkey AS pk,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS r
+               {sum_bigint_sql(cents_sql('l_extendedprice'))} AS r
         FROM lineitem GROUP BY 1
     ), abc AS (
         SELECT pk, r,
@@ -1737,7 +1739,7 @@ _NPV_ARRAY_SPARK = "array(" + ", ".join(str(f) for f in NPV_FACTORS) + ")"
         SELECT o_custkey,
                CAST((year(CAST(o_orderdate AS DATE)) - 1995) * 12
                     + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS rc
+               {cents_sql('o_totalprice')} AS rc
         FROM orders
     ), coh AS (
         SELECT *, MIN(m) OVER (PARTITION BY o_custkey) AS cohort FROM o
@@ -1814,20 +1816,16 @@ _MVP_W = f"(({_MVP_CBB} - {_MVP_CAB}) / ({_MVP_CAA} + {_MVP_CBB} - CAST(2 AS DOU
     oracle=f"""
     WITH ranked AS (
         SELECT p.p_brand AS brand,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev,
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS rev,
                row_number() OVER (
-                   ORDER BY SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                                AS BIGINT)) DESC, p.p_brand) AS rk
+                   ORDER BY SUM({cents_sql('l.l_extendedprice')}) DESC, p.p_brand) AS rk
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         GROUP BY p.p_brand
     ), daily AS (
         SELECT CAST(l.l_shipdate AS DATE) AS d,
-               CAST(SUM(CASE WHEN r.rk = 1 THEN
-                    CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)
+               CAST(SUM(CASE WHEN r.rk = 1 THEN {cents_sql('l.l_extendedprice')}
                     ELSE 0 END) AS BIGINT) AS a,
-               CAST(SUM(CASE WHEN r.rk = 2 THEN
-                    CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)
+               CAST(SUM(CASE WHEN r.rk = 2 THEN {cents_sql('l.l_extendedprice')}
                     ELSE 0 END) AS BIGINT) AS b
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
@@ -1910,11 +1908,11 @@ def ext_min_variance_portfolio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_price_volume_mix",
-    oracle="""
+    oracle=f"""
     WITH lines AS (
         SELECT p.p_brand AS brand,
                (month(CAST(l.l_shipdate AS DATE)) <= 6) AS base,
-               CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS rev,
+               {cents_sql('l.l_extendedprice')} AS rev,
                CAST(l.l_quantity AS BIGINT) AS qty
         FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     ), per_b AS (
@@ -2367,8 +2365,7 @@ def _elo_oracle() -> str:
     ), drev AS MATERIALIZED (
         SELECT {epoch_day_sql('l.l_shipdate')} AS d,
                br.bi,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS rev
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS rev
         FROM lineitem l
         JOIN part p ON p.p_partkey = l.l_partkey
         JOIN br ON br.b = p.p_brand
@@ -2501,11 +2498,10 @@ def ext_elo_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_borda_condorcet",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT n.n_name AS voter, p.p_brand AS brand,
-               CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS r
+               {sum_bigint_sql(cents_sql('l.l_extendedprice'))} AS r
         FROM lineitem l
         JOIN orders o ON o.o_orderkey = l.l_orderkey
         JOIN customer c ON c.c_custkey = o.o_custkey
@@ -2662,7 +2658,7 @@ TIER_B2 = 30
     WITH l AS (
         SELECT l_orderkey, l_linenumber,
                CAST(l_quantity AS BIGINT) AS q,
-               CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS ext_c
+               {cents_sql('l_extendedprice')} AS ext_c
         FROM lineitem
     ), unitp AS (
         SELECT l.*, CAST(ext_c // q AS BIGINT) AS unit_c FROM l

@@ -47,6 +47,11 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.series import (
     DAILY_EVENTS_SQL,
     daily_events,
@@ -493,10 +498,10 @@ def ext_otif_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_penny_allocation",
-    oracle="""
+    oracle=f"""
     WITH lines AS (
         SELECT l.l_orderkey AS ok, l.l_linenumber AS ln,
-               CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS lc
+               {cents_sql('l.l_extendedprice')} AS lc
         FROM lineitem l
     ), hdr AS (
         SELECT ok, CAST(SUM(lc) AS BIGINT) AS total_lc,
@@ -540,9 +545,7 @@ def ext_penny_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"),
         F.col("l_linenumber").alias("ln"),
-        F.expr("CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)").alias(
-            "lc"
-        ),
+        cents("l_extendedprice").alias("lc"),
     )
     hdr = li.groupBy("ok").agg(
         F.sum("lc").cast("bigint").alias("total_lc"),
@@ -759,8 +762,7 @@ HOLT_B_DEN = 10
     WITH RECURSIVE mrev AS (
         SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
                    AS m,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS y
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS y
         FROM orders GROUP BY 1
     ), s AS (
         SELECT list(m ORDER BY m) AS mv, list(y ORDER BY m) AS yv,
@@ -818,11 +820,7 @@ def ext_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("m")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("y")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("y")
     )
 
     def _holt(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -990,8 +988,7 @@ def _holt_winters_oracle() -> str:
     WITH RECURSIVE mrev AS (
         SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
                    AS m,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS y
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS y
         FROM orders GROUP BY 1
     ), s AS (
         SELECT list(m ORDER BY m) AS mv, list(y ORDER BY m) AS yv,
@@ -1055,11 +1052,7 @@ def ext_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("m")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("y")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("y")
     )
 
     def _hw(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1262,8 +1255,7 @@ def _lis_oracle() -> str:
     WITH RECURSIVE mrev AS (
         SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
                    AS m,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS y
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS y
         FROM orders GROUP BY 1
     ), s AS (
         SELECT list(m ORDER BY m) AS mv, list(y ORDER BY m) AS yv,
@@ -1317,11 +1309,7 @@ def ext_lis_patience(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("m")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("y")
+        F.sum(cents("o_totalprice")).cast("bigint").alias("y")
     )
 
     def _lis(pdf: "pd.DataFrame") -> "pd.DataFrame":

@@ -25,7 +25,7 @@ from pyspark.sql.functions import broadcast
 
 from ..catalog import load
 from ..extensions.chunking import md5_band, md5_band_sql
-from ..functions.money import cents
+from ..functions.money import cents, cents_sql
 from ..functions.series import epoch_day, epoch_day_sql
 from ..functions.text import tokens, tokens_sql, words
 from ..registry import query
@@ -206,7 +206,7 @@ QUANTILE_SKETCH_ACCURACY = 1_000_000
 
 @query(
     "ext_quantile_approx",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT)            AS n,
            CAST(quantile_disc(c, 0.5) AS BIGINT)  AS p50_approx,
@@ -214,7 +214,7 @@ QUANTILE_SKETCH_ACCURACY = 1_000_000
            quantile_cont(c, 0.5)                AS p50_exact,
            quantile_cont(c, 0.99)               AS p99_exact
     FROM (SELECT o_orderpriority,
-                 CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS c
+                 {cents_sql('o_totalprice')} AS c
           FROM orders)
     GROUP BY o_orderpriority
     """,
@@ -401,7 +401,7 @@ RESERVOIR_K = 100
     oracle=f"""
     SELECT o_orderkey,
            {md5_band_sql('o_orderkey', 1 << 31, 'res')} AS rank_hash,
-           CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents
+           {cents_sql('o_totalprice')} AS total_cents
     FROM orders
     ORDER BY rank_hash ASC, o_orderkey ASC
     LIMIT {RESERVOIR_K}
@@ -693,7 +693,7 @@ MED2_BINS = 1024
     "ext_median_twopass",
     oracle=f"""
     WITH x AS (
-        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+        SELECT {cents_sql('o_totalprice')} AS v
         FROM orders
     ), ext AS (
         SELECT CAST(MIN(v) AS BIGINT) AS lo, CAST(MAX(v) AS BIGINT) AS hi,

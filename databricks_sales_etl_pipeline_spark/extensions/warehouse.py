@@ -34,7 +34,11 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
 )
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.series import (
     epoch_day,
     epoch_day_sql,
@@ -403,7 +407,7 @@ def ext_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ext_pit_join",
-    oracle="""
+    oracle=f"""
     WITH prof AS (
         SELECT user_id, event_id, event_type,
                epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -419,7 +423,7 @@ def ext_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM chg WHERE prev IS NULL OR prev <> event_type
     ), pur AS (
         SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-               CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS vc
+               {cents_sql('value')} AS vc
         FROM events WHERE event_type = 'purchase'
     )
     SELECT COALESCE(v.state, 'unknown') AS state_at_purchase,
@@ -606,8 +610,7 @@ def _hash_chain_sql(str_t: str) -> str:
     WITH RECURSIVE monthly AS (
         SELECT CAST((year(CAST(o_orderdate AS DATE)) - 1995) * 12
                     + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents,
+               {sum_bigint_sql(cents_sql('o_totalprice'))} AS rev_cents,
                CAST(COUNT(*) AS BIGINT) AS n_orders
         FROM orders GROUP BY 1
     ), digests AS (
@@ -865,7 +868,7 @@ SPLIT_APPROVAL_CENTS = 40_000_000
     WITH keyed AS (
         SELECT o_custkey,
                CAST(o_orderdate AS DATE) AS d,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+               {cents_sql('o_totalprice')} AS cents,
                o_orderkey
         FROM orders
     ), groups AS (

@@ -12,28 +12,38 @@ numbers bit-for-bit:
    values like 2.675 (binary 2.67499999…).
 
 So: aggregate money as exact integer cents (order-independent), and produce
-cents with ``FLOOR(x*100 + 0.5)`` — the same IEEE ops in both engines, no
-rounding-mode ambiguity (money here is non-negative, where floor(+0.5) ==
-round-half-up). Convert back to 2-dp doubles only per-row post-aggregation
-(``cents/100.0`` is a correctly-rounded division for |cents| < 2^53).
+cents with ``FLOOR(x*100 + 0.5)`` — the same IEEE ops in every engine, no
+rounding-mode ambiguity. Ties round half up toward +inf for negative values
+too (the fixture's ``c_acctbal``/``s_acctbal`` go below zero: -2.675 →
+-267 cents), identically in Spark, DuckDB and numpy. Convert back to 2-dp
+doubles only per-row post-aggregation (``cents/100.0`` is a
+correctly-rounded division for |cents| < 2^53). This module is the only
+place the rule is written: :func:`cents` (Spark), :func:`cents_sql` (SQL
+text, DuckDB and Spark SQL alike) and :func:`py_cents` (Python/numpy).
 See SURVEY §5.3 / §5.2.4.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def cents(col: Column | str) -> Column:
-    """double euros → exact bigint cents (tie-safe half-up for x >= 0)."""
+    """double euros → exact bigint cents (ties half up toward +inf)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.floor(c * 100 + 0.5)
 
 
 def cents_sql(expr: str) -> str:
-    """DuckDB twin of :func:`cents` — identical IEEE expression tree."""
+    """SQL twin of :func:`cents` — identical IEEE expression tree."""
     return f"CAST(FLOOR(({expr}) * 100 + 0.5) AS BIGINT)"
+
+
+def py_cents(x) -> np.ndarray:
+    """Python twin of :func:`cents` over a scalar, list, Series or array."""
+    return np.floor(np.asarray(x, dtype="float64") * 100 + 0.5).astype("int64")
 
 
 def sum_bigint_sql(expr: str) -> str:
@@ -59,7 +69,7 @@ def euros_sql(expr: str) -> str:
 
 
 def money2(col: Column | str) -> Column:
-    """Round a non-negative double to 2 dp, oracle-reproducibly
+    """Round a double to 2 dp (ties toward +inf), oracle-reproducibly
     (= the reference's ``round(x, 2)`` at `01:164` without the BigDecimal
     shortest-repr hazard)."""
     return euros(cents(col))

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -265,13 +266,13 @@ def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "try_functions",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
            TRY_CAST(o_orderpriority AS BIGINT) AS prio_as_int,
            TRY_CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS prio_digit,
            CASE WHEN o_orderkey % 3 = 0 THEN NULL
-                ELSE CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5)
-                          AS BIGINT) // (o_orderkey % 3) END AS safe_div,
+                ELSE {cents_sql('o_totalprice')} // (o_orderkey % 3)
+           END AS safe_div,
            TRY_CAST('not-a-date' AS DATE) AS bad_date
     FROM orders WHERE o_orderkey % 11 = 0
     """,
@@ -284,9 +285,6 @@ def try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     an unparseable date → NULL). DuckDB's TRY_CAST + a CASE-guarded
     division express identical semantics for the oracle."""
     o = load(spark, sf_dir, "orders").where(F.col("o_orderkey") % 11 == 0)
-    cents = F.floor(F.col("o_totalprice").cast("double") * 100 + 0.5).cast(
-        "long"
-    )
     return o.select(
         "o_orderkey",
         F.try_to_number("o_orderpriority", F.lit("999")).cast("long").alias(
@@ -295,8 +293,8 @@ def try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("TRY_CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").alias(
             "prio_digit"
         ),
-        F.try_divide(cents, F.col("o_orderkey") % 3).cast("long").alias(
-            "safe_div"
-        ),
+        F.try_divide(cents("o_totalprice"), F.col("o_orderkey") % 3)
+        .cast("long")
+        .alias("safe_div"),
         F.expr("TRY_CAST('not-a-date' AS DATE)").alias("bad_date"),
     )

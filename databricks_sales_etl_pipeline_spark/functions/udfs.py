@@ -16,6 +16,11 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    py_cents,
+)
 from databricks_sales_etl_pipeline_spark.functions.text import (
     WS,
     py_tokens,
@@ -92,7 +97,7 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderpriority,
                CAST(date_diff('day', DATE '1995-01-01',
                               CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-               CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS y
+               {cents_sql('o_totalprice')} AS y
         FROM orders
     ), sums AS (
         SELECT o_orderpriority,
@@ -128,15 +133,13 @@ def udf_grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: applyInPandas shuffles once on the group key and requires each
     GROUP to fit in one worker's memory — fine for bounded keys like these
     5 priorities; unbounded keys use the two-phase salted form instead."""
-    import numpy as np
-
     o = load(spark, sf_dir, "orders")
     pts = o.select(
         "o_orderpriority",
         F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
         .cast("bigint")
         .alias("x"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).alias("y"),
+        cents("o_totalprice").alias("y"),
     )
 
     def slope(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -202,14 +205,13 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_grouped_agg",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(SUM((c // 1000) * (c // 1000)) AS BIGINT) AS sumsq_kcents,
            CAST(COUNT(*) AS BIGINT) AS n
     FROM (
         SELECT o_orderpriority,
-               CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5)
-                    AS BIGINT) AS c
+               {cents_sql('o_totalprice')} AS c
         FROM orders
     )
     GROUP BY o_orderpriority
@@ -244,11 +246,8 @@ def udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(len(c))
 
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice").cast("double") * 100 + 0.5).cast(
-        "long"
-    )
     return (
-        o.select("o_orderpriority", cents.alias("c"))
+        o.select("o_orderpriority", cents("o_totalprice").alias("c"))
         .groupBy("o_orderpriority")
         .agg(
             sumsq("c").alias("sumsq_kcents"),
@@ -259,12 +258,11 @@ def udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_cogrouped_reconcile",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderkey,
-           CAST(FLOOR(CAST(o.o_totalprice AS DOUBLE) * 100 + 0.5) AS BIGINT)
-               AS header_cents,
-           CAST(COALESCE(SUM(CAST(FLOOR(CAST(l.l_extendedprice AS DOUBLE)
-                    * 100 + 0.5) AS BIGINT)), 0) AS BIGINT) AS lines_cents,
+           {cents_sql('o.o_totalprice')} AS header_cents,
+           CAST(COALESCE(SUM({cents_sql('l.l_extendedprice')}), 0) AS BIGINT)
+               AS lines_cents,
            CAST(COUNT(l.l_orderkey) AS BIGINT) AS n_lines
     FROM orders o
     LEFT JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -300,15 +298,9 @@ def udf_cogrouped_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def reconcile(key, odf, ldf):
-        import math
-
         (okey,) = key
-        header = int(
-            sum(math.floor(v * 100 + 0.5) for v in odf["o_totalprice"])
-        )
-        lines = int(
-            sum(math.floor(v * 100 + 0.5) for v in ldf["l_extendedprice"])
-        )
+        header = int(py_cents(odf["o_totalprice"]).sum())
+        lines = int(py_cents(ldf["l_extendedprice"]).sum())
         return pd.DataFrame(
             {
                 "o_orderkey": [int(okey)],
@@ -331,10 +323,9 @@ def udf_cogrouped_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_scalar_iter",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) + 7)
-                AS BIGINT) AS adj_cents,
+           CAST(SUM({cents_sql('o_totalprice')} + 7) AS BIGINT) AS adj_cents,
            CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM orders GROUP BY o_orderstatus
     """,
@@ -354,13 +345,9 @@ def udf_scalar_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     def _adj(batches):
-        import numpy as np
-
         bias = 7  # stands in for per-partition model load — runs ONCE
         for s in batches:
-            yield pd.Series(
-                np.floor(s.to_numpy() * 100 + 0.5).astype("int64") + bias
-            )
+            yield pd.Series(py_cents(s) + bias)
 
     # the module uses `from __future__ import annotations`, which turns
     # inline hints into strings pandas_udf cannot resolve (CLAUDE.md) —

@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -375,12 +380,12 @@ def dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_row_checksum",
-    oracle="""
+    oracle=f"""
     SELECT s_suppkey,
            md5(concat_ws('|', CAST(s_suppkey AS VARCHAR), s_name,
                          CAST(s_nationkey AS VARCHAR),
-                         CAST(CAST(floor(s_acctbal * 100 + 0.5) AS BIGINT)
-                              AS VARCHAR))) AS row_md5
+                         CAST({cents_sql('s_acctbal')} AS VARCHAR)))
+               AS row_md5
     FROM supplier
     """,
 )
@@ -399,19 +404,17 @@ def dq_row_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_suppkey").cast("string"),
         F.col("s_name"),
         F.col("s_nationkey").cast("string"),
-        F.floor(F.col("s_acctbal") * 100 + 0.5).cast("bigint").cast("string"),
+        cents("s_acctbal").cast("string"),
     )
     return s.select("s_suppkey", F.md5(canon).alias("row_md5"))
 
 
 @query(
     "dq_observed_metrics",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS total_cents,
-           CAST(MAX(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS max_cents,
+           {sum_bigint_sql(cents_sql('o_totalprice'))} AS total_cents,
+           CAST(MAX({cents_sql('o_totalprice')}) AS BIGINT) AS max_cents,
            CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
                 AS BIGINT) AS null_prices
     FROM orders
@@ -428,8 +431,6 @@ def dq_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-check them against the oracle's plain aggregates."""
     from pyspark.sql import Observation
     from pyspark.sql.types import LongType, StructField, StructType
-
-    from databricks_sales_etl_pipeline_spark.functions.money import cents
 
     o = load(spark, sf_dir, "orders")
     obs = Observation()
@@ -483,7 +484,7 @@ _PROFILE_COLS = [
     ("o_custkey", "o_custkey"),
     ("o_orderstatus", "o_orderstatus"),
     ("o_orderpriority", "o_orderpriority"),
-    ("o_totalprice_cents", "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"),
+    ("o_totalprice_cents", cents_sql("o_totalprice")),
     ("o_orderdate", "CAST(CAST(o_orderdate AS DATE) AS VARCHAR)"),
 ]
 
@@ -512,8 +513,7 @@ def dq_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").cast("string").alias("o_custkey"),
         "o_orderstatus",
         "o_orderpriority",
-        F.expr("CAST(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
-               " AS STRING)").alias("o_totalprice_cents"),
+        cents("o_totalprice").cast("string").alias("o_totalprice_cents"),
         F.col("o_orderdate").cast("date").cast("string").alias(
             "o_orderdate"
         ),

@@ -20,7 +20,11 @@ from pyspark.sql.functions import broadcast
 
 from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.series import epoch_day
 from databricks_sales_etl_pipeline_spark.io import scratch_dir
 from databricks_sales_etl_pipeline_spark.registry import query
@@ -257,13 +261,12 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_full_outer",
-    oracle="""
+    oracle=f"""
     WITH hot AS (
         SELECT o_orderkey, o_orderpriority FROM orders
         WHERE o_orderpriority = '1-URGENT' AND o_orderkey % 3 = 0
     ), big AS (
-        SELECT o_orderkey, CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
-                   AS price_cents
+        SELECT o_orderkey, {cents_sql('o_totalprice')} AS price_cents
         FROM orders WHERE o_totalprice > 400000
     )
     SELECT COALESCE(h.o_orderkey, b.o_orderkey) AS o_orderkey,
@@ -404,10 +407,9 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_dpp_prune",
-    oracle="""
+    oracle=f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
-           CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS revenue_cents,
+           {sum_bigint_sql(cents_sql('o_totalprice'))} AS revenue_cents,
            CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM orders
     WHERE strftime(o_orderdate, '%Y-%m') IN ('1995-03', '1996-06')

@@ -49,8 +49,8 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sql_udf_create",
     oracle=f"""
     SELECT o_orderpriority,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
-                    - CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) % 100
+           CAST(SUM({cents_sql('o_totalprice')}
+                    - {cents_sql('o_totalprice')} % 100
                ) AS BIGINT) AS whole_unit_cents
     FROM orders GROUP BY o_orderpriority
     """,
@@ -66,8 +66,7 @@ def sql_udf_create(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION whole_units(price DOUBLE) "
         "RETURNS BIGINT "
-        "RETURN CAST(FLOOR(price * 100 + 0.5) AS BIGINT) "
-        "- CAST(FLOOR(price * 100 + 0.5) AS BIGINT) % 100"
+        f"RETURN {cents_sql('price')} - {cents_sql('price')} % 100"
     )
     return spark.sql(
         "SELECT o_orderpriority, "

@@ -94,7 +94,7 @@ def agg_median_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.expr(
-            f"percentile(CAST(FLOOR((o_totalprice) * 100 + 0.5) AS BIGINT), 0.5)"
+            f"percentile({_ORDER_CENTS}, 0.5)"
         ).alias("median_cents"),
     )
 
@@ -144,7 +144,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT o_orderpriority, o_orderstatus,
                COUNT(*) AS n_orders,
-               SUM(CAST(FLOOR((o_totalprice) * 100 + 0.5) AS BIGINT)) AS revenue_cents
+               SUM({_ORDER_CENTS}) AS revenue_cents
         FROM orders_gs
         GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
         """
@@ -247,12 +247,11 @@ def agg_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     < 2^52 is exact IEEE on both engines. Emitted as separate columns (an
     array cell would crash the driver canonicalizer, CLAUDE.md). At 100 TB
     swap in approx_percentile(..., accuracy) — same shape, bounded state."""
-    cents_expr = "CAST(FLOOR((o_totalprice) * 100 + 0.5) AS BIGINT)"
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         *[
-            F.expr(f"percentile({cents_expr}, {p})").alias(name)
+            F.expr(f"percentile({_ORDER_CENTS}, {p})").alias(name)
             for p, name in [
                 (0.25, "p25_cents"),
                 (0.50, "p50_cents"),
@@ -388,10 +387,7 @@ def agg_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixes int with the interpolated double — per-row IEEE, identical tree
     in the oracle."""
     o = load(spark, sf_dir, "orders")
-    cents_expr = "CAST(FLOOR((o_totalprice) * 100 + 0.5) AS BIGINT)"
-    v = o.select(
-        "o_orderpriority", F.expr(cents_expr).alias("cents")
-    )
+    v = o.select("o_orderpriority", cents("o_totalprice").alias("cents"))
     med = v.groupBy("o_orderpriority").agg(
         F.expr("percentile(cents, 0.5)").alias("med_cents")
     )

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
 
@@ -121,10 +122,9 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "setop_union_by_name",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, 'recent' AS src,
-           CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5) AS BIGINT)
-               AS total_cents,
+           {cents_sql('o_totalprice')} AS total_cents,
            CAST(NULL AS VARCHAR) AS o_orderpriority
     FROM orders WHERE o_orderdate >= DATE '1997-01-01'
     UNION ALL
@@ -139,8 +139,6 @@ def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     column sets align BY NAME (not position — positional unionAll would
     silently mis-zip them) and each side's missing columns become NULL.
     The schema-drift-tolerant append every multi-source ingest needs."""
-    from databricks_sales_etl_pipeline_spark.functions.money import cents
-
     o = load(spark, sf_dir, "orders")
     recent = o.where(F.col("o_orderdate") >= "1997-01-01").select(
         "o_orderkey",

@@ -12,7 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from databricks_sales_etl_pipeline_spark.catalog import register_views
-from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.text import WS_SPARK_SQL, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
@@ -201,11 +204,10 @@ def sql_lateral_view_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_LV_OUTER)
 
 
-_SQL_PIVOT = """
+_SQL_PIVOT = f"""
     SELECT * FROM (
         SELECT year(o_orderdate) AS yr, o_orderpriority,
-               CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5) AS BIGINT)
-                   AS cents
+               {cents_sql('o_totalprice')} AS cents
         FROM orders
     )
     PIVOT (
@@ -216,17 +218,14 @@ _SQL_PIVOT = """
     ORDER BY yr
 """
 
-_PIVOT_ORACLE = """
+_PIVOT_ORACLE = f"""
     SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
            CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
-                THEN CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5)
-                          AS BIGINT) END) AS BIGINT) AS urgent_cents,
+                THEN {cents_sql('o_totalprice')} END) AS BIGINT) AS urgent_cents,
            CAST(SUM(CASE WHEN o_orderpriority = '2-HIGH'
-                THEN CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5)
-                          AS BIGINT) END) AS BIGINT) AS high_cents,
+                THEN {cents_sql('o_totalprice')} END) AS BIGINT) AS high_cents,
            CAST(SUM(CASE WHEN o_orderpriority = '5-LOW'
-                THEN CAST(FLOOR(CAST(o_totalprice AS DOUBLE) * 100 + 0.5)
-                          AS BIGINT) END) AS BIGINT) AS low_cents
+                THEN {cents_sql('o_totalprice')} END) AS BIGINT) AS low_cents
     FROM orders
     GROUP BY year(o_orderdate)
 """
@@ -264,11 +263,10 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_GBA)
 
 
-_DISTRIBUTE_SQL = """
+_DISTRIBUTE_SQL = f"""
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS rev_cents
+           {sum_bigint_sql(cents_sql('o_totalprice'))} AS rev_cents
     FROM (
         SELECT * FROM orders
         DISTRIBUTE BY o_orderpriority SORT BY o_orderdate
@@ -279,11 +277,10 @@ _DISTRIBUTE_SQL = """
 
 @query(
     "sql_distribute_by",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS rev_cents
+           {sum_bigint_sql(cents_sql('o_totalprice'))} AS rev_cents
     FROM orders GROUP BY o_orderpriority
     """,
 )
@@ -368,11 +365,10 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_rebalance_hint",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
            CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS gross_cents
+           {sum_bigint_sql(cents_sql('l_extendedprice'))} AS gross_cents
     FROM lineitem GROUP BY l_returnflag, l_linestatus
     """,
 )
@@ -387,12 +383,11 @@ def sql_rebalance_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually lands in the plan so the hint can never silently rot."""
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT /*+ REBALANCE(l_returnflag) */
                l_returnflag, l_linestatus,
                CAST(COUNT(*) AS BIGINT) AS n_lines,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS gross_cents
+               {sum_bigint_sql(cents_sql('l_extendedprice'))} AS gross_cents
         FROM lineitem GROUP BY l_returnflag, l_linestatus
         """
     )
@@ -632,7 +627,7 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_values_inline",
-    oracle="""
+    oracle=f"""
     WITH tiers(tier_name, min_cents, max_cents) AS (
         VALUES ('small',  CAST(0 AS BIGINT),        CAST(10000000 AS BIGINT)),
                ('medium', CAST(10000000 AS BIGINT), CAST(30000000 AS BIGINT)),
@@ -640,12 +635,11 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT t.tier_name,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS rev_cents
+           {sum_bigint_sql(cents_sql('o.o_totalprice'))} AS rev_cents
     FROM orders o
     JOIN tiers t
-      ON CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) >= t.min_cents
-     AND CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) < t.max_cents
+      ON {cents_sql('o.o_totalprice')} >= t.min_cents
+     AND {cents_sql('o.o_totalprice')} < t.max_cents
     GROUP BY t.tier_name
     """,
 )
@@ -662,11 +656,10 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     and Catalyst folds the band predicates like any literal."""
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT t.tier_name,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_cents
+               {sum_bigint_sql(cents_sql('o.o_totalprice'))} AS rev_cents
         FROM orders o
         JOIN VALUES ('small',  CAST(0 AS BIGINT), CAST(10000000 AS BIGINT)),
                     ('medium', CAST(10000000 AS BIGINT),
@@ -674,8 +667,8 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ('large',  CAST(30000000 AS BIGINT),
                                CAST(99999999999 AS BIGINT))
              AS t(tier_name, min_cents, max_cents)
-          ON CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) >= t.min_cents
-         AND CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) < t.max_cents
+          ON {cents_sql('o.o_totalprice')} >= t.min_cents
+         AND {cents_sql('o.o_totalprice')} < t.max_cents
         GROUP BY t.tier_name
         """
     )
@@ -683,11 +676,10 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_identifier_clause",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS revenue_cents
+           {sum_bigint_sql(cents_sql('o_totalprice'))} AS revenue_cents
     FROM orders GROUP BY o_orderpriority
     """,
 )
@@ -704,11 +696,10 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell; this is the governed form of that pattern."""
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT IDENTIFIER(:grp_col) AS o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
-               CAST(SUM(CAST(FLOOR(IDENTIFIER(:amt_col) * 100 + 0.5)
-                             AS BIGINT)) AS BIGINT) AS revenue_cents
+               {sum_bigint_sql(cents_sql('IDENTIFIER(:amt_col)'))} AS revenue_cents
         FROM IDENTIFIER(:tbl)
         GROUP BY IDENTIFIER(:grp_col)
         """,

@@ -233,8 +233,9 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 product-type profit SHAPE: LIKE-filtered part joined through
     lineitem/supplier/orders, profit aggregated by (nation, year).
     Adaptation: no partsupp → supply cost proxied as 0.5·p_retailprice per
-    unit (same expression both engines; cents() keeps the possibly-negative
-    amount exact — floor(x·100+0.5) is identical IEEE both sides)."""
+    unit (same expression both engines; money.cents keeps the
+    possibly-negative amount exact and is the same IEEE tree on both
+    sides)."""
     p = load(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")

@@ -13,7 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    sum_bigint_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.series import (
     epoch_day,
     epoch_day_sql,
@@ -181,10 +185,10 @@ def window_value_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_distribution_suite",
-    oracle="""
+    oracle=f"""
     WITH o AS (
         SELECT o_orderkey, o_orderpriority,
-               CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents
+               {cents_sql('o_totalprice')} AS total_cents
         FROM orders
     )
     SELECT o_orderkey, o_orderpriority, total_cents,
@@ -225,8 +229,7 @@ def window_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH daily AS (
         SELECT user_id,
                {epoch_day_sql('CAST(ts AS TIMESTAMP)')} AS day_no,
-               CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                   AS day_cents
+               {sum_bigint_sql(cents_sql('value'))} AS day_cents
         FROM events
         GROUP BY user_id, day_no
     )
@@ -246,8 +249,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window_moving_avg) cannot express this. Day numbers are exact integer
     epoch-day diffs; the sum is integer cents; one user_id shuffle
     shared by the daily rollup and the window."""
-    from databricks_sales_etl_pipeline_spark.functions.money import cents
-
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id",

@@ -32,7 +32,7 @@ from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from databricks_sales_etl_pipeline_spark.functions.localrel import local_df
-from databricks_sales_etl_pipeline_spark.functions.money import cents
+from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
 from databricks_sales_etl_pipeline_spark.io import read_table, write_table
 from databricks_sales_etl_pipeline_spark.operators.dq import duplicate_keys, null_count_cols
 from databricks_sales_etl_pipeline_spark.registry import query
@@ -258,7 +258,7 @@ def monitoring(spark: SparkSession, m: Medallion) -> DataFrame:
     )
 
 
-_PIPELINE_ORACLE = """
+_PIPELINE_ORACLE = f"""
     WITH silver AS (
         SELECT list_extract(['Elettronica', 'Abbigliamento', 'Casa', 'Sport', 'Libri'],
                             CAST((id * 7) % 5 + 1 AS INT)) AS category,
@@ -270,8 +270,8 @@ _PIPELINE_ORACLE = """
     )
     SELECT category,
            COUNT(*) AS n_orders,
-           SUM(CAST(FLOOR((quantity * price) * 100 + 0.5) AS BIGINT)) / 100.0 AS revenue,
-           (SUM(CAST(FLOOR((quantity * price) * 100 + 0.5) AS BIGINT)) / 100.0) / COUNT(*)
+           SUM({cents_sql('quantity * price')}) / 100.0 AS revenue,
+           (SUM({cents_sql('quantity * price')}) / 100.0) / COUNT(*)
                AS avg_order,
            COUNT(DISTINCT customer_id) AS unique_customers
     FROM silver

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from databricks_sales_etl_pipeline_spark.catalog import events_readstream
-from databricks_sales_etl_pipeline_spark.functions.money import cents_sql
+from databricks_sales_etl_pipeline_spark.functions.money import cents_sql, py_cents
 from databricks_sales_etl_pipeline_spark.registry import query
 from databricks_sales_etl_pipeline_spark.session import scoped_conf
 from databricks_sales_etl_pipeline_spark.streaming.util import run_to_memory
@@ -50,8 +50,8 @@ def _per_user_counter(
     n, cents_sum = state.get if state.exists else (0, 0)
     for pdf in pdfs:
         n += len(pdf)
-        # per-row cents (floor(x*100+0.5)) — same money discipline as SQL side
-        cents_sum += int((pdf["value"] * 100 + 0.5).apply(int).sum())
+        # per-row cents via money.cents's Python twin, as on the SQL side
+        cents_sum += int(py_cents(pdf["value"]).sum())
     state.update((n, cents_sum))
     yield pd.DataFrame(
         {"user_id": [key[0]], "n_events": [n], "value_cents": [cents_sum]}
@@ -169,7 +169,7 @@ def _make_counter_processor():
             )
             for pdf in rows:
                 n += len(pdf)
-                cents_sum += int((pdf["value"] * 100 + 0.5).apply(int).sum())
+                cents_sum += int(py_cents(pdf["value"]).sum())
             self._state.update((n, cents_sum))
             yield pd.DataFrame(
                 {"user_id": [key[0]], "n_events": [n], "value_cents": [cents_sum]}

@@ -22,7 +22,21 @@ from databricks_sales_etl_pipeline_spark.extensions.drift import (
     _half_year_tally,
     _half_year_tally_sql,
 )
-from databricks_sales_etl_pipeline_spark.functions.money import cents, cents_sql
+from databricks_sales_etl_pipeline_spark.extensions.evalmetrics import (
+    RETURNED_LABEL_SQL,
+    returned_label,
+)
+from databricks_sales_etl_pipeline_spark.extensions.graph import (
+    _BFS_ORDER_MOD,
+    _BFS_SLICE,
+    copurchase_edges,
+    copurchase_edges_sql,
+)
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    py_cents,
+)
 from databricks_sales_etl_pipeline_spark.functions.series import (
     DAILY_EVENTS_SQL,
     daily_events,
@@ -133,6 +147,50 @@ def test_daily_events_matches_its_sql_twin(spark, duck):
     assert sorted(map(tuple, got.collect())) == sorted(want)
 
 
+# ties at ±x.xx5 (binary just below or above), a negative balance as low as
+# the fixture's c_acctbal, -0.0 and a value past 2^31 cents
+_MONEY = [0.0, -0.0, 0.005, -0.005, 2.675, -2.675, 1.005, -1.005,
+          -994.28, -821.16, 0.01, 12345678.915]
+
+
+def test_cents_match_their_sql_and_python_twins(spark):
+    got = [
+        r[0]
+        for r in spark.createDataFrame([(v,) for v in _MONEY], "x double")
+        .select(cents("x"))
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(_MONEY)))
+    want = [
+        r[0]
+        for r in con.execute(f"SELECT {cents_sql('x')} FROM t ORDER BY i").fetchall()
+    ]
+    assert got == want == py_cents(_MONEY).tolist()
+    assert want[5] == -267 and want[8] == -99428
+
+
+def test_returned_label_matches_its_sql_twin(spark, duck):
+    got = returned_label(spark, SF_DIR)
+    assert got.dtypes == [("l_orderkey", "bigint"), ("y", "bigint")]
+    want = duck.execute(RETURNED_LABEL_SQL).fetchall()
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+    assert {y for _, y in want} == {0, 1}
+
+
+def test_copurchase_edges_match_their_sql_twin(spark, duck):
+    li = load(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey")
+    got = sorted(map(tuple, copurchase_edges(li).collect()))
+    assert got == sorted(duck.execute(copurchase_edges_sql()).fetchall())
+    assert got and all(a < b for a, b in got)
+    # the sparsified slice ext_graph_bfs feeds both twins
+    part = li.where(F.col("l_orderkey") % _BFS_ORDER_MOD == 0)
+    sliced = sorted(map(tuple, copurchase_edges(part).collect()))
+    assert sliced == sorted(duck.execute(copurchase_edges_sql(_BFS_SLICE)).fetchall())
+    assert 0 < len(sliced) < len(got)
+
+
 def test_half_year_tally_matches_its_sql_twin(spark, duck):
     got = _half_year_tally(
         load(spark, SF_DIR, "orders"), cents(F.col("o_totalprice"))
@@ -168,3 +226,9 @@ def _spellings(pattern: str) -> dict[str, int]:
 )
 def test_shared_definitions_have_one_home(pattern, home):
     assert _spellings(pattern) == {home: 1}
+
+
+def test_cents_rule_has_one_home():
+    # the rule is written in functions/money.py only: once per twin and
+    # once in its docstring, Spark, SQL text and numpy alike
+    assert _spellings(r"100\s*\+\s*(F\.lit\()?0\.5") == {"functions/money.py": 4}

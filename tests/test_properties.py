@@ -8,13 +8,15 @@ and pure-Python evaluations of the same IEEE expression tree.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
-from databricks_sales_etl_pipeline_spark.functions.money import cents
+from databricks_sales_etl_pipeline_spark.functions.money import (
+    cents,
+    cents_sql,
+    py_cents,
+)
 from databricks_sales_etl_pipeline_spark.plans.merge import merge_upsert
 
 MONEY = st.one_of(
@@ -24,23 +26,30 @@ MONEY = st.one_of(
     st.integers(min_value=0, max_value=10**7).map(lambda n: n / 1000),
 )
 
+# negative balances (the fixture's c_acctbal / s_acctbal reach -994.28):
+# ties at -x.xx5 round half up toward +inf in every engine
+NEGATIVE_MONEY = st.one_of(
+    st.floats(min_value=-1e9, max_value=0, allow_nan=False, allow_infinity=False),
+    st.integers(min_value=0, max_value=10**7).map(lambda n: -(n / 100 + 0.005)),
+    st.integers(min_value=1, max_value=10**7).map(lambda n: -n / 1000),
+)
+
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(st.lists(MONEY, min_size=1, max_size=300))
-def test_cents_matches_duckdb_and_python(spark, values):
+@given(
+    st.lists(MONEY, min_size=1, max_size=300),
+    st.lists(NEGATIVE_MONEY, max_size=300),
+)
+@example([2.675, 0.005], [-2.675, -0.005, -994.28, -821.16, -0.0])
+def test_cents_matches_duckdb_and_python(spark, values, negatives):
+    values = values + negatives
     df = spark.createDataFrame([(v,) for v in values], "x double")
     got = [r[0] for r in df.select(cents("x")).collect()]
-    py = [math.floor(v * 100 + 0.5) for v in values]
     con = duckdb.connect()
     con.execute("CREATE TABLE t(x DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in values])
-    duck = [
-        r[0]
-        for r in con.execute(
-            "SELECT CAST(FLOOR(x * 100 + 0.5) AS BIGINT) FROM t"
-        ).fetchall()
-    ]
-    assert got == py == duck
+    duck = [r[0] for r in con.execute(f"SELECT {cents_sql('x')} FROM t").fetchall()]
+    assert got == py_cents(values).tolist() == duck
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

@@ -4,6 +4,28 @@ subset) to <out_dir>/<query>_<suffix>.txt — before/after plans to diff
 while working on a performance change. Commit a plan only when it backs a
 number the change reports.
 
+Each name's optimized logical plan also goes to
+<out_dir>/<query>_<suffix>.optimized.txt with expression ids (``#12``,
+``#12L``) stripped, so two commits' plans diff equal when only the ids
+differ (``F.floor(x)`` and ``F.expr("CAST(FLOOR(x) AS BIGINT)")`` fold to
+the same plan but get fresh ids in every process). To diff a commit
+against its parent, run this file from both checkouts with the same names:
+
+    git clone -q . /tmp/parent && git -C /tmp/parent checkout HEAD~1
+    python /tmp/parent/tools/dump_headline_plans.py /tmp/plans before q1 q2
+    python tools/dump_headline_plans.py /tmp/plans after q1 q2
+    for f in /tmp/plans/*_before.optimized.txt; do
+        cmp -s "$f" "${f%_before.optimized.txt}_after.optimized.txt" || echo "$f"
+    done
+
+(an older parent lacks the .optimized.txt output: copy this file into its
+tools/ first). Known exceptions, which diff as changed even between two
+dumps of one commit: ``tbl_analyze_stats``, ``ext_dataset_card`` and
+``ext_funnel_windowed`` (several distinct aggregates in one ``agg``: the
+Expand grouping order and the ``gid`` each aggregate filters on vary from
+process to process) and ``stream_state_inspect`` (its plan names a
+per-process state directory).
+
 Usage:
     PYTHONPATH=. python tools/dump_headline_plans.py <out_dir> before [name ...]
     PYTHONPATH=. python tools/dump_headline_plans.py <out_dir> after  [name ...]
@@ -12,6 +34,7 @@ Usage:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -42,6 +65,9 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        with open(os.path.join(out_dir, f"{name}_{suffix}.optimized.txt"), "w") as fh:
+            fh.write(re.sub(r"#\d+L?", "", optimized))
         print(f"wrote {path} ({plan.count('Exchange')} Exchange lines)")
 
 
