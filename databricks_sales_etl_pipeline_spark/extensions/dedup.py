@@ -419,11 +419,7 @@ _MINHASH_VERIFIED_ORACLE = f"""
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), sig AS (
         SELECT doc_id, b,
-               MIN(CAST(list_sum(list_transform(range(1, 9),
-                   i -> (strpos('0123456789abcdef',
-                                substring(md5(CAST(b AS VARCHAR) || ':' || shingle),
-                                          CAST(i AS INT), 1)) - 1)
-                        * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)) AS h
+               MIN({md5_int_sql("CAST(b AS VARCHAR) || ':' || shingle")}) AS h
         FROM sh, unnest(range(0, 8)) AS t(b)
         GROUP BY doc_id, b
     ), cand AS (
@@ -1016,11 +1012,7 @@ _MINHASH_CALIBRATION_ORACLE = f"""
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), sig AS (
         SELECT doc_id, b,
-               MIN(CAST(list_sum(list_transform(range(1, 9),
-                   i -> (strpos('0123456789abcdef',
-                                substring(md5(CAST(b AS VARCHAR) || ':' || shingle),
-                                          CAST(i AS INT), 1)) - 1)
-                        * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)) AS h
+               MIN({md5_int_sql("CAST(b AS VARCHAR) || ':' || shingle")}) AS h
         FROM sh, unnest(range(0, 8)) AS t(b)
         GROUP BY doc_id, b
     ), cand AS (

@@ -50,6 +50,7 @@ from databricks_sales_etl_pipeline_spark.extensions.dedup import (
     shingle_rows,
     shingles_sql,
 )
+from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_int_sql
 from databricks_sales_etl_pipeline_spark.functions import par
 from databricks_sales_etl_pipeline_spark.functions.text import (
     normalized,
@@ -343,11 +344,7 @@ _GUARDED_ORACLE = f"""
         SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
     ), sig AS (
         SELECT doc_id, b,
-               MIN(CAST(list_sum(list_transform(range(1, 9),
-                   i -> (strpos('0123456789abcdef',
-                                substring(md5(CAST(b AS VARCHAR) || ':' || shingle),
-                                          CAST(i AS INT), 1)) - 1)
-                        * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT)) AS h
+               MIN({md5_int_sql("CAST(b AS VARCHAR) || ':' || shingle")}) AS h
         FROM sh, unnest(range(0, {N_BANDS})) AS t(b)
         GROUP BY doc_id, b
     ), pop AS (

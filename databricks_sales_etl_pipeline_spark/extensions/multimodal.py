@@ -1,14 +1,22 @@
 """Multimodal columns (BASELINE.json north star): image/audio/video as
 opaque ``binary`` columns with typed metadata.
 
-Round 3: the decode step is REAL for the two classic dependency-free
-container formats — binary P6 PPM (netpbm) and RIFF/WAVE PCM — parsed
-byte-by-byte in pure Python inside the Arrow-batched ``mapInPandas`` stage
-(``decode_ppm`` / ``decode_wav``). ``decode_image_batch`` dispatches on the
-payload's magic bytes; only formats that genuinely need an external codec
-(JPEG/PNG/...) still hit the PIL-gated ``NotImplementedError`` branch. The
-older deterministic fake (``fake_decode`` / ``mm_decode_stub``) is kept as a
+The decode step is REAL for the two classic dependency-free container
+formats — binary P6 PPM (netpbm) and RIFF/WAVE PCM — parsed byte-by-byte
+in pure Python inside the Arrow-batched ``mapInPandas`` stage. The older
+deterministic fake (``fake_decode`` / ``mm_decode_stub``) is kept as a
 plumbing demo.
+
+Every query is built on one small codec layer:
+
+- ``ppm_raster`` is the only P6 header parser and ``video_frames`` the only
+  walker of the ``VID0`` container; ``gray8_ppm`` / ``video_container``
+  write the fixtures they read back;
+- ``ahash_bands`` is the 8×8 average hash, ``ahash_sql`` its DuckDB twin
+  over a ``px(keys…, i, p)`` relation, and ``hamming4`` / ``hamming4_sql``
+  the 4-band Hamming distance in both engines;
+- ``map_rows`` is the one Arrow-batched Python stage and
+  ``media_payloads`` the one payload generator.
 
 What the 100 TB pipeline shape exercises here:
 
@@ -21,10 +29,12 @@ What the 100 TB pipeline shape exercises here:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import struct
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,42 +42,30 @@ from databricks_sales_etl_pipeline_spark.catalog import load
 from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql
 from databricks_sales_etl_pipeline_spark.registry import query
 
-DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_byte", T.DoubleType()),
-    ]
-)
+# ---- codec layer -----------------------------------------------------------
 
 
-def _have_real_decoder() -> bool:
-    try:  # the real path: PIL/ffmpeg on a production cluster
-        import PIL.Image  # noqa: F401
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str, *cols: str
+) -> DataFrame:
+    """The one Arrow-batched Python stage: ``mapInPandas`` over ``df`` that
+    calls ``fn(*row)`` on the ``cols`` of every input row and collects the
+    tuples it yields — none, one or many per row, in the column order of
+    the DDL ``schema``. Values reach ``fn`` as Python objects (``int``,
+    ``bytes``), not numpy scalars. One call is one Python stage: payloads
+    stay in the worker, only ``schema``'s columns come out."""
+    names = T.StructType.fromDDL(schema).fieldNames()
 
-        return True
-    except ImportError:
-        return False
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for args in zip(*(pdf[c].tolist() for c in cols))
+                for out in fn(*args)
+            ]
+            yield pd.DataFrame(rows, columns=names)
 
-
-def decode_image_batch(payload: bytes) -> tuple[int, int]:
-    """Decoder entry point, dispatching on magic bytes. PPM decodes for
-    real right here (pure Python, no deps); compressed formats genuinely
-    need an external codec and stay behind the PIL gate."""
-    if payload[:2] == b"P6":
-        meta = decode_ppm(payload)
-        return meta["width"], meta["height"]
-    if not _have_real_decoder():
-        raise NotImplementedError(
-            "compressed-image decoding requires an imaging library (e.g. "
-            "Pillow); this environment ships none — PPM/WAV decode for real"
-        )
-    raise NotImplementedError("real codec wiring is cluster-specific")
-
-
-# ---- real dependency-free decoders (round 3) ----
+    return df.mapInPandas(run, schema)
 
 
 def _ppm_token(buf: bytes, pos: int) -> tuple[bytes, int]:
@@ -90,11 +88,12 @@ def _ppm_token(buf: bytes, pos: int) -> tuple[bytes, int]:
     return buf[start:pos], pos
 
 
-def decode_ppm(payload: bytes) -> dict:
-    """REAL binary-PPM (netpbm P6) decoder: parse the header (magic, width,
-    height, maxval, comments allowed), validate the raster length, and
-    compute integer pixel statistics. Pure Python over bytes — no imaging
-    library — so it runs in any executor environment."""
+def ppm_raster(payload: bytes) -> tuple[int, int, int, bytes]:
+    """The P6 (binary netpbm) header parser: magic, width, height and
+    maxval (comments allowed between tokens), one whitespace byte, then a
+    raster of exactly width × height × 3 samples of 1 byte (maxval < 256)
+    or 2 bytes. Returns (width, height, maxval, raster). Pure Python over
+    bytes — no imaging library — so it runs in any executor environment."""
     if payload[:2] != b"P6":
         raise ValueError(f"not a P6 PPM (magic {payload[:2]!r})")
     pos = 2
@@ -104,12 +103,113 @@ def decode_ppm(payload: bytes) -> dict:
     width, height, maxval = int(w_tok), int(h_tok), int(max_tok)
     if not (0 < maxval < 65536):
         raise ValueError(f"bad maxval {maxval}")
-    pos += 1  # exactly one whitespace byte separates header from raster
-    bytes_per_sample = 1 if maxval < 256 else 2
-    raster = payload[pos:]
-    expect = width * height * 3 * bytes_per_sample
+    raster = payload[pos + 1 :]
+    expect = width * height * 3 * (1 if maxval < 256 else 2)
     if len(raster) != expect:
         raise ValueError(f"raster is {len(raster)} bytes, expected {expect}")
+    return width, height, maxval, raster
+
+
+def gray8_ppm(px: list[int], comment: str | None = None) -> bytes:
+    """An 8×8 grayscale image as P6 bytes: each of the 64 pixel values
+    written to R, G and B, with an optional header comment line."""
+    note = f"# {comment}\n".encode() if comment else b""
+    return b"P6\n" + note + b"8 8\n255\n" + bytes(b for p in px for b in (p, p, p))
+
+
+def video_container(frames: list[bytes]) -> bytes:
+    """Naive video container: b'VID0', a u32 frame count, then each frame
+    prefixed by its u32 length (little-endian)."""
+    parts = [b"VID0", struct.pack("<I", len(frames))]
+    for frame in frames:
+        parts += [struct.pack("<I", len(frame)), frame]
+    return b"".join(parts)
+
+
+def video_frames(payload: bytes) -> list[bytes]:
+    """The ``VID0`` walker: magic, frame count, length-prefixed frames and
+    not one byte after the last frame."""
+    if payload[:4] != b"VID0":
+        raise ValueError(f"bad video magic {payload[:4]!r}")
+    if len(payload) < 8:
+        raise ValueError("truncated video header")
+    (n_frames,) = struct.unpack_from("<I", payload, 4)
+    pos, frames = 8, []
+    for _ in range(n_frames):
+        if pos + 4 > len(payload):
+            raise ValueError("truncated frame length")
+        (flen,) = struct.unpack_from("<I", payload, pos)
+        pos += 4
+        if pos + flen > len(payload):
+            raise ValueError(f"frame of {flen} bytes runs past the end")
+        frames.append(payload[pos : pos + flen])
+        pos += flen
+    if pos != len(payload):
+        raise ValueError("trailing bytes after last frame")
+    return frames
+
+
+def ahash_bands(payload: bytes) -> tuple[int, int, int, int]:
+    """aHash of an 8×8 8-bit P6 image: R channel of the raster, strict
+    above-mean threshold (p·64 > Σp — integer compare, no float mean),
+    64 bits packed little-endian into four 16-bit band ints."""
+    w, h, maxval, raster = ppm_raster(payload)
+    if maxval != 255:
+        raise ValueError(f"aHash expects an 8-bit raster, maxval {maxval}")
+    if w * h != 64:
+        raise ValueError(f"aHash expects 8x8 images, got {w}x{h}")
+    gray = raster[0::3]
+    s = sum(gray)
+    bits = [1 if p * 64 > s else 0 for p in gray]
+    return tuple(sum(bits[16 * j + k] << k for k in range(16)) for j in range(4))
+
+
+def ahash_sql(keys: str) -> str:
+    """DuckDB twin of :func:`ahash_bands`: the CTEs that follow a
+    ``px(keys…, i, p)`` CTE (one row per pixel ``i`` of each image
+    ``keys``): ``sums(keys…, s)`` the pixel sum, ``bands(keys…, j, b)``
+    one row per 16-bit band and ``fbands(keys…, b0, b1, b2, b3)``."""
+    return f"""sums AS (
+        SELECT {keys}, CAST(SUM(p) AS BIGINT) AS s FROM px GROUP BY {keys}
+    ), bands AS (
+        SELECT {keys}, CAST(i // 16 AS BIGINT) AS j,
+               CAST(SUM(CASE WHEN p * 64 > s THEN 1 ELSE 0 END
+                        * CAST(power(2, i % 16) AS BIGINT)) AS BIGINT) AS b
+        FROM px JOIN sums USING ({keys})
+        GROUP BY {keys}, i // 16
+    ), fbands AS (
+        SELECT {keys},
+               MAX(CASE WHEN j = 0 THEN b END) AS b0,
+               MAX(CASE WHEN j = 1 THEN b END) AS b1,
+               MAX(CASE WHEN j = 2 THEN b END) AS b2,
+               MAX(CASE WHEN j = 3 THEN b END) AS b3
+        FROM bands GROUP BY {keys}
+    )"""
+
+
+def hamming4(a: str, b: str) -> Column:
+    """Hamming distance of two 4-band hashes; ``a`` and ``b`` name band
+    ``{j}`` (``"b{j}"`` → b0..b3)."""
+    return sum(
+        F.bit_count(F.expr(f"{a.format(j=j)} ^ {b.format(j=j)}")) for j in range(4)
+    )
+
+
+def hamming4_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`hamming4`."""
+    return " + ".join(
+        f"bit_count(xor({a.format(j=j)}, {b.format(j=j)}))" for j in range(4)
+    )
+
+
+# ---- decoders --------------------------------------------------------------
+
+
+def decode_ppm(payload: bytes) -> dict:
+    """REAL binary-PPM decode: the parsed header plus integer pixel
+    statistics over the validated raster, keys in the column order of
+    ``mm_decode_real``'s output."""
+    width, height, maxval, raster = ppm_raster(payload)
     return {
         "width": width,
         "height": height,
@@ -124,8 +224,6 @@ def wav_samples(payload: bytes) -> tuple[int, int, int, tuple]:
     """REAL RIFF/WAVE chunk walk (fmt / data in any order, odd-size
     padding per the RIFF spec): returns (sample_rate, n_channels, bits,
     samples). struct + bytes only — no audio library."""
-    import struct
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     riff_size = struct.unpack_from("<I", payload, 4)[0]
@@ -155,7 +253,8 @@ def wav_samples(payload: bytes) -> tuple[int, int, int, tuple]:
 
 
 def decode_wav(payload: bytes) -> dict:
-    """Aggregate integer sample statistics from a real WAV parse."""
+    """Aggregate integer sample statistics from a real WAV parse, keys in
+    the column order of ``mm_decode_wav``'s output."""
     sample_rate, n_channels, bits, samples = wav_samples(payload)
     return {
         "sample_rate": sample_rate,
@@ -177,27 +276,13 @@ def fake_decode(payload: bytes) -> tuple[int, int, float]:
     return width, height, mean_byte
 
 
-def decode_features(binary_df: DataFrame) -> DataFrame:
-    """mapInPandas over (doc_id, payload) — the real multimodal execution
-    shape: Arrow batches in, explicit schema out, one Python worker per
-    partition, no driver round-trip."""
+# ---- plumbing over document text as the binary payload ---------------------
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(len)
-            decoded = payloads.map(fake_decode)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n_bytes,
-                    "width": decoded.map(lambda t: t[0]),
-                    "height": decoded.map(lambda t: t[1]),
-                    "mean_byte": decoded.map(lambda t: t[2]),
-                }
-            )
 
-    return binary_df.mapInPandas(run, DECODE_SCHEMA)
+def _text_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, payload): each document's UTF-8 text as a binary column."""
+    d = load(spark, sf_dir, "documents")
+    return d.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
 
 
 @query(
@@ -213,9 +298,7 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing 1 — opaque binary payload + typed metadata.
     Documents' text is encoded to a real BinaryType column (the stand-in for
     image bytes); metadata is computed on the binary column itself."""
-    d = load(spark, sf_dir, "documents")
-    bin_df = d.select("doc_id", F.encode("text", "UTF-8").alias("payload"), "text")
-    return bin_df.select(
+    return _text_payloads(spark, sf_dir).select(
         "doc_id",
         F.octet_length("payload").cast("bigint").alias("n_bytes"),
         F.decode(F.substring("payload", 1, 8), "UTF-8").alias("head_chars"),
@@ -225,36 +308,15 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 FRAME_BYTES = 64
 FRAME_STRIDE = 4
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_len", T.IntegerType()),
-        T.StructField("frame_md5", T.StringType()),
-    ]
-)
 
-
-def sample_frames(binary_df: DataFrame) -> DataFrame:
-    """Frame-sampling stage: treat the payload as fixed-size frames, keep
-    every FRAME_STRIDE-th, emit per-frame metadata + digest. mapInPandas →
-    rows out ≠ rows in (the flatMap shape a video pipeline needs)."""
-    import hashlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_len": [], "frame_md5": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES
-                for i in range(0, n_frames, FRAME_STRIDE):
-                    frame = payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_len"].append(len(frame))
-                    out["frame_md5"].append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(out)
-
-    return binary_df.mapInPandas(run, FRAME_SCHEMA)
+def sample_frames(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """Frame-sampling rows: treat the payload as fixed-size frames, keep
+    every FRAME_STRIDE-th, emit per-frame metadata + digest — rows out ≠
+    rows in (the flatMap shape a video pipeline needs)."""
+    n_frames = (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES
+    for i in range(0, n_frames, FRAME_STRIDE):
+        frame = payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
+        yield doc_id, i, len(frame), hashlib.md5(frame).hexdigest()
 
 
 @query(
@@ -277,43 +339,25 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas flatMap. ASCII text payloads make the digest
     oracle-checkable (bytes == chars); a real video decoder swaps into
     sample_frames without touching the dataflow."""
-    d = load(spark, sf_dir, "documents")
-    bin_df = d.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return sample_frames(bin_df)
+    return map_rows(
+        _text_payloads(spark, sf_dir),
+        sample_frames,
+        "doc_id long, frame_idx int, frame_len int, frame_md5 string",
+        "doc_id",
+        "payload",
+    )
 
 
 RESIZE_STRIDE = 2
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("orig_bytes", T.IntegerType()),
-        T.StructField("resized_bytes", T.IntegerType()),
-        T.StructField("resized_md5", T.StringType()),
-    ]
-)
 
-
-def resize_payloads(binary_df: DataFrame, stride: int = RESIZE_STRIDE) -> DataFrame:
-    """'Resize' stage stub: byte-stride downsampling (every stride-th byte) —
-    the shape of an image-resize / audio-downsample stage: payload in,
-    smaller payload out, per-row, Arrow-batched. A real resampler replaces
-    the slice; partitioning, schema, and batch flow are identical."""
-    import hashlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = pdf["payload"].map(lambda b: bytes(b[::stride]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "orig_bytes": pdf["payload"].map(len),
-                    "resized_bytes": resized.map(len),
-                    "resized_md5": resized.map(lambda b: hashlib.md5(b).hexdigest()),
-                }
-            )
-
-    return binary_df.mapInPandas(run, RESIZE_SCHEMA)
+def resize_payload(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """'Resize' stage stub: byte-stride downsampling (every
+    RESIZE_STRIDE-th byte) — the shape of an image-resize /
+    audio-downsample stage: payload in, smaller payload out, per row. A
+    real resampler replaces the slice; schema and batch flow stay."""
+    resized = payload[::RESIZE_STRIDE]
+    yield doc_id, len(payload), len(resized), hashlib.md5(resized).hexdigest()
 
 
 @query(
@@ -336,9 +380,13 @@ def resize_payloads(binary_df: DataFrame, stride: int = RESIZE_STRIDE) -> DataFr
 def mm_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing 4 — the resize/downsample stage over binary
     payloads (ASCII text bytes make the digest oracle-checkable)."""
-    d = load(spark, sf_dir, "documents")
-    bin_df = d.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return resize_payloads(bin_df)
+    return map_rows(
+        _text_payloads(spark, sf_dir),
+        resize_payload,
+        "doc_id long, orig_bytes int, resized_bytes int, resized_md5 string",
+        "doc_id",
+        "payload",
+    )
 
 
 @query(
@@ -356,12 +404,16 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas with a deterministic fake decoder. The oracle
     reproduces the fake's integer arithmetic (mean_byte is excluded from the
     checked columns: summing bytes in SQL would need an unnest per byte)."""
-    d = load(spark, sf_dir, "documents")
-    bin_df = d.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return decode_features(bin_df).select("doc_id", "n_bytes", "width", "height")
+    return map_rows(
+        _text_payloads(spark, sf_dir),
+        lambda doc_id, p: [(doc_id, len(p), *fake_decode(p))],
+        "doc_id long, n_bytes long, width int, height int, mean_byte double",
+        "doc_id",
+        "payload",
+    ).select("doc_id", "n_bytes", "width", "height")
 
 
-# ---- real-format fixtures + decode queries (round 3) ----
+# ---- real-format fixtures + decode queries ---------------------------------
 #
 # The payloads are REAL files (any netpbm/audio tool can open them), built
 # deterministically from doc_id so the DuckDB oracle can recompute the
@@ -384,8 +436,6 @@ def make_ppm(doc_id: int) -> bytes:
 def make_wav(doc_id: int) -> bytes:
     """Synthesize a valid RIFF/WAVE file: PCM fmt chunk + 16-bit LE mono
     samples from a deterministic ramp."""
-    import struct
-
     sr = 8000 + (doc_id % 3) * 4000
     n = (doc_id % 50 + 1) * 16
     samples = [((doc_id * 13 + i * 5) % 4096) - 2048 for i in range(n)]
@@ -399,48 +449,21 @@ def make_wav(doc_id: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _gen_payloads(doc_ids: DataFrame, make) -> DataFrame:
-    """Distributed fixture stage: synthesize one binary payload per doc_id
-    (the stand-in for reading media blobs off object storage)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: make(int(i))),
-                }
-            )
-
-    return doc_ids.mapInPandas(run, "doc_id long, payload binary")
-
-
-PPM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("maxval", T.IntegerType()),
-        T.StructField("pixel_sum", T.LongType()),
-        T.StructField("pixel_min", T.IntegerType()),
-        T.StructField("pixel_max", T.IntegerType()),
-    ]
-)
-
-WAV_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("bits", T.IntegerType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("abs_sum", T.LongType()),
-        T.StructField("peak", T.IntegerType()),
-    ]
-)
-
-_PPM_COLS = [f.name for f in PPM_STATS_SCHEMA.fields]
-_WAV_COLS = [f.name for f in WAV_STATS_SCHEMA.fields]
+def media_payloads(
+    spark: SparkSession, sf_dir: str, make: Callable[[int], bytes]
+) -> DataFrame:
+    """(doc_id, payload): ``make(doc_id)`` for every document below
+    MM_DOC_LIMIT, synthesized in its own Python stage (the stand-in for
+    reading media blobs off object storage)."""
+    ids = load(spark, sf_dir, "documents").select("doc_id").where(
+        F.col("doc_id") < MM_DOC_LIMIT
+    )
+    return map_rows(
+        ids,
+        lambda doc_id: [(doc_id, make(doc_id))],
+        "doc_id long, payload binary",
+        "doc_id",
+    )
 
 
 @query(
@@ -471,22 +494,15 @@ def mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas stage — magic check, comment-skipping header
     tokenizer, raster-length validation, integer pixel stats. The oracle
     recomputes every stat from the generator arithmetic, so a parser that
-    misread the header or raster cannot hash-match. Replaces the round-2
-    NotImplementedError default path for decodable formats."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
+    misread the header or raster cannot hash-match."""
+    return map_rows(
+        media_payloads(spark, sf_dir, make_ppm),
+        lambda doc_id, p: [(doc_id, *decode_ppm(p).values())],
+        "doc_id long, width int, height int, maxval int, pixel_sum long, "
+        "pixel_min int, pixel_max int",
+        "doc_id",
+        "payload",
     )
-    bin_df = _gen_payloads(d, make_ppm)
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {"doc_id": int(did), **decode_ppm(bytes(p))}
-                for did, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=_PPM_COLS)
-
-    return bin_df.mapInPandas(dec, PPM_STATS_SCHEMA)
 
 
 @query(
@@ -517,20 +533,14 @@ def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     a chunk-walking decoder (fmt + data in any order, word alignment,
     PCM/16-bit validation), emitting integer sample stats the oracle
     recomputes from the generator ramp."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
+    return map_rows(
+        media_payloads(spark, sf_dir, make_wav),
+        lambda doc_id, p: [(doc_id, *decode_wav(p).values())],
+        "doc_id long, sample_rate int, n_channels int, bits int, "
+        "n_samples int, abs_sum long, peak int",
+        "doc_id",
+        "payload",
     )
-    bin_df = _gen_payloads(d, make_wav)
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {"doc_id": int(did), **decode_wav(bytes(p))}
-                for did, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=_WAV_COLS)
-
-    return bin_df.mapInPandas(dec, WAV_STATS_SCHEMA)
 
 
 # --- perceptual-hash image dedup --------------------------------------------
@@ -551,84 +561,31 @@ def make_ppm_cluster(doc_id: int) -> bytes:
     perturbation — the fixture a perceptual hash must collapse while
     keeping different bases apart."""
     base = doc_id % _PHASH_CLUSTER
-    px = [
-        ((base * 37 + i * 11) % 200) + (doc_id * 7 + i) % 2 for i in range(64)
-    ]
-    header = b"P6\n# phash fixture\n8 8\n255\n"
-    return header + bytes(b for p in px for b in (p, p, p))
+    px = [((base * 37 + i * 11) % 200) + (doc_id * 7 + i) % 2 for i in range(64)]
+    return gray8_ppm(px, "phash fixture")
 
 
-def _ppm_raster(payload: bytes) -> tuple[int, int, bytes]:
-    """Header-parse a P6 payload and return (width, height, raster)."""
-    if payload[:2] != b"P6":
-        raise ValueError(f"not a P6 PPM (magic {payload[:2]!r})")
-    pos = 2
-    w_tok, pos = _ppm_token(payload, pos)
-    h_tok, pos = _ppm_token(payload, pos)
-    max_tok, pos = _ppm_token(payload, pos)
-    width, height, maxval = int(w_tok), int(h_tok), int(max_tok)
-    if maxval != 255:
-        raise ValueError(f"phash expects 8-bit raster, maxval {maxval}")
-    raster = payload[pos + 1 :]
-    if len(raster) != width * height * 3:
-        raise ValueError("raster length mismatch")
-    return width, height, raster
-
-
-def _phash_bands(payload: bytes) -> list[int]:
-    """aHash from REAL bytes: R channel of the decoded raster, strict
-    above-mean threshold (p·64 > Σp — integer compare, no float mean),
-    64 bits packed little-endian into four 16-bit band ints."""
-    w, h, raster = _ppm_raster(payload)
-    if w * h != 64:
-        raise ValueError(f"phash expects 8x8 images, got {w}x{h}")
-    gray = raster[0::3]
-    s = sum(gray)
-    bits = [1 if p * 64 > s else 0 for p in gray]
-    return [
-        sum(bits[16 * j + k] << k for k in range(16)) for j in range(4)
-    ]
-
-
-_PHASH_ORACLE = f"""
-    WITH px AS (
+#: ``px(doc_id, i, p)``: the pixels of :func:`make_ppm_cluster`.
+_PHASH_PX_SQL = f"""px AS (
         SELECT doc_id, i,
                ((doc_id % {_PHASH_CLUSTER}) * 37 + i * 11) % 200
                    + (doc_id * 7 + i) % 2 AS p
         FROM documents, unnest(range(0, 64)) AS t(i)
         WHERE doc_id < {MM_DOC_LIMIT}
-    ), sums AS (
-        SELECT doc_id, CAST(SUM(p) AS BIGINT) AS s FROM px GROUP BY doc_id
-    ), bits AS (
-        SELECT px.doc_id, i,
-               CASE WHEN p * 64 > s THEN 1 ELSE 0 END AS bit
-        FROM px JOIN sums USING (doc_id)
-    ), bands AS (
-        SELECT doc_id, CAST(i // 16 AS BIGINT) AS j,
-               CAST(SUM(bit * CAST(power(2, i % 16) AS BIGINT)) AS BIGINT)
-                   AS b
-        FROM bits GROUP BY doc_id, i // 16
-    ), sig AS (
-        SELECT doc_id,
-               MAX(CASE WHEN j = 0 THEN b END) AS b0,
-               MAX(CASE WHEN j = 1 THEN b END) AS b1,
-               MAX(CASE WHEN j = 2 THEN b END) AS b2,
-               MAX(CASE WHEN j = 3 THEN b END) AS b3
-        FROM bands GROUP BY doc_id
-    ), cand AS (
+    )"""
+
+_PHASH_ORACLE = f"""
+    WITH {_PHASH_PX_SQL}, {ahash_sql("doc_id")}, cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a
         JOIN bands b ON b.j = a.j AND b.b = a.b AND a.doc_id < b.doc_id
     )
     SELECT doc_a, doc_b, hamming FROM (
         SELECT doc_a, doc_b,
-               CAST(bit_count(xor(sa.b0, sb.b0))
-                    + bit_count(xor(sa.b1, sb.b1))
-                    + bit_count(xor(sa.b2, sb.b2))
-                    + bit_count(xor(sa.b3, sb.b3)) AS BIGINT) AS hamming
+               CAST({hamming4_sql("sa.b{j}", "sb.b{j}")} AS BIGINT) AS hamming
         FROM cand
-        JOIN sig sa ON sa.doc_id = doc_a
-        JOIN sig sb ON sb.doc_id = doc_b
+        JOIN fbands sa ON sa.doc_id = doc_a
+        JOIN fbands sb ON sb.doc_id = doc_b
     ) WHERE hamming <= {PHASH_T}
 """
 
@@ -646,25 +603,12 @@ def mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: hashing is an embarrassingly parallel byte scan (images never
     shuffle — 8 bytes of signature per image do); the band join is the
     same bounded-candidates LSH shape as the MinHash pipeline."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_ppm_cluster)
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                b0, b1, b2, b3 = _phash_bands(bytes(p))
-                rows.append(
-                    {"doc_id": int(did), "b0": b0, "b1": b1, "b2": b2, "b3": b3}
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
-
-    sig = bin_df.mapInPandas(
-        hash_batches, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    sig = map_rows(
+        media_payloads(spark, sf_dir, make_ppm_cluster),
+        lambda doc_id, p: [(doc_id, *ahash_bands(p))],
+        "doc_id long, b0 long, b1 long, b2 long, b3 long",
+        "doc_id",
+        "payload",
     ).localCheckpoint()  # signature table feeds bands + both verify sides
 
     bands = sig.select(
@@ -697,13 +641,12 @@ def mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_b"),
         *[F.col(f"b{j}").alias(f"bb{j}") for j in range(4)],
     )
-    ham = sum(
-        F.bit_count(F.expr(f"a{j} ^ bb{j}")) for j in range(4)
-    ).cast("long")
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .select("doc_a", "doc_b", ham.alias("hamming"))
+        .select(
+            "doc_a", "doc_b", hamming4("a{j}", "bb{j}").cast("long").alias("hamming")
+        )
         .where(F.col("hamming") <= PHASH_T)
     )
 
@@ -718,46 +661,27 @@ _VID_MIN_SHARED = 2
 
 
 def make_video(doc_id: int) -> bytes:
-    """Naive video container: b'VID0' + u32 frame count + length-prefixed
-    P6 frames (8×8 grayscale). Frames of docs sharing doc_id % 40 differ
-    only by the ±1 noise."""
-    import struct
-
+    """VID0 container of 8×8 grayscale P6 frames. Frames of docs sharing
+    doc_id % 40 differ only by the ±1 noise."""
     base = doc_id % _VID_CLUSTER
-    n_frames = doc_id % 4 + 4
-    out = [b"VID0", struct.pack("<I", n_frames)]
-    for f in range(n_frames):
-        px = [
-            ((base * 37 + f * 13 + i * 11) % 200) + (doc_id * 7 + i + f) % 2
-            for i in range(64)
+    return video_container(
+        [
+            gray8_ppm(
+                [
+                    ((base * 37 + f * 13 + i * 11) % 200) + (doc_id * 7 + i + f) % 2
+                    for i in range(64)
+                ]
+            )
+            for f in range(doc_id % 4 + 4)
         ]
-        frame = b"P6\n8 8\n255\n" + bytes(
-            b for p in px for b in (p, p, p)
-        )
-        out.append(struct.pack("<I", len(frame)))
-        out.append(frame)
-    return b"".join(out)
+    )
 
 
-def _video_frame_hashes(payload: bytes) -> list[str]:
-    """Walk the container (magic, count, length-prefixed frames), aHash
-    each decoded frame, return hex band-concat hashes."""
-    import struct
-
-    if payload[:4] != b"VID0":
-        raise ValueError(f"bad video magic {payload[:4]!r}")
-    (n_frames,) = struct.unpack_from("<I", payload, 4)
-    pos, hashes = 8, []
-    for _ in range(n_frames):
-        (flen,) = struct.unpack_from("<I", payload, pos)
-        pos += 4
-        frame = payload[pos : pos + flen]
-        pos += flen
-        b0, b1, b2, b3 = _phash_bands(frame)
-        hashes.append(f"{b0:04x}{b1:04x}{b2:04x}{b3:04x}")
-    if pos != len(payload):
-        raise ValueError("trailing bytes after last frame")
-    return hashes
+def _frame_hash_rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """(doc_id, hex band-concat aHash, n_frames) per frame of a video."""
+    frames = video_frames(payload)
+    for frame in frames:
+        yield doc_id, "%04x%04x%04x%04x" % ahash_bands(frame), len(frames)
 
 
 _VIDEO_ORACLE = f"""
@@ -771,26 +695,9 @@ _VIDEO_ORACLE = f"""
         FROM meta,
              unnest(range(0, n_frames)) AS tf(f),
              unnest(range(0, 64)) AS ti(i)
-    ), sums AS (
-        SELECT doc_id, f, CAST(SUM(p) AS BIGINT) AS s
-        FROM px GROUP BY doc_id, f
-    ), bits AS (
-        SELECT px.doc_id, px.f, i,
-               CASE WHEN p * 64 > s THEN 1 ELSE 0 END AS bit
-        FROM px JOIN sums ON sums.doc_id = px.doc_id AND sums.f = px.f
-    ), bands AS (
-        SELECT doc_id, f, CAST(i // 16 AS BIGINT) AS j,
-               CAST(SUM(bit * CAST(power(2, i % 16) AS BIGINT)) AS BIGINT)
-                   AS b
-        FROM bits GROUP BY doc_id, f, i // 16
-    ), fhash AS (
-        SELECT doc_id, f,
-               printf('%04x%04x%04x%04x',
-                      MAX(CASE WHEN j = 0 THEN b END),
-                      MAX(CASE WHEN j = 1 THEN b END),
-                      MAX(CASE WHEN j = 2 THEN b END),
-                      MAX(CASE WHEN j = 3 THEN b END)) AS h
-        FROM bands GROUP BY doc_id, f
+    ), {ahash_sql("doc_id, f")}, fhash AS (
+        SELECT doc_id, f, printf('%04x%04x%04x%04x', b0, b1, b2, b3) AS h
+        FROM fbands
     ), shared AS (
         SELECT a.doc_id AS vid_a, b.doc_id AS vid_b,
                CAST(COUNT(DISTINCT a.h) AS BIGINT) AS shared_frames
@@ -820,26 +727,12 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: payloads never shuffle — only (video, frame-hash) pairs do;
     candidates are bounded by frame-hash bucket occupancy, the same
     LSH-inverted-index shape as MinHash banding."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_video)
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                hs = _video_frame_hashes(bytes(p))
-                out.extend(
-                    {"doc_id": int(did), "h": h, "n_frames": len(hs)}
-                    for h in hs
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "h", "n_frames"]
-            )
-
-    fh = bin_df.mapInPandas(
-        hash_batches, "doc_id long, h string, n_frames long"
+    fh = map_rows(
+        media_payloads(spark, sf_dir, make_video),
+        _frame_hash_rows,
+        "doc_id long, h string, n_frames long",
+        "doc_id",
+        "payload",
     ).localCheckpoint()  # feeds both sides of the pair join + the meta join
     a = fh.select(
         F.col("doc_id").alias("vid_a"), "h", F.col("n_frames").alias("nfa")
@@ -866,6 +759,22 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- audio frame features ---------------------------------------------------
 
 AUDIO_FRAME = 16  # samples per analysis frame (generator n is a multiple)
+
+
+def _audio_energy_row(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """Per-doc frame-energy features of one WAV payload."""
+    _, _, _, samples = wav_samples(payload)
+    frames = [
+        samples[i : i + AUDIO_FRAME] for i in range(0, len(samples), AUDIO_FRAME)
+    ]
+    energies = [sum(s * s for s in fr) for fr in frames]
+    zcs = [
+        sum(1 for a, b in zip(fr, fr[1:]) if (a >= 0) != (b >= 0)) for fr in frames
+    ]
+    mx = max(energies)
+    yield (
+        doc_id, len(frames), sum(energies), mx, energies.index(mx), sum(zcs),
+    )
 
 
 @query(
@@ -915,55 +824,14 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: decode and frame-fold happen INSIDE one Arrow-batched
     mapInPandas (payloads never shuffle; 6 small ints per doc come out)."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_wav)
-
-    schema = (
+    return map_rows(
+        media_payloads(spark, sf_dir, make_wav),
+        _audio_energy_row,
         "doc_id bigint, n_frames bigint, total_energy bigint, "
-        "max_frame_energy bigint, loudest_frame bigint, "
-        "total_zero_cross bigint"
+        "max_frame_energy bigint, loudest_frame bigint, total_zero_cross bigint",
+        "doc_id",
+        "payload",
     )
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, _, samples = wav_samples(bytes(p))
-                frames = [
-                    samples[i : i + AUDIO_FRAME]
-                    for i in range(0, len(samples), AUDIO_FRAME)
-                ]
-                energies = [sum(s * s for s in fr) for fr in frames]
-                zcs = [
-                    sum(
-                        1
-                        for a, b in zip(fr, fr[1:])
-                        if (a >= 0) != (b >= 0)
-                    )
-                    for fr in frames
-                ]
-                mx = max(energies)
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_frames": len(frames),
-                        "total_energy": sum(energies),
-                        "max_frame_energy": mx,
-                        "loudest_frame": energies.index(mx),
-                        "total_zero_cross": sum(zcs),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "total_energy",
-                    "max_frame_energy", "loudest_frame", "total_zero_cross",
-                ],
-            )
-
-    return bin_df.mapInPandas(feats, schema)
 
 
 # --- image-text pair construction -------------------------------------------
@@ -972,13 +840,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_pair_dataset",
     oracle=f"""
-    WITH px AS (
-        SELECT doc_id, i,
-               ((doc_id % {_PHASH_CLUSTER}) * 37 + i * 11) % 200
-                   + (doc_id * 7 + i) % 2 AS p
-        FROM documents, unnest(range(0, 64)) AS t(i)
-        WHERE doc_id < {MM_DOC_LIMIT}
-    ), img AS (
+    WITH {_PHASH_PX_SQL}, img AS (
         SELECT doc_id, CAST(SUM(p) AS BIGINT) AS pix_checksum
         FROM px GROUP BY doc_id
     )
@@ -1002,19 +864,13 @@ def mm_pair_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: payload decode is Arrow-batched and emits ONE int per image;
     the join shuffles (id, checksum) pairs, never bytes."""
     d = load(spark, sf_dir, "documents").where(F.col("doc_id") < MM_DOC_LIMIT)
-    bin_df = _gen_payloads(d.select("doc_id"), make_ppm_cluster)
-
-    def checksum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, raster = _ppm_raster(bytes(p))
-                rows.append(
-                    {"doc_id": int(did), "pix_checksum": sum(raster[0::3])}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "pix_checksum"])
-
-    img = bin_df.mapInPandas(checksum, "doc_id bigint, pix_checksum bigint")
+    img = map_rows(
+        media_payloads(spark, sf_dir, make_ppm_cluster),
+        lambda doc_id, p: [(doc_id, sum(ppm_raster(p)[3][0::3]))],
+        "doc_id bigint, pix_checksum bigint",
+        "doc_id",
+        "payload",
+    )
     toks = tokens("text")
     return (
         d.select("doc_id", "text")
@@ -1034,7 +890,7 @@ def mm_pair_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- video scene-cut detection ----------------------------------------------
+# --- video scene cuts and keyframes -----------------------------------------
 
 _SCENE_HAM_T = 10  # consecutive-frame hamming above this = a cut
 
@@ -1045,29 +901,67 @@ def make_scene_video(doc_id: int) -> bytes:
     frame-independent), across scenes the base pattern reshuffles — so
     consecutive-frame hamming is 0 inside a scene and ~32 bits at a
     boundary. Same VID0 container as make_video."""
-    import struct
-
     n_scenes = doc_id % 3 + 2
     per_scene = doc_id % 2 + 2
-    out = [b"VID0", struct.pack("<I", n_scenes * per_scene)]
-    for f in range(n_scenes * per_scene):
-        sc = f // per_scene
-        px = [
-            ((doc_id % 40) * 31 + sc * 97 + i * 11) % 200 + (doc_id * 7 + i) % 2
-            for i in range(64)
+    return video_container(
+        [
+            gray8_ppm(
+                [
+                    ((doc_id % 40) * 31 + (f // per_scene) * 97 + i * 11) % 200
+                    + (doc_id * 7 + i) % 2
+                    for i in range(64)
+                ]
+            )
+            for f in range(n_scenes * per_scene)
         ]
-        frame = b"P6\n8 8\n255\n" + bytes(b for p in px for b in (p, p, p))
-        out.append(struct.pack("<I", len(frame)))
-        out.append(frame)
-    return b"".join(out)
+    )
 
 
-_SCENE_ORACLE = f"""
-    WITH meta AS (
+def _scene_frame_rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """(doc_id, f, b0..b3, psum) per frame: the aHash bands and the grey
+    pixel sum (every 3rd raster byte, r == g == b)."""
+    for f, frame in enumerate(video_frames(payload)):
+        _, _, _, raster = ppm_raster(frame)
+        yield (doc_id, f, *ahash_bands(frame), sum(raster[0::3]))
+
+
+def _scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, f, psum, is_cut) per frame of the scene videos: is_cut is
+    1 where the aHash hamming to the previous frame exceeds
+    _SCENE_HAM_T. Frame band ints shuffle (payloads never move); the lag
+    rides a per-video window partition."""
+    fb = map_rows(
+        media_payloads(spark, sf_dir, make_scene_video),
+        _scene_frame_rows,
+        "doc_id long, f long, b0 long, b1 long, b2 long, b3 long, psum long",
+        "doc_id",
+        "payload",
+    )
+    w = Window.partitionBy("doc_id").orderBy("f")
+    lagged = fb.select(
+        "doc_id",
+        "f",
+        "psum",
+        *[F.lag(f"b{j}").over(w).alias(f"p{j}") for j in range(4)],
+        *[F.col(f"b{j}") for j in range(4)],
+    )
+    return lagged.select(
+        "doc_id",
+        "f",
+        "psum",
+        (F.col("p0").isNotNull() & (hamming4("b{j}", "p{j}") > _SCENE_HAM_T))
+        .cast("bigint")
+        .alias("is_cut"),
+    )
+
+
+#: meta → per-frame pixels → aHash → cut flags of :func:`make_scene_video`,
+#: the prefix the scene-cut and keyframe oracles share.
+_SCENE_FLAGS_SQL = f"""meta AS (
         SELECT doc_id,
                CAST(doc_id % 3 + 2 AS BIGINT) AS n_scenes,
                CAST(doc_id % 2 + 2 AS BIGINT) AS per_scene
-        FROM documents WHERE doc_id < {{lim}}
+        FROM documents WHERE doc_id < {MM_DOC_LIMIT}
     ), px AS (
         SELECT doc_id, f, i,
                ((doc_id % 40) * 31 + (f // per_scene) * 97 + i * 11) % 200
@@ -1075,37 +969,20 @@ _SCENE_ORACLE = f"""
         FROM meta,
              unnest(range(0, n_scenes * per_scene)) AS tf(f),
              unnest(range(0, 64)) AS ti(i)
-    ), sums AS (
-        SELECT doc_id, f, CAST(SUM(p) AS BIGINT) AS s
-        FROM px GROUP BY doc_id, f
-    ), bands AS (
-        SELECT px.doc_id, px.f, CAST(i // 16 AS BIGINT) AS j,
-               CAST(SUM(CASE WHEN p * 64 > s THEN 1 ELSE 0 END
-                        * CAST(power(2, i % 16) AS BIGINT)) AS BIGINT) AS b
-        FROM px JOIN sums ON sums.doc_id = px.doc_id AND sums.f = px.f
-        GROUP BY px.doc_id, px.f, i // 16
-    ), fbands AS (
+    ), {ahash_sql("doc_id, f")}, flags AS (
         SELECT doc_id, f,
-               MAX(CASE WHEN j = 0 THEN b END) AS b0,
-               MAX(CASE WHEN j = 1 THEN b END) AS b1,
-               MAX(CASE WHEN j = 2 THEN b END) AS b2,
-               MAX(CASE WHEN j = 3 THEN b END) AS b3
-        FROM bands GROUP BY doc_id, f
-    ), lagged AS (
-        SELECT doc_id, f,
-               lag(b0) OVER w AS p0, lag(b1) OVER w AS p1,
-               lag(b2) OVER w AS p2, lag(b3) OVER w AS p3,
-               b0, b1, b2, b3
-        FROM fbands
-        WINDOW w AS (PARTITION BY doc_id ORDER BY f)
-    ), cuts AS (
+               CASE WHEN lag(b0) OVER w IS NOT NULL AND
+                    {hamming4_sql("b{j}", "lag(b{j}) OVER w")} > {_SCENE_HAM_T}
+                    THEN 1 ELSE 0 END AS is_cut
+        FROM fbands WINDOW w AS (PARTITION BY doc_id ORDER BY f)
+    )"""
+
+_SCENE_ORACLE = f"""
+    WITH {_SCENE_FLAGS_SQL}, cuts AS (
         SELECT doc_id,
                CAST(COUNT(*) AS BIGINT) AS n_frames,
-               CAST(COUNT(*) FILTER (WHERE p0 IS NOT NULL AND
-                    bit_count(xor(b0, p0)) + bit_count(xor(b1, p1))
-                    + bit_count(xor(b2, p2)) + bit_count(xor(b3, p3))
-                    > {_SCENE_HAM_T}) AS BIGINT) AS n_cuts
-        FROM lagged GROUP BY doc_id
+               CAST(SUM(is_cut) AS BIGINT) AS n_cuts
+        FROM flags GROUP BY doc_id
     )
     SELECT c.doc_id, c.n_frames, c.n_cuts,
            CAST(c.n_cuts + 1 AS BIGINT) AS n_scenes_detected,
@@ -1114,7 +991,7 @@ _SCENE_ORACLE = f"""
 """
 
 
-@query("mm_video_scene_cut", oracle=_SCENE_ORACLE.format(lim=MM_DOC_LIMIT))
+@query("mm_video_scene_cut", oracle=_SCENE_ORACLE)
 def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary (scene cut) detection: decode each video's frames,
     aHash them, and declare a cut wherever consecutive-frame hamming
@@ -1123,57 +1000,10 @@ def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     not per fixed stride, or long static scenes dominate). The fixture
     plants true scene structure; detected-vs-true scene counts are BOTH
     in the hash-checked output, so the oracle certifies perfect recovery
-    arithmetic end-to-end (decode → hash → lag → hamming → census).
-    Frame band-integers shuffle (4 ints/frame), payloads never move; the
-    lag window rides a per-video partition."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_scene_video)
-
-    def band_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                if p[:4] != b"VID0":
-                    raise ValueError(f"bad video magic {p[:4]!r}")
-                (n,) = struct.unpack_from("<I", p, 4)
-                pos = 8
-                for f in range(n):
-                    (flen,) = struct.unpack_from("<I", p, pos)
-                    pos += 4
-                    b0, b1, b2, b3 = _phash_bands(p[pos : pos + flen])
-                    pos += flen
-                    rows.append((int(did), f, b0, b1, b2, b3))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "f", "b0", "b1", "b2", "b3"]
-            )
-
-    fb = bin_df.mapInPandas(
-        band_batches, "doc_id long, f long, b0 long, b1 long, b2 long, b3 long"
-    )
-    from pyspark.sql import Window as _W
-
-    w = _W.partitionBy("doc_id").orderBy("f")
-    lagged = fb.select(
-        "doc_id",
-        "f",
-        *[F.lag(f"b{j}").over(w).alias(f"p{j}") for j in range(4)],
-        *[F.col(f"b{j}") for j in range(4)],
-    )
-    ham = sum(
-        F.bit_count(F.expr(f"b{j} ^ p{j}")) for j in range(4)
-    )
-    cuts = lagged.groupBy("doc_id").agg(
+    arithmetic end-to-end (decode → hash → lag → hamming → census)."""
+    cuts = _scene_cuts(spark, sf_dir).groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_frames"),
-        F.sum(
-            (F.col("p0").isNotNull() & (ham > _SCENE_HAM_T)).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("n_cuts"),
+        F.sum("is_cut").cast("bigint").alias("n_cuts"),
     )
     return cuts.select(
         "doc_id",
@@ -1185,6 +1015,14 @@ def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 AUDIO_SIL_THRESH = 16 * 300 * 300  # frame energy below ≈|300| amplitude
+
+
+def _audio_frame_rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """(doc_id, frame, energy) per AUDIO_FRAME-sample frame of a WAV."""
+    _, _, _, samples = wav_samples(payload)
+    for fi in range(0, len(samples), AUDIO_FRAME):
+        frame = samples[fi : fi + AUDIO_FRAME]
+        yield doc_id, fi // AUDIO_FRAME, sum(s * s for s in frame)
 
 
 @query(
@@ -1235,25 +1073,12 @@ def mm_audio_silence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: decode stays data-local in the Python worker; the only
     shuffle is the doc_id window over 6-int frame rows."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_wav)
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frs, ens = [], [], []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, _, samples = wav_samples(bytes(p))
-                for fi in range(0, len(samples), AUDIO_FRAME):
-                    fr = samples[fi : fi + AUDIO_FRAME]
-                    ids.append(int(did))
-                    frs.append(fi // AUDIO_FRAME)
-                    ens.append(sum(s * s for s in fr))
-            yield pd.DataFrame({"doc_id": ids, "frame": frs, "energy": ens})
-
-    per_frame = bin_df.mapInPandas(
-        frames, "doc_id bigint, frame bigint, energy bigint"
+    per_frame = map_rows(
+        media_payloads(spark, sf_dir, make_wav),
+        _audio_frame_rows,
+        "doc_id bigint, frame bigint, energy bigint",
+        "doc_id",
+        "payload",
     )
     w = Window.partitionBy("doc_id").orderBy("frame")
     voiced = per_frame.where(F.col("energy") >= AUDIO_SIL_THRESH).withColumn(
@@ -1277,6 +1102,18 @@ def mm_audio_silence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HIST_BINS = 8  # per-channel intensity bins (256/32)
+
+
+def _histogram_rows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    """(doc_id, channel, bin, n_px) for every non-empty bin of a P6."""
+    _, _, _, raster = ppm_raster(payload)
+    width = 256 // HIST_BINS
+    counts: dict[tuple[int, int], int] = {}
+    for i, v in enumerate(raster):
+        key = (i % 3, v // width)
+        counts[key] = counts.get(key, 0) + 1
+    for (ch, b), n in sorted(counts.items()):
+        yield doc_id, ch, b, n
 
 
 @query(
@@ -1310,74 +1147,17 @@ def mm_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: decode + histogram fold stay in the Python worker next to the
     payload; only ≤24 small rows per image shuffle."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_ppm)
-    width = 256 // HIST_BINS
-
-    def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chs, bins, ns = [], [], [], []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, raster = _ppm_raster(bytes(p))
-                counts: dict[tuple[int, int], int] = {}
-                for i, v in enumerate(raster):
-                    key = (i % 3, v // width)
-                    counts[key] = counts.get(key, 0) + 1
-                for (ch, b), n in sorted(counts.items()):
-                    ids.append(int(did))
-                    chs.append(ch)
-                    bins.append(b)
-                    ns.append(n)
-            yield pd.DataFrame(
-                {"doc_id": ids, "channel": chs, "bin": bins, "n_px": ns}
-            )
-
-    return bin_df.mapInPandas(
-        hist, "doc_id bigint, channel bigint, bin bigint, n_px bigint"
+    return map_rows(
+        media_payloads(spark, sf_dir, make_ppm),
+        _histogram_rows,
+        "doc_id bigint, channel bigint, bin bigint, n_px bigint",
+        "doc_id",
+        "payload",
     )
 
 
 _KEYFRAME_ORACLE = f"""
-    WITH meta AS (
-        SELECT doc_id,
-               CAST(doc_id % 3 + 2 AS BIGINT) AS n_scenes,
-               CAST(doc_id % 2 + 2 AS BIGINT) AS per_scene
-        FROM documents WHERE doc_id < {MM_DOC_LIMIT}
-    ), px AS (
-        SELECT doc_id, f, i,
-               ((doc_id % 40) * 31 + (f // per_scene) * 97 + i * 11) % 200
-                   + (doc_id * 7 + i) % 2 AS p
-        FROM meta,
-             unnest(range(0, n_scenes * per_scene)) AS tf(f),
-             unnest(range(0, 64)) AS ti(i)
-    ), sums AS (
-        SELECT doc_id, f, CAST(SUM(p) AS BIGINT) AS s
-        FROM px GROUP BY doc_id, f
-    ), bands AS (
-        SELECT px.doc_id, px.f, CAST(i // 16 AS BIGINT) AS j,
-               CAST(SUM(CASE WHEN p * 64 > s THEN 1 ELSE 0 END
-                        * CAST(power(2, i % 16) AS BIGINT)) AS BIGINT) AS b
-        FROM px JOIN sums ON sums.doc_id = px.doc_id AND sums.f = px.f
-        GROUP BY px.doc_id, px.f, i // 16
-    ), fbands AS (
-        SELECT doc_id, f,
-               MAX(CASE WHEN j = 0 THEN b END) AS b0,
-               MAX(CASE WHEN j = 1 THEN b END) AS b1,
-               MAX(CASE WHEN j = 2 THEN b END) AS b2,
-               MAX(CASE WHEN j = 3 THEN b END) AS b3
-        FROM bands GROUP BY doc_id, f
-    ), flags AS (
-        SELECT doc_id, f, b0, b1, b2, b3,
-               CASE WHEN lag(b0) OVER w IS NOT NULL AND
-                    bit_count(xor(b0, lag(b0) OVER w))
-                    + bit_count(xor(b1, lag(b1) OVER w))
-                    + bit_count(xor(b2, lag(b2) OVER w))
-                    + bit_count(xor(b3, lag(b3) OVER w)) > {_SCENE_HAM_T}
-                    THEN 1 ELSE 0 END AS is_cut
-        FROM fbands WINDOW w AS (PARTITION BY doc_id ORDER BY f)
-    ), scened AS (
+    WITH {_SCENE_FLAGS_SQL}, scened AS (
         SELECT doc_id, f,
                SUM(is_cut) OVER (PARTITION BY doc_id ORDER BY f
                                  ROWS UNBOUNDED PRECEDING) AS scene_idx
@@ -1407,58 +1187,10 @@ def mm_video_keyframe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: decode emits (4 band ints + 1 sum)/frame from mapInPandas;
     cut flags, shot ids and the per-shot argmin all ride ONE per-video
     window partition."""
-    d = load(spark, sf_dir, "documents").select("doc_id").where(
-        F.col("doc_id") < MM_DOC_LIMIT
-    )
-    bin_df = _gen_payloads(d, make_scene_video)
-
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                if p[:4] != b"VID0":
-                    raise ValueError(f"bad video magic {p[:4]!r}")
-                (n,) = struct.unpack_from("<I", p, 4)
-                pos = 8
-                for f in range(n):
-                    (flen,) = struct.unpack_from("<I", p, pos)
-                    pos += 4
-                    frame = p[pos : pos + flen]
-                    b0, b1, b2, b3 = _phash_bands(frame)
-                    # grey pixel sum: every 3rd raster byte (r == g == b)
-                    raster = frame.split(b"255\n", 1)[1]
-                    psum = sum(raster[0::3])
-                    pos += flen
-                    rows.append((int(did), f, b0, b1, b2, b3, psum))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "f", "b0", "b1", "b2", "b3", "psum"],
-            )
-
-    fb = bin_df.mapInPandas(
-        feat_batches,
-        "doc_id long, f long, b0 long, b1 long, b2 long, b3 long, psum long",
-    )
-    from pyspark.sql import Window as _W
-
-    w = _W.partitionBy("doc_id").orderBy("f")
-    ham = sum(F.bit_count(F.expr(f"b{j} ^ p{j}")) for j in range(4))
-    flags = fb.select(
-        "doc_id",
-        "f",
-        "psum",
-        *[F.lag(f"b{j}").over(w).alias(f"p{j}") for j in range(4)],
-        *[F.col(f"b{j}") for j in range(4)],
-    ).withColumn(
-        "is_cut",
-        (F.col("p0").isNotNull() & (ham > _SCENE_HAM_T)).cast("bigint"),
-    )
-    scened = flags.withColumn(
+    w = Window.partitionBy("doc_id").orderBy("f")
+    scened = _scene_cuts(spark, sf_dir).withColumn(
         "scene_idx",
-        F.sum("is_cut").over(w.rowsBetween(_W.unboundedPreceding, 0)),
+        F.sum("is_cut").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
     return scened.groupBy(
         "doc_id", F.col("scene_idx").cast("bigint").alias("scene_idx")

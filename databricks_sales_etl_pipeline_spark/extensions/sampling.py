@@ -20,6 +20,7 @@ from databricks_sales_etl_pipeline_spark.extensions.chunking import (
     md5_band,
     md5_band_sql,
     md5_int,
+    md5_int_sql,
 )
 from databricks_sales_etl_pipeline_spark.registry import query
 
@@ -243,11 +244,7 @@ def ext_kfold_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT MIN(n_class) AS n_min FROM counts
     ), scored AS (
         SELECT d.doc_id, d.lang, c.n_class, t.n_min,
-               CAST(list_sum(list_transform(range(1, 9), i ->
-                   (strpos('0123456789abcdef',
-                           substring(md5('rebal:' || d.doc_id),
-                                     CAST(i AS INT), 1)) - 1)
-                   * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) AS h
+               {md5_int_sql("'rebal:' || d.doc_id")} AS h
         FROM documents d
         JOIN counts c ON c.lang = d.lang
         CROSS JOIN target t

@@ -13,6 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.catalog import load
+from databricks_sales_etl_pipeline_spark.extensions.chunking import (
+    md5_band,
+    md5_band_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions import par
 from databricks_sales_etl_pipeline_spark.functions.text import tokens, tokens_sql, words
 from databricks_sales_etl_pipeline_spark.registry import query
@@ -604,23 +608,17 @@ def ext_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SPLIT_BAND_SQL = md5_band_sql("CAST(doc_id AS VARCHAR)", 100, "split:")
+
+
 @query(
     "ext_langmix_report",
     oracle=f"""
     WITH b AS (
         SELECT lang,
-               CASE WHEN (CAST(list_sum(list_transform(range(1, 9), i ->
-                     (strpos('0123456789abcdef',
-                              substring(md5('split:' || CAST(doc_id AS VARCHAR)),
-                                        CAST(i AS INT), 1)) - 1)
-                     * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) % 100) < 80
-                    THEN 'train'
-                    WHEN (CAST(list_sum(list_transform(range(1, 9), i ->
-                     (strpos('0123456789abcdef',
-                              substring(md5('split:' || CAST(doc_id AS VARCHAR)),
-                                        CAST(i AS INT), 1)) - 1)
-                     * CAST(power(16, 8 - i) AS BIGINT))) AS BIGINT) % 100) < 90
-                    THEN 'val' ELSE 'test' END AS split,
+               CASE WHEN {_SPLIT_BAND_SQL} < 80 THEN 'train'
+                    WHEN {_SPLIT_BAND_SQL} < 90 THEN 'val'
+                    ELSE 'test' END AS split,
                CAST(len({tokens_sql()}) AS BIGINT) AS n_tokens
         FROM documents
     )
@@ -636,8 +634,6 @@ def ext_langmix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10% of each language's tokens? is a language underrepresented?).
     Composes the deterministic md5 split with token counting in one scan +
     one small groupBy."""
-    from databricks_sales_etl_pipeline_spark.extensions.chunking import md5_band
-
     d = load(spark, sf_dir, "documents")
     band = md5_band(F.col("doc_id"), 100, "split:")
     split = (

@@ -171,7 +171,10 @@ _loaded = False
 
 def load_all() -> None:
     """Import every operator module (idempotent) so decorators run, then
-    reorder the registry so ``_DRIVER_PRIORITY`` names come first."""
+    reorder the registry: ``_DRIVER_PRIORITY`` names first, the rest by
+    their module's place in ``_OPERATOR_MODULES`` and, within a module, in
+    definition order — so a module importing another's helper does not
+    move that module's names."""
     global _loaded, QUERIES, ORACLES
     if _loaded:
         return
@@ -180,7 +183,9 @@ def load_all() -> None:
     missing = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
     if missing:
         raise RuntimeError(f"_DRIVER_PRIORITY names not registered: {missing}")
-    ordered = _DRIVER_PRIORITY + [n for n in QUERIES if n not in _DRIVER_PRIORITY]
+    rest = [n for n in QUERIES if n not in _DRIVER_PRIORITY]
+    rest.sort(key=lambda n: _OPERATOR_MODULES.index(QUERIES[n].__module__))
+    ordered = _DRIVER_PRIORITY + rest
     reordered = {n: QUERIES[n] for n in ordered}
     QUERIES.clear()
     QUERIES.update(reordered)

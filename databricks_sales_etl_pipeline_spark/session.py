@@ -11,6 +11,11 @@ One place for every config that matters at scale:
 - shuffle partitions sized from the env (local test rig = cores; a real
   cluster would size this from input volume / target partition size, see
   ``tune_shuffle_partitions``).
+- the package's parent directory on the Python workers' ``PYTHONPATH``:
+  UDFs, UDTFs and ``mapInPandas`` stages pickle package functions by
+  reference, so a worker must import the package from any working
+  directory. Spark merges it with the ``PYTHONPATH`` the driver was
+  started with.
 """
 
 from __future__ import annotations
@@ -26,6 +31,9 @@ from databricks_sales_etl_pipeline_spark.catalog import ensure_runtime_conf
 # ~128 MB shuffle-partition target: the classic rule of thumb that keeps a
 # partition comfortably in executor memory while amortizing task overhead.
 TARGET_PARTITION_BYTES = 128 * 1024 * 1024
+
+#: the directory that holds the ``databricks_sales_etl_pipeline_spark`` package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -43,6 +51,7 @@ def get_spark(app_name: str = "dsep-engine", **extra_conf: str) -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", str(TARGET_PARTITION_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

@@ -56,6 +56,16 @@ def test_driver_priority_is_exactly_the_sample():
     )
 
 
+def test_names_after_the_sample_follow_the_module_list():
+    """Past the priority sample, names follow their module's place in
+    ``_OPERATOR_MODULES``, whatever order the modules import each other."""
+    idx = [
+        registry._OPERATOR_MODULES.index(registry.QUERIES[n].__module__)
+        for n in list(registry.QUERIES)[len(registry._DRIVER_PRIORITY) :]
+    ]
+    assert idx == sorted(idx)
+
+
 def test_rotation_covers_never_checked_queries():
     """A sample slot may only re-check an already-green name when no
     never-checked query is DISPLACED by it — once the backlog fits inside

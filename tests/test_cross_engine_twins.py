@@ -32,6 +32,13 @@ from databricks_sales_etl_pipeline_spark.extensions.graph import (
     copurchase_edges,
     copurchase_edges_sql,
 )
+from databricks_sales_etl_pipeline_spark.extensions.multimodal import (
+    ahash_bands,
+    ahash_sql,
+    gray8_ppm,
+    hamming4,
+    hamming4_sql,
+)
 from databricks_sales_etl_pipeline_spark.functions.money import (
     cents,
     cents_sql,
@@ -202,6 +209,61 @@ def test_half_year_tally_matches_its_sql_twin(spark, duck):
     assert sorted(map(tuple, got.collect())) == sorted(want)
 
 
+# the phash fixture's formula for a few doc ids, plus a flat image (no
+# pixel above the mean) and a two-level one (exactly half above it)
+_IMAGES = {
+    d: [((d % 50) * 37 + i * 11) % 200 + (d * 7 + i) % 2 for i in range(64)]
+    for d in (0, 1, 7, 49, 1234)
+} | {-1: [9] * 64, -2: [0, 255] * 32}
+
+
+def test_ahash_sql_matches_ahash_bands():
+    con = duckdb.connect()
+    con.execute("CREATE TABLE px (doc_id BIGINT, i BIGINT, p BIGINT)")
+    con.executemany(
+        "INSERT INTO px VALUES (?, ?, ?)",
+        [(d, i, p) for d, px in _IMAGES.items() for i, p in enumerate(px)],
+    )
+    got = con.execute(
+        f"WITH {ahash_sql('doc_id')} SELECT doc_id, s, b0, b1, b2, b3"
+        " FROM fbands JOIN sums USING (doc_id) ORDER BY doc_id"
+    ).fetchall()
+    want = [
+        (d, sum(px), *ahash_bands(gray8_ppm(px))) for d, px in sorted(_IMAGES.items())
+    ]
+    assert got == want
+    assert want[1][2:] == (0, 0, 0, 0)  # the flat image
+    assert want[0][2:] == (0xAAAA,) * 4  # every odd pixel is above the mean
+
+
+def test_hamming4_matches_its_sql_twin(spark):
+    pairs = [
+        (0, 0, 0, 0, 0, 0, 0, 0),
+        (0xFFFF, 0, 1, 2, 0, 0xFFFF, 3, 2),
+        (0xAAAA, 0x5555, 0x0F0F, 0xF0F0, 0x5555, 0x5555, 0x0F0F, 0x0F0F),
+    ]
+    cols = "a0 long, a1 long, a2 long, a3 long, b0 long, b1 long, b2 long, b3 long"
+    got = [
+        r[0]
+        for r in spark.createDataFrame(pairs, cols)
+        .select(hamming4("a{j}", "b{j}"))
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t (i INT, {cols.replace('long', 'BIGINT')})")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
+        [(i, *r) for i, r in enumerate(pairs)],
+    )
+    want = [
+        r[0]
+        for r in con.execute(
+            f"SELECT {hamming4_sql('a{j}', 'b{j}')} FROM t ORDER BY i"
+        ).fetchall()
+    ]
+    assert got == want == [0, 33, 32]
+
+
 def _spellings(pattern: str) -> dict[str, int]:
     rx = re.compile(pattern)
     counts = {
@@ -222,6 +284,12 @@ def _spellings(pattern: str) -> dict[str, int]:
         (re.escape(r'r"\s+"'), "functions/text.py"),
         (re.escape(r"'\\s+'"), "functions/text.py"),
         (re.escape("string_split_regex("), "functions/text.py"),
+        # the md5 -> int rule: 8 hex digits summed positionally in SQL
+        (re.escape("0123456789abcdef"), "extensions/chunking.py"),
+        # the aHash bit and band rule, and the VID0 container check
+        (re.escape("WHEN p * 64 > s THEN"), "extensions/multimodal.py"),
+        (re.escape("power(2, i % 16)"), "extensions/multimodal.py"),
+        (re.escape('!= b"VID0"'), "extensions/multimodal.py"),
     ],
 )
 def test_shared_definitions_have_one_home(pattern, home):

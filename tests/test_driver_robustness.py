@@ -4,6 +4,12 @@ on a bad sf_dir — the failure modes a long-lived driver process hits."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -41,3 +47,39 @@ def test_bad_sf_dir_raises_cleanly(spark):
 def test_oracle_keys_are_query_keys():
     assert set(ORACLES) <= set(QUERIES)
     assert set(entrymod.oracle_sql()) <= set(entrymod.queries())
+
+
+_OUTSIDE_CHECKOUT = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, sys.argv[1])
+    from databricks_sales_etl_pipeline_spark.registry import QUERIES, load_all
+    from databricks_sales_etl_pipeline_spark.session import get_spark
+    load_all()
+    spark = get_spark("dsep-outside-checkout")
+    for name in ("mm_video_neardup", "udtf_tokenize"):
+        print(name, QUERIES[name](spark, sys.argv[2]).count())
+    spark.stop()
+    """
+)
+
+
+def test_python_workers_import_the_package_from_any_directory(tmp_path):
+    """Run from a directory outside the checkout with the repo only on the
+    driver's sys.path: the Python workers that run a mapInPandas stage and
+    a UDTF must still import the package."""
+    repo = Path(__file__).resolve().parents[1]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CHECKOUT, str(repo), SF_DIR],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    counts = dict(line.split() for line in done.stdout.splitlines())
+    assert set(counts) == {"mm_video_neardup", "udtf_tokenize"}
+    assert all(int(n) > 0 for n in counts.values())

@@ -9,11 +9,13 @@ import struct
 import pytest
 
 from databricks_sales_etl_pipeline_spark.extensions.multimodal import (
-    decode_image_batch,
     decode_ppm,
     decode_wav,
     make_ppm,
+    make_video,
     make_wav,
+    video_container,
+    video_frames,
 )
 
 
@@ -102,8 +104,21 @@ def test_wav_rejects_malformed():
         decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
 
 
-def test_dispatch_decodes_ppm_without_imaging_lib():
-    # the round-2 NotImplementedError default path is gone for PPM
-    assert decode_image_batch(make_ppm(5)) == (5 % 16 + 1, (5 * 3) % 12 + 1)
-    with pytest.raises(NotImplementedError):
-        decode_image_batch(b"\x89PNG\r\n\x1a\n....")
+def test_video_roundtrip_and_rejects_malformed():
+    frames = [b"one", b"", b"three"]
+    assert video_frames(video_container(frames)) == frames
+    good = make_video(5)
+    assert len(video_frames(good)) == 5 % 4 + 4
+    with pytest.raises(ValueError, match="magic"):
+        video_frames(b"VID1" + good[4:])
+    with pytest.raises(ValueError, match="trailing"):
+        video_frames(good + b"\x00")
+    # the last frame's declared length runs past the end of the payload
+    with pytest.raises(ValueError, match="past the end"):
+        video_frames(good[:-1])
+    with pytest.raises(ValueError, match="past the end"):
+        video_frames(b"VID0" + struct.pack("<II", 1, 99) + b"short")
+    with pytest.raises(ValueError, match="truncated"):
+        video_frames(b"VID0")
+    with pytest.raises(ValueError, match="truncated"):
+        video_frames(video_container([b"a"])[:10])

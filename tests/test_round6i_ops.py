@@ -27,12 +27,13 @@ class TestSceneCut:
 
     def test_container_roundtrip(self):
         from databricks_sales_etl_pipeline_spark.extensions.multimodal import (
-            _video_frame_hashes,
+            ahash_bands,
             make_scene_video,
+            video_frames,
         )
 
         payload = make_scene_video(7)  # 3 scenes x 3 frames
-        hashes = _video_frame_hashes(payload)
+        hashes = [ahash_bands(frame) for frame in video_frames(payload)]
         assert len(hashes) == 9
         # frames within a scene hash identically, across scenes differently
         assert hashes[0] == hashes[1] == hashes[2]

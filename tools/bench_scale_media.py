@@ -25,7 +25,10 @@ from pyspark.sql import functions as F
 
 from databricks_sales_etl_pipeline_spark.extensions.multimodal import (
     PHASH_T,
-    _phash_bands,
+    ahash_bands,
+    gray8_ppm,
+    hamming4,
+    map_rows,
 )
 from databricks_sales_etl_pipeline_spark.session import (
     get_spark,
@@ -35,38 +38,26 @@ from databricks_sales_etl_pipeline_spark.session import (
 CLUSTER_SIZE = 10  # docs per planted near-dup cluster
 
 
+def _mix(b: int, i: int) -> int:
+    """xorshift-multiply avalanche: unrelated pixel patterns per base (any
+    affine-in-i form collapses to ~few aHash shapes and the band join
+    degenerates - measured)."""
+    v = (b * 2654435761 ^ (i * 40503 + 0x9E3779B9)) & 0xFFFFFFFF
+    v = ((v ^ (v >> 13)) * 1274126177) & 0xFFFFFFFF
+    return (v >> 8) % 200
+
+
+def _hash_row(did: int):
+    base = did // CLUSTER_SIZE
+    px = [_mix(base, i) + (did * 7 + i) % 2 for i in range(64)]
+    yield (did, *ahash_bands(gray8_ppm(px)))
+
+
 def gen_and_hash(ids_df):
     """Distributed stage: synthesize the P6 bytes and hash them in ONE
     mapInPandas pass (payloads never leave the task)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                base = did // CLUSTER_SIZE
-
-                def mix(b, i):
-                    # xorshift-multiply avalanche: unrelated pixel patterns
-                    # per base (any affine-in-i form collapses to ~few aHash
-                    # shapes and the band join degenerates - measured)
-                    v = (b * 2654435761 ^ (i * 40503 + 0x9E3779B9)) & 0xFFFFFFFF
-                    v = ((v ^ (v >> 13)) * 1274126177) & 0xFFFFFFFF
-                    return (v >> 8) % 200
-
-                px = [mix(base, i) + (did * 7 + i) % 2 for i in range(64)]
-                payload = b"P6\n8 8\n255\n" + bytes(
-                    b for p in px for b in (p, p, p)
-                )
-                b0, b1, b2, b3 = _phash_bands(payload)
-                rows.append(
-                    {"doc_id": did, "b0": b0, "b1": b1, "b2": b2, "b3": b3}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "b0", "b1", "b2", "b3"])
-
-    return ids_df.mapInPandas(
-        run, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    return map_rows(
+        ids_df, _hash_row, "doc_id long, b0 long, b1 long, b2 long, b3 long", "doc_id"
     )
 
 
@@ -112,9 +103,7 @@ def main() -> None:
             F.col("doc_id").alias("db"),
             *[F.col(f"b{j}").alias(f"x{j}") for j in range(4)],
         )
-        ham = sum(
-            F.bit_count(F.expr(f"a{j} ^ x{j}")) for j in range(4)
-        ).cast("long")
+        ham = hamming4("a{j}", "x{j}").cast("long")
         n_pairs = (
             cand.join(sa, "da")
             .join(sb, "db")
