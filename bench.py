@@ -19,7 +19,7 @@ import sys
 import time
 
 from databricks_sales_etl_pipeline_spark.registry import QUERIES, load_all
-from databricks_sales_etl_pipeline_spark.session import get_spark
+from databricks_sales_etl_pipeline_spark.session import default_parallelism, get_spark
 
 HEADLINE = [
     "tpch_q1",
@@ -309,6 +309,11 @@ def main() -> None:
                 spark.conf.get("spark.sql.shuffle.partitions")
             ),
             "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
+            # the host policy the session was sized by (session.py)
+            "session_cpus": default_parallelism(),
+            "driver_memory": spark.sparkContext.getConf().get(
+                "spark.driver.memory", "1g"
+            ),
         },
         "host_probe_sec": {"all_core": probe_all, "one_core": probe_one},
     }

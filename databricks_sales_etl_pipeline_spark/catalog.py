@@ -206,10 +206,23 @@ def events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(stream)
 
 
+#: the directory that holds the ``databricks_sales_etl_pipeline_spark`` package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def add_worker_path(spark: SparkSession, *dirs: str) -> None:
+    """Prepend each of ``dirs`` it lacks to the Python workers' ``PYTHONPATH``
+    (Spark merges it with the driver's); functions wrapped later carry it."""
+    env = spark.sparkContext.environment
+    have = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    env["PYTHONPATH"] = os.pathsep.join([d for d in dirs if d not in have] + have)
+
+
 def ensure_runtime_conf(spark: SparkSession) -> None:
     """Defensive runtime confs for sessions the engine didn't build (e.g. the
     verify driver's): ns-parquet handling, UTC timezone (oracle parity —
-    DuckDB timestamps are UTC-naive), AQE. All dynamic SQLConfs."""
+    DuckDB timestamps are UTC-naive), AQE — all dynamic SQLConfs — and the
+    package on the workers' path (UDFs pickle its functions by reference)."""
     for k, v in [
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),
@@ -220,6 +233,7 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
             spark.conf.set(k, v)
         except Exception:
             pass  # never fail a read over a tuning conf
+    add_worker_path(spark, PACKAGE_PARENT)
 
 
 #: The SQL confs that change the schema a parquet footer converts to:

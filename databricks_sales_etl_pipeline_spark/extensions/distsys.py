@@ -22,7 +22,7 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -414,7 +414,7 @@ RING_NODES = 8
 RING_VNODES = 16
 _RING_SALT = "ring-r6"
 #: encode (vnode hash, node id) into one orderable bigint: h * 100 + id
-#: (node ids < 100) so "first following vnode" is a single window MIN.
+#: (node ids < 100) so "first following vnode" is a single MIN.
 _RING_ENC = 100
 
 
@@ -489,15 +489,16 @@ def ext_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-node key counts after, keys gained, and the moved fraction,
     which consistent hashing bounds near 1/(n+1) (rendezvous hashing's
     ring-shaped sibling; vnodes tame per-node variance). The successor
-    lookup is ONE window pass over keys ∪ vnodes sorted by hash — no
-    per-key ring scan — with the wrap-around as a scalar fallback to
-    the ring minimum.
+    lookup is a broadcast interval match — no per-key ring scan, no
+    sort of the keys: each distinct vnode hash h owns the arc
+    (previous h, h], and one wrap-around arc (largest h, 2^32) belongs
+    to the ring minimum.
 
-    Shape: the ring is a constant-size table; the only data-sized work
-    is the sorted window pass (at 100 TB, range-partition by hash and
-    duplicate the 128-row ring per partition — same plan per shard)."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey")
-    keys = o.select(
+    Shape: each ring is a constant-size table of at most 145 arcs built
+    from ``spark.range``; every key finds its arc in its own partition,
+    so the only data-sized work is the scan and the final per-node
+    aggregate."""
+    keys = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         md5_band(
             F.concat(F.lit("k:"), F.col("o_orderkey").cast("string")),
@@ -506,51 +507,41 @@ def ext_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kh"),
     )
 
-    def ring(n_nodes: int):
-        return spark.range(n_nodes * RING_VNODES).select(
-            (F.col("id") / RING_VNODES).cast("bigint").alias("node"),
-            md5_band(
-                F.concat(F.lit("vn:"), F.col("id").cast("string")),
-                2**32,
-                _RING_SALT,
-            ).alias("h"),
+    def arcs(n_nodes: int) -> DataFrame:
+        vnodes = (
+            spark.range(n_nodes * RING_VNODES)
+            .select(
+                md5_band(
+                    F.concat(F.lit("vn:"), F.col("id").cast("string")),
+                    2**32,
+                    _RING_SALT,
+                ).alias("h"),
+                (F.col("id") / RING_VNODES).cast("bigint").alias("node"),
+            )
+            .groupBy("h")
+            .agg(F.min(F.col("h") * _RING_ENC + F.col("node")).alias("enc"))
         )
+        prev = vnodes.select(F.col("h").alias("p"))
+        inner = (
+            vnodes.join(prev, F.col("p") < F.col("h"), "left")
+            .groupBy("h", "enc")
+            .agg(F.coalesce(F.max("p"), F.lit(-1)).alias("lo"))
+            .select("lo", F.col("h").alias("hi"), "enc")
+        )
+        wrap = vnodes.agg(
+            F.max("h").alias("lo"),
+            F.lit(2**32).cast("bigint").alias("hi"),
+            F.min("enc").alias("enc"),
+        )
+        return inner.unionByName(wrap)
 
-    def owners(ring_df, tag: str):
-        ring_min = ring_df.agg(
-            F.min(F.col("h") * _RING_ENC + F.col("node"))
-        ).collect()[0][0]
-        u = keys.select(
-            F.col("kh").alias("h"),
-            F.lit(0).alias("tag"),
-            "o_orderkey",
-            F.lit(None).cast("bigint").alias("enc"),
-        ).unionByName(
-            ring_df.select(
-                "h",
-                F.lit(1).alias("tag"),
-                F.lit(None).cast("bigint").alias("o_orderkey"),
-                (F.col("h") * _RING_ENC + F.col("node")).alias("enc"),
-            )
-        )
-        w = (
-            Window.partitionBy(F.lit(1))
-            .orderBy("h", "tag")
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        return (
-            u.select(
-                "o_orderkey",
-                (
-                    F.coalesce(F.min("enc").over(w), F.lit(ring_min))
-                    % _RING_ENC
-                ).alias(f"node_{tag}"),
-            )
-            .where(F.col("o_orderkey").isNotNull())
-        )
-    a = owners(ring(RING_NODES), "a")
-    b = owners(ring(RING_NODES + 1), "b")
-    j = a.join(b, "o_orderkey").localCheckpoint()
+    j = keys
+    for n_nodes, tag in ((RING_NODES, "a"), (RING_NODES + 1, "b")):
+        j = j.join(
+            broadcast(arcs(n_nodes)),
+            (F.col("kh") > F.col("lo")) & (F.col("kh") <= F.col("hi")),
+        ).select(*j.columns, (F.col("enc") % _RING_ENC).alias(f"node_{tag}"))
+    j = j.select("o_orderkey", "node_a", "node_b").localCheckpoint()
     moved = j.agg(
         F.count(F.lit(1)).cast("bigint").alias("total_keys"),
         F.sum(

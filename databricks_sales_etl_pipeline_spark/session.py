@@ -8,14 +8,11 @@ One place for every config that matters at scale:
 - Arrow enabled — every pandas-UDF / toPandas boundary is Arrow-batched.
 - UTC session timezone — parquet timestamps compare cleanly against external
   engines (the DuckDB oracle is UTC-naive).
-- shuffle partitions sized from the env (local test rig = cores; a real
-  cluster would size this from input volume / target partition size, see
-  ``tune_shuffle_partitions``).
-- the package's parent directory on the Python workers' ``PYTHONPATH``:
-  UDFs, UDTFs and ``mapInPandas`` stages pickle package functions by
-  reference, so a worker must import the package from any working
-  directory. Spark merges it with the ``PYTHONPATH`` the driver was
-  started with.
+- sized to the host it runs on: cores from the affinity mask and a driver
+  heap of half the RAM (:func:`default_parallelism`, :func:`driver_memory`;
+  ``$SPARK_GRAFT_CPUS`` and ``$SPARK_DRIVER_MEMORY`` win). Shuffle
+  partitions start at the core count; a real cluster would size them from
+  input volume / target partition size, see ``tune_shuffle_partitions``.
 """
 
 from __future__ import annotations
@@ -32,12 +29,17 @@ from databricks_sales_etl_pipeline_spark.catalog import ensure_runtime_conf
 # partition comfortably in executor memory while amortizing task overhead.
 TARGET_PARTITION_BYTES = 128 * 1024 * 1024
 
-#: the directory that holds the ``databricks_sales_etl_pipeline_spark`` package
-PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else half of RAM in whole GiB, 1g to 16g."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_gib = max(1, min(16, round(ram / 2**31)))
+    return os.environ.get("SPARK_DRIVER_MEMORY", f"{half_gib}g")
 
 
 def get_spark(app_name: str = "dsep-engine", **extra_conf: str) -> SparkSession:
@@ -49,15 +51,15 @@ def get_spark(app_name: str = "dsep-engine", **extra_conf: str) -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(TARGET_PARTITION_BYTES))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
-        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # AQE, UTC and nanosAsLong come from the one runtime list the engine
-    # also applies to sessions it did not build
+    # AQE, UTC, nanosAsLong and the workers' import path come from the one
+    # runtime list the engine also applies to sessions it did not build
     ensure_runtime_conf(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -22,7 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from databricks_sales_etl_pipeline_spark.catalog import events_readstream
+from databricks_sales_etl_pipeline_spark.catalog import (
+    add_worker_path,
+    events_readstream,
+)
 from databricks_sales_etl_pipeline_spark.functions.money import cents_sql, py_cents
 from databricks_sales_etl_pipeline_spark.registry import query
 from databricks_sales_etl_pipeline_spark.session import scoped_conf
@@ -111,7 +114,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: on disk inside the public google-cloud-sdk distribution; when google.protobuf
 #: is NOT natively importable we put that directory — plus a sitecustomize shim
 #: relaxing protobuf's exact-gencode-version gate (6.33 gencode on 6.32 runtime,
-#: same major → wire-compatible) — on the worker PYTHONPATH via sc.environment.
+#: same major → wire-compatible) — on the worker PYTHONPATH (add_worker_path).
 #: On a real cluster protobuf is installed and this is a no-op.
 _PROTO_FALLBACK = "/usr/lib/google-cloud-sdk/platform/google_appengine"
 
@@ -146,11 +149,7 @@ def _ensure_worker_protobuf(spark: SparkSession) -> None:
                 "    pass\n"
             )
         os.replace(tmp, shim)
-    env = spark.sparkContext.environment
-    extra = f"{shim_dir}:{_PROTO_FALLBACK}"
-    current = env.get("PYTHONPATH", "")
-    if extra not in current:
-        env["PYTHONPATH"] = f"{extra}:{current}" if current else extra
+    add_worker_path(spark, shim_dir, _PROTO_FALLBACK)
 
 
 def _make_counter_processor():

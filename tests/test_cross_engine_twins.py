@@ -290,6 +290,8 @@ def _spellings(pattern: str) -> dict[str, int]:
         (re.escape("WHEN p * 64 > s THEN"), "extensions/multimodal.py"),
         (re.escape("power(2, i % 16)"), "extensions/multimodal.py"),
         (re.escape('!= b"VID0"'), "extensions/multimodal.py"),
+        # the Python workers' import path, set at runtime on any session
+        (re.escape("sparkContext.environment"), "catalog.py"),
     ],
 )
 def test_shared_definitions_have_one_home(pattern, home):

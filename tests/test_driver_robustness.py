@@ -54,25 +54,39 @@ _OUTSIDE_CHECKOUT = textwrap.dedent(
     import sys
     sys.path.insert(0, sys.argv[1])
     from databricks_sales_etl_pipeline_spark.registry import QUERIES, load_all
-    from databricks_sales_etl_pipeline_spark.session import get_spark
     load_all()
-    spark = get_spark("dsep-outside-checkout")
+    {session}
     for name in ("mm_video_neardup", "udtf_tokenize"):
         print(name, QUERIES[name](spark, sys.argv[2]).count())
     spark.stop()
     """
 )
 
+#: the engine's own session, and the driver's kind: vanilla, sized by hand
+_SESSIONS = {
+    "get_spark": (
+        "from databricks_sales_etl_pipeline_spark.session import get_spark\n"
+        'spark = get_spark("dsep-outside-checkout")'
+    ),
+    "vanilla": (
+        "from pyspark.sql import SparkSession\n"
+        'spark = (SparkSession.builder.master("local[2]")'
+        '.config("spark.driver.memory", "1g").getOrCreate())'
+    ),
+}
 
-def test_python_workers_import_the_package_from_any_directory(tmp_path):
+
+@pytest.mark.parametrize("session", sorted(_SESSIONS))
+def test_python_workers_import_the_package_from_any_directory(tmp_path, session):
     """Run from a directory outside the checkout with the repo only on the
     driver's sys.path: the Python workers that run a mapInPandas stage and
-    a UDTF must still import the package."""
+    a UDTF must still import the package, whoever built the session."""
     repo = Path(__file__).resolve().parents[1]
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    script = _OUTSIDE_CHECKOUT.replace("{session}", _SESSIONS[session])
     done = subprocess.run(
-        [sys.executable, "-c", _OUTSIDE_CHECKOUT, str(repo), SF_DIR],
+        [sys.executable, "-c", script, str(repo), SF_DIR],
         cwd=tmp_path,
         env=env,
         capture_output=True,

@@ -54,11 +54,7 @@ def main() -> None:
     n = int(float(sys.argv[1])) if len(sys.argv) > 1 else 1_000_000
     pqks = [int(a) for a in sys.argv[2:]] or [8, 64, 256]
     spark = get_spark(
-        "dsep-ann-pqk",
-        **{
-            "spark.ui.showConsoleProgress": "false",
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-        },
+        "dsep-ann-pqk", **{"spark.sql.execution.arrow.maxRecordsPerBatch": "2048"}
     )
     tune_shuffle_partitions(spark, input_bytes=n * DIM * 8)
     rec = {"n_vectors": n, "dim": DIM, "nprobe": NPROBE, "pqk": {}}

@@ -49,7 +49,7 @@ def shapes(spark, df):
 
 def main() -> None:
     sizes = [int(float(a)) for a in sys.argv[1:]] or [600_000, 6_000_000, 20_000_000]
-    spark = get_spark("dsep-scale", **{"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark("dsep-scale")
     results = []
     for n in sizes:
         tune_shuffle_partitions(spark, input_bytes=n * 60)  # ~60B/row estimate

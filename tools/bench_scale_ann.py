@@ -115,7 +115,6 @@ def main() -> None:
     spark = get_spark(
         "dsep-scale-ann",
         **{
-            "spark.ui.showConsoleProgress": "false",
             # batch geometry bound (SCALE.md round-12, measured at 30 M
             # vectors): the assignment UDF's distance block is
             # rows_per_batch × K × 8 B per worker; at the 10 k default and

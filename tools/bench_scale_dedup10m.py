@@ -59,9 +59,7 @@ def stage_corpus(spark, n: int):
 def main() -> None:
     sizes = [int(float(a)) for a in sys.argv[1:]] or [2_000_000, 10_000_000]
     shapes = os.environ.get("DSEP_SCALE_SHAPES", "both")
-    spark = get_spark(
-        "dsep-scale-dedup10m", **{"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("dsep-scale-dedup10m")
     out = []
     for n in sizes:
         tune_shuffle_partitions(spark, input_bytes=n * 500)

@@ -49,7 +49,7 @@ def gen_documents(spark, n: int):
 
 def main() -> None:
     sizes = [int(float(a)) for a in sys.argv[1:]] or [5_000, 50_000, 500_000]
-    spark = get_spark("dsep-scale-docs", **{"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark("dsep-scale-docs")
     out = []
     for n in sizes:
         tune_shuffle_partitions(spark, input_bytes=n * 500)

@@ -63,9 +63,7 @@ def gen_with_boilerplate(spark, n: int):
 
 def main() -> None:
     sizes = [int(float(a)) for a in sys.argv[1:]] or [20_000, 100_000]
-    spark = get_spark(
-        "dsep-scale-gramdf", **{"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("dsep-scale-gramdf")
     out = []
     for n in sizes:
         tune_shuffle_partitions(spark, input_bytes=n * 500)

@@ -73,9 +73,7 @@ def gen_documents_boilerplate(spark, n: int):
 
 def main() -> None:
     sizes = [int(float(a)) for a in sys.argv[1:]] or [200_000, 1_000_000]
-    spark = get_spark(
-        "dsep-scale-minhash-guard", **{"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("dsep-scale-minhash-guard")
     out = []
     for n in sizes:
         tune_shuffle_partitions(spark, input_bytes=n * 500)

@@ -33,7 +33,7 @@ from databricks_sales_etl_pipeline_spark.session import get_spark
 def main() -> None:
     sizes = [int(s) for s in (sys.argv[1].split(",") if len(sys.argv) > 1
                               else ["1000000", "10000000", "50000000"])]
-    spark = get_spark("bench-prefix", **{"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark("bench-prefix")
     spark.sparkContext.setLogLevel("ERROR")
     for n in sizes:
         df = (

@@ -54,11 +54,7 @@ def child(n_docs: int) -> None:
 
     root = os.environ["DSEP_SIM_ROOT"]
     spark = get_spark(
-        "dsep-clustersim-gram",
-        **{
-            "spark.ui.showConsoleProgress": "false",
-            "spark.local.dir": os.path.join(root, "sparklocal"),
-        },
+        "dsep-clustersim-gram", **{"spark.local.dir": os.path.join(root, "sparklocal")}
     )
     corpus = os.path.join(root, f"corpus_{n_docs}")
     gen_documents(spark, n_docs).write.parquet(corpus)
@@ -77,6 +73,7 @@ def child(n_docs: int) -> None:
 
 def main() -> None:
     from databricks_sales_etl_pipeline_spark.io import scratch_dir
+    from databricks_sales_etl_pipeline_spark.session import default_parallelism
 
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
         child(int(sys.argv[2]))
@@ -85,8 +82,7 @@ def main() -> None:
     total = int(float(sys.argv[1])) if len(sys.argv) > 1 else 10_000_000
     nproc = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     per = total // nproc
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    per_cpus = max(1, cpus // nproc)
+    per_cpus = max(1, default_parallelism() // nproc)
 
     roots, procs = [], []
     peaks = [0] * nproc

@@ -37,9 +37,8 @@ QUERIES = [
 _WORKER = """
 import sys
 import __spark_entry__ as mod
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.ui.enabled", "false").getOrCreate())
+from databricks_sales_etl_pipeline_spark.session import get_spark
+spark = get_spark("concurrency-check")
 spark.sparkContext.setLogLevel("ERROR")
 qs = mod.queries()
 for name in {names!r}:

@@ -18,6 +18,8 @@ Usage:
   PYTHONPATH=. python tools/determinism_sweep.py compare out_a.json out_b.json
 Optional names restrict the run to those registered queries (default: all).
 Env: DS_SF_DIR (default /root/testdata/sf0.01).
+Both layouts take their driver heap from ``session.driver_memory()``,
+which fits a full sf0.1 sweep.
 
 The committed ``tools/determinism_baseline_r12.json`` was written at sf0.1,
 so compare a run against it with DS_SF_DIR pointing at sf0.1: at the
@@ -80,6 +82,7 @@ def run(mode: str, out_path: str, names: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as mod
+    from databricks_sales_etl_pipeline_spark.session import driver_memory
 
     if mode == "baseline":
         b = (
@@ -95,6 +98,7 @@ def run(mode: str, out_path: str, names: list[str] | None = None) -> None:
             .config("spark.sql.files.maxPartitionBytes", str(split))
             .config("spark.default.parallelism", "5")
         )
+    b = b.config("spark.driver.memory", driver_memory())
     spark = b.config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     sf = os.environ.get("DS_SF_DIR", "/root/testdata/sf0.01")

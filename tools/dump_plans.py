@@ -186,7 +186,7 @@ COMMENTARY = {
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     load_all()
-    spark = get_spark("dump-plans", **{"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark("dump-plans")
     em = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     out = [
         "# PLANS — physical plans of the flagship queries",

@@ -95,9 +95,7 @@ def classify(spark, n: int) -> dict:
 
 def main() -> None:
     n = int(float(sys.argv[1])) if len(sys.argv) > 1 else 2_000_000
-    spark = get_spark(
-        "minhash-extras-probe", **{"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = get_spark("minhash-extras-probe")
     out = classify(spark, n)
     print(json.dumps(out))
     if out["pure_hash_collisions"]:

@@ -17,20 +17,15 @@ import sys
 import duckdb
 
 from databricks_sales_etl_pipeline_spark.catalog import TABLES
+from databricks_sales_etl_pipeline_spark.session import get_spark
 from tests.test_parity import _canon as canon
 
 
 def main() -> int:
     sf = os.environ.get("QP_SF_DIR", "/root/testdata/sf0.001")
     import __spark_entry__ as mod
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("quick-parity")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("quick-parity")
     spark.sparkContext.setLogLevel("ERROR")
     qs, os_ = mod.queries(), mod.oracle_sql()
     names = sys.argv[1:] or sorted(os_)
